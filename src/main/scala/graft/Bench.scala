@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   // Headline set: one per operator family (agg, multi-join, window, OVER,
   // dedup/LSH, text, similarity). Full inventory runs in Verify.
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q1_pricing_summary", "q3_distinct_aggs", "q9_revenue_by_nation",
     "q10_left_join", "q21_sort_limit_offset",
     "qw1_running_sum", "qw5_tumble", "qw7_session",

@@ -1,42 +1,48 @@
 package graft.plans
 
-import graft.streaming.GroupCep
+import graft.streaming.{Cep, GroupCep}
 import graft.streaming.GroupCep.GPattern
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BasePredicate, BindReferences, Expression, GenericInternalRow, Predicate, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, Predicate, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
-/** Pattern GROUPS through the planned-operator path — the [[CepPlan]]
-  * machinery (custom LogicalPlan + SparkStrategy + SparkPlan declaring
-  * ClusteredDistribution + (key, ts, tie) ordering) driving the
-  * [[GroupCep]] epsilon-NFA instead of the linear one (reference:
-  * flink-cep GroupPattern through the same CEPOperatorUtils
-  * transformation as plain patterns).
+/** CEP as a *planned* operator: custom `LogicalPlan` + `SparkStrategy` +
+  * physical `SparkPlan` driving the [[GroupCep]] epsilon-NFA — the one
+  * planned CEP operator, for flat and grouped patterns alike (reference:
+  * flink-cep compiles plain patterns and GroupPatterns through one
+  * NFACompiler into one CEPOperatorUtils transformation; here the
+  * planner owns the data movement instead).
   *
-  * Why the planned path matters at scale (same argument as [[CepPlan]]):
-  * one Exchange + one Sort that EnsureRequirements can elide when the
-  * child already provides them, sorted-run streaming instead of
-  * groupByKey's full-group buffering, and leaf predicates evaluated as
-  * code-gen'd Catalyst `Predicate`s rather than lambdas behind an encoder
-  * boundary.
+  * Why plan it rather than wrap `flatMapGroups` (the library drivers)?
+  *  - The physical node *declares* `ClusteredDistribution(key)` +
+  *    `(key, ts, tie)` child ordering; `EnsureRequirements` then inserts
+  *    exactly one hash shuffle and one sort — and can elide either when an
+  *    upstream operator already provides it (bucketed source, prior
+  *    window), which a Dataset-level groupByKey can never do.
+  *  - The NFA streams over each sorted key run without materializing the
+  *    group: memory is bounded by open branches (within-pruned), not by
+  *    group size.
+  *  - Predicates stay Catalyst expressions, evaluated code-gen'd via
+  *    `Predicate.create`, not opaque lambdas behind an encoder boundary.
   *
-  * Supported subset: leaves (followedBy/next/followedByAny), one or
-  * more quantified sub-groups with times/optional/consecutive/
-  * allowCombinations, `until` stop conditions on quantified groups,
-  * negative elements (notFollowedBy/notNext, anywhere a sibling may
-  * follow), and within — the full planned twin of the GroupCep core.
-  * Round 11 adds the SQL:2016 reluctant compositions: pattern-level
-  * reluctant selection (immediate or deferred), ^/$ anchor gates
-  * (buffer-to-run-end, gate before preference selection), and the
-  * after-match skip queue — all through [[GroupCep.GroupRunEmitter]],
-  * the same object the library drivers run, so planned and library
-  * routes share one source of truth for the evaluation order.
+  * Supported subset: leaves (followedBy/next/followedByAny), quantified
+  * sub-groups with times/optional/consecutive/allowCombinations, `until`
+  * stop conditions on quantified groups, negative elements
+  * (notFollowedBy/notNext, anywhere a sibling may follow, and TERMINAL —
+  * notNext always, notFollowedBy with within, via the SAME
+  * [[graft.streaming.Cep.NegGate]] the linear library drivers run),
+  * alternation, and within. The SQL:2016 compositions — pattern-level
+  * reluctant or greedy selection, ^/$ anchor gates (gate before
+  * selection) and the after-match skip queue — all run through
+  * [[GroupCep.GroupRunEmitter]], the same object the library drivers
+  * run, so planned and library routes share one source of truth for the
+  * evaluation order.
   */
 object GroupCepPlan {
 
@@ -48,7 +54,8 @@ object GroupCepPlan {
     * stop condition: an event matching it kills every in-group branch
     * outright. `GNotSpec` is notFollowedBy (notNext when `nextOnly`) —
     * the branch dies if the banned event arrives before the following
-    * element takes. */
+    * element takes; as the LAST top-level element it is terminal
+    * negation (see [[matchGroupPattern]]). */
   sealed trait GSpec
   final case class GLeafSpec(name: String, pred: Column,
       strict: Boolean = false, any: Boolean = false) extends GSpec
@@ -67,7 +74,8 @@ object GroupCepPlan {
 
   /** Serializable skeleton shipped to executors: structure only, leaf/
     * guard predicates referenced by index into the plan's expression
-    * list (`untilIdx` -1 = none). */
+    * list (`untilIdx` -1 = none). A trailing top-level [[NotSkel]] is
+    * the terminal negation. */
   sealed trait Skel extends Serializable
   final case class LeafSkel(name: String, predIdx: Int, strict: Boolean,
       any: Boolean) extends Skel
@@ -88,11 +96,13 @@ object GroupCepPlan {
       skeleton: Seq[Skel], leafPreds: Seq[Expression],
       stepNames: Seq[String], withinMicros: Option[Long],
       reluctant: Boolean, anchorHead: Boolean, anchorTail: Boolean,
-      skip: graft.streaming.Cep.AfterMatchSkip, sqlGreedy: Boolean,
+      skip: Cep.AfterMatchSkip, sqlGreedy: Boolean,
       allRows: Boolean,
       outputAttrs: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
     override def output: Seq[Attribute] = outputAttrs
-    // every child column is re-emitted per matched step — see CepMatchPlan
+    // the physical operator re-emits every child column per matched
+    // step, so the whole child row is "referenced" — keeps ColumnPruning
+    // from inserting a Project that would shift field ordinals under us
     override def references: AttributeSet = AttributeSet(child.output)
     override def producedAttributes: AttributeSet = AttributeSet(outputAttrs)
     override protected def withNewChildInternal(newChild: LogicalPlan) =
@@ -110,19 +120,22 @@ object GroupCepPlan {
     }
   }
 
-  /** Rebuild the GPattern from the skeleton with bound predicates — runs
-    * once per partition; pattern compilation is cheap next to the scan.
-    * The pattern runs over ARRIVAL-TAGGED rows (row, per-key-run ordinal)
-    * — the SharedBuffer EventId identity, same as CepExec: events arrive
-    * key-sorted, so a local counter suffices. */
+  /** Rebuild the GPattern from the skeleton (terminal negation already
+    * split off) with `pred(i)` as the i-th predicate — runs once per
+    * partition with bound predicates, and once at plan time with
+    * placeholders to check the anchor contract. The pattern runs over
+    * ARRIVAL-TAGGED rows (row, per-key-run ordinal) — the SharedBuffer
+    * EventId identity: events arrive key-sorted, so a local counter
+    * suffices. */
   private def buildPattern(skel: Seq[Skel],
-      bound: IndexedSeq[BasePredicate]): GPattern[(InternalRow, Long)] = {
+      pred: Int => ((InternalRow, Long)) => Boolean)
+      : GPattern[(InternalRow, Long)] = {
     type T = (InternalRow, Long)
     def build(elems: Seq[Skel]): GPattern[T] = {
       var p: GPattern[T] = null
       elems.foreach {
         case l: LeafSkel =>
-          val f: T => Boolean = w => bound(l.predIdx).eval(w._1)
+          val f = pred(l.predIdx)
           p = if (p == null) GPattern.begin(l.name)(f)
           else if (l.strict) p.next(l.name)(f)
           else if (l.any) p.followedByAny(l.name)(f)
@@ -139,12 +152,9 @@ object GroupCepPlan {
           if (g.consecutive) p = p.consecutive
           if (g.combinations) p = p.allowCombinations
           if (g.relMark) p = p.markReluctant
-          if (g.untilIdx >= 0) {
-            val f: T => Boolean = w => bound(g.untilIdx).eval(w._1)
-            p = p.until(f)
-          }
+          if (g.untilIdx >= 0) p = p.until(pred(g.untilIdx))
         case n: NotSkel =>
-          val f: T => Boolean = w => bound(n.predIdx).eval(w._1)
+          val f = pred(n.predIdx)
           p = if (n.nextOnly) p.notNext(n.name)(f)
               else p.notFollowedBy(n.name)(f)
         case a: AltSkel =>
@@ -158,6 +168,13 @@ object GroupCepPlan {
     }
     build(skel)
   }
+
+  /** Split a skeleton into its NFA body and its terminal negation. */
+  private def splitTerminal(skel: Seq[Skel]): (Seq[Skel], Option[NotSkel]) =
+    skel.last match {
+      case n: NotSkel => (skel.init, Some(n))
+      case _ => (skel, None)
+    }
 
   /** Predicate indices whose match can be CAPTURED by a branch (leaf
     * steps) — negative/until guards only kill branches, so rows matching
@@ -177,7 +194,7 @@ object GroupCepPlan {
       skeleton: Seq[Skel], leafPreds: Seq[Expression],
       stepNames: Seq[String], withinMicros: Option[Long],
       reluctant: Boolean, anchorHead: Boolean, anchorTail: Boolean,
-      skip: graft.streaming.Cep.AfterMatchSkip, sqlGreedy: Boolean,
+      skip: Cep.AfterMatchSkip, sqlGreedy: Boolean,
       allRows: Boolean,
       outputAttrs: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
 
@@ -192,9 +209,12 @@ object GroupCepPlan {
     override protected def withNewChildInternal(newChild: SparkPlan) =
       copy(child = newChild)
 
-    /** Hot-key diagnostics — same semantics as CepExec's: each task
-      * reports ITS maxima (read the per-task max in the UI; the driver
-      * total sums task maxes). Mitigation: ENGINE.md §2.11. */
+    /** Hot-key diagnostics (CEP is sequential per key, so one viral key
+      * serializes its task — same as the reference's keyed CEP operator,
+      * which at least exposes backpressure metrics; these are our
+      * equivalent). Each task reports ITS maxima (read the per-task max
+      * in the UI; the driver total sums task maxes). Mitigation for a
+      * genuinely hot key is within-horizon truncation — ENGINE.md §2.11. */
     override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] = Map(
       "numMatches" -> org.apache.spark.sql.execution.metric.SQLMetrics
         .createMetric(sparkContext, "number of matches"),
@@ -225,7 +245,8 @@ object GroupCepPlan {
         val bound = preds.map { p =>
           val bp = Predicate.create(p, childOutput); bp.initialize(0); bp
         }.toIndexedSeq
-        var pat = buildPattern(skel, bound)
+        val (body, terminalNot) = splitTerminal(skel)
+        var pat = buildPattern(body, i => w => bound(i).eval(w._1))
         within.foreach(w => pat = pat.within(w))
         if (rel) pat = pat.reluctant
         if (sqlG) pat = pat.greedySelect
@@ -240,24 +261,24 @@ object GroupCepPlan {
         val compiled = GroupCep.compile(pat.withArrivalIdentity)
         val tsOf: ((InternalRow, Long)) => Long =
           w => tsEval.eval(w._1).asInstanceOf[Long]
+        // terminal negation: completed matches wait at the SAME gate the
+        // linear library drivers run; only its verdicts reach the emitter
+        val ban: Option[((InternalRow, Long)) => Boolean] =
+          terminalNot.map(n => w => bound(n.predIdx).eval(w._1))
         // only leaf-step matches can be captured; not/until guard rows
         // merely kill branches and never need the defensive copy
         val capturing = capturingIdx(skel).toArray.sorted
         val nCapturing = capturing.length
         val proj = UnsafeProjection.create(outTypes)
-        // ALL ROWS: map each capture slot to its declared step index
-        // (several slots can share a step name under alternation)
-        val slotStep: Array[Int] =
-          if (aRows) Array.tabulate(compiled.slotCount)(
-            s => names.indexOf(compiled.stepNameOf(s)))
-          else null
-        // unreachable from the MatchRecognize gate (distinct flat
-        // PVars), but a future caller with a slot name missing from
-        // stepNames should get a named error, not perStep(-1)
-        if (slotStep != null) require(slotStep.forall(_ >= 0),
-          "ALL ROWS emission requires every capture slot's step name " +
-            s"in stepNames: ${(0 until compiled.slotCount)
-              .filter(slotStep(_) < 0)
+        // each capture slot's declared step index (several slots can
+        // share a step name under alternation)
+        val slotStep: Array[Int] = Array.tabulate(compiled.slotCount)(
+          s => names.indexOf(compiled.stepNameOf(s)))
+        // stepNames is built from the same specs, so this only guards
+        // a future caller: a named error, not an index of -1
+        require(slotStep.forall(_ >= 0),
+          "every capture slot's step name must be in stepNames: " +
+            s"${(0 until compiled.slotCount).filter(slotStep(_) < 0)
               .map(compiled.stepNameOf).distinct.mkString(", ")} missing")
 
         new Iterator[InternalRow] {
@@ -282,7 +303,7 @@ object GroupCepPlan {
           private var done = false
           // NFA driver generic over the capture representation: the
           // exec's output is (count, first event) per step, which
-          // [[GroupCep.groupFirsts]] reads straight off the run
+          // [[fillSteps]] reads straight off the run
           // encoding — so under strict contiguity the span-compressed
           // [[GroupCep.SpanCaps]] branches never materialize a
           // per-event capture vector at all (O(#runs) per branch
@@ -296,34 +317,61 @@ object GroupCepPlan {
             private def newEmitter() =
               new GroupCep.GroupRunEmitter[(InternalRow, Long), C](
                 compiled, tsOf, skipStrat, aHead, aTail, tagOf = _._2, ops)
+            private var gate = newGate()
+            private def newGate() = ban.map(b =>
+              new Cep.NegGate[(InternalRow, Long), C](b,
+                terminalNot.get.nextOnly, within, m => tsOf(ops.head(m))))
             private def doEmit(m: C): Unit = {
               numMatches.add(1); matchSeq += 1
-              if (aRows)
-                emitAll(curKey, matchSeq, ops.runs(m),
-                  GroupCep.groupFirsts(compiled, m, ops))
-              else
-                emit(curKey, matchSeq, GroupCep.groupFirsts(compiled, m, ops))
+              if (aRows) emitAll(curKey, matchSeq, ops.runs(m), ops.runs(m))
+              else emit(curKey, matchSeq, ops.runs(m))
             }
             /** One event through the NFA + emission policy; returns the
-              * live branch count (hot-key metric). */
+              * live branch count (hot-key metric). Under ^ only the run's
+              * first row may open a branch — no later start could pass
+              * the gate. With terminal negation the event first decides
+              * the pending gate entries (horizon, then ban), the NFA's
+              * new matches join the gate, and the confirmed ones go on
+              * to the emitter. */
             def advanceRow(w: (InternalRow, Long), ts: Long): Int = {
-              val (next, matches) =
-                GroupCep.advanceC(compiled, confs, w, ts, canStart = true, ops)
-              confs = emitter.step(next, matches, doEmit)
+              val (next, matches) = GroupCep.advanceC(compiled, confs, w,
+                ts, canStart = !aHead || w._2 == 0L, ops)
+              val out = gate match {
+                case None => matches
+                // nothing pending: the event decides nothing
+                case Some(g) if g.isEmpty => g.add(matches); Vector.empty
+                case Some(g) =>
+                  val v = Vector.newBuilder[C]
+                  g.onTime(ts, v += _, (_, _) => ())
+                  g.onEvent(w, v += _)
+                  g.add(matches)
+                  v.result()
+              }
+              confs = emitter.step(next, out, doEmit)
               confs.size
             }
-            /** End of key run: anchored candidates gate + select,
-              * deferred resolver/skip-queue entries release. */
-            def flush(lastTag: Long): Unit = emitter.finish(lastTag, doEmit)
-            def reset(): Unit = { confs = Vector.empty; emitter = newEmitter() }
+            /** End of key run: the gate's notFollowedBy entries confirm
+              * (no banned event can follow any more), anchored
+              * candidates gate + select, deferred resolver/skip-queue
+              * entries release. */
+            def flush(lastTag: Long): Unit = {
+              gate.foreach { g =>
+                val v = Vector.newBuilder[C]
+                g.flushEnd(v += _)
+                confs = emitter.step(confs, v.result(), doEmit)
+              }
+              emitter.finish(lastTag, doEmit)
+            }
+            def reset(): Unit = {
+              confs = Vector.empty; emitter = newEmitter(); gate = newGate()
+            }
           }
           // per-key-run emission policy (anchor gates / reluctant
           // resolver / skip queue) — ONE emitter shared with the
           // library drivers, reset per key run. Arrival tags ARE run
           // positions, so SpanOps needs no event buffer — and with
-          // groupFirsts/run-walk emission (ALL ROWS included: the
-          // per-row output derives from slot runs alone), nothing
-          // ever calls eventAt.
+          // run-walk emission (ALL ROWS included: the per-row output
+          // derives from slot runs alone), nothing ever calls eventAt.
           private val runner: Runner[_] =
             if (compiled.strictSpans)
               new Runner(new GroupCep.SpanOps[(InternalRow, Long)](
@@ -334,37 +382,43 @@ object GroupCepPlan {
           private def flushKey(): Unit =
             if (haveKey) runner.flush(arrSeq - 1)
 
+          /** The per-match final block from offset `off`: per step its
+            * capture count, then the child columns of its first captured
+            * row (null where the step captured nothing) — read off the
+            * capture runs alone, in capture order. */
+          private def fillSteps(vals: Array[Any], off: Int,
+              runs: Iterator[GroupCep.CapRun[(InternalRow, Long)]]): Unit = {
+            var s = 0
+            while (s < nSteps) { vals(off + s * (1 + nCols)) = 0L; s += 1 }
+            runs.foreach { run =>
+              val at = off + slotStep(run.slot) * (1 + nCols)
+              val cnt = vals(at).asInstanceOf[Long]
+              if (cnt == 0L) {
+                val r = run.first._1
+                var c = 0
+                while (c < nCols) {
+                  vals(at + 1 + c) = r.get(c, colTypes(c)); c += 1
+                }
+              }
+              vals(at) = cnt + run.count
+            }
+          }
+
           /** ALL ROWS PER MATCH: one output row per captured event, in
             * capture order — (key, match ordinal, step index of the
             * row's variable, 1-based ordinal within that variable's
-            * captures so far) plus the per-match final block (count +
-            * first-row columns per step), from which the router derives
-            * RUNNING counts / positional measures as CASE expressions.
-            * The per-row pair derives from the SLOT RUNS alone (no
-            * captured events are read), so the span representation
-            * stays unmaterialized even here. */
+            * captures so far) plus the per-match final block, from
+            * which the router derives RUNNING counts / positional
+            * measures as CASE expressions. The per-row pair derives
+            * from the SLOT RUNS alone (no captured events are read), so
+            * the span representation stays unmaterialized even here. */
           private def emitAll(key: Any, matchNum: Long,
-              runs: Iterator[GroupCep.CapRun[(InternalRow, Long)]],
-              firsts: scala.collection.Map[String,
-                (Long, (InternalRow, Long))]): Unit = {
+              blockRuns: Iterator[GroupCep.CapRun[(InternalRow, Long)]],
+              runs: Iterator[GroupCep.CapRun[(InternalRow, Long)]]): Unit = {
             val vals = new Array[Any](4 + nSteps * (1 + nCols))
             vals(0) = key
             vals(1) = matchNum
-            var s = 0
-            while (s < nSteps) {
-              firsts.get(names(s)) match {
-                case Some((cnt, (r, _))) =>
-                  vals(4 + s * (1 + nCols)) = cnt
-                  var c = 0
-                  while (c < nCols) {
-                    vals(5 + s * (1 + nCols) + c) = r.get(c, colTypes(c))
-                    c += 1
-                  }
-                case None =>
-                  vals(4 + s * (1 + nCols)) = 0L
-              }
-              s += 1
-            }
+            fillSteps(vals, 4, blockRuns)
             val perStep = new Array[Long](nSteps)
             runs.foreach { run =>
               val si = slotStep(run.slot)
@@ -380,26 +434,11 @@ object GroupCepPlan {
           }
 
           private def emit(key: Any, matchNum: Long,
-              firsts: scala.collection.Map[String,
-                (Long, (InternalRow, Long))]): Unit = {
+              runs: Iterator[GroupCep.CapRun[(InternalRow, Long)]]): Unit = {
             val vals = new Array[Any](2 + nSteps * (1 + nCols))
             vals(0) = key
             vals(1) = matchNum
-            var s = 0
-            while (s < nSteps) {
-              firsts.get(names(s)) match {
-                case Some((cnt, (r, _))) =>
-                  vals(2 + s * (1 + nCols)) = cnt
-                  var c = 0
-                  while (c < nCols) {
-                    vals(3 + s * (1 + nCols) + c) = r.get(c, colTypes(c))
-                    c += 1
-                  }
-                case None =>
-                  vals(2 + s * (1 + nCols)) = 0L
-              }
-              s += 1
-            }
+            fillSteps(vals, 2, runs)
             queue += proj(new GenericInternalRow(vals)).copy()
           }
 
@@ -413,7 +452,9 @@ object GroupCepPlan {
               } else {
                 val raw = rows.next()
                 val tsVal = tsEval.eval(raw)
-                // NULL event time has no stream position — skip (see CepExec)
+                // a NULL event time has no position in the stream order —
+                // skip the row (unboxing would silently feed it at epoch 0,
+                // corrupting matches and within-pruning)
                 if (tsVal != null) {
                   // copy only rows the NFA can capture: any leaf match may be
                   // stored in a branch; non-matching rows only close strict
@@ -459,8 +500,9 @@ object GroupCepPlan {
     }
   }
 
-  /** Register the strategy on a session (idempotent); also injected by
-    * [[CepExtensions]] for `spark.sql.extensions` deployments. */
+  /** Register the strategy on a session (idempotent). For spark-submit
+    * deployments, `spark.sql.extensions=graft.plans.CepExtensions` does
+    * the same via the extensions API. */
   def register(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .experimental
@@ -468,9 +510,26 @@ object GroupCepPlan {
       exp.extraStrategies = exp.extraStrategies :+ GroupCepStrategy
   }
 
-  /** Build a planned group-pattern match over `df`.
+  /** Build a planned pattern match over `df` — the one planned CEP
+    * operator, for flat patterns (a sequence of [[GLeafSpec]]s, with
+    * [[GNotSpec]]s between them) and grouped ones alike.
     *
-    * @return one row per match: `key`, then per step `<step>_count` and
+    * Terminal negation: a trailing top-level [[GNotSpec]] makes the
+    * pattern end in notNext (`nextOnly`: the single next event decides)
+    * or notFollowedBy (requires `withinMicros`: the match emits at the
+    * window horizon if no banned event arrived — the funnel shape "A not
+    * followed by B within w"), with the linear library drivers'
+    * [[Cep.NegGate]] semantics. It combines with neither a non-default
+    * `skip`, a selection mode, nor the $ anchor.
+    *
+    * Anchors: ^/$ gate candidates on the key run's first/last row. They
+    * run without a selection mode only when every start completes at
+    * most one candidate (no quantified element, alternation or
+    * followedByAny); otherwise `reluctant` or `sqlGreedy` picks among a
+    * start's gate-passing candidates.
+    *
+    * @return one row per match: `key`, `match_number` (1-based per-key
+    *         ordinal in emission order), then per step `<step>_count` and
     *         every child column as `<step>_<col>` (first captured event of
     *         the step's group, null where the step captured nothing).
     */
@@ -478,23 +537,26 @@ object GroupCepPlan {
       elems: Seq[GSpec], withinMicros: Option[Long] = None,
       reluctant: Boolean = false,
       anchorHead: Boolean = false, anchorTail: Boolean = false,
-      skip: graft.streaming.Cep.AfterMatchSkip =
-        graft.streaming.Cep.NoSkip,
+      skip: Cep.AfterMatchSkip = Cep.NoSkip,
       sqlGreedy: Boolean = false,
       allRows: Boolean = false): DataFrame = {
     require(elems.nonEmpty, "at least one pattern element")
     require(!(sqlGreedy && reluctant),
       "sqlGreedy excludes the pattern-level reluctant mode " +
         "(per-quantifier polarity rides GGroupSpec.relMark)")
-    if (anchorHead || anchorTail) {
-      // the planned anchors are the reluctant-selection composition
-      // (plain anchored group patterns post-filter on boundary flags in
-      // the library path); gate-before-selection needs deferral.
-      // Round 11: non-default skip composes (gate → select → skip —
-      // the queue runs over the selected candidates at run end)
-      require(reluctant || sqlGreedy,
-        "planned ^/$ anchors require a selection mode (reluctant or " +
-          "sqlGreedy) — gate-before-selection needs deferral")
+    val terminalNot = elems.last match {
+      case n: GNotSpec => Some(n)
+      case _ => None
+    }
+    terminalNot.foreach { n =>
+      require(n.nextOnly || withinMicros.isDefined,
+        "NotFollowedBy is not supported as a last part of a Pattern! " +
+          "(without within)")
+      require(skip == Cep.NoSkip,
+        "terminal negation requires the default NoSkip strategy")
+      require(!reluctant && !sqlGreedy,
+        "terminal negation does not compose with a selection mode")
+      require(!anchorTail, "$ anchor cannot combine with terminal negation")
     }
     // mirror the selection modes' GPattern contracts at PLAN time (the
     // executor-side build would only fail per task): >= 1 SEMANTIC
@@ -553,7 +615,7 @@ object GroupCepPlan {
         case _ => ()
       }
     }
-    validateSeq(elems)
+    validateSeq(if (terminalNot.isDefined) elems.init else elems)
     val spark = df.sparkSession
     register(spark)
     val child = GraftSqlShim.analyzed(df)
@@ -585,6 +647,18 @@ object GroupCepPlan {
         NotSkel(n.name, nPreds - 1, n.nextOnly)
     }
     val skeleton = elems.map(skeletonOf)
+    if ((anchorHead || anchorTail) && !reluctant && !sqlGreedy) {
+      // work the contract out from the compiled pattern (placeholder
+      // predicates): without a selection mode to choose, a start must
+      // not be able to complete two candidates
+      val compiled = GroupCep.compile(
+        buildPattern(splitTerminal(skeleton)._1, _ => _ => false))
+      require(compiled.oneCandidatePerStart,
+        "planned ^/$ anchors require a selection mode (reluctant or " +
+          "sqlGreedy) unless every start completes at most one " +
+          "candidate (no quantified element, alternation or " +
+          "followedByAny)")
+    }
     // negative elements capture nothing: they contribute no output slots
     def leafNames(e: GSpec): Seq[String] = e match {
       case l: GLeafSpec => Seq(l.name)
@@ -595,7 +669,7 @@ object GroupCepPlan {
     val stepNames = elems.flatMap(leafNames).distinct
     val keyE = resolve(key)
     // reject keys without value equality on the evaluated path (the
-    // shared PlanKeys contract — one definition with CepPlan)
+    // PlanKeys contract)
     PlanKeys.requireValueEqualityKey(keyE)
     // match_number = 1-based per-key match ordinal in emission order —
     // the SAME ordinal the library drivers produce (batch) and carry in
@@ -624,4 +698,10 @@ object GroupCepPlan {
       withinMicros, reluctant, anchorHead, anchorTail, skip, sqlGreedy,
       allRows, outAttrs, child))
   }
+}
+
+/** `spark.sql.extensions` entry point for cluster deployments. */
+class CepExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    ext.injectPlannerStrategy(_ => GroupCepPlan.GroupCepStrategy)
 }

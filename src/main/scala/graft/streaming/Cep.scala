@@ -753,7 +753,7 @@ object Cep {
     // Event identity: equality here is over whatever E is. The batch
     // drivers (matchBatchGroups arrivalIds / liftPattern), the streaming
     // drivers (ArrivalState's cross-batch counter), and the planned
-    // CepExec (per-key-run counter) all feed arrival-TAGGED events by
+    // GroupCepExec (per-key-run counter) all feed arrival-TAGGED events by
     // default, so two value-identical events at one timestamp are
     // distinct computation states — the reference's SharedBuffer EventId
     // semantics, measured free (ENGINE.md §2.11, ArrivalIdsBench). The
@@ -826,7 +826,7 @@ object Cep {
     * identity (the seq tag short-circuits dedup's deep equality), so
     * parity is the default per the round-6 VERDICT's <10% rule. The
     * streaming drivers run the same identity via [[ArrivalState]]'s
-    * cross-batch counter, and the planned CepExec via a per-key-run
+    * cross-batch counter, and the planned GroupCepExec via a per-key-run
     * counter — all three paths at reference parity since round 8. */
   def matchBatchGroups[K, E, O: Encoder](ds: Dataset[E], key: E => K,
       ts: E => Long, pattern: Pattern[E],
@@ -934,8 +934,8 @@ object Cep {
     * max events fed to one key run (per micro-batch under streaming) and
     * the max concurrent partial matches; read after an action/epoch from
     * the driver. Mitigation for a genuinely hot key: within-horizon
-    * truncation (ENGINE.md §2.11). The planned CepExec surfaces the same
-    * numbers as SQL metrics in the Spark UI. */
+    * truncation (ENGINE.md §2.11). The planned GroupCepExec surfaces the
+    * same numbers as SQL metrics in the Spark UI. */
   final class HotKeyStats(sc: org.apache.spark.SparkContext,
       name: String = "cep") extends Serializable {
     val maxKeyEvents = new MaxAccumulator
@@ -1367,8 +1367,8 @@ object Cep {
     // terminal negation runs the pending-emission gate; patterns without
     // one stay on the gate-free path
     val gate = pattern.terminalNot match {
-      case Some(p) => new NegGate[E](p, pattern.terminalNotNext,
-        pattern.withinMs)
+      case Some(p) => new NegGate[E, Partial[E]](p, pattern.terminalNotNext,
+        pattern.withinMs, _.startTs)
       case None => null
     }
     // SQL:2016 reluctant (single-quantifier contract, Pattern.reluctant):
@@ -1390,7 +1390,7 @@ object Cep {
     var partials = init
     if (gate != null && init.exists(_.negPending)) {
       val (pend, live) = partials.partition(_.negPending)
-      pend.foreach(gate.restore)
+      gate.add(pend)
       partials = live
     }
     // see reluctantSel above: keep the shortest completion per start,
@@ -1416,6 +1416,7 @@ object Cep {
     // a confirmed match emits immediately (NoSkip) or joins the skip queue
     def feedMatch(m: Vector[Vector[E]]): Unit =
       if (sq == null) outs += shape(m) else sq.add(Vector(m))
+    def confirmGated(p: Partial[E]): Unit = feedMatch(p.groups)
     def expireCb(p: Partial[E], at: Long): Unit =
       onExpired(p, at).foreach(outs += _)
     // drain the skip queue; gate entries are live blockers and are pruned
@@ -1426,14 +1427,15 @@ object Cep {
       else {
         val merged = sq.drain(partials ++ gate.toState,
           m => outs += shape(m))
-        partials = merged.filterNot(_.negPending)
-        gate.prunedTo(merged)
+        val (pend, live) = merged.partition(_.negPending)
+        partials = live
+        gate.prunedTo(pend)
       }
     }
     // surface expired partials as time advances to `t`, and let the gate
     // confirm/expire its pending entries at the same boundary
     def timeAdvance(t: Long): Unit = {
-      if (gate != null) gate.onTime(t, feedMatch, expireCb)
+      if (gate != null) gate.onTime(t, confirmGated, expireCb)
       pattern.withinMs.foreach { w =>
         if (!partials.forall(p => t - p.startTs < w)) {
           val (expired, kept) = partials.partition(p => t - p.startTs >= w)
@@ -1463,7 +1465,7 @@ object Cep {
       val t = ts(e)
       timeAdvance(t)
       // the event decides every pending gate entry before transitioning
-      if (gate != null) gate.onEvent(e, feedMatch)
+      if (gate != null) gate.onEvent(e, confirmGated)
       val (next, rawMatches) = advance(pattern, partials, e, t)
       partials = next
       val matches =
@@ -1471,7 +1473,11 @@ object Cep {
         else rawMatches
       if (stats != null && partials.size > statMaxPartials)
         statMaxPartials = partials.size
-      if (gate != null) gate.add(matches, t, ts)
+      // an all-empty match (degenerate but total) starts at this event
+      if (gate != null) gate.add(matches.map { m =>
+        val start = m.iterator.flatten.nextOption().map(ts).getOrElse(t)
+        Partial(start, m, runOpen = false, negPending = true)
+      })
       else if (sq == null) matches.foreach(m => outs += shape(m))
       else sq.add(matches)
       // expiry above may also have unblocked earlier-queued matches
@@ -1485,7 +1491,7 @@ object Cep {
     // satisfied length as it forms. Batch end kills open partials, which
     // releases every still-deferred match (pruning applies in order).
     if (flushAtEnd) {
-      if (gate != null) gate.flushEnd(feedMatch)
+      if (gate != null) gate.flushEnd(confirmGated)
       partials = Vector.empty
       if (sq != null) sq.drain(Vector.empty, m => outs += shape(m))
     } else {
@@ -1508,9 +1514,10 @@ object Cep {
     * earlier-started partial is still live must NOT define a pruning
     * boundary yet — if the earlier partial later completes, it emits
     * first and may prune differently (AfterMatchSkipITCase
-    * testSkipBeforeOtherAlreadyCompleted). Shared by the library drivers
-    * (runSorted) and the planned CepExec. NoSkip bypasses the queue
-    * entirely (matches emit as they form — the allocation-free default).
+    * testSkipBeforeOtherAlreadyCompleted). Run by the linear library
+    * drivers ([[runSorted]]); the group engine's twin is
+    * `GroupCep.GroupSkipQueue`. NoSkip bypasses the queue entirely
+    * (matches emit as they form — the allocation-free default).
     */
   final class SkipQueue[E](skip: AfterMatchSkip, names: Vector[String],
       ts: E => Long) {
@@ -1591,69 +1598,58 @@ object Cep {
     *  - notFollowedBy: a banned event inside the window kills; the window
     *    horizon passing emits. Batch end-of-input emits all pending.
     *
-    * Entries count as LIVE partials for [[SkipQueue]] blocking/pruning
-    * (in the reference they are live computation states), so callers
-    * drain the queue over `partials ++ gate.toState` and hand the
-    * survivors back via [[prunedTo]]. Shared by the library drivers
-    * ([[matchBatchGroups]]/[[matchStream]]) and the planned
-    * [[graft.plans.CepPlan.CepExec]]. */
-  final class NegGate[E](ban: E => Boolean, nextOnly: Boolean,
-      withinMs: Option[Long]) {
-    private var pending = Vector.empty[Partial[E]]
+    * Generic over the pending-match representation `M` (`startOf` reads
+    * an entry's window start): the linear drivers ([[runSorted]]) hold
+    * `negPending` [[Partial]]s, so entries count as LIVE partials for
+    * [[SkipQueue]] blocking/pruning and persist in streaming state as
+    * they are; the planned [[graft.plans.GroupCepPlan.GroupCepExec]]
+    * holds its group captures directly. */
+  final class NegGate[E, M](ban: E => Boolean, nextOnly: Boolean,
+      withinMs: Option[Long], startOf: M => Long) {
+    private var pending = Vector.empty[M]
 
     def isEmpty: Boolean = pending.isEmpty
 
-    /** Restore a pending entry from streaming state. */
-    def restore(p: Partial[E]): Unit = pending = pending :+ p
-
-    /** Queue this round's completed matches; `at` is the current event
-      * time (start of an all-empty match, degenerate but total). */
-    def add(matches: Vector[Vector[Vector[E]]], at: Long,
-        ts: E => Long): Unit =
-      if (matches.nonEmpty)
-        pending = pending ++ matches.map { m =>
-          val start = m.iterator.flatten.buffered.headOption
-            .map(ts).getOrElse(at)
-          Partial(start, m, runOpen = false, negPending = true)
-        }
+    /** Queue this round's completed matches (and, streaming, entries
+      * restored from state). */
+    def add(matches: Vector[M]): Unit =
+      if (matches.nonEmpty) pending = pending ++ matches
 
     /** Time advances to `t` (a new event's time, or the watermark):
       * notFollowedBy entries whose horizon passed emit via `confirm`;
       * notNext entries whose window passed expire via `expire`. */
-    def onTime(t: Long, confirm: Vector[Vector[E]] => Unit,
-        expire: (Partial[E], Long) => Unit): Unit =
+    def onTime(t: Long, confirm: M => Unit, expire: (M, Long) => Unit): Unit =
       withinMs.foreach { w =>
-        if (!pending.forall(p => t - p.startTs < w)) {
-          val (ripe, rest) = pending.partition(p => t - p.startTs >= w)
+        if (!pending.forall(p => t - startOf(p) < w)) {
+          val (ripe, rest) = pending.partition(p => t - startOf(p) >= w)
           pending = rest
           if (nextOnly) ripe.foreach(p => expire(p, t))
-          else ripe.foreach(p => confirm(p.groups))
+          else ripe.foreach(confirm)
         }
       }
 
     /** An event arrives (after [[onTime]], before the NFA transition):
       * every pending entry predates it, so it decides them all. */
-    def onEvent(e: E, confirm: Vector[Vector[E]] => Unit): Unit =
+    def onEvent(e: E, confirm: M => Unit): Unit =
       if (pending.nonEmpty) {
         if (ban(e)) pending = Vector.empty
         else if (nextOnly) {
-          pending.foreach(p => confirm(p.groups))
+          pending.foreach(confirm)
           pending = Vector.empty
         } // notFollowedBy: unbanned events pass; the horizon decides
       }
 
     /** Batch end-of-input: time advances past every horizon with no more
       * events — notFollowedBy entries emit, notNext entries never can. */
-    def flushEnd(confirm: Vector[Vector[E]] => Unit): Unit = {
-      if (!nextOnly) pending.foreach(p => confirm(p.groups))
+    def flushEnd(confirm: M => Unit): Unit = {
+      if (!nextOnly) pending.foreach(confirm)
       pending = Vector.empty
     }
 
     /** Pending entries as state/skip-blocker rows. */
-    def toState: Vector[Partial[E]] = pending
+    def toState: Vector[M] = pending
 
     /** Accept the survivors of a [[SkipQueue]] pruning pass. */
-    def prunedTo(survivors: Vector[Partial[E]]): Unit =
-      pending = survivors.filter(_.negPending)
+    def prunedTo(survivors: Vector[M]): Unit = pending = survivors
   }
 }

@@ -81,8 +81,9 @@ object CepQueries extends QueryModule {
     },
 
     // The same view→error pattern through the PLANNED operator
-    // (graft.plans.CepPlan: custom LogicalPlan + SparkStrategy + physical
-    // node; the planner inserts the key shuffle and (key, ts, tie) sort).
+    // (graft.plans.GroupCepPlan: custom LogicalPlan + SparkStrategy +
+    // physical node; the planner inserts the key shuffle and (key, ts,
+    // tie) sort).
     // Shares qc1's oracle: two independent execution paths, one truth.
     q("qc3_cep_planned",
       """SELECT v.user_id, CAST(v.ts AS TIMESTAMP) AS start_ts,
@@ -96,16 +97,17 @@ object CepQueries extends QueryModule {
         |WHERE v.event_type = 'view'
         |GROUP BY v.user_id, v.ts
         |ORDER BY v.user_id, start_ts""".stripMargin) { (s, d) =>
+      import graft.plans.GroupCepPlan.GLeafSpec
       import org.apache.spark.sql.functions.{col, min}
       // same semantics-preserving pre-filter as qc1 (relaxed contiguity)
       val ev = t(s, d, "events")
         .where("event_type IN ('view', 'error')")
         .selectExpr("event_id", "ts", "user_id", "event_type")
-      graft.plans.CepPlan.matchPattern(ev,
+      graft.plans.GroupCepPlan.matchGroupPattern(ev,
           key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-          steps = Seq(
-            ("view", col("event_type") === "view", false),
-            ("error", col("event_type") === "error", false)),
+          elems = Seq(
+            GLeafSpec("view", col("event_type") === "view"),
+            GLeafSpec("error", col("event_type") === "error")),
           withinMicros = Some(HourMicros))
         .groupBy(col("key").as("user_id"), col("view_ts").as("start_ts"))
         .agg(min(col("error_ts")).as("end_ts"))
@@ -142,20 +144,20 @@ object CepQueries extends QueryModule {
         |  FROM cl e WHERE e.event_type = 'error')
         |SELECT user_id, start_ts, end_ts FROM m WHERE start_ts IS NOT NULL
         |ORDER BY user_id, start_ts, end_ts""".stripMargin) { (s, d) =>
+      import graft.plans.GroupCepPlan.{GLeafSpec, GNotSpec}
       import org.apache.spark.sql.functions.col
       // purchase must stay in the scan: it can kill partials (the same
       // reason qc2's strict pattern scans all types)
       val ev = t(s, d, "events")
         .where("event_type IN ('view', 'error', 'purchase')")
         .selectExpr("event_id", "ts", "user_id", "event_type")
-      graft.plans.CepPlan.matchPattern(ev,
+      graft.plans.GroupCepPlan.matchGroupPattern(ev,
           key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-          steps = Seq(
-            ("view", col("event_type") === "view", false),
-            ("error", col("event_type") === "error", false)),
+          elems = Seq(
+            GLeafSpec("view", col("event_type") === "view"),
+            GNotSpec("purchase", col("event_type") === "purchase"),
+            GLeafSpec("error", col("event_type") === "error")),
           withinMicros = Some(HourMicros),
-          notBefore = Map(
-            "error" -> (col("event_type") === "purchase", false)),
           skip = Cep.SkipPastLastEvent)
         .select(col("key").as("user_id"), col("view_ts").as("start_ts"),
           col("error_ts").as("end_ts"))
@@ -204,8 +206,8 @@ object CepQueries extends QueryModule {
         .orderBy("user_id", "view_ts")
     },
 
-    // The same funnel through the PLANNED operator (CepExec runs the
-    // identical Cep.NegGate); shares qc12's oracle — two independent
+    // The same funnel through the PLANNED operator (GroupCepExec runs
+    // the identical Cep.NegGate); shares qc12's oracle — two independent
     // execution paths, one truth.
     q("qc13_cep_funnel_planned",
       """SELECT v.user_id, CAST(v.ts AS TIMESTAMP) AS view_ts
@@ -220,15 +222,17 @@ object CepQueries extends QueryModule {
         |      AND CAST(p.ts AS TIMESTAMP)
         |          < CAST(v.ts AS TIMESTAMP) + INTERVAL '30 minutes')
         |ORDER BY v.user_id, view_ts""".stripMargin) { (s, d) =>
+      import graft.plans.GroupCepPlan.{GLeafSpec, GNotSpec}
       import org.apache.spark.sql.functions.col
       val ev = t(s, d, "events")
         .where("event_type IN ('view', 'purchase')")
         .selectExpr("event_id", "ts", "user_id", "event_type")
-      graft.plans.CepPlan.matchPattern(ev,
+      graft.plans.GroupCepPlan.matchGroupPattern(ev,
           key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-          steps = Seq(("view", col("event_type") === "view", false)),
-          withinMicros = Some(30L * 60 * 1000 * 1000),
-          notAtEnd = Some((col("event_type") === "purchase", false)))
+          elems = Seq(
+            GLeafSpec("view", col("event_type") === "view"),
+            GNotSpec("purchase", col("event_type") === "purchase")),
+          withinMicros = Some(30L * 60 * 1000 * 1000))
         .select(col("key").as("user_id"), col("view_ts"))
         .orderBy("user_id", "view_ts")
     }

@@ -679,6 +679,21 @@ object GroupCep {
       quants == 1 && !alt
     }
 
+    /** Every start completes at most ONE candidate: no quantified group,
+      * no alternation fork and no followedByAny boundary, so each
+      * branch follows one deterministic path (negations, untils and
+      * `within` only kill). The ^/$ anchor gates then need no selection
+      * mode to choose among same-start candidates. */
+    private[graft] val oneCandidatePerStart: Boolean = {
+      def walk(n: Node): Boolean = n match {
+        case SNode(_, mode) => mode != TillAny
+        case g: GNode => g.min == 1 && g.max == 1 && !g.optional &&
+          g.mode != TillAny && g.children.forall(walk)
+        case _: ANode => false
+      }
+      realRoot.children.forall(walk)
+    }
+
     private def declMode(n: Node): Int = n match {
       case SNode(_, m) => m
       case g: GNode => g.mode
@@ -813,8 +828,8 @@ object GroupCep {
     private[GroupCep] def predOf(s: Int): E => Boolean = preds(s)
     private[graft] def slotCount: Int = preds.length
     private[GroupCep] def nameOf(s: Int): String = names(s)
-    /** Step name of a capture slot — the planned exec's ALL ROWS mode
-      * maps each captured event's slot to its declared step index. */
+    /** Step name of a capture slot — the planned exec maps each
+      * captured event's slot to its declared step index. */
     private[graft] def stepNameOf(s: Int): String = nameOf(s)
     private[GroupCep] def stopsFollowOf(s: Int): List[E => Boolean] =
       stopsFollow.getOrElse(s, Nil)
@@ -1005,8 +1020,16 @@ object GroupCep {
       : (Vector[Conf[E, C]], Vector[C]) = {
     val alive = c.withinMs match {
       case None => confs
-      case Some(w) => confs.filter(p => ts - p.startTs < w)
+      case Some(w) => // avoid the filter allocation when nothing expired
+        if (confs.forall(p => ts - p.startTs < w)) confs
+        else confs.filter(p => ts - p.startTs < w)
     }
+    // fast path: no live branch and the event opens none — skip the
+    // per-event memo/builder set-up below (the planned exec drives one
+    // call per row)
+    if (alive.isEmpty && !(canStart && c.startFrontier.exists(t =>
+        !c.guardHit(t.guard, e) && c.predOf(t.slot)(e))))
+      return (alive, Vector.empty)
     val out = Vector.newBuilder[Conf[E, C]]
     val matches = Vector.newBuilder[C]
 
@@ -1076,6 +1099,10 @@ object GroupCep {
       }
     }
 
+    // a branch that waits past this event (reused when already stale —
+    // long relaxed waits would otherwise copy every branch every event)
+    def waited(conf: Conf[E, C]): Conf[E, C] =
+      if (conf.fresh) conf.copy(fresh = false) else conf
     alive.foreach { conf =>
       // greedy: a branch past a greedy loop dies on any event that loop
       // could have consumed — NOT(take) on every sink transition
@@ -1088,9 +1115,9 @@ object GroupCep {
           fire(conf)
           // TILL_ANY: the waiting branch survives its own take and can
           // re-fire on a later occurrence
-          if (conf.mode == TillAny) out += conf.copy(fresh = false)
+          if (conf.mode == TillAny) out += waited(conf)
         } else if (conf.mode != Strict) {
-          out += conf.copy(fresh = false) // ignore edge
+          out += waited(conf) // ignore edge
         } // strict: branch dies
       } // stop/until: branch dies
     }
@@ -1369,7 +1396,9 @@ object GroupCep {
     *    most-preferred gate-passing candidate per start wins, and
     *    emission is start-ordered — requires the pattern compiled with
     *    [[GPattern.deferredReluctant]] so [[advance]]'s in-flight
-    *    shortest-per-start kill stays off;
+    *    shortest-per-start kill stays off (greedy selection always
+    *    defers; a [[Compiled.oneCandidatePerStart]] pattern has nothing
+    *    to select);
     *  - deferred reluctant (alternation) ⇒ [[ReluctantResolver]];
     *  - non-default skip ⇒ [[GroupSkipQueue]] (composing with the
     *    resolver when both apply);
@@ -1383,10 +1412,12 @@ object GroupCep {
       ops: CapOps[E, C]) {
     private val anchored = anchorHead || anchorTail
     if (anchored) {
-      require((c.reluctantSel && c.reluctantDeferred) || c.greedySel,
+      require((c.reluctantSel && c.reluctantDeferred) || c.greedySel ||
+        c.oneCandidatePerStart,
         "anchor gates need DEFERRED selection (compile a reluctant " +
           "pattern with deferredReluctant; greedy selection always " +
-          "defers) — the gate-then-select order cannot run on " +
+          "defers) or a pattern completing at most one candidate per " +
+          "start — the gate-then-select order cannot run on " +
           "in-flight-killed candidates")
     }
     // anchored: per start, the most-preferred candidate STILL able to
@@ -1403,6 +1434,10 @@ object GroupCep {
       if (anchored) scala.collection.mutable.LinkedHashMap
         .empty[E, (Long, C)]
       else null
+    // $ gate: the newest last tag held — every candidate completing on
+    // one event shares that event's tag, so a newer tag proves every
+    // buffered candidate dead (O(candidates per event), not O(matches))
+    private var aBestLt = -1L
     private val rr =
       if (!anchored && c.selDeferred) new ReluctantResolver[E, C](c, ts, ops)
       else null
@@ -1422,6 +1457,7 @@ object GroupCep {
             val s0 = ops.head(m)
             if (anchorTail) {
               val lt = tagOf(ops.last(m))
+              if (lt > aBestLt) { aBest.clear(); aBestLt = lt }
               aBest.get(s0) match {
                 case Some((plt, p)) if plt == lt =>
                   aBest(s0) = (lt, preferC(c, p, m, ops))
@@ -1474,24 +1510,6 @@ object GroupCep {
           m => if (sq != null) sq.add(Vector(m)) else emit(m))
         if (sq != null) sq.drain(Vector.empty, emit)
       }
-  }
-
-  /** Per-step-name capture summary straight off the run encoding —
-    * (count, first captured event) per name in capture order, exactly
-    * the planned [[graft.plans.GroupCepPlan.GroupCepExec]] output shape,
-    * with NO materialization of the full capture vector. */
-  private[graft] def groupFirsts[E, C](c: Compiled[E], m: C,
-      ops: CapOps[E, C])
-      : scala.collection.mutable.LinkedHashMap[String, (Long, E)] = {
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, (Long, E)]
-    ops.runs(m).foreach { r =>
-      val n = c.nameOf(r.slot)
-      acc.get(n) match {
-        case Some((cnt, first)) => acc(n) = (cnt + r.count, first)
-        case None => acc(n) = (r.count.toLong, r.first)
-      }
-    }
-    acc
   }
 
   /** One key's bounded scan: the shared NFA + after-match skip queue —
@@ -1726,7 +1744,8 @@ object GroupCep {
         pending = (pending ++ matches).sortBy(startOf)
 
     def drain(confs: Vector[Conf[E, C]],
-        emit: C => Unit): Vector[Conf[E, C]] = {
+        emit: C => Unit): Vector[Conf[E, C]] = if (pending.isEmpty) confs
+    else {
       var cs = confs
       var minStart =
         if (cs.isEmpty) Long.MaxValue else cs.iterator.map(_.startTs).min

@@ -92,10 +92,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   *                                  -- (linear engine: anchorHead
   *                                  -- conjunct; group engine: the
   *                                  -- advance-level canStart gate);
-  *                                  -- flat
-  *                                  -- unquantified clauses route onto
-  *                                  -- the PLANNED CepExec with the
-  *                                  -- anchors as NFA-level gates — one
+  *                                  -- flat unquantified clauses
+  *                                  -- route onto the PLANNED
+  *                                  -- GroupCepExec with the anchors
+  *                                  -- as NFA-level gates — one
   *                                  -- exchange, no window; quantified/
   *                                  -- grouped ones post-filter on
   *                                  -- boundary-struct flags);
@@ -141,7 +141,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * off each row. The input is projected to the columns the measures
   * actually reference, so captured groups stay narrow. One hash shuffle
   * on the partition key (groupByKey), one in-memory sort per key — the
-  * planned operator ([[graft.plans.CepPlan]]) remains the
+  * planned operator ([[graft.plans.GroupCepPlan]]) remains the
   * shuffle-elidable performance path; this is the SQL-text convenience
   * surface over the same NFA core.
   *
@@ -888,7 +888,7 @@ object MatchRecognize {
     // window hash-partitions on the raw key column while groupByKey
     // partitions on the encoded key, so Catalyst keeps BOTH exchanges —
     // the known library-path trade (same data volume twice); the planned
-    // CepExec path declares its distribution and would elide one, but
+    // GroupCepExec path declares its distribution and would elide one, but
     // has no PREV surface. qc16 still runs at 0.78x its pure-SQL oracle.
     // STREAMING (round 9): a window function cannot be planned on a
     // stream, so PREV rides keyed state instead — the driver carries the
@@ -955,20 +955,6 @@ object MatchRecognize {
         Seq(ordExpr(ordCol).as("__mr_ord"),
           tieCol.map(ordExpr).getOrElse(lit(0L)).as("__mr_tie")) ++
         vars.map(v => predCol(v).as(s"__mr_$v")): _*)
-    // partition-boundary flags for anchors — row_number over the SAME
-    // (partition, ord, tie) the NFA sorts by; batch-only (rejected above
-    // for streams), so the window is plannable
-    // FLAT unquantified ONE-ROW NoSkip batch clauses route onto the
-    // PLANNED CepExec operator (round 9) — anchored or not. The planner
-    // then owns the data movement (exactly one exchange + one sort from
-    // EnsureRequirements, elidable by upstream partitioning — the
-    // qc3/qc13 shape), predicates run codegen'd, and the anchors become
-    // NFA-level gates (^ = arrival-0 conjunct on the head predicate,
-    // $ = one-event tail-pend buffer) so anchored clauses need NO
-    // boundary-flag window pass at all. Everything the planned subset
-    // can't express (quantifiers, groups, alternation, ALL ROWS,
-    // MATCH_NUMBER, PREV, aggregate/subset measures, non-default skip)
-    // stays on the library path below.
     // every variable name appearing anywhere in PATTERN — measures over
     // a variable NOT in this set stay on the library path, which gives
     // them the SQL-defined degenerate results (COUNT = 0, null
@@ -980,49 +966,18 @@ object MatchRecognize {
       case PAlt(bs, _) => bs.flatMap(allPatternVars)
     }.toSet
     val patternVars = allPatternVars(elems)
-    val plannedRoutable = !streamingIn && !nested && !neverMatches &&
-      !sqlGreedy && droppedVars.isEmpty &&
-      elems.forall(e => e.quant.isEmpty && e.isInstanceOf[PVar]) &&
-      skip == Cep.NoSkip && prevVars.isEmpty && subsets.isEmpty &&
-      AllRowsRe.findFirstMatchIn(clause).isEmpty &&
-      measures.nonEmpty && measures.forall {
-        case PosMeasure(v, _, _, _, 0) => patternVars(v)
-        case FinalMeasure(PosMeasure(v, _, _, _, 0)) => patternVars(v)
-        // round 10: CepExec emits the per-key match ordinal too
-        case MatchNumMeasure(_) => true
-        case FinalMeasure(MatchNumMeasure(_)) => true
-        case _ => false
-      }
-    if (plannedRoutable) {
-      val steps = elems.map { case e =>
-        val PVar(v, _) = (e: @unchecked)
-        (v, col(s"__mr_$v"), true) // SQL concatenation = strict adjacency
-      }
-      val planned = graft.plans.CepPlan.matchPattern(basePrepared,
-        col(partCol), col("__mr_ord"), col("__mr_tie"), steps,
-        withinMicros = withinOrd,
-        anchorStart = anchorStart, anchorEnd = anchorEnd)
-      return planned.select(col("key").as(partCol) +: measures.map { m =>
-        (m match {
-          case FinalMeasure(inner) => inner
-          case other => other
-        }) match {
-          case p: PosMeasure => col(s"${p.v}_${p.c}").as(p.alias)
-          case MatchNumMeasure(alias) => col("match_number").as(alias)
-          case other => throw new IllegalStateException(s"unroutable $other")
-        }
-      }: _*)
-    }
-
-    // QUANTIFIED/GROUPED clauses route onto the planned GroupCepExec
-    // when its output shape can carry the measures: the operator emits
-    // per leaf `<name>_count` + the FIRST captured event's columns, so
+    // ONE ROW batch clauses — flat or grouped — route onto the planned
+    // GroupCepExec when its output shape can carry the measures. The
+    // planner then owns the data movement (exactly one exchange + one
+    // sort from EnsureRequirements, elidable by upstream partitioning)
+    // and predicates run codegen'd. The operator emits per leaf
+    // `<name>_count` + the FIRST captured event's columns, so
     // FIRST()/COUNT() over any variable and any position over an
     // UNQUANTIFIED variable (first = last = only) are expressible, and
     // MATCH_NUMBER() maps to the operator's per-key ordinal column;
-    // LAST/aggregates over a repeated variable, alternation, anchors,
-    // {0,..} quantifiers, ALL ROWS, PREV, SUBSET, and
-    // non-default skip stay on the library path.
+    // LAST/aggregates over a repeated variable, {0,..} quantifiers,
+    // ALL ROWS, PREV, SUBSET, and non-default skip stay on the library
+    // path.
     def quantifiedVars(es: Vector[PElem], inQuant: Boolean): Set[String] =
       es.flatMap {
         case PVar(v, q) =>
@@ -1057,11 +1012,15 @@ object MatchRecognize {
     // round 11: the reluctant compositions route planned — ^/$ anchors
     // (buffer-to-run-end gate-before-selection) and non-default skip
     // both live in GroupCepExec via the same GroupRunEmitter the
-    // library drivers run. Plain anchored and plain non-default-skip
-    // group clauses keep their library routes (boundary-flag window /
-    // groupByKey skip queue) unchanged.
+    // library drivers run. A FLAT unquantified clause needs no
+    // selection mode under anchors (each start completes at most one
+    // candidate), so its anchors become NFA-level gates with NO
+    // boundary-flag window pass. Other anchored and plain
+    // non-default-skip group clauses keep their library routes
+    // (boundary-flag window / groupByKey skip queue) unchanged.
+    val flatUnquantified = !nested && elems.forall(_.quant.isEmpty)
     val groupPlanRoutable = !streamingIn &&
-      (!anchored || hasReluctant || sqlGreedy) &&
+      (!anchored || hasReluctant || sqlGreedy || flatUnquantified) &&
       !neverMatches && droppedVars.isEmpty &&
       quantsOk(elems) &&
       (skip == Cep.NoSkip || hasReluctant || sqlGreedy) &&

@@ -356,7 +356,7 @@ object MatchRecognizeQuery extends QueryModule {
     q("qc23_mr_flat_planned",
       // The widened planned routing (round 9): a flat unquantified
       // NoSkip clause — the everyday strict-adjacency funnel — compiles
-      // onto CepExec (codegen'd predicates, one planner-inserted
+      // onto GroupCepExec (codegen'd predicates, one planner-inserted
       // exchange+sort) instead of the groupByKey library driver.
       // Oracle: adjacent-row self-join on the row_number lattice.
       """WITH o AS (SELECT user_id, event_id, event_type,

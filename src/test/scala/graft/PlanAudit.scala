@@ -38,25 +38,26 @@ object PlanAudit {
         !p.contains("BroadcastNestedLoopJoin"))
     }
 
-    // planned CEP operator: exactly one exchange + one sort below CepExec
+    // planned CEP operator: exactly one exchange + one sort below
+    // GroupCepExec
     val qc3 = plan("qc3_cep_planned")
-    val cepIdx = qc3.linesIterator.indexWhere(_.contains("- Cep "))
+    val cepIdx = qc3.linesIterator.indexWhere(_.contains("- GroupCep "))
     val below = qc3.linesIterator.toVector.drop(cepIdx)
-    check("qc3 has a CepExec node", cepIdx >= 0)
-    check("qc3 exactly one shuffle below CepExec",
+    check("qc3 has a GroupCepExec node", cepIdx >= 0)
+    check("qc3 exactly one shuffle below GroupCepExec",
       below.count(_.contains("Exchange hashpartitioning")) == 1)
-    check("qc3 exactly one sort below CepExec",
+    check("qc3 exactly one sort below GroupCepExec",
       below.count(_.contains("Sort [")) == 1)
 
     // terminal-negation funnel through the planned path: same shape —
     // the NegGate adds no data movement
     val qc13 = plan("qc13_cep_funnel_planned")
-    val cep13 = qc13.linesIterator.indexWhere(_.contains("- Cep "))
+    val cep13 = qc13.linesIterator.indexWhere(_.contains("- GroupCep "))
     val below13 = qc13.linesIterator.toVector.drop(cep13)
-    check("qc13 has a CepExec node", cep13 >= 0)
-    check("qc13 exactly one shuffle below CepExec",
+    check("qc13 has a GroupCepExec node", cep13 >= 0)
+    check("qc13 exactly one shuffle below GroupCepExec",
       below13.count(_.contains("Exchange hashpartitioning")) == 1)
-    check("qc13 exactly one sort below CepExec",
+    check("qc13 exactly one sort below GroupCepExec",
       below13.count(_.contains("Sort [")) == 1)
 
     // frame sampling: scan should prune to the two referenced columns
@@ -128,14 +129,14 @@ object PlanAudit {
     check("qe7 pivots broadcast and assignment partial-aggregates",
       qe7.contains("Broadcast") && qe7.contains("partial_min") &&
         !qe7.contains("CartesianProduct"))
-    // anchored MATCH_RECOGNIZE routes onto the planned CepExec: the
+    // anchored MATCH_RECOGNIZE routes onto the planned GroupCepExec: the
     // anchors are NFA-level gates, so there is NO boundary-flag window
-    // and only the one exchange EnsureRequirements inserts below Cep
+    // and only the one exchange EnsureRequirements inserts below it
     for (name <- Seq("qc21_match_recognize_head_anchor",
         "qc22_match_recognize_tail_anchor")) {
       val p = plan(name)
-      check(s"$name plans as CepExec with no Window",
-        p.contains("- Cep ") && !p.contains("Window"))
+      check(s"$name plans as GroupCepExec with no Window",
+        p.contains("- GroupCep ") && !p.contains("Window"))
       check(s"$name has exactly one hash shuffle",
         p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1)
     }

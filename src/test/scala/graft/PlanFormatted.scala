@@ -13,12 +13,7 @@ object PlanFormatted {
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val names =
       if (args.length > 3) args.drop(3).toSeq
-      else Seq("q1_pricing_summary", "q3_distinct_aggs", "q9_revenue_by_nation",
-        "q10_left_join", "q21_sort_limit_offset", "qw1_running_sum",
-        "qw5_tumble", "qw7_session", "qp1_dedup_exact", "qp4_minhash_pairs",
-        "qp5_ngram_jaccard", "qp7_curation_pipeline", "qt1_text_stats",
-        "qe2_knn_brute", "qm1_media_meta", "qsql1_shipping_priority",
-        "qg1_connected_components", "qc1_cep_view_error")
+      else Bench.headline
     val spark = Engine.session(32)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

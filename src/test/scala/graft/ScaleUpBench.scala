@@ -99,7 +99,7 @@ object ScaleUpBench {
     "qp1_dedup_exact", "qp4_minhash_pairs", "qp7_curation_pipeline",
     "qt1_text_stats", "qm1_media_meta", "qsql1_shipping_priority",
     "qc1_cep_view_error",
-    // round 13: the greedy planned-exec route (SpanCaps + groupFirsts +
+    // round 13: the greedy planned-exec route (SpanCaps + run-walk emission +
     // NFA fast paths) — the class whose per-key cost is O(events x
     // open starts); disjoint shards grow keys, not per-key runs, so
     // the expected wall ratio is ~linear in input. qc38 adds the

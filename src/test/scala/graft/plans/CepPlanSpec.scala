@@ -1,12 +1,15 @@
 package graft.plans
 
 import graft.SparkSuite
+import graft.plans.GroupCepPlan.{GLeafSpec, GNotSpec}
 import graft.streaming.Cep
 import org.apache.spark.sql.functions._
 
-/** The planned CEP operator must agree with the library NFA (same
-  * `Cep.advance` core, different driver) and must get its shuffle + sort
-  * from the planner, not from Dataset-level operations. */
+/** FLAT patterns (a sequence of leaf steps, negations between them or at
+  * the end) through the one planned CEP operator: they must agree with
+  * the linear library NFA (different engine, same reference semantics)
+  * and must get their shuffle + sort from the planner, not from
+  * Dataset-level operations. */
 final case class E(event_id: Long, ts: java.sql.Timestamp,
     event_type: String, user_id: Long)
 
@@ -30,12 +33,13 @@ class CepPlanSpec extends SparkSuite {
 
   private val hourMicros = 3600L * 1000 * 1000
 
-  private def planned = CepPlan.matchPattern(events,
+  private val viewError = Seq(
+    GLeafSpec("view", col("event_type") === "view"),
+    GLeafSpec("error", col("event_type") === "error"))
+
+  private def planned = GroupCepPlan.matchGroupPattern(events,
     key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-    steps = Seq(
-      ("view", col("event_type") === "view", false),
-      ("error", col("event_type") === "error", false)),
-    withinMicros = Some(hourMicros))
+    elems = viewError, withinMicros = Some(hourMicros))
 
   test("planned operator matches the library NFA result") {
     val got = planned
@@ -64,12 +68,9 @@ class CepPlanSpec extends SparkSuite {
     val withNull = events.unionByName(Seq(
       (8L, null.asInstanceOf[java.sql.Timestamp], "error", 1L)
     ).toDF("event_id", "ts", "event_type", "user_id"))
-    val got = CepPlan.matchPattern(withNull,
+    val got = GroupCepPlan.matchGroupPattern(withNull,
       key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-      steps = Seq(
-        ("view", col("event_type") === "view", false),
-        ("error", col("event_type") === "error", false)),
-      withinMicros = Some(hourMicros))
+      elems = viewError, withinMicros = Some(hourMicros))
       .select($"key", $"view_event_id", $"error_event_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === Set((1L, 1L, 3L)), "null-ts row must not affect matches")
@@ -84,35 +85,35 @@ class CepPlanSpec extends SparkSuite {
       ("u2", 3L, "other"), // uncopied row opens key u2
       ("u2", 4L, "view"), ("u2", 5L, "error")
     ).toDF("k", "ts", "event_type")
-    val got = CepPlan.matchPattern(df,
-      key = col("k"), ts = col("ts"), tie = col("ts"),
-      steps = Seq(
-        ("view", col("event_type") === "view", false),
-        ("error", col("event_type") === "error", false)))
+    val got = GroupCepPlan.matchGroupPattern(df,
+      key = col("k"), ts = col("ts"), tie = col("ts"), elems = viewError)
       .select($"key", $"view_ts", $"error_ts")
       .as[(String, Long, Long)].collect().toSet
     assert(got === Set(("u1", 1L, 2L), ("u2", 4L, 5L)))
   }
 
-  test("planner inserts exactly one hash shuffle and one sort below CepExec") {
+  test("planner inserts exactly one hash shuffle and one sort below a flat pattern") {
     val df = planned
     df.collect() // materialize the AQE final plan
     // AQE prints initial + final plans; assert on the final section only
     val p = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    assert(p.contains("Cep user_id")) // our node, not flagged invalid (!Cep)
-    assert(!p.contains("!Cep"))
+    // our node, not flagged invalid (!GroupCep)
+    assert(p.contains("GroupCep user_id"))
+    assert(!p.contains("!GroupCep"))
     assert(p.contains("Exchange hashpartitioning(user_id"))
     assert(p.contains("Sort [user_id"))
     assert("Exchange ".r.findAllIn(p).size === 1) // exactly one shuffle
   }
 
   test("strict next dies on an intervening event, relaxed survives") {
-    val strict = CepPlan.matchPattern(events.where($"user_id" === 1L),
+    val strict = GroupCepPlan.matchGroupPattern(
+      events.where($"user_id" === 1L),
       key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-      steps = Seq(
-        ("view", col("event_type") === "view", false),
-        ("error", col("event_type") === "error", true))) // strict next
+      elems = Seq(
+        GLeafSpec("view", col("event_type") === "view"),
+        GLeafSpec("error", col("event_type") === "error",
+          strict = true))) // strict next
     // view(1) -> click(2) kills the strict partial; no match for user 1
     assert(strict.count() === 0)
   }
@@ -122,6 +123,7 @@ class CepPlanSpec extends SparkSuite {
     assert(row.getAs[Long]("key") === 1L)
     assert(row.getAs[String]("view_event_type") === "view")
     assert(row.getAs[java.sql.Timestamp]("error_ts") === ts("2024-01-01 10:20:00"))
+    assert(row.getAs[Long]("view_count") === 1L)
   }
 
   test("notFollowedBy + SkipPastLastEvent through the planned path match the library") {
@@ -135,13 +137,11 @@ class CepPlanSpec extends SparkSuite {
       (10L, 1L, "view", 2L), (11L, 2L, "purchase", 2L), (12L, 3L, "error", 2L),
       (13L, 4L, "view", 2L), (14L, 5L, "error", 2L)
     ).toDF("event_id", "ts", "event_type", "user_id")
-    val got = CepPlan.matchPattern(df,
+    val got = GroupCepPlan.matchGroupPattern(df,
         key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-        steps = Seq(
-          ("view", col("event_type") === "view", false),
-          ("error", col("event_type") === "error", false)),
-        notBefore = Map(
-          "error" -> (col("event_type") === "purchase", false)),
+        elems = Seq(viewError(0),
+          GNotSpec("!error", col("event_type") === "purchase"),
+          viewError(1)),
         skip = Cep.SkipPastLastEvent)
       .select($"key", $"view_event_id", $"error_event_id")
       .as[(Long, Long, Long)].collect().toSet
@@ -166,32 +166,29 @@ class CepPlanSpec extends SparkSuite {
       (10L, 1L, "view", 2L), (11L, 2L, "other", 2L),
       (12L, 3L, "purchase", 2L), (13L, 4L, "error", 2L)
     ).toDF("event_id", "ts", "event_type", "user_id")
-    val got = CepPlan.matchPattern(df,
+    val got = GroupCepPlan.matchGroupPattern(df,
         key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-        steps = Seq(
-          ("view", col("event_type") === "view", false),
-          ("error", col("event_type") === "error", false)),
-        notBefore = Map(
-          "error" -> (col("event_type") === "purchase", true))) // notNext
+        elems = Seq(viewError(0),
+          GNotSpec("!error", col("event_type") === "purchase",
+            nextOnly = true),
+          viewError(1)))
       .select($"key", $"view_event_id", $"error_event_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === Set((2L, 10L, 13L)))
   }
 
   test("skip-strategy planned plan keeps the one-Exchange/one-Sort shape") {
-    val df = CepPlan.matchPattern(events,
+    val df = GroupCepPlan.matchGroupPattern(events,
       key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-      steps = Seq(
-        ("view", col("event_type") === "view", false),
-        ("error", col("event_type") === "error", false)),
+      elems = Seq(viewError(0),
+        GNotSpec("!error", col("event_type") === "purchase"),
+        viewError(1)),
       withinMicros = Some(hourMicros),
-      notBefore = Map(
-        "error" -> (col("event_type") === "purchase", false)),
       skip = Cep.SkipPastLastEvent)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    assert(p.contains("Cep user_id") && !p.contains("!Cep"))
+    assert(p.contains("GroupCep user_id") && !p.contains("!GroupCep"))
     assert("Exchange ".r.findAllIn(p).size === 1)
     assert(p.contains("Sort [user_id"))
   }
@@ -225,12 +222,9 @@ class CepPlanSpec extends SparkSuite {
   test("planned operator agrees with qc1 library pipeline on sf0.001 events") {
     val ev = graft.Engine.table(spark, sf, "events")
       .selectExpr("event_id", "ts", "user_id", "event_type")
-    val got = CepPlan.matchPattern(ev,
+    val got = GroupCepPlan.matchGroupPattern(ev,
         key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-        steps = Seq(
-          ("view", col("event_type") === "view", false),
-          ("error", col("event_type") === "error", false)),
-        withinMicros = Some(hourMicros))
+        elems = viewError, withinMicros = Some(hourMicros))
       .groupBy($"key".as("user_id"), $"view_ts".as("start_ts"))
       .agg(min($"error_ts").as("end_ts"))
       .select("user_id", "start_ts", "end_ts")
@@ -250,12 +244,9 @@ class CepPlanSpec extends SparkSuite {
       (1L, ts("2024-01-01 10:00:00"), "view", 9L),
       (2L, ts("2024-01-01 10:20:00"), "error", 9L)
     ).toDF("event_id", "ts", "event_type", "user_id")
-    val got = CepPlan.matchPattern(dup,
+    val got = GroupCepPlan.matchGroupPattern(dup,
         key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-        steps = Seq(
-          ("view", col("event_type") === "view", false),
-          ("error", col("event_type") === "error", false)),
-        withinMicros = Some(hourMicros))
+        elems = viewError, withinMicros = Some(hourMicros))
       .select($"key", $"view_event_id", $"error_event_id")
       .as[(Long, Long, Long)].collect().toSeq
 
@@ -272,15 +263,15 @@ class CepPlanSpec extends SparkSuite {
     assert(got.sorted === lib.sorted)
   }
 
-  test("hot-key diagnostics: CepExec SQL metrics expose match count and hottest-key size") {
+  test("flat-pattern hot-key diagnostics: match count and hottest-key size") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = planned
     val n = df.collect().length // run THIS queryExecution so metrics populate
-    def findCep(p: SparkPlan): Seq[CepPlan.CepExec] = p match {
+    def findCep(p: SparkPlan): Seq[GroupCepPlan.GroupCepExec] = p match {
       case a: AdaptiveSparkPlanExec => findCep(a.executedPlan)
       case q: QueryStageExec => findCep(q.plan) // AQE stages hide children
-      case c: CepPlan.CepExec => Seq(c)
+      case c: GroupCepPlan.GroupCepExec => Seq(c)
       case o => o.children.flatMap(findCep)
     }
     val cep = findCep(df.queryExecution.executedPlan)
@@ -292,62 +283,57 @@ class CepPlanSpec extends SparkSuite {
     // so it is bounded below by the global hottest key and above by the
     // total event count (7) — the documented read-the-max semantics
     assert(m("maxKeyEvents").value >= 4L && m("maxKeyEvents").value <= 7L)
-    assert(m("maxKeyPartials").value >= 1L)
+    assert(m("maxKeyBranches").value >= 1L)
   }
 
   test("anchor gates: ^ restricts starts to the run head, $ to tail-ending matches") {
     // ^ V -> E: only user 1's run STARTS with a view (user 2's does too
-    // but the 1h within prunes its only error); user 3 starts with error
-    val head = CepPlan.matchPattern(events,
+    // but the 1h within prunes its only error); user 3 starts with error.
+    // A flat pattern completes at most one candidate per start, so the
+    // anchors need no selection mode
+    val head = GroupCepPlan.matchGroupPattern(events,
       col("user_id"), col("ts"), col("event_id"),
-      steps = Seq(
-        ("v", col("event_type") === "view", false),
-        ("e", col("event_type") === "error", false)),
-      withinMicros = Some(hourMicros), anchorStart = true)
+      elems = Seq(
+        GLeafSpec("v", col("event_type") === "view"),
+        GLeafSpec("e", col("event_type") === "error")),
+      withinMicros = Some(hourMicros), anchorHead = true)
       .select($"key", $"v_event_id", $"e_event_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(head === Set((1L, 1L, 3L)))
     // E $: every error row is a candidate; only each run's FINAL row
-    // survives the tail-pend buffer
-    val tail = CepPlan.matchPattern(events,
-      col("user_id"), col("ts"), col("event_id"),
-      steps = Seq(("e", col("event_type") === "error", false)),
-      anchorEnd = true)
-      .select($"key", $"e_event_id").as[(Long, Long)].collect().toSet
-    assert(tail === Set((1L, 4L), (2L, 6L), (3L, 7L)))
-    // anchors demand the NoSkip strategy and no terminal negation
-    intercept[IllegalArgumentException] {
-      CepPlan.matchPattern(events, col("user_id"), col("ts"),
+    // passes the tail gate
+    val errorOnly = Seq(GLeafSpec("e", col("event_type") === "error"))
+    def tail(skip: Cep.AfterMatchSkip) =
+      GroupCepPlan.matchGroupPattern(events,
+        col("user_id"), col("ts"), col("event_id"), errorOnly,
+        skip = skip, anchorTail = true)
+        .select($"key", $"e_event_id").as[(Long, Long)].collect().toSet
+    assert(tail(Cep.NoSkip) === Set((1L, 4L), (2L, 6L), (3L, 7L)))
+    // a non-default skip runs AFTER the gate (gate, then skip — the
+    // SQL:2016 order), so anchor-rejected candidates never consume it
+    assert(tail(Cep.SkipPastLastEvent) === tail(Cep.NoSkip))
+    // $ cannot combine with terminal negation (the gate waits past the
+    // match's last row, the tail gate demands it be the run's last)
+    val e = intercept[IllegalArgumentException] {
+      GroupCepPlan.matchGroupPattern(events, col("user_id"), col("ts"),
         col("event_id"),
-        steps = Seq(("e", col("event_type") === "error", false)),
-        skip = Cep.SkipPastLastEvent, anchorEnd = true)
+        Seq(GLeafSpec("v", col("event_type") === "view"),
+          GNotSpec("!e", col("event_type") === "error", nextOnly = true)),
+        anchorTail = true)
     }
-    intercept[IllegalArgumentException] {
-      CepPlan.matchPattern(events, col("user_id"), col("ts"),
-        col("event_id"),
-        steps = Seq(("v", col("event_type") === "view", false)),
-        notAtEnd = Some((col("event_type") === "error", true)),
-        anchorEnd = true)
-    }
+    assert(e.getMessage.contains("$ anchor cannot combine"), e.getMessage)
   }
 
   test("composite/binary keys are rejected by name (evaluated-path equality)") {
     // review r17: struct/array/map evaluate to InternalRow/ArrayData —
     // identity equality on the run-boundary check would silently open a
-    // new run per row; binary keys (Array[Byte]) likewise. Both planned
-    // operators reject the shape at construction.
-    val steps = Seq(("v", col("event_type") === "view", false))
+    // new run per row; binary keys (Array[Byte]) likewise. The planned
+    // operator rejects the shape at construction.
     for (badKey <- Seq(struct(col("user_id"), col("event_type")),
         array(col("user_id")), col("event_type").cast("binary"))) {
-      val e = intercept[IllegalArgumentException] {
-        CepPlan.matchPattern(events, badKey, col("ts"), col("event_id"),
-          steps)
-      }
-      assert(e.getMessage.contains("value equality"), e.getMessage)
       val g = intercept[IllegalArgumentException] {
         GroupCepPlan.matchGroupPattern(events, badKey, col("ts"),
-          col("event_id"),
-          Seq(GroupCepPlan.GLeafSpec("v", col("event_type") === "view")))
+          col("event_id"), Seq(GLeafSpec("v", col("event_type") === "view")))
       }
       assert(g.getMessage.contains("value equality"), g.getMessage)
     }
@@ -361,10 +347,9 @@ class CepPlanSpec extends SparkSuite {
     // key's OWN unresolved error surface instead — and for a key shape
     // whose root resolves pre-analysis there is nothing to map at all.
     val e = intercept[Throwable] {
-      CepPlan.matchPattern(events,
+      GroupCepPlan.matchGroupPattern(events,
         expr("hash(struct(user_id, event_type))"), col("ts"),
-        col("event_id"),
-        Seq(("v", col("event_type") === "view", false)))
+        col("event_id"), Seq(GLeafSpec("v", col("event_type") === "view")))
     }
     assert(!Option(e.getMessage).getOrElse("").contains("value equality"),
       s"nested struct() must not trigger the composite-key rejection: $e")

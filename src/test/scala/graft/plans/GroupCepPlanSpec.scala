@@ -240,4 +240,67 @@ class GroupCepPlanSpec extends SparkSuite {
     assert(m("maxKeyEvents").value >= 6L && m("maxKeyEvents").value <= 13L)
     assert(m("maxKeyBranches").value >= 1L)
   }
+
+  test("anchored unquantified pattern is accepted without a selection mode") {
+    // ^ s (a b) e $: an UNQUANTIFIED group still completes at most one
+    // candidate per start (worked out from the compiled pattern), so the
+    // anchors gate without reluctant/sqlGreedy. User 3 starts with a;
+    // users 1 and 2 span their whole runs.
+    val df = GroupCepPlan.matchGroupPattern(events,
+      key = col("user_id"), ts = col("ts"), tie = col("event_id"),
+      elems = Seq(
+        GLeafSpec("s", col("name") === "c"),
+        GGroupSpec(Seq(
+          GLeafSpec("a", col("name") === "a"),
+          GLeafSpec("b", col("name") === "b"))),
+        GLeafSpec("e", col("name") === "d")),
+      anchorHead = true, anchorTail = true)
+    val got = df.select($"key", $"s_event_id", $"a_event_id", $"e_event_id")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(got === Set((1L, 1L, 2L, 6L), (2L, 10L, 11L, 13L)))
+    assert(df.queryExecution.executedPlan.toString.contains("GroupCep"))
+  }
+
+  test("anchored quantified or followedByAny pattern needs a selection mode") {
+    // either shape lets one start complete several candidates — the
+    // anchors would have to pick one, which only a selection mode defines
+    val quantified = Seq(
+      GLeafSpec("s", col("name") === "c"),
+      GGroupSpec(Seq(GLeafSpec("a", col("name") === "a")), min = 1, max = 2),
+      GLeafSpec("e", col("name") === "d"))
+    val any = Seq(
+      GLeafSpec("s", col("name") === "c"),
+      GLeafSpec("e", col("name") === "d", any = true))
+    for (elems <- Seq(quantified, any); (head, tail) <- Seq(
+        (true, false), (false, true))) {
+      val e = intercept[IllegalArgumentException] {
+        GroupCepPlan.matchGroupPattern(events,
+          key = col("user_id"), ts = col("ts"), tie = col("event_id"),
+          elems = elems, anchorHead = head, anchorTail = tail)
+      }
+      assert(e.getMessage.contains("anchors require a selection mode"),
+        e.getMessage)
+    }
+    // the same quantified pattern is accepted once a mode picks
+    GroupCepPlan.matchGroupPattern(events,
+      key = col("user_id"), ts = col("ts"), tie = col("event_id"),
+      elems = quantified.map {
+        case g: GGroupSpec => g.copy(strict = true, consecutive = true)
+        case l: GLeafSpec => l.copy(strict = true)
+        case o => o
+      }, anchorHead = true, sqlGreedy = true)
+  }
+
+  test("terminal negation with a non-default skip is rejected by name") {
+    val e = intercept[IllegalArgumentException] {
+      GroupCepPlan.matchGroupPattern(events,
+        key = col("user_id"), ts = col("ts"), tie = col("event_id"),
+        elems = Seq(
+          GLeafSpec("s", col("name") === "c"),
+          GNotSpec("!d", col("name") === "d", nextOnly = true)),
+        skip = graft.streaming.Cep.SkipPastLastEvent)
+    }
+    assert(e.getMessage.contains(
+      "terminal negation requires the default NoSkip strategy"), e.getMessage)
+  }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   * `within` using the semantics Flink later standardized (1.14 /
   * FLINK-23958): the match emits at the window horizon if no banned event
   * arrived — the "A not followed by B within w" funnel shape. All three
-  * execution paths (library batch, planned CepExec, streaming state
+  * execution paths (library batch, planned GroupCepExec, streaming state
   * function) run the same [[Cep.NegGate]].
   */
 class CepTerminalNegationSpec extends SparkSuite {
@@ -88,19 +88,20 @@ class CepTerminalNegationSpec extends SparkSuite {
     assert(got === Set((2L, 100L), (3L, 100L)))
   }
 
-  test("planned CepExec with notAtEnd agrees with the library funnel") {
-    import graft.plans.CepPlan
+  test("planned terminal GNotSpec agrees with the library funnel") {
+    import graft.plans.GroupCepPlan
+    import graft.plans.GroupCepPlan.{GLeafSpec, GNotSpec}
     val events = Seq(
       Ev(1, "view", 100), Ev(1, "purchase", 110),
       Ev(2, "view", 100), Ev(2, "purchase", 140),
       Ev(3, "view", 100), Ev(3, "click", 120),
       Ev(4, "view", 100), Ev(4, "view", 105), Ev(4, "purchase", 125))
     val df = spark.createDataset(events).toDF()
-    val planned = CepPlan.matchPattern(df,
+    val funnel = Seq(GLeafSpec("v", col("typ") === "view"),
+      GNotSpec("p", col("typ") === "purchase"))
+    val planned = GroupCepPlan.matchGroupPattern(df,
       key = col("user"), ts = col("ts"), tie = col("ts"),
-      steps = Seq(("v", col("typ") === "view", false)),
-      withinMicros = Some(30L),
-      notAtEnd = Some((col("typ") === "purchase", false)))
+      elems = funnel, withinMicros = Some(30L))
       .select(col("key").cast("long"), col("v_ts"))
       .as[(Long, Long)].collect().toSet
     assert(planned === Set((2L, 100L), (3L, 100L)))
@@ -108,19 +109,19 @@ class CepTerminalNegationSpec extends SparkSuite {
     val nn = Seq(
       Ev(7, "a", 1), Ev(7, "d", 2), Ev(7, "z", 3),
       Ev(8, "a", 1), Ev(8, "d", 2), Ev(8, "b", 3))
-    val plannedNN = CepPlan.matchPattern(spark.createDataset(nn).toDF(),
+    val plannedNN = GroupCepPlan.matchGroupPattern(
+      spark.createDataset(nn).toDF(),
       key = col("user"), ts = col("ts"), tie = col("ts"),
-      steps = Seq(("s", col("typ") === "a", false),
-        ("e", col("typ") === "d", false)),
-      notAtEnd = Some((col("typ") === "b", true)))
+      elems = Seq(GLeafSpec("s", col("typ") === "a"),
+        GLeafSpec("e", col("typ") === "d"),
+        GNotSpec("b", col("typ") === "b", nextOnly = true)))
       .select(col("key").cast("long"), col("s_ts"), col("e_ts"))
       .as[(Long, Long, Long)].collect().toSet
     assert(plannedNN === Set((7L, 1L, 2L)))
     // planned terminal notFollowedBy without within is rejected
     val err = intercept[IllegalArgumentException] {
-      CepPlan.matchPattern(df, col("user"), col("ts"), col("ts"),
-        Seq(("v", col("typ") === "view", false)),
-        notAtEnd = Some((col("typ") === "purchase", false)))
+      GroupCepPlan.matchGroupPattern(df, col("user"), col("ts"), col("ts"),
+        funnel)
     }
     assert(err.getMessage.contains("NotFollowedBy is not supported"))
   }

@@ -203,7 +203,7 @@ class MatchRecognizeSpec extends SparkSuite {
       .as[(Long, Option[Long], Long)].collect().toSeq
     assert(one === Seq((0L, None, 1L)))
 
-    // the FLAT CepExec route (positional-only measures, no COUNT) has
+    // the FLAT planned route (positional-only measures, no COUNT) has
     // the same gate — a COUNT-free unknown-variable clause previously
     // slipped through it
     val flat = MatchRecognize(df,
@@ -364,7 +364,7 @@ class MatchRecognizeSpec extends SparkSuite {
         |DEFINE E AS event_type = 'error'""".stripMargin)
       .as[(Long, Long)].collect().toSet
     assert(tail === Set((1L, 4L)))
-    // the flat unquantified anchored clause ROUTES PLANNED (CepExec, no
+    // the flat unquantified anchored clause ROUTES PLANNED (GroupCepExec, no
     // boundary-flag window) — pin it so a silent library fallback fails
     val headPlan = MatchRecognize(df,
       """PARTITION BY user_id
@@ -373,7 +373,7 @@ class MatchRecognizeSpec extends SparkSuite {
         |PATTERN (^ V C)
         |DEFINE V AS event_type = 'view', C AS event_type = 'click'""".stripMargin)
       .queryExecution.executedPlan.toString
-    assert(headPlan.contains("- Cep ") && !headPlan.contains("Window"))
+    assert(headPlan.contains("- GroupCep ") && !headPlan.contains("Window"))
     // ...and so does the UNANCHORED flat unquantified clause (round 9
     // widened the planned routing beyond anchors)
     val flatPlan = MatchRecognize(df,
@@ -383,7 +383,7 @@ class MatchRecognizeSpec extends SparkSuite {
         |PATTERN (V C)
         |DEFINE V AS event_type = 'view', C AS event_type = 'click'""".stripMargin)
       .queryExecution.executedPlan.toString
-    assert(flatPlan.contains("- Cep "))
+    assert(flatPlan.contains("- GroupCep "))
     // both anchors: the pattern must span the whole partition
     val span = MatchRecognize(df,
       """PARTITION BY user_id
@@ -469,9 +469,9 @@ class MatchRecognizeSpec extends SparkSuite {
     assert(d2.as[(Long, Option[Long], Long, Long)].collect().toSet
       === Set((1L, None, 1L, 0L)))
     // ...including the ALL-position-measures form, which would route
-    // planned (CepExec) if the dropped variable did not disable it
+    // planned (GroupCepExec) if the dropped variable did not disable it
     val d3 = mr("E? ^ V C", "E.event_id AS e_null, V.event_id AS v_id")
-    assert(!d3.queryExecution.executedPlan.toString.contains("- Cep "))
+    assert(!d3.queryExecution.executedPlan.toString.contains("- GroupCep "))
     assert(d3.as[(Long, Option[Long], Long)].collect().toSet
       === Set((1L, None, 1L)))
   }
@@ -900,7 +900,7 @@ class MatchRecognizeSpec extends SparkSuite {
       .contains("MapGroups"))
     assert(library.select("user_id", "mn", "v_id")
       .as[(Long, Long, Long)].collect().toSet === expected)
-    // the FLAT planned route (CepExec) carries the ordinal too: an
+    // the FLAT planned route carries the ordinal too: an
     // unquantified flat clause with MATCH_NUMBER routes planned and
     // produces the same per-key emission-order ordinals
     val flatClause =
@@ -912,7 +912,7 @@ class MatchRecognizeSpec extends SparkSuite {
         .stripMargin
     val flat = MatchRecognize(df, flatClause)
     val flatPlan = flat.queryExecution.executedPlan.toString
-    assert(flatPlan.contains("- Cep ") && !flatPlan.contains("MapGroups"))
+    assert(flatPlan.contains("- GroupCep ") && !flatPlan.contains("MapGroups"))
     assert(flat.select("user_id", "mn", "v_id")
       .as[(Long, Long, Long)].collect().toSet ===
       Set((1L, 1L, 1L), (1L, 2L, 4L), (2L, 1L, 10L)))
