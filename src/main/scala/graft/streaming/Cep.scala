@@ -42,8 +42,7 @@ object Cep {
       relaxedReps: Boolean = false, combos: Boolean = false,
       ctxPred: Option[(E, Map[String, Seq[E]]) => Boolean] = None,
       negNextOnly: Boolean = false, anyMatch: Boolean = false,
-      untilCtxPred: Option[(E, Map[String, Seq[E]]) => Boolean] = None,
-      reluctant: Boolean = false, arrival0: Boolean = false) {
+      untilCtxPred: Option[(E, Map[String, Seq[E]]) => Boolean] = None) {
     def looping: Boolean = maxReps > minReps || maxReps == Int.MaxValue
     /** Any repetition at all — times(n) included (looping excludes fixed
       * times(n), whose run length is exact). */
@@ -245,38 +244,6 @@ object Cep {
       new Pattern(steps.init :+ steps.last.copy(allPrefixes = false),
         withinMs, pendingNot, pendingNotNext)
     }
-    /** Pin the pattern's FIRST step to the key's FIRST-EVER event (the
-      * MATCH_RECOGNIZE ^ anchor, usable under STREAMING): the
-      * arrival-tagging drivers conjoin `arrival ordinal == 0` onto the
-      * head predicate at lift time, so only a match starting at the
-      * partition head can form — the head IS knowable on an unbounded
-      * stream (the cross-batch [[ArrivalState]] counter), unlike the $
-      * tail. Consumable ONLY by the arrival-identity drivers (the batch
-      * default and the ArrivalState streaming wrappers); the raw
-      * value-identity *Fn forms reject it in [[runSorted]]. */
-    def anchorHead: Pattern[E] = new Pattern(
-      steps.head.copy(arrival0 = true) +: steps.tail,
-      withinMs, pendingNot, pendingNotNext)
-    /** SQL:2016 RELUCTANT marker for the previous quantified step
-      * (MATCH_RECOGNIZE `B+?` / `B??` / `B{n,m}?` — beyond the 1.6
-      * reference's CEP, which has no reluctant concept): the engine
-      * emits only the SHORTEST completion per match start and kills the
-      * longer same-start branches the moment it completes. Contract: at
-      * most ONE step of the pattern may be quantified when any is
-      * reluctant — with a single quantifier, SQL preference order
-      * (fewest repetitions first) coincides with completion order, which
-      * is the invariant that makes the pruning exact in batch AND
-      * streaming (a more-preferred candidate can never complete later).
-      * [[validated]] enforces the contract; [[runSorted]] additionally
-      * requires NoSkip and no terminal negation. Pair a looping
-      * reluctant step with [[allPrefixes]] so the non-maximal branches
-      * exist to be selected from. */
-    def reluctant: Pattern[E] = {
-      require(steps.last.multiRep || steps.last.optional,
-        "reluctant requires a quantified step")
-      new Pattern(steps.init :+ steps.last.copy(reluctant = true),
-        withinMs, pendingNot, pendingNotNext)
-    }
     /** Partial matches older than `ms` (vs the current event) are pruned. */
     def within(ms: Long): Pattern[E] = new Pattern(steps, Some(ms), pendingNot, pendingNotNext)
 
@@ -305,16 +272,6 @@ object Cep {
       require(!greedyTrailing,
         "a greedy loop may not be followed by only-optional steps " +
           "(use the reference-default allPrefixes emission)")
-      if (steps.exists(_.reluctant)) {
-        // single-quantifier contract: see [[reluctant]] — with two or
-        // more quantified steps, preference order no longer equals
-        // completion order and the shortest-first pruning would be wrong
-        require(steps.count(s => s.multiRep || s.optional) == 1,
-          "a reluctant pattern may contain exactly ONE quantified step " +
-            "(single-quantifier preference order = completion order)")
-        require(pendingNot.isEmpty,
-          "reluctant does not compose with terminal negation")
-      }
       this
     }
   }
@@ -628,8 +585,9 @@ object Cep {
                 // Also suppressed when the NEXT step is STRICT: the
                 // proceed-ε must take that step on THIS event (the scan
                 // already tries it) or die — a stored fork would wrongly
-                // treat a LATER event as "immediately next" (pinned by
-                // MatchRecognizeSpec's A M? B-strict case).
+                // treat a LATER event as "immediately next" (an `A M? B`
+                // clause found it; PropertySpec's SQL-vs-DSL differential
+                // covers the shape).
                 if (sj.optional &&
                   (!sj.looping || sj.allPrefixes || sj.combos) &&
                   j < lastIdx && !pattern.steps(j + 1).strict)
@@ -769,8 +727,10 @@ object Cep {
 
   /** Cheap-key-first order-preserving dedup: hash only `cheap(x)`, deep
     * equality solely within same-key buckets (linear for the near-always
-    * singleton buckets; avoids deep-hashing captured event vectors). */
-  private def dedupBy[T](xs: Vector[T])(cheap: T => Any): Vector[T] =
+    * singleton buckets; avoids deep-hashing captured event vectors — a
+    * plain `.distinct` would be quadratic along a long `oneOrMore` scan).
+    * Shared with [[GroupCep]]'s branch and match dedup. */
+  private[streaming] def dedupBy[T](xs: Vector[T])(cheap: T => Any): Vector[T] =
     if (xs.length <= 1) xs
     else {
       val buckets = scala.collection.mutable.HashMap.empty[Any, List[T]]
@@ -888,23 +848,17 @@ object Cep {
     * which IS the reference's EventId distinction. */
   private def liftPattern[E](p: Pattern[E]): Pattern[(E, Long)] = {
     val steps2 = p.steps.map { s =>
-      // the ^ head anchor bakes in here: the tag IS the per-key arrival
-      // ordinal, so `== 0` pins the step to the partition's first event
-      val pass0 = !s.arrival0
-      Step[(E, Long)](s.name,
-        w => (pass0 || w._2 == 0L) && s.pred(w._1), s.strict,
+      Step[(E, Long)](s.name, w => s.pred(w._1), s.strict,
         s.minReps, s.maxReps,
         s.negPred.map(np => (w: (E, Long)) => np(w._1)), s.optional,
         s.untilPred.map(up => (w: (E, Long)) => up(w._1)), s.allPrefixes,
         s.relaxedReps, s.combos,
         s.ctxPred.map(cp => (w: (E, Long), ctx: Map[String, Seq[(E, Long)]]) =>
-          (pass0 || w._2 == 0L) &&
-            cp(w._1, ctx.view.mapValues(_.map(_._1)).toMap)),
+          cp(w._1, ctx.view.mapValues(_.map(_._1)).toMap)),
         s.negNextOnly, s.anyMatch,
         s.untilCtxPred.map(cp =>
           (w: (E, Long), ctx: Map[String, Seq[(E, Long)]]) =>
-            cp(w._1, ctx.view.mapValues(_.map(_._1)).toMap)),
-        reluctant = s.reluctant)
+            cp(w._1, ctx.view.mapValues(_.map(_._1)).toMap)))
     }
     new Pattern[(E, Long)](steps2, p.withinMs,
       p.terminalNot.map(np => (w: (E, Long)) => np(w._1)),
@@ -953,47 +907,24 @@ object Cep {
     * to be unique among events still referenced by live partials or
     * deferred matches, all of which are gone. */
   final case class ArrivalState[E](nextSeq: Long,
-      partials: Vector[Partial[(E, Long)]],
-      matchSeq: Long = 0L, carry: Vector[E] = Vector.empty)
-
-  /** Cross-batch per-key match ordinal (SQL MATCH_NUMBER() under
-    * streaming): starts from the persisted count, `next()` is 1-based. */
-  final class MatchCounter(start: Long) extends Serializable {
-    private[streaming] var n: Long = start
-    def next(): Long = { n += 1; n }
-  }
+      partials: Vector[Partial[(E, Long)]])
 
   /** [[GroupState]] view exposing just the partials of an
     * [[ArrivalState]]; `update` re-attaches the already-advanced arrival
-    * counter (plus the match ordinal and carried rows, read at update
-    * time — matches may still be emitted between view construction and
-    * the inner fn's final `update`). Lets the arrival-tagged streaming
-    * drivers delegate to the untagged state-transition functions
-    * unchanged. */
+    * counter. Lets the arrival-tagged streaming drivers delegate to the
+    * untagged state-transition functions unchanged. */
   private final class ArrivalStateView[E](u: GroupState[ArrivalState[E]],
-      newSeq: Long, counter: MatchCounter = null,
-      carry: () => Vector[E] = () => Vector.empty,
-      persistSeq: Boolean = false)
+      newSeq: Long)
       extends GroupState[Vector[Partial[(E, Long)]]] {
     def exists: Boolean = u.exists
     def get: Vector[Partial[(E, Long)]] = u.get.partials
     def getOption: Option[Vector[Partial[(E, Long)]]] =
       u.getOption.map(_.partials)
     def update(s: Vector[Partial[(E, Long)]]): Unit =
-      u.update(ArrivalState(newSeq, s,
-        if (counter == null) 0L else counter.n, carry()))
+      u.update(ArrivalState(newSeq, s))
     // the arrival counter may safely restart when no partial survives
-    // (identity only disambiguates events LIVE partials reference), but a
-    // match ordinal or a PREV carry must outlive quiet periods — and a
-    // ^-anchored pattern gives the ordinal ABSOLUTE meaning (`== 0` is
-    // the partition's first-ever event), so it persists a counter row
-    // per key that has seen any event (`persistSeq`) — the inherent
-    // state price of first-ever semantics
-    def remove(): Unit =
-      if ((counter != null && counter.n > 0L) || carry().nonEmpty ||
-          (persistSeq && newSeq > 0L))
-        update(Vector.empty)
-      else u.remove()
+    // (identity only disambiguates events LIVE partials reference)
+    def remove(): Unit = u.remove()
     def hasTimedOut: Boolean = u.hasTimedOut
     def setTimeoutDuration(ms: Long): Unit = u.setTimeoutDuration(ms)
     def setTimeoutDuration(d: String): Unit = u.setTimeoutDuration(d)
@@ -1014,40 +945,17 @@ object Cep {
     * through the view. */
   private def arrivalFn[K, E, O](ts: E => Long, tie: E => Long,
       inner: (K, Iterator[(E, Long)],
-        GroupState[Vector[Partial[(E, Long)]]]) => Iterator[O],
-      persistSeq: Boolean = false):
-      (K, Iterator[E], GroupState[ArrivalState[E]]) => Iterator[O] =
-    arrivalFnPre(ts, tie, null, _ => inner, persistSeq)
-
-  /** [[arrivalFn]] plus the round-9 extras: a cross-batch match counter
-    * handed to `mkInner` (streaming MATCH_NUMBER()) and an optional
-    * carried-rows pre-transform `pre(carriedRows, event) =>
-    * (newCarriedRows, transformedEvent)` applied in (ts, tie) order
-    * BEFORE tagging (streaming PREV(): the carry holds each key's last
-    * rows across micro-batches). Both persist in [[ArrivalState]]. */
-  private def arrivalFnPre[K, E, O](ts: E => Long, tie: E => Long,
-      pre: (Vector[E], E) => (Vector[E], E),
-      mkInner: MatchCounter => (K, Iterator[(E, Long)],
-        GroupState[Vector[Partial[(E, Long)]]]) => Iterator[O],
-      persistSeq: Boolean = false):
+        GroupState[Vector[Partial[(E, Long)]]]) => Iterator[O]):
       (K, Iterator[E], GroupState[ArrivalState[E]]) => Iterator[O] =
     (k: K, it: Iterator[E], state: GroupState[ArrivalState[E]]) => {
-      val st = state.getOption
-      var seq = st.map(_.nextSeq).getOrElse(0L)
-      val counter = new MatchCounter(st.map(_.matchSeq).getOrElse(0L))
-      var carry = st.map(_.carry).getOrElse(Vector.empty[E])
-      val sorted = it.toVector.sortBy(e => (ts(e), tie(e)))
-      val preApplied = if (pre == null) sorted else sorted.map { e =>
-        val (c2, e2) = pre(carry, e); carry = c2; e2
-      }
-      val tagged = preApplied.map { e => val w = (e, seq); seq += 1; w }
-      mkInner(counter)(k, tagged.iterator,
-        new ArrivalStateView[E](state, seq, counter, () => carry,
-          persistSeq))
+      var seq = state.getOption.map(_.nextSeq).getOrElse(0L)
+      val tagged = it.toVector.sortBy(e => (ts(e), tie(e)))
+        .map { e => val w = (e, seq); seq += 1; w }
+      inner(k, tagged.iterator, new ArrivalStateView[E](state, seq))
     }
 
   /** Un-tag a per-step capture map, preserving declaration order. */
-  private def unliftGroups[E](groups: Map[String, Seq[(E, Long)]]):
+  private[streaming] def unliftGroups[E](groups: Map[String, Seq[(E, Long)]]):
       Map[String, Seq[E]] =
     scala.collection.immutable.ListMap(groups.toSeq
       .map { case (n, g) => n -> g.map(_._1) }: _*)
@@ -1064,30 +972,7 @@ object Cep {
     arrivalFn(ts, tie, matchStreamGroupsFn[K, (E, Long), O](
       liftPattern(pattern.validated), w => ts(w._1), skip, _._2,
       (kk: K, groups: Map[String, Seq[(E, Long)]]) =>
-        shapeFn(kk, unliftGroups(groups)), stats),
-      persistSeq = pattern.steps.exists(_.arrival0))
-
-  /** [[matchStreamGroupsArrivalFn]] plus the round-9 SQL extras: shapeFn
-    * receives the 1-based per-key match ordinal (cross-batch, persisted
-    * in [[ArrivalState.matchSeq]] — streaming MATCH_NUMBER()), and an
-    * optional `pre(carriedRows, event)` row transform whose carry
-    * persists in [[ArrivalState.carry]] (streaming PREV(): the transform
-    * sees the key's previous rows in event-time order, across batch
-    * boundaries). Keys that have emitted a match or hold a carry persist
-    * an empty-partials state row instead of being removed — the ordinal
-    * and the predecessor must survive quiet periods. */
-  def matchStreamGroupsNumberedArrivalFn[K, E, O](pattern: Pattern[E],
-      ts: E => Long, skip: AfterMatchSkip, tie: E => Long,
-      pre: (Vector[E], E) => (Vector[E], E),
-      shapeFn: (K, Long, Map[String, Seq[E]]) => O,
-      stats: HotKeyStats = null):
-      (K, Iterator[E], GroupState[ArrivalState[E]]) => Iterator[O] =
-    arrivalFnPre(ts, tie, pre, counter =>
-      matchStreamGroupsFn[K, (E, Long), O](
-        liftPattern(pattern.validated), w => ts(w._1), skip, _._2,
-        (kk: K, groups: Map[String, Seq[(E, Long)]]) =>
-          shapeFn(kk, counter.next(), unliftGroups(groups)), stats),
-      persistSeq = pattern.steps.exists(_.arrival0))
+        shapeFn(kk, unliftGroups(groups)), stats))
 
   /** Arrival-identity twin of [[matchStreamWithTimeoutsFn]]. */
   def matchStreamWithTimeoutsArrivalFn[K, E, O](pattern: Pattern[E],
@@ -1101,8 +986,7 @@ object Cep {
         finish(kk, scala.collection.immutable.ListMap(m.toSeq
           .map { case (n, e) => n -> e._1 }: _*)),
       (kk: K, groups: Map[String, Seq[(E, Long)]], at: Long) =>
-        onTimeout(kk, unliftGroups(groups), at)),
-      persistSeq = pattern.steps.exists(_.arrival0))
+        onTimeout(kk, unliftGroups(groups), at)))
 
   /** Run a pattern over a streaming Dataset: partials persist in keyed
     * state across micro-batches; final greedy runs stay pending until a
@@ -1248,8 +1132,7 @@ object Cep {
 
   /** Like [[matchStream]] but exposing every matched event per step
     * (PatternStream.flatSelect) — required for quantified steps. Same
-    * state model; the clause surface ([[MatchRecognize]]) routes
-    * streaming inputs here. */
+    * state model. */
   def matchStreamGroups[K, E, O: Encoder](ds: Dataset[E], key: E => K,
       ts: E => Long, pattern: Pattern[E],
       skip: AfterMatchSkip = NoSkip,
@@ -1267,33 +1150,6 @@ object Cep {
       CepStateCodec.versionedFn("Cep.ArrivalState",
         CepStateCodec.ArrivalVersion,
         matchStreamGroupsArrivalFn(pattern, ts, skip, tie, finish, stats)))
-  }
-
-  /** [[matchStreamGroups]] with the cross-batch per-key match ordinal in
-    * `finish` (streaming MATCH_NUMBER()) and an optional carried-rows
-    * transform `pre` (streaming PREV()); see
-    * [[matchStreamGroupsNumberedArrivalFn]]. Keys persist a counter row
-    * after their last partial dies, so reserve this variant for clauses
-    * that actually need the ordinal or the carry. */
-  def matchStreamGroupsNumbered[K, E, O: Encoder](ds: Dataset[E],
-      key: E => K, ts: E => Long, pattern: Pattern[E],
-      skip: AfterMatchSkip = NoSkip,
-      tie: E => Long = (_: E) => 0L,
-      pre: (Vector[E], E) => (Vector[E], E) = null,
-      stats: HotKeyStats = null)(
-      finish: (K, Long, Map[String, Seq[E]]) => O)(
-      implicit ke: Encoder[K]): Dataset[O] = {
-    pattern.validated
-    val timeoutConf =
-      if (pattern.withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    implicit val senc: Encoder[CepStateEnvelope] = CepStateCodec.envelopeEncoder
-    ds.groupByKey(key).flatMapGroupsWithState[CepStateEnvelope, O](
-      OutputMode.Append(), timeoutConf)(
-      CepStateCodec.versionedFn("Cep.ArrivalState",
-        CepStateCodec.ArrivalVersion,
-        matchStreamGroupsNumberedArrivalFn(pattern, ts, skip, tie, pre,
-          finish, stats)))
   }
 
   /** The per-key state-transition function behind [[matchStreamGroups]]
@@ -1371,47 +1227,11 @@ object Cep {
         pattern.withinMs, _.startTs)
       case None => null
     }
-    // SQL:2016 reluctant (single-quantifier contract, Pattern.reluctant):
-    // the FIRST completion per start is the shortest and therefore THE
-    // match — emit only it (same-event longer siblings lose a minBy) and
-    // kill every still-open branch sharing that start, so no later
-    // (longer, less preferred) completion can surface. Identical logic
-    // batch and streaming: killed branches simply never reach state.
-    val reluctantSel = pattern.steps.exists(_.reluctant)
-    require(!reluctantSel || (sq == null && gate == null),
-      "reluctant patterns require NoSkip and no terminal negation")
-    // an unconsumed ^ anchor means a value-identity driver got a
-    // head-anchored pattern — the anchor only exists as an arrival-tag
-    // conjunct (liftPattern), so reject instead of silently ignoring it
-    require(pattern.steps.forall(!_.arrival0),
-      "head-anchored patterns require an arrival-identity driver " +
-        "(matchBatchGroups arrivalIds=true or the ArrivalState streaming " +
-        "wrappers)")
     var partials = init
     if (gate != null && init.exists(_.negPending)) {
       val (pend, live) = partials.partition(_.negPending)
       gate.add(pend)
       partials = live
-    }
-    // see reluctantSel above: keep the shortest completion per start,
-    // kill the longer same-start branches (incl. those carried in from
-    // earlier micro-batches)
-    def selectReluctant(ms: Vector[Vector[Vector[E]]])
-        : Vector[Vector[Vector[E]]] = {
-      val byStart = scala.collection.mutable.LinkedHashMap
-        .empty[E, Vector[Vector[E]]]
-      ms.foreach { m =>
-        val start = m.iterator.flatten.next()
-        byStart.get(start) match {
-          case Some(prev)
-            if prev.iterator.map(_.size).sum <= m.iterator.map(_.size).sum =>
-          case _ => byStart(start) = m
-        }
-      }
-      val starts = byStart.keySet
-      partials = partials.filterNot(
-        _.groups.iterator.flatten.nextOption().exists(starts.contains))
-      byStart.values.toVector
     }
     // a confirmed match emits immediately (NoSkip) or joins the skip queue
     def feedMatch(m: Vector[Vector[E]]): Unit =
@@ -1466,11 +1286,8 @@ object Cep {
       timeAdvance(t)
       // the event decides every pending gate entry before transitioning
       if (gate != null) gate.onEvent(e, confirmGated)
-      val (next, rawMatches) = advance(pattern, partials, e, t)
+      val (next, matches) = advance(pattern, partials, e, t)
       partials = next
-      val matches =
-        if (reluctantSel && rawMatches.nonEmpty) selectReluctant(rawMatches)
-        else rawMatches
       if (stats != null && partials.size > statMaxPartials)
         statMaxPartials = partials.size
       // an all-empty match (degenerate but total) starts at this event

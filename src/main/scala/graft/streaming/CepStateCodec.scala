@@ -47,9 +47,14 @@ object CepStateCodec {
     * change to ITS state classes' layout OR meaning, without forcing
     * unrelated drivers' checkpoints to reprocess. History (shared
     * pre-envelope): 1 — pre-round-10 two-field GStreamState; 2 —
-    * GStreamState.pendingSel; 3 — envelope introduced (round 13). */
-  val ArrivalVersion = 3  // Cep.ArrivalState (linear engine drivers)
-  val GroupVersion = 3    // GroupCep.GArrivalState / GStreamState
+    * GStreamState.pendingSel; 3 — envelope introduced (round 13).
+    * Group 4 — flat MATCH_RECOGNIZE clauses now persist GArrivalState
+    * (they wrote Cep.ArrivalState at 3). Arrival 5 — ArrivalState drops
+    * matchSeq/carry; 4 is skipped so the two families never share a
+    * number again (a flat-clause checkpoint at 3 must not pass either
+    * family's check). */
+  val ArrivalVersion = 5  // Cep.ArrivalState (linear engine drivers)
+  val GroupVersion = 4    // GroupCep.GArrivalState / GStreamState
 
   /** The envelope's product encoder — a stable (int, binary) row, never
     * the kryo-opaque single column. */

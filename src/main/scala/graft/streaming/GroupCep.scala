@@ -9,12 +9,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * recursive epsilon-NFA, conformance-pinned by verbatim ports of
   * flink-cep/src/test/java/.../nfa/GroupITCase.java.
   *
-  * Why a second matcher instead of extending [[Cep.advance]]: the linear
-  * NFA models a pattern as a flat step vector with per-step quantifiers —
-  * its zero-allocation hot path and 15+ ported conformance cases depend on
-  * that shape. Groups need loop-back over a SUB-pattern (and nesting), a
-  * different state machine. This driver mirrors the reference compiler's
-  * state-graph semantics (NFACompiler.java:createGroupPatternState /
+  * This is the NFA behind every MATCH_RECOGNIZE clause (flat ones are
+  * sequences of singleton leaves) and the planned
+  * [[graft.plans.GroupCepPlan]] operator; the linear [[Cep]] engine now
+  * serves only the flink-cep DSL (`Cep.Pattern`). It mirrors the reference compiler's state-graph
+  * semantics (NFACompiler.java:createGroupPatternState /
   * createLoopingGroupPatternState) directly as a tree walk:
   *
   *  - each element boundary carries a consuming mode: STRICT (`next`, no
@@ -39,6 +38,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    has not yet ignored an event (NFACompiler.createMiddleStates).
   */
 object GroupCep {
+  import Cep.{dedupBy, unliftGroups}
 
   // consuming modes (Quantifier.ConsumingStrategy)
   final val Strict = 0
@@ -183,10 +183,9 @@ object GroupCep {
         greedySel = greedySel, arrivalTagged = arrivalTagged)
 
     /** SQL:2016 RELUCTANT selection for the pattern's SINGLE quantified
-      * element (the nested twin of [[Cep.Pattern.reluctant]] —
-      * MATCH_RECOGNIZE `(A B)+?`): per match start, only the most
-      * PREFERRED completion is emitted. Without alternation, preference
-      * order equals completion order (candidates from one start differ
+      * element (MATCH_RECOGNIZE `B+?`, `(A B)+?`): per match start, only
+      * the most PREFERRED completion is emitted. Without alternation,
+      * preference order equals completion order (candidates from one start differ
       * only in repetition count over a fixed-length body, so fewer reps
       * always completes first) and the drivers emit the first completion
       * per start, killing the longer same-start branches immediately.
@@ -356,12 +355,11 @@ object GroupCep {
           case _ => ()
         }
       }
+      // a trailing optional element (`B?`, `B*`, `B{0,m}`, a whole-pattern
+      // `A*`) is fine: its entry epsilon-walks on to completion, so the
+      // zero-occurrence match emits the moment the mandatory prefix
+      // completes (NFAITCase testEndWithOptional / testEndWithZeroOrMore)
       validateSeq(elems)
-      elems.last match {
-        case g: GGroup[E] => require(!g.optional,
-          "the final pattern element cannot be optional (nor times(0, n))")
-        case _ => ()
-      }
       this
     }
   }
@@ -753,9 +751,11 @@ object GroupCep {
             done()
           } else {
             val r = reps.getOrElse(p.id, 0) + 1
-            if (r >= p.min)
-              continueAfter(p, reps - p.id, out, done,
-                if (p.greedy) p.id else guard)
+            // loop-back forks BEFORE the exit: the branch that stays in
+            // the loop is ordered (and so emits) ahead of the one that
+            // left it on the same event — the linear engine's order
+            // (its extended run precedes its transitions), which the
+            // skip queue's same-start tie-break and MATCH_NUMBER() see
             if (r < p.max) {
               // unbounded loops: saturate the counter at p.min — both
               // future threshold reads (r' >= min always once reached;
@@ -770,6 +770,9 @@ object GroupCep {
                        else base.updated(p.id, rStore)
               enter(p.children.head, p.loopMode, r2, out, done, guard)
             }
+            if (r >= p.min)
+              continueAfter(p, reps - p.id, out, done,
+                if (p.greedy) p.id else guard)
           }
       }
 
@@ -1172,26 +1175,6 @@ object GroupCep {
     (outConfs, ms)
   }
 
-  /** Order-preserving dedup that hashes only a cheap structural key and
-    * deep-compares solely within same-key buckets. A plain `.distinct`
-    * hashes every GConf's full `captured` event vector on every event —
-    * O(match length) per branch per event, quadratic along a long
-    * `oneOrMore` scan. Epsilon-fork duplicates always share (slot, mode,
-    * reps, startTs, length), so the cheap key finds them; buckets are
-    * near-always singletons. */
-  private def dedupBy[T](xs: Vector[T])(cheap: T => Any): Vector[T] =
-    if (xs.length <= 1) xs
-    else {
-      val buckets = scala.collection.mutable.HashMap.empty[Any, List[T]]
-      val b = Vector.newBuilder[T]
-      xs.foreach { x =>
-        val k = cheap(x)
-        val seen = buckets.getOrElse(k, Nil)
-        if (!seen.contains(x)) { buckets(k) = x :: seen; b += x }
-      }
-      b.result()
-    }
-
   /** SQL:2016 lexicographic preference between two SAME-START candidate
     * matches of a reluctant pattern. Walk the consumed-slot sequences;
     * at the first diverging position the two slots' structural paths
@@ -1379,12 +1362,6 @@ object GroupCep {
   private[streaming] def liftG[E](p: GPattern[E]): GPattern[(E, Long)] =
     new GPattern(p.elems.map(liftElem[E]), p.withinMs, p.reluctantSel,
       p.deferSel, p.greedySel, arrivalTagged = true)
-
-  /** Un-tag a capture map, preserving declaration order. */
-  private def unliftGroups[E](groups: Map[String, Seq[(E, Long)]]):
-      Map[String, Seq[E]] =
-    scala.collection.immutable.ListMap(groups.toSeq
-      .map { case (n, g) => n -> g.map(_._1) }: _*)
 
   /** Per-key-run emission policy unifying the batch drivers and the
     * PLANNED [[graft.plans.GroupCepPlan.GroupCepExec]] operator — ONE
@@ -1968,19 +1945,27 @@ object GroupCep {
 
   /** Streaming keyed state for the arrival-identity group driver: the
     * per-key cross-batch arrival counter plus the skip-capable state over
-    * arrival-tagged events ([[Cep.ArrivalState]]'s group twin). */
+    * arrival-tagged events ([[Cep.ArrivalState]]'s group twin), the
+    * per-key match ordinal (MATCH_NUMBER()) and the PREV() row carry. */
   final case class GArrivalState[E](nextSeq: Long,
       inner: GStreamState[(E, Long)],
       matchSeq: Long = 0L, carry: Vector[E] = Vector.empty)
+
+  /** Cross-batch per-key match ordinal (SQL MATCH_NUMBER() under
+    * streaming): starts from the persisted count, `next()` is 1-based. */
+  final class MatchCounter(start: Long) extends Serializable {
+    private[streaming] var n: Long = start
+    def next(): Long = { n += 1; n }
+  }
 
   /** [[GroupState]] view exposing the inner [[GStreamState]] of a
     * [[GArrivalState]]; `update` re-attaches the advanced counter (plus
     * the match ordinal and PREV carry, read at update time). A key that
     * has emitted a match or holds a carry persists an empty state row
     * instead of being removed — the ordinal and the predecessor row must
-    * survive quiet periods (see [[Cep.ArrivalState]]). */
+    * survive quiet periods. */
   private final class GArrivalView[E](u: GroupState[GArrivalState[E]],
-      newSeq: Long, counter: Cep.MatchCounter = null,
+      newSeq: Long, counter: MatchCounter = null,
       carry: () => Vector[E] = () => Vector.empty,
       persistSeq: Boolean = false)
       extends GroupState[GStreamState[(E, Long)]] {
@@ -1995,8 +1980,8 @@ object GroupCep {
     // a ^-anchored pattern gives tag 0 ABSOLUTE meaning (the
     // partition's first-EVER event) — dropping the counter would let a
     // later batch re-tag from 0 and a mid-partition event wrongly open
-    // an "anchored" branch. Same persistSeq contract as the linear
-    // engine's ArrivalStateView (Cep.scala), same inherent state price.
+    // an "anchored" branch — the inherent state price of first-ever
+    // semantics.
     def remove(): Unit =
       if ((counter != null && counter.n > 0L) || carry().nonEmpty ||
           (persistSeq && newSeq > 0L))
@@ -2029,8 +2014,7 @@ object GroupCep {
       (kk: K, _: Long, groups: Map[String, Seq[E]]) => finish(kk, groups),
       stats, numbered = false, anchorHead = anchorHead)
 
-  /** [[matchStreamArrivalFn]] plus the round-9 SQL extras (the group
-    * twin of [[Cep.matchStreamGroupsNumberedArrivalFn]]): finish receives
+  /** [[matchStreamArrivalFn]] plus the round-9 SQL extras: finish receives
     * the 1-based cross-batch per-key match ordinal (streaming
     * MATCH_NUMBER()), and `pre(carriedRows, event)` — when non-null —
     * transforms each event with the key's previous rows visible, its
@@ -2046,7 +2030,7 @@ object GroupCep {
     (k: K, it: Iterator[E], state: GroupState[GArrivalState[E]]) => {
       val st = state.getOption
       var seq = st.map(_.nextSeq).getOrElse(0L)
-      val counter = new Cep.MatchCounter(st.map(_.matchSeq).getOrElse(0L))
+      val counter = new MatchCounter(st.map(_.matchSeq).getOrElse(0L))
       var carry = st.map(_.carry).getOrElse(Vector.empty[E])
       val inner = matchStreamSkipFn[K, (E, Long), O](compiled,
         w => ts(w._1), _._2, skip,
@@ -2105,8 +2089,7 @@ object GroupCep {
 
   /** [[matchStream]] with the cross-batch per-key match ordinal in
     * `finish` (streaming MATCH_NUMBER()) and an optional carried-rows
-    * transform `pre` (streaming PREV()); the group twin of
-    * [[Cep.matchStreamGroupsNumbered]]. */
+    * transform `pre` (streaming PREV()). */
   def matchStreamNumbered[K, E, O: Encoder](ds: Dataset[E], key: E => K,
       ts: E => Long, pattern: GPattern[E],
       tie: E => Long = (_: E) => 0L,

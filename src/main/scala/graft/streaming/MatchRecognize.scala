@@ -52,15 +52,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   *                                  -- (candidates buffer to partition
   *                                  -- end, anchor gates filter before
   *                                  -- selection);
-  *                                  -- a flat sequence runs
-  *                                  -- the linear NFA; nested groups,
+  *                                  -- every clause compiles onto
+  *                                  -- [[GroupCep]] (batch AND streaming,
+  *                                  -- incl. AFTER MATCH SKIP): flat
+  *                                  -- sequences, nested groups,
   *                                  -- alternation `A|B` / `(A B|C D)`
   *                                  -- (leftmost-preferred, quantifiable)
   *                                  -- and PERMUTE(e1, ..., en) (n <= 6;
   *                                  -- expands to the alternation of all
-  *                                  -- orderings, SQL:2016) compile onto
-  *                                  -- [[GroupCep]] (batch AND streaming,
-  *                                  -- incl. AFTER MATCH SKIP);
+  *                                  -- orderings, SQL:2016);
   *                                  -- {- X -} row-pattern exclusion
   *                                  -- under ALL ROWS (rows match and
   *                                  -- feed RUNNING measures but are not
@@ -86,11 +86,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   *                                  -- has no per-key end-of-stream —
   *                                  -- while
   *                                  -- ^ ALSO works on streaming
-  *                                  -- clauses — flat, nested, AND
-  *                                  -- multi-quantifier — via the
-  *                                  -- cross-batch arrival ordinal
-  *                                  -- (linear engine: anchorHead
-  *                                  -- conjunct; group engine: the
+  *                                  -- clauses via the cross-batch
+  *                                  -- arrival ordinal (the
   *                                  -- advance-level canStart gate);
   *                                  -- flat unquantified clauses
   *                                  -- route onto the PLANNED
@@ -131,7 +128,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * quantifier EMISSION follows the CEP library (flink-cep) it compiles
   * onto — a final-position `{2,3}` emits every satisfied length per
   * start offset, where strict SQL greediness would emit only the
-  * maximal one. AFTER MATCH maps onto [[Cep.AfterMatchSkip]]
+  * maximal one. A trailing optional element (`A B?`, `A B*`) emits its
+  * zero-occurrence match as soon as the mandatory prefix completes.
+  * AFTER MATCH maps onto [[Cep.AfterMatchSkip]]
   * (PAST LAST ROW = SkipPastLastEvent, TO NEXT ROW = NoSkip — the
   * default, matching the library's all-starts semantics).
   *
@@ -146,7 +145,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * surface over the same NFA core.
   *
   * STREAMING inputs route the same parsed clause onto
-  * [[Cep.matchStreamGroups]]: partial matches persist in keyed state
+  * [[GroupCep.matchStream]]: partial matches persist in keyed state
   * across micro-batches and complete whenever their events arrive.
   * WITHIN requires a watermark on the ORDER BY column upstream
   * (`df.withWatermark(ord, ...)`) — expired partials are then pruned by
@@ -599,7 +598,7 @@ object MatchRecognize {
     val excluded = parsed.excluded
     require(elems.nonEmpty, "PATTERN must name at least one variable")
     def leafNames(es: Seq[PElem]): Seq[String] = patVarNames(es)
-    // groups AND alternation route to the GroupCep epsilon-NFA
+    // groups AND alternation (variables may repeat across branches)
     val nested = elems.exists(e =>
       e.isInstanceOf[PGrp] || e.isInstanceOf[PAlt])
     val defines: Map[String, String] =
@@ -679,7 +678,6 @@ object MatchRecognize {
       case PGrp(in, q) => q.size + countQuants(in)
       case PAlt(bs, q) => q.size + bs.map(countQuants).sum
     }.sum
-    val multiQuantReluctant = hasReluctant && countQuants(elems) > 1
     if (sqlGreedy) {
       // round 11 (late): reluctant markers COMPOSE in this mode as
       // per-quantifier polarity — `V B+ C+? E` maximizes B then
@@ -688,7 +686,7 @@ object MatchRecognize {
         "sqlGreedy selection needs at least one quantified element")
     }
     if (hasReluctant) {
-      if (multiQuantReluctant) {
+      if (countQuants(elems) > 1) {
         // every decision point must rank the same way — a greedy
         // quantifier inside a reluctant ranking has no defined
         // preference interleaving (Calcite rejects the mix too)
@@ -710,13 +708,12 @@ object MatchRecognize {
       // of input, the anchor gates filter BEFORE per-start preference
       // selection (a shortest completion failing $ must lose to a
       // longer same-start candidate that reaches the partition tail),
-      // all inside the GroupCep anchored driver. STREAMING: the flat ^
+      // all inside the GroupCep anchored driver. STREAMING: the ^
       // head anchor composes too (the NFA-level arrival-0 gate means
       // every candidate is anchored by construction, so the immediate
       // shortest-per-start selection stays exact); $ — and therefore
       // any gated-at-end form — still needs batch input, which the
-      // GENERAL streaming-anchor guard below (anchorStart && !anchorEnd
-      // && !nested) already enforces — no reluctant-specific rule.
+      // GENERAL streaming-anchor guard below already enforces.
       // ROUND 10 (late): non-default AFTER MATCH SKIP also composes —
       // the GroupCep drivers resolve THE preferred match per start
       // first, then the skip queue emits/prunes over those selections
@@ -726,15 +723,11 @@ object MatchRecognize {
       // candidates at end of the key run.
     }
     // batch reluctant × anchors: route through the GroupCep anchored
-    // driver (NFA-side gates), not the boundary-flag post-filter;
-    // the streaming flat-^ form stays on the linear engine (anchorHead)
+    // driver (NFA-side gates), not the boundary-flag post-filter
     val reluctantAnchored = hasReluctant && anchored && !df.isStreaming
     // greedy selection × batch anchors: the same gate-then-select
     // driver, greedy polarity (round 11 late)
     val greedyAnchored = sqlGreedy && anchored && !df.isStreaming
-    // reluctant + non-default skip: the composition lives in the GROUP
-    // engine's resolver+queue drivers — flat clauses route there too
-    val reluctantSkip = hasReluctant && skip != Cep.NoSkip
     // SQL:2016 ALL ROWS PER MATCH WITH UNMATCHED ROWS (round 10, beyond
     // Flink 1.7): rows that are part of NO emitted match are also
     // output, with NULL measures, alongside the pass-through ORDER BY
@@ -793,19 +786,13 @@ object MatchRecognize {
     // partition boundaries are unknowable on an unbounded stream — both
     // combinations reject rather than approximate.
     // The ^ head anchor alone IS knowable on a stream (round 10): the
-    // cross-batch arrival ordinal pins the partition's first event, so a
-    // flat streaming clause routes it as an NFA-level gate
-    // ([[Cep.Pattern.anchorHead]]) instead of the batch boundary-flag
-    // post-filter. $ still requires batch input — the partition tail is
-    // unknowable before end of input.
+    // cross-batch arrival ordinal pins the partition's first event, so
+    // the streaming driver gates branch creation on arrival tag 0
+    // (GroupCep.advance canStart) instead of the batch boundary-flag
+    // post-filter — for any pattern shape. $ still requires batch input
+    // — the partition tail is unknowable before end of input.
     val anchorStreamHead = anchored && streamingIn
     if (anchored) {
-      // round 11 (late): the streaming ^ head anchor composes with
-      // NESTED and MULTI-QUANTIFIER patterns too — the group engine's
-      // streaming driver gates branch creation on cross-batch arrival
-      // tag 0 (GroupCep.advance canStart), the group twin of the
-      // linear engine's anchorHead conjunct. Only $ still needs batch
-      // input (the partition end is unknowable on an unbounded stream).
       if (streamingIn) require(anchorStart && !anchorEnd,
         "under streaming only the ^ head anchor is supported; the $ " +
           "tail requires batch input (the partition end is unknowable " +
@@ -893,7 +880,7 @@ object MatchRecognize {
     // STREAMING (round 9): a window function cannot be planned on a
     // stream, so PREV rides keyed state instead — the driver carries the
     // key's last maxOffset rows across micro-batches
-    // ([[Cep.ArrivalState.carry]], the posture Flink's streaming PREV
+    // ([[GroupCep.GArrivalState]]'s carry, the posture Flink's streaming PREV
     // takes with NFA state) and the PREV-referencing predicates are
     // evaluated per arriving row against (current row + carried rows)
     // via a driver-analyzed, executor-bound Catalyst expression.
@@ -1327,8 +1314,8 @@ object MatchRecognize {
     // deserializes its own closure copy, and flatMapGroups feeds each
     // key's matches contiguously). Streaming (round 9): the ordinal
     // persists in keyed state across micro-batches
-    // (ArrivalState/GArrivalState matchSeq) and arrives through the
-    // numbered driver variants below.
+    // (GArrivalState.matchSeq) and arrives through the numbered driver
+    // below.
     val needsMatchNum = measures.map(baseOf)
       .exists(_.isInstanceOf[MatchNumMeasure])
     var mnHasKey = false
@@ -1395,7 +1382,7 @@ object MatchRecognize {
       }
     val finish: (Row, Map[String, Seq[Row]]) => Row = (k, groups) =>
       mkRow(k, if (needsMatchNum) nextMatchNum(k) else 0L, groups)
-    // streaming routes through the numbered drivers only when the clause
+    // streaming routes through the numbered driver only when the clause
     // needs the cross-batch extras (keys then persist a counter row past
     // their last partial — don't pay that for every query)
     val needsNumbered = streamingIn && (needsMatchNum || preFn != null)
@@ -1435,144 +1422,83 @@ object MatchRecognize {
         }
       }
 
-    // flat reluctant+anchored, reluctant+skip, and multi-quantifier
-    // reluctant patterns also run the GROUP engine: the anchored
-    // driver's buffer-then-gate-then-select, the resolver+skip-queue
-    // composition, and the generalized preference ranking live there
-    // (the linear engine's reluctant flag is per-step, single-slot)
-    val routeNested = nested || reluctantAnchored || reluctantSkip ||
-      multiQuantReluctant || sqlGreedy
-    val __routed: DataFrame = if (!routeNested) {
-      // FLAT variable sequence: the linear Cep NFA (arrival-id parity,
-      // after-match skip, terminal negation — the full driver surface)
-      var pat: Cep.Pattern[Row] = null
-      elems.foreach { case e =>
-        val PVar(v, q) = (e: @unchecked)
-        pat = if (pat == null) Cep.Pattern.begin[Row](v)(pred(v))
-              else pat.next(v)(pred(v)) // SQL concatenation = strict adjacency
-        q.foreach { qq =>
-          val rel = isReluctantQ(qq)
-          qq.stripSuffix(if (rel) "?" else "") match {
-            case "?" => pat = pat.optional
-            case "*" => pat = pat.oneOrMore.optional
-            case "+" => pat = pat.oneOrMore
-            case b =>
-              b.substring(1, b.length - 1).split(",", -1) match {
-                case Array(n) => pat = pat.times(n.toInt)
-                case Array(n, "") => pat = pat.timesOrMore(n.toInt)
-                case Array(n, m) => pat = pat.times(n.toInt, m.toInt)
-              }
+    // Every clause — flat or nested — compiles onto the GroupCep
+    // epsilon-NFA (the same engine behind the reference's GroupPattern —
+    // GroupITCase 16/16); a flat clause is a sequence of singleton
+    // leaves. SQL adjacency is strict between siblings AND between the
+    // repetitions of a quantified element (consecutive). AFTER MATCH runs
+    // GroupCep's GroupSkipQueue on both paths; on the streaming path its
+    // deferred matches ride keyed state (GArrivalState).
+    def applyQuant(gp: GroupCep.GPattern[Row],
+        q: String): GroupCep.GPattern[Row] = {
+      // the reluctant marker is pattern-level on GroupCep in the
+      // default mode (strip here, set GPattern.reluctant below); in
+      // sqlGreedy mode it marks THIS quantifier's polarity
+      val applied = (if (isReluctantQ(q)) q.dropRight(1) else q) match {
+        case "?" => gp.optional
+        case "*" => gp.oneOrMore.consecutive.optional
+        case "+" => gp.oneOrMore.consecutive
+        case b =>
+          b.substring(1, b.length - 1).split(",", -1) match {
+            case Array(n) => gp.times(n.toInt).consecutive
+            case Array(n, "") =>
+              gp.times(n.toInt, Int.MaxValue).consecutive
+            case Array(n, m) => gp.times(n.toInt, m.toInt).consecutive
           }
-          if (rel) {
-            // a looping reluctant step needs allPrefixes emission so the
-            // non-maximal branches EXIST for the engine to select the
-            // shortest from (the DSL's greedy default would suppress
-            // them); optional/exact-count steps already fork every
-            // candidate
-            if (pat.steps.last.looping) pat = pat.allPrefixes
-            pat = pat.reluctant
-          }
-        }
       }
-      withinOrd.foreach(w => pat = pat.within(w))
-      // streaming ^: the head predicate gains an arrival-ordinal-0 gate
-      // consumed by the ArrivalState drivers below (cross-batch: the
-      // ordinal is the key's first-EVER event, even if it arrived many
-      // micro-batches ago)
-      if (anchorStreamHead) pat = pat.anchorHead
+      if (sqlGreedy && isReluctantQ(q)) applied.markReluctant
+      else applied
+    }
+    def build(es: Vector[PElem],
+        init: GroupCep.GPattern[Row]): GroupCep.GPattern[Row] = {
+      var gp = init
+      es.foreach { e =>
+        gp = e match {
+          case PVar(v, _) =>
+            if (gp == null) GroupCep.GPattern.begin[Row](v)(pred(v))
+            else gp.next(v)(pred(v))
+          case PGrp(inner, _) =>
+            val sub = build(inner, null)
+            if (gp == null) GroupCep.GPattern.begin[Row](sub)
+            else gp.next(sub)
+          case PAlt(branches, _) =>
+            // SQL:2016 alternation: exactly one branch matches; branch
+            // preference (leftmost) rides the engine's fork order
+            val alts = branches.map(b => build(b, null))
+            if (gp == null) GroupCep.GPattern.begin[Row](alts)
+            else gp.next(alts)
+        }
+        e.quant.foreach(q => gp = applyQuant(gp, q))
+      }
+      gp
+    }
+    var gp = build(elems, null)
+    withinOrd.foreach(w => gp = gp.within(w))
+    if (hasReluctant) gp = gp.reluctant
+    if (sqlGreedy) gp = gp.greedySelect
+    val __routed: DataFrame = post(
       if (df.isStreaming) {
         // STREAMING: partials persist in keyed state across
         // micro-batches; WITHIN patterns require a watermark on the
         // ORDER BY column upstream (`df.withWatermark(ord, ...)`) so
         // idle keys' expired partials are pruned by event-time timers.
-        // State crosses batches as a version-tagged envelope (int +
-        // kryo blob, CepStateCodec): the per-key arrival counter +
-        // partials over arrival-tagged rows (the reference's
-        // SharedBuffer EventId identity, same as the batch path).
-        post(
-          if (needsNumbered)
-            Cep.matchStreamGroupsNumbered[Row, Row, Row](
-              prepared, keyFn, ordFn, pat, skip, tie = tieFn,
-              pre = preFn)(mkRow)(outEnc, keyEnc).toDF()
-          else Cep.matchStreamGroups[Row, Row, Row](
-            prepared, keyFn, ordFn, pat, skip, tie = tieFn)(finish)(
-            outEnc, keyEnc).toDF())
-      } else
-        post(Cep.matchBatchGroups[Row, Row, Row](
-          prepared, keyFn, ordFn, pat, skip, tie = tieFn)(finish)(
-          outEnc, keyEnc).toDF())
-    } else {
-      // NESTED groups: compile onto the GroupCep epsilon-NFA (the same
-      // engine behind the reference's GroupPattern — GroupITCase 16/16).
-      // SQL adjacency is strict between siblings AND between the
-      // repetitions of a quantified element (consecutive). AFTER MATCH
-      // runs GroupCep's GroupSkipQueue on both paths; on the streaming
-      // path its deferred matches ride keyed state (GArrivalState).
-      def applyQuant(gp: GroupCep.GPattern[Row],
-          q: String): GroupCep.GPattern[Row] = {
-        // the reluctant marker is pattern-level on GroupCep in the
-        // default mode (strip here, set GPattern.reluctant below); in
-        // sqlGreedy mode it marks THIS quantifier's polarity
-        val applied = (if (isReluctantQ(q)) q.dropRight(1) else q) match {
-          case "?" => gp.optional
-          case "*" => gp.oneOrMore.consecutive.optional
-          case "+" => gp.oneOrMore.consecutive
-          case b =>
-            b.substring(1, b.length - 1).split(",", -1) match {
-              case Array(n) => gp.times(n.toInt).consecutive
-              case Array(n, "") =>
-                gp.times(n.toInt, Int.MaxValue).consecutive
-              case Array(n, m) => gp.times(n.toInt, m.toInt).consecutive
-            }
-        }
-        if (sqlGreedy && isReluctantQ(q)) applied.markReluctant
-        else applied
-      }
-      def build(es: Vector[PElem],
-          init: GroupCep.GPattern[Row]): GroupCep.GPattern[Row] = {
-        var gp = init
-        es.foreach { e =>
-          gp = e match {
-            case PVar(v, _) =>
-              if (gp == null) GroupCep.GPattern.begin[Row](v)(pred(v))
-              else gp.next(v)(pred(v))
-            case PGrp(inner, _) =>
-              val sub = build(inner, null)
-              if (gp == null) GroupCep.GPattern.begin[Row](sub)
-              else gp.next(sub)
-            case PAlt(branches, _) =>
-              // SQL:2016 alternation: exactly one branch matches; branch
-              // preference (leftmost) rides the engine's fork order
-              val alts = branches.map(b => build(b, null))
-              if (gp == null) GroupCep.GPattern.begin[Row](alts)
-              else gp.next(alts)
-          }
-          e.quant.foreach(q => gp = applyQuant(gp, q))
-        }
-        gp
-      }
-      var gp = build(elems, null)
-      withinOrd.foreach(w => gp = gp.within(w))
-      if (hasReluctant) gp = gp.reluctant
-      if (sqlGreedy) gp = gp.greedySelect
-      if (df.isStreaming) {
-        post(
-          if (needsNumbered)
-            GroupCep.matchStreamNumbered[Row, Row, Row](
-              prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
-              pre = preFn, anchorHead = anchorStreamHead)(mkRow)(
-              outEnc, keyEnc).toDF()
-          else GroupCep.matchStream[Row, Row, Row](
+        // State crosses batches as a version-tagged envelope
+        // (CepStateCodec).
+        if (needsNumbered)
+          GroupCep.matchStreamNumbered[Row, Row, Row](
             prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
-            anchorHead = anchorStreamHead)(finish)(
-            outEnc, keyEnc).toDF())
+            pre = preFn, anchorHead = anchorStreamHead)(mkRow)(
+            outEnc, keyEnc).toDF()
+        else GroupCep.matchStream[Row, Row, Row](
+          prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
+          anchorHead = anchorStreamHead)(finish)(
+          outEnc, keyEnc).toDF()
       } else
-        post(GroupCep.matchBatchGroups[Row, Row, Row](
+        GroupCep.matchBatchGroups[Row, Row, Row](
           prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
           anchorHead = (reluctantAnchored || greedyAnchored) && anchorStart,
           anchorTail = (reluctantAnchored || greedyAnchored) && anchorEnd)(
           finish)(outEnc, keyEnc).toDF())
-    }
     // an unsatisfiable interior-anchor pattern evaluates to ZERO rows:
     // the constant-false filter folds the whole subtree away
     if (neverMatches) __routed.where(lit(false)) else __routed

@@ -536,6 +536,14 @@ object PlanAudit {
           pl.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1 &&
           !pl.contains("Join"))
     }
+    // ALL ROWS with LAST over a quantified variable (outside the planned
+    // operator's per-match block) stays on the library route: one key
+    // exchange into the NFA, then the explode of the per-match arrays
+    val qc14 = plan("qc14_match_recognize_all_rows")
+    check("qc14 library route: MapGroups + explode (Generate), no GroupCepExec",
+      qc14.contains("MapGroups") && qc14.contains("Generate") &&
+        !qc14.contains("- GroupCep ") &&
+        qc14.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1)
     // the reluctant compositions AND alternation/PERMUTE (round 11):
     // routed onto the planned GroupCepExec — one Exchange + one Sort
     // feeding the operator, no groupByKey MapGroups, no window pass

@@ -373,23 +373,24 @@ class PropertySpec extends SparkSuite {
     // yield the single-batch multiset (in particular, a split between the
     // short completion and where a longer sibling would complete must
     // not resurrect the killed branch)
-    import graft.streaming.{Cep, VirtualClockHarness}
+    import graft.streaming.{Cep, GroupCep, VirtualClockHarness}
+    import graft.streaming.GroupCep.GPattern
     import org.apache.spark.sql.streaming.GroupStateTimeout
     type E = (String, Long)
-    def pat1 = Cep.Pattern.begin[E]("v")(_._1 == "v")
-      .next("b")(_ => true).oneOrMore.allPrefixes.reluctant
+    // the flat MATCH_RECOGNIZE shapes `v b+? e`, `v b{1,3}? e`, `v b?? e`
+    def flat1 = GPattern.begin[E]("v")(_._1 == "v")
+      .next("b")(_ => true).oneOrMore.consecutive
       .next("e")(_._1 == "e")
-    def pat2 = Cep.Pattern.begin[E]("v")(_._1 == "v")
-      .next("b")(t => t._1 == "b" || t._1 == "e").times(1, 3).allPrefixes
       .reluctant
+    def flat2 = GPattern.begin[E]("v")(_._1 == "v")
+      .next("b")(t => t._1 == "b" || t._1 == "e").times(1, 3).consecutive
       .next("e")(_._1 == "e")
-    def pat3 = Cep.Pattern.begin[E]("v")(_._1 == "v")
-      .next("b")(_._1 == "b").optional.reluctant
+      .reluctant
+    def flat3 = GPattern.begin[E]("v")(_._1 == "v")
+      .next("b")(_._1 == "b").optional
       .next("e")(t => t._1 == "b" || t._1 == "e")
-    val pats = Vector(() => pat1, () => pat2, () => pat3)
-    // the GROUP engine's reluctant kill must be split-invariant too
-    import graft.streaming.GroupCep
-    import graft.streaming.GroupCep.GPattern
+      .reluctant
+    val flats = Vector(() => flat1, () => flat2, () => flat3)
     def gpat = GPattern.begin[E]("v")(_._1 == "v")
       .next(GPattern.begin[E]("a")(t => t._1 == "b" || t._1 == "e")
         .next("b")(_ => true)).oneOrMore.consecutive
@@ -410,22 +411,12 @@ class PropertySpec extends SparkSuite {
       .reluctant
     val namesGen = Gen.listOfN(20, Gen.oneOf("v", "b", "e", "x"))
     check(Prop.forAll(namesGen, Gen.choose(0, 20), Gen.choose(0, 20),
-      Gen.choose(0, pats.size - 1), Gen.choose(0, 3)) {
+      Gen.choose(0, flats.size - 1), Gen.choose(0, 3)) {
       (names, i0, j0, pi, ski) =>
         val events = names.zipWithIndex.map { case (n, i) =>
           (n, (i / 2).toLong)
         }
         val (i, j) = (math.min(i0, j0), math.max(i0, j0))
-        val fn = Cep.matchStreamGroupsArrivalFn[Int, E, Seq[Long]](
-          pats(pi)(), _._2, Cep.NoSkip, _ => 0L,
-          (_, groups) => groups.values.flatten.map(_._2).toVector)
-        def run(chunks: Seq[Seq[E]]): Map[Seq[Long], Int] = {
-          val h = new VirtualClockHarness[Int, E,
-            Cep.ArrivalState[E], Seq[Long]](
-            GroupStateTimeout.NoTimeout(), fn)
-          chunks.flatMap(c => h.input(0, c: _*))
-            .groupBy(identity).view.mapValues(_.size).toMap
-        }
         def runG(p: GroupCep.GPattern[E], gskip: Cep.AfterMatchSkip)(
             chunks: Seq[Seq[E]]): Map[Seq[Long], Int] = {
           val gfn = GroupCep.matchStreamArrivalFn[Int, E, Seq[Long]](
@@ -437,23 +428,139 @@ class PropertySpec extends SparkSuite {
           chunks.flatMap(c => h.input(0, c: _*))
             .groupBy(identity).view.mapValues(_.size).toMap
         }
-        val whole = run(Seq(events))
-        val split = run(Seq(events.take(i), events.slice(i, j),
-          events.drop(j)))
+        def splitInvariant(p: GroupCep.GPattern[E],
+            gskip: Cep.AfterMatchSkip): Boolean =
+          runG(p, gskip)(Seq(events)) == runG(p, gskip)(Seq(events.take(i),
+            events.slice(i, j), events.drop(j)))
         // round 10: reluctant composes with AFTER MATCH SKIP — the
         // resolver+queue pendings must BOTH survive any split, under
-        // both the immediate (gpat) and deferred (gpatAlt) selection;
-        // the skip is its OWN generator so every (strategy, cut)
-        // combination is reachable
+        // both the immediate (flat, gpat) and deferred (gpatAlt)
+        // selection; the skip is its OWN generator so every
+        // (strategy, cut) combination is reachable
         val gskip = Vector(Cep.NoSkip, Cep.SkipPastLastEvent,
           Cep.SkipToFirst("e"), Cep.SkipToLast("v"))(ski)
-        val wholeG = runG(gpat, gskip)(Seq(events))
-        val splitG = runG(gpat, gskip)(Seq(events.take(i),
-          events.slice(i, j), events.drop(j)))
-        val wholeGA = runG(gpatAlt, gskip)(Seq(events))
-        val splitGA = runG(gpatAlt, gskip)(Seq(events.take(i),
-          events.slice(i, j), events.drop(j)))
-        whole == split && wholeG == splitG && wholeGA == splitGA
+        splitInvariant(flats(pi)(), gskip) && splitInvariant(gpat, gskip) &&
+          splitInvariant(gpatAlt, gskip)
+    })
+  }
+
+  test("flat MATCH_RECOGNIZE clauses equal the linear DSL pattern (SQL-vs-DSL differential)") {
+    // Every MATCH_RECOGNIZE clause runs on the group NFA; the linear
+    // engine keeps serving the flink-cep DSL. Random flat clauses (2-4
+    // variables, every quantifier form, all four AFTER MATCH
+    // strategies, overlapping DEFINEs over a 3-letter alphabet) must
+    // answer exactly what the linear DSL pattern of the same shape
+    // answers — `next` between elements, consecutive repetitions, the
+    // builder the clause surface used before it moved onto GroupCep.
+    // Shapes the linear `validated` rejects (a greedy loop followed only
+    // by optional elements) have no reference answer and are discarded.
+    import graft.streaming.{Cep, MatchRecognize}
+    import org.apache.spark.sql.Encoders
+    type Ev = (Long, Long, String, Long) // (event_id, ts, type, user_id)
+    val alphabet = Vector("a", "b", "c")
+    val quants = Vector("", "?", "*", "+", "{2}", "{2,}", "{1,3}", "{0,2}")
+    val skips = Vector("PAST LAST ROW", "TO NEXT ROW", "TO FIRST", "TO LAST")
+    final case class Clause(quants: Vector[String], defs: Vector[Set[String]],
+        skip: Int, target: Int)
+    val clauseGen = for {
+      n <- Gen.choose(2, 4)
+      qs <- Gen.listOfN(n, Gen.oneOf(quants))
+      defs <- Gen.listOfN(n, Gen.atLeastOne(alphabet).map(_.toSet))
+      si <- Gen.choose(0, skips.size - 1)
+      target <- Gen.choose(0, n - 1)
+    } yield Clause(qs.toVector, defs.toVector, si, target)
+    val eventsGen = Gen.listOfN(16,
+      Gen.zip(Gen.oneOf(alphabet), Gen.choose(1L, 2L)))
+    def name(i: Int) = s"P$i"
+    def fmt(v: Any): String = if (v == null) "n" else v.toString
+    check(Prop.forAll(clauseGen, eventsGen) { (cl, evs) =>
+      val n = cl.quants.size
+      // spelled out: encoders need a TypeTag, which a local alias lacks
+      val rows: Seq[(Long, Long, String, Long)] =
+        evs.zipWithIndex.map { case ((t, u), i) =>
+          (i.toLong, i.toLong * 10, t, u)
+        }
+      val skip: Cep.AfterMatchSkip = cl.skip match {
+        case 0 => Cep.SkipPastLastEvent
+        case 1 => Cep.NoSkip
+        case 2 => Cep.SkipToFirst(name(cl.target))
+        case _ => Cep.SkipToLast(name(cl.target))
+      }
+      // the linear DSL pattern of the clause's shape
+      var pat: Cep.Pattern[Ev] = null
+      (0 until n).foreach { i =>
+        val d = cl.defs(i)
+        val pred = (e: Ev) => d(e._3)
+        pat = if (pat == null) Cep.Pattern.begin[Ev](name(i))(pred)
+              else pat.next(name(i))(pred)
+        cl.quants(i) match {
+          case "" => ()
+          case "?" => pat = pat.optional
+          case "*" => pat = pat.oneOrMore.optional
+          case "+" => pat = pat.oneOrMore
+          case "{2}" => pat = pat.times(2)
+          case "{2,}" => pat = pat.timesOrMore(2)
+          case "{1,3}" => pat = pat.times(1, 3)
+          case "{0,2}" => pat = pat.times(0, 2)
+        }
+      }
+      val ds = rows.toDS()
+      // a per-key MATCH_NUMBER() in emission order, as the clause
+      // surface numbers its matches
+      var lastKey = -1L; var mn = 0L
+      val dsl = scala.util.Try(Cep.matchBatchGroups[Long, Ev, String](ds,
+        (e: Ev) => e._4, (e: Ev) => e._2, pat, skip,
+        tie = (e: Ev) => e._1) { (k, g) =>
+          if (k != lastKey) { lastKey = k; mn = 0L }
+          mn += 1
+          val ids = (0 until n).map(i => g.getOrElse(name(i), Seq.empty)
+            .map(_._1))
+          def opt(o: Option[Long]) = o.map(_.toString).getOrElse("n")
+          (Seq(k.toString, mn.toString,
+            opt(if (ids(0).isEmpty) None else Some(ids(0).sum))) ++
+            ids.flatMap(v => Seq(v.size.toString, opt(v.headOption),
+              opt(v.lastOption)))).mkString("|")
+        }(Encoders.STRING, Encoders.scalaLong))
+      dsl match {
+        case scala.util.Failure(_: IllegalArgumentException) =>
+          Prop.undecided // no linear reference answer for this shape
+        case scala.util.Failure(other) => throw other
+        case scala.util.Success(dslOut) =>
+          val measures = (Seq("MATCH_NUMBER() AS mn",
+            // SUM is never plan-routable: the clause stays on the
+            // library route, the one the DSL drivers mirror
+            s"SUM(${name(0)}.event_id) AS s") ++
+            (0 until n).flatMap(i => Seq(s"COUNT(${name(i)}.*) AS c$i",
+              s"FIRST(${name(i)}.event_id) AS f$i",
+              s"LAST(${name(i)}.event_id) AS l$i"))).mkString(", ")
+          val skipSql = cl.skip match {
+            case 2 | 3 => s"${skips(cl.skip)} ${name(cl.target)}"
+            case _ => skips(cl.skip)
+          }
+          val pattern = (0 until n).map(i => name(i) + cl.quants(i))
+            .mkString(" ")
+          val defines = (0 until n).map(i =>
+            s"${name(i)} AS event_type IN (" +
+              cl.defs(i).toSeq.sorted.map(t => s"'$t'").mkString(", ") + ")")
+            .mkString(", ")
+          val mr = MatchRecognize(
+            rows.toDF("event_id", "ts", "event_type", "user_id"),
+            s"""PARTITION BY user_id
+               |ORDER BY ts, event_id
+               |MEASURES $measures
+               |AFTER MATCH SKIP $skipSql
+               |PATTERN ($pattern)
+               |DEFINE $defines""".stripMargin)
+          val planned = mr.queryExecution.executedPlan.toString
+            .contains("- GroupCep ")
+          val sql = mr.collect().map(r =>
+            (0 until r.length).map(i => fmt(r.get(i))).mkString("|"))
+            .toSeq.sorted
+          val ref = dslOut.collect().toSeq.sorted
+          Prop(!planned && sql == ref) :| s"pattern ($pattern) " +
+            s"skip $skipSql defines $defines planned=$planned\n" +
+            s"sql=$sql\nref=$ref\nrows=$rows"
+      }
     })
   }
 

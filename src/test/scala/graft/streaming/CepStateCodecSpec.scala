@@ -17,14 +17,44 @@ class CepStateCodecSpec extends SparkSuite {
   import CepStateCodecSpec.Ev
 
   test("envelope roundtrips the arrival state bit-faithfully") {
+    val ev = Ev(1L, "error", 10L)
     val st = Cep.ArrivalState[Ev](nextSeq = 7L,
-      partials = Vector.empty,
-      matchSeq = 3L, carry = Vector(Ev(1L, "error", 10L)))
+      partials = Vector(Cep.Partial(10L, Vector(Vector((ev, 6L))),
+        runOpen = true, virgin = true)))
     val env = CepStateCodec.enc(CepStateCodec.ArrivalVersion, st)
     assert(env.version == CepStateCodec.ArrivalVersion)
     val back = CepStateCodec.dec[Cep.ArrivalState[Ev]](env,
       CepStateCodec.ArrivalVersion, "spec")
     assert(back == st)
+  }
+
+  test("the linear and group families never share a format version") {
+    // flat MATCH_RECOGNIZE clauses persisted Cep.ArrivalState at version
+    // 3 and now persist GroupCep.GArrivalState: equal numbers would let
+    // one family's checkpoint reach kryo as the other's class
+    assert(CepStateCodec.ArrivalVersion != CepStateCodec.GroupVersion)
+    assert(CepStateCodec.GroupVersion > 3 && CepStateCodec.ArrivalVersion > 3)
+  }
+
+  test("a pre-change flat-clause checkpoint fails by name in the group driver") {
+    // the state a flat clause wrote before it moved onto GroupCep: a
+    // Cep.ArrivalState envelope at the old shared version 3
+    val old = CepStateCodec.enc(3,
+      Cep.ArrivalState[Ev](nextSeq = 2L, partials = Vector.empty))
+    val fn = CepStateCodec.versionedFn("GroupCep.GArrivalState",
+      CepStateCodec.GroupVersion,
+      GroupCep.matchStreamArrivalFn[Long, Ev, Long](
+        GroupCep.GPattern.begin[Ev]("e")(_.kind == "error"),
+        _.ts, _ => 0L, Cep.NoSkip, (k, _) => k))
+    val resumed = TestGroupState.create[CepStateEnvelope](
+      Optional.of(old), GroupStateTimeout.NoTimeout(), 0L,
+      Optional.empty[Long](), hasTimedOut = false)
+    val ex = intercept[CepStateVersionException] {
+      fn(1L, Iterator(Ev(1L, "error", 20L)), resumed).toList
+    }
+    assert(ex.found == 3)
+    assert(ex.expected == CepStateCodec.GroupVersion)
+    assert(ex.getMessage.contains("GroupCep.GArrivalState"))
   }
 
   test("a wrong-version blob raises the named error before kryo decodes") {

@@ -13,14 +13,20 @@ class GroupCepSpec extends SparkSuite {
   /** Feeds events through the raw NFA, returning flattened id lists per
     * match (the reference's List<Event> shape). */
   private def feed(pattern: GPattern[RE],
-      events: Seq[(RE, Long)]): Vector[Seq[Int]] = {
+      events: Seq[(RE, Long)]): Vector[Seq[Int]] =
+    feedAt(pattern, events).map(_._2)
+
+  /** Like [[feed]], but each match carries the index of the event it
+    * emitted on. */
+  private def feedAt(pattern: GPattern[RE],
+      events: Seq[(RE, Long)]): Vector[(Int, Seq[Int])] = {
     val c = GroupCep.compile(pattern)
     var confs = Vector.empty[GConf[RE]]
-    val all = Vector.newBuilder[Seq[Int]]
-    events.foreach { case (e, ts) =>
+    val all = Vector.newBuilder[(Int, Seq[Int])]
+    events.zipWithIndex.foreach { case ((e, ts), i) =>
       val (next, ms) = GroupCep.advance(c, confs, e, ts)
       confs = next
-      ms.foreach(m => all += m.map(_._2.id))
+      ms.foreach(m => all += (i -> m.map(_._2.id)))
     }
     all.result()
   }
@@ -621,11 +627,48 @@ class GroupCepSpec extends SparkSuite {
     assert(stats.maxPartials.value === 40L)
   }
 
-  test("the final pattern element cannot be optional") {
-    val bad = GPattern.begin[RE]("start")(_.name == "c")
+  test("trailing optional group emits its empty match with the prefix") {
+    // c (a b){0,2}: {c} emits on c itself, then one match per completed
+    // repetition, each on the event that completes it
+    val p = GPattern.begin[RE]("start")(_.name == "c")
       .followedBy(GPattern.begin[RE]("middle1")(_.name == "a")
         .followedBy("middle2")(_.name == "b")).times(0, 2)
-    assertThrows[IllegalArgumentException] { GroupCep.compile(bad) }
+    val (a1, b1, a2, b2, a3, b3) = (RE(41, "a", 2.0), RE(42, "b", 3.0),
+      RE(43, "a", 4.0), RE(44, "b", 5.0), RE(45, "a", 6.0), RE(46, "b", 7.0))
+    val got = feedAt(p, Seq(c -> 1L, a1 -> 2L, b1 -> 3L, a2 -> 4L, b2 -> 5L,
+      a3 -> 6L, b3 -> 7L))
+    assert(got === Vector(0 -> Seq(40), 2 -> Seq(40, 41, 42),
+      4 -> Seq(40, 41, 42, 43, 44)))
+  }
+
+  test("port: optional final step (NFAITCase testEndWithOptional)") {
+    val p = GPattern.begin[RE]("start")(_.name == "c")
+      .followedBy("middle")(_.name == "a").optional
+    val got = feedAt(p, Seq(c -> 1L, RE(41, "a", 2.0) -> 3L))
+    // the zero-occurrence match {c} emits the moment c completes the
+    // mandatory prefix
+    assert(got === Vector(0 -> Seq(40), 1 -> Seq(40, 41)))
+  }
+
+  test("port: final zeroOrMore incl. the empty run (NFAITCase testEndWithZeroOrMore)") {
+    val p = GPattern.begin[RE]("start")(_.name == "c")
+      .followedBy("middle")(_.name == "a").oneOrMore.optional
+    val got = feed(p, Seq(c -> 1L, RE(41, "a", 2.0) -> 3L,
+      RE(42, "a", 3.0) -> 4L, RE(43, "a", 4.0) -> 5L))
+    assert(got.toSet === Set(
+      Seq(40), Seq(40, 41), Seq(40, 41, 42), Seq(40, 41, 42, 43)))
+  }
+
+  test("port: whole pattern is one zeroOrMore loop (NFAITCase testStartAndEndWithZeroOrMore)") {
+    // every start emits its prefixes; no empty match (zero occurrences
+    // of the only element captures nothing)
+    val p = GPattern.begin[RE]("start")(_.name == "a").oneOrMore.optional
+    val got = feed(p, Seq(c -> 1L, RE(41, "a", 2.0) -> 3L,
+      RE(42, "a", 3.0) -> 4L, RE(43, "a", 4.0) -> 5L, RE(44, "d", 5.0) -> 6L,
+      RE(45, "d", 5.0) -> 6L, RE(46, "d", 5.0) -> 6L))
+    assert(got.toSet === Set(
+      Seq(41, 42, 43), Seq(41, 42), Seq(41),
+      Seq(42, 43), Seq(42), Seq(43)))
   }
 
   test("streaming driver: group branches persist across micro-batches") {

@@ -1750,8 +1750,8 @@ class MatchRecognizeSpec extends SparkSuite {
             === expected, s"cut at $cut")
         } finally q.stop()
       }
-      // the arrival counter must survive state removal (the linear
-      // engine's persistSeq contract, now on the group engine too): a
+      // the arrival counter must survive state removal (GArrivalView's
+      // persistSeq contract): a
       // key whose FIRST batch opens no branch must not re-tag its next
       // batch from 0 — user 3's view arrives in batch 2 but is the
       // partition's SECOND event, so ^ can never match it
@@ -2164,6 +2164,48 @@ class MatchRecognizeSpec extends SparkSuite {
       assert(p === l,
         s"planned != library for $pat greedy=$greedy trial=$trial: " +
           s"planned=${p.take(8)} lib=${l.take(8)} input=$rows")
+    }
+  }
+
+  test("trailing optional B? / B*: the planned route answers what the library route does") {
+    // a clause ending in an optional element used to crash inside the
+    // planned operator's task ("the final pattern element cannot be
+    // optional") while one non-routable measure sent the same clause to
+    // the library route, which answered it; both now compile through the
+    // same GroupCep NFA. Expected rows are the library route's answers
+    // from before the change.
+    val df = Seq(
+      (1L, 10L, "view", 1L), (2L, 20L, "click", 1L),
+      (3L, 30L, "click", 1L), (4L, 40L, "error", 1L),
+      (10L, 10L, "view", 2L), (11L, 20L, "view", 2L),
+      (12L, 30L, "click", 2L)
+    ).toDF("event_id", "ts", "event_type", "user_id")
+    def clause(pat: String, extra: String) =
+      s"""PARTITION BY user_id
+         |ORDER BY ts, event_id
+         |MEASURES A.event_id AS a_id, COUNT(B.*) AS nb,
+         |  FIRST(B.event_id) AS b1$extra
+         |PATTERN ($pat)
+         |DEFINE A AS event_type = 'view', B AS event_type = 'click'"""
+        .stripMargin
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    val expected = Map(
+      "A B?" -> Seq("1,1,0,null,null", "1,1,1,2,2", "2,10,0,null,null",
+        "2,11,0,null,null", "2,11,1,12,12"),
+      "A B*" -> Seq("1,1,0,null,null", "1,1,1,2,2", "1,1,2,2,3",
+        "2,10,0,null,null", "2,11,0,null,null", "2,11,1,12,12"))
+    for ((pat, exp) <- expected) {
+      val planned = MatchRecognize(df, clause(pat, ""))
+      val lib = MatchRecognize(df,
+        clause(pat, ", LAST(B.event_id) AS b_last"))
+      assert(planned.queryExecution.executedPlan.toString
+        .contains("- GroupCep "), s"$pat not planned")
+      assert(!lib.queryExecution.executedPlan.toString
+        .contains("- GroupCep "), s"$pat library clause routed planned")
+      assert(rows(lib) === exp, pat)
+      // the planned route carries no b_last column
+      assert(rows(planned) === exp.map(_.split(",").init.mkString(",")), pat)
     }
   }
 }

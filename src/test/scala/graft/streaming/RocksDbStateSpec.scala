@@ -42,9 +42,9 @@ class RocksDbStateSpec extends SparkSuite {
     withRocksDbProvider {
       val input = MemoryStream[(Long, Long, String, Long)]
       val sdf = input.toDF().toDF("event_id", "ts", "event_type", "user_id")
-      // the MATCH_RECOGNIZE surface: kryo-encoded GArrivalState-free flat
-      // path (ArrivalState), partials crossing micro-batches — the state
-      // shape every CEP driver persists
+      // the MATCH_RECOGNIZE surface: kryo-encoded GArrivalState,
+      // partials crossing micro-batches — the enveloped state shape
+      // every CEP driver persists
       val q = MatchRecognize(sdf,
         """PARTITION BY user_id
           |ORDER BY ts
