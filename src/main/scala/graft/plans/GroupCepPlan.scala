@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.LongType
   * stop conditions on quantified groups, negative elements
   * (notFollowedBy/notNext, anywhere a sibling may follow, and TERMINAL —
   * notNext always, notFollowedBy with within, via the SAME
-  * [[graft.streaming.Cep.NegGate]] the linear library drivers run),
+  * [[graft.streaming.Cep.NegGate]] the library drivers run),
   * alternation, and within. The SQL:2016 compositions — pattern-level
   * reluctant or greedy selection, ^/$ anchor gates (gate before
   * selection) and the after-match skip queue — all run through
@@ -169,13 +169,6 @@ object GroupCepPlan {
     build(skel)
   }
 
-  /** Split a skeleton into its NFA body and its terminal negation. */
-  private def splitTerminal(skel: Seq[Skel]): (Seq[Skel], Option[NotSkel]) =
-    skel.last match {
-      case n: NotSkel => (skel.init, Some(n))
-      case _ => (skel, None)
-    }
-
   /** Predicate indices whose match can be CAPTURED by a branch (leaf
     * steps) — negative/until guards only kill branches, so rows matching
     * only guards never need the defensive copy in the exec's scan. */
@@ -245,8 +238,7 @@ object GroupCepPlan {
         val bound = preds.map { p =>
           val bp = Predicate.create(p, childOutput); bp.initialize(0); bp
         }.toIndexedSeq
-        val (body, terminalNot) = splitTerminal(skel)
-        var pat = buildPattern(body, i => w => bound(i).eval(w._1))
+        var pat = buildPattern(skel, i => w => bound(i).eval(w._1))
         within.foreach(w => pat = pat.within(w))
         if (rel) pat = pat.reluctant
         if (sqlG) pat = pat.greedySelect
@@ -261,10 +253,6 @@ object GroupCepPlan {
         val compiled = GroupCep.compile(pat.withArrivalIdentity)
         val tsOf: ((InternalRow, Long)) => Long =
           w => tsEval.eval(w._1).asInstanceOf[Long]
-        // terminal negation: completed matches wait at the SAME gate the
-        // linear library drivers run; only its verdicts reach the emitter
-        val ban: Option[((InternalRow, Long)) => Boolean] =
-          terminalNot.map(n => w => bound(n.predIdx).eval(w._1))
         // only leaf-step matches can be captured; not/until guard rows
         // merely kill branches and never need the defensive copy
         val capturing = capturingIdx(skel).toArray.sorted
@@ -317,10 +305,9 @@ object GroupCepPlan {
             private def newEmitter() =
               new GroupCep.GroupRunEmitter[(InternalRow, Long), C](
                 compiled, tsOf, skipStrat, aHead, aTail, tagOf = _._2, ops)
-            private var gate = newGate()
-            private def newGate() = ban.map(b =>
-              new Cep.NegGate[(InternalRow, Long), C](b,
-                terminalNot.get.nextOnly, within, m => tsOf(ops.head(m))))
+            // terminal negation: completed matches wait at the SAME gate
+            // the library drivers run; only its verdicts reach the emitter
+            private var gate = GroupCep.negGate(compiled, tsOf, ops)
             private def doEmit(m: C): Unit = {
               numMatches.add(1); matchSeq += 1
               if (aRows) emitAll(curKey, matchSeq, ops.runs(m), ops.runs(m))
@@ -336,17 +323,9 @@ object GroupCepPlan {
             def advanceRow(w: (InternalRow, Long), ts: Long): Int = {
               val (next, matches) = GroupCep.advanceC(compiled, confs, w,
                 ts, canStart = !aHead || w._2 == 0L, ops)
-              val out = gate match {
-                case None => matches
-                // nothing pending: the event decides nothing
-                case Some(g) if g.isEmpty => g.add(matches); Vector.empty
-                case Some(g) =>
-                  val v = Vector.newBuilder[C]
-                  g.onTime(ts, v += _, (_, _) => ())
-                  g.onEvent(w, v += _)
-                  g.add(matches)
-                  v.result()
-              }
+              val out =
+                if (gate == null) matches
+                else GroupCep.gateStep(gate, w, ts, matches)
               confs = emitter.step(next, out, doEmit)
               confs.size
             }
@@ -355,15 +334,16 @@ object GroupCepPlan {
               * candidates gate + select, deferred resolver/skip-queue
               * entries release. */
             def flush(lastTag: Long): Unit = {
-              gate.foreach { g =>
+              if (gate != null) {
                 val v = Vector.newBuilder[C]
-                g.flushEnd(v += _)
+                gate.flushEnd(v += _)
                 confs = emitter.step(confs, v.result(), doEmit)
               }
               emitter.finish(lastTag, doEmit)
             }
             def reset(): Unit = {
-              confs = Vector.empty; emitter = newEmitter(); gate = newGate()
+              confs = Vector.empty; emitter = newEmitter()
+              gate = GroupCep.negGate(compiled, tsOf, ops)
             }
           }
           // per-key-run emission policy (anchor gates / reluctant
@@ -518,7 +498,7 @@ object GroupCepPlan {
     * pattern end in notNext (`nextOnly`: the single next event decides)
     * or notFollowedBy (requires `withinMicros`: the match emits at the
     * window horizon if no banned event arrived — the funnel shape "A not
-    * followed by B within w"), with the linear library drivers'
+    * followed by B within w"), with the library drivers'
     * [[Cep.NegGate]] semantics. It combines with neither a non-default
     * `skip`, a selection mode, nor the $ anchor.
     *
@@ -651,8 +631,9 @@ object GroupCepPlan {
       // work the contract out from the compiled pattern (placeholder
       // predicates): without a selection mode to choose, a start must
       // not be able to complete two candidates
+      val placeholder = buildPattern(skeleton, _ => _ => false)
       val compiled = GroupCep.compile(
-        buildPattern(splitTerminal(skeleton)._1, _ => _ => false))
+        withinMicros.fold(placeholder)(placeholder.within))
       require(compiled.oneCandidatePerStart,
         "planned ^/$ anchors require a selection mode (reluctant or " +
           "sqlGreedy) unless every start completes at most one " +

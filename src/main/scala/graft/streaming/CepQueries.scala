@@ -4,7 +4,8 @@ import graft.{Q, QueryModule}
 import java.sql.Timestamp
 
 /** CEP pattern matching exposed on the batch surface: the same
-  * [[Cep.Pattern]] NFA that runs in `flatMapGroupsWithState` for streams
+  * [[Cep.Pattern]] (compiled onto the [[GroupCep]] NFA) that runs in
+  * `flatMapGroupsWithState` for streams
   * (reference: flink-cep CEP.pattern / PatternStream.select), here driven
   * by matchBatch over the events table so the DuckDB oracle can check it.
   *

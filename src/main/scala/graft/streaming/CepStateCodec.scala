@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.GroupState
 
 /** Versioned envelope for the CEP streaming keyed state.
   *
-  * The CEP drivers' state ([[Cep.ArrivalState]], [[GroupCep.GStreamState]],
+  * The CEP drivers' state ([[GroupCep.GStreamState]],
   * [[GroupCep.GArrivalState]]) used to cross micro-batches as one opaque
   * kryo binary column. That format has no runtime-detectable marker: a
   * layout change surfaces as a raw KryoException deep in the state store,
@@ -43,18 +43,15 @@ final class CepStateVersionException(val found: Int, val expected: Int,
 
 object CepStateCodec {
 
-  /** PER-FAMILY format generations — bump a family's constant on ANY
-    * change to ITS state classes' layout OR meaning, without forcing
-    * unrelated drivers' checkpoints to reprocess. History (shared
-    * pre-envelope): 1 — pre-round-10 two-field GStreamState; 2 —
-    * GStreamState.pendingSel; 3 — envelope introduced (round 13).
-    * Group 4 — flat MATCH_RECOGNIZE clauses now persist GArrivalState
-    * (they wrote Cep.ArrivalState at 3). Arrival 5 — ArrivalState drops
-    * matchSeq/carry; 4 is skipped so the two families never share a
-    * number again (a flat-clause checkpoint at 3 must not pass either
-    * family's check). */
-  val ArrivalVersion = 5  // Cep.ArrivalState (linear engine drivers)
-  val GroupVersion = 4    // GroupCep.GArrivalState / GStreamState
+  /** Format generation of the CEP keyed state — bump on ANY change to
+    * the state classes' layout OR meaning. History: 1 — pre-round-10
+    * two-field GStreamState; 2 — GStreamState.pendingSel; 3 — envelope
+    * introduced (round 13); 4 — flat MATCH_RECOGNIZE clauses persist
+    * GArrivalState; 5 — the retired linear engine's Cep.ArrivalState,
+    * never reused; 6 — every DSL stream persists GArrivalState, whose
+    * GStreamState gains the terminal-negation gate (`gated`) and whose
+    * branches carry a greedy-guard kind. */
+  val GroupVersion = 6    // GroupCep.GArrivalState / GStreamState
 
   /** The envelope's product encoder — a stable (int, binary) row, never
     * the kryo-opaque single column. */

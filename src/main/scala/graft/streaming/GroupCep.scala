@@ -9,11 +9,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * recursive epsilon-NFA, conformance-pinned by verbatim ports of
   * flink-cep/src/test/java/.../nfa/GroupITCase.java.
   *
-  * This is the NFA behind every MATCH_RECOGNIZE clause (flat ones are
+  * This is the engine's one CEP NFA: the flink-cep DSL (`Cep.Pattern`
+  * compiles onto it), every MATCH_RECOGNIZE clause (flat ones are
   * sequences of singleton leaves) and the planned
-  * [[graft.plans.GroupCepPlan]] operator; the linear [[Cep]] engine now
-  * serves only the flink-cep DSL (`Cep.Pattern`). It mirrors the reference compiler's state-graph
-  * semantics (NFACompiler.java:createGroupPatternState /
+  * [[graft.plans.GroupCepPlan]] operator all run it. It mirrors the
+  * reference compiler's state-graph semantics
+  * (NFACompiler.java:createGroupPatternState /
   * createLoopingGroupPatternState) directly as a tree walk:
   *
   *  - each element boundary carries a consuming mode: STRICT (`next`, no
@@ -35,27 +36,51 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - `notFollowedBy` attaches a persistent stop condition to the entry of
   *    the following element (branch dies if the banned event arrives
   *    before that element takes); `notNext` stops only while the branch
-  *    has not yet ignored an event (NFACompiler.createMiddleStates).
+  *    has not yet ignored an event (NFACompiler.createMiddleStates);
+  *  - a top-level trailing `notFollowedBy`/`notNext` is TERMINAL
+  *    negation: completed matches wait at a [[Cep.NegGate]] in the
+  *    library drivers (notNext: the next event decides; notFollowedBy
+  *    needs `within` and emits at the window horizon).
   */
 object GroupCep {
-  import Cep.{dedupBy, unliftGroups}
 
   // consuming modes (Quantifier.ConsumingStrategy)
   final val Strict = 0
   final val TillNext = 1
   final val TillAny = 2
 
+  /** ITERATIVE condition (IterativeCondition.java:59): the predicate also
+    * sees the events this branch has captured so far, step name →
+    * events in capture order (every step present, empty until entered). */
+  type CtxPred[E] = (E, Map[String, Seq[E]]) => Boolean
+
+  // greedy guard kinds: the reference's guard (any event the loop could
+  // take kills the post-loop branch, even one it would take itself), and
+  // the flink-cep DSL's maximal-run guard, which only kills a branch that
+  // IGNORES such an event and lapses with the loop branch it shadows —
+  // after one ignored event when that loop branch is strict, at the
+  // loop's until event when it is relaxed
+  private[streaming] final val GuardRef = 0
+  private[streaming] final val GuardOnce = 1
+  private[streaming] final val GuardUntil = 2
+
   /** Pattern element: a named step, a quantified sub-pattern, or a
     * negative (stop) condition. `mode` is the boundary contiguity to the
-    * PREVIOUS element. */
+    * PREVIOUS element. `ctxPred`, when set, replaces `pred`. */
   sealed trait GElem[E]
-  final case class GLeaf[E](name: String, pred: E => Boolean, mode: Int)
-      extends GElem[E]
+  final case class GLeaf[E](name: String, pred: E => Boolean, mode: Int,
+      ctxPred: CtxPred[E] = null) extends GElem[E]
+  /** `greedy` is the reference's prefer-longer guard ([[GPattern.greedy]]);
+    * `maximal` is the flink-cep DSL's greedy default (`Cep.Pattern`):
+    * the post-loop branch dies when the loop extends on an event it did
+    * not take itself. `untilCtx` is an iterative `until`. */
   final case class GGroup[E](elems: Vector[GElem[E]], mode: Int,
       min: Int, max: Int, optional: Boolean, loopMode: Int,
       untilPred: Option[E => Boolean],
       greedy: Boolean = false,
-      relMark: Boolean = false) extends GElem[E]
+      relMark: Boolean = false,
+      maximal: Boolean = false,
+      untilCtx: CtxPred[E] = null) extends GElem[E]
   final case class GNot[E](name: String, pred: E => Boolean,
       nextOnly: Boolean) extends GElem[E]
   /** Alternation `(b1 | b2 | ...)`: exactly one branch matches (SQL:2016
@@ -340,7 +365,21 @@ object GroupCep {
         deferSel = false, greedySel = true, arrivalTagged = arrivalTagged)
     }
 
+    /** The trailing top-level negation, if the pattern ends in one. */
+    private[GroupCep] def terminalNot: Option[GNot[E]] = elems.last match {
+      case n: GNot[E] => Some(n)
+      case _ => None
+    }
+
     private[GroupCep] def validated: GPattern[E] = {
+      terminalNot.foreach { n =>
+        require(n.nextOnly || withinMs.isDefined,
+          "NotFollowedBy is not supported as a last part of a Pattern! " +
+            "(without within(); with within() the match emits at the " +
+            "window horizon if no banned event arrived)")
+        require(!reluctantSel && !greedySel,
+          "terminal negation does not compose with a selection mode")
+      }
       // recursive: a nested group ending in a negation would silently drop
       // it in compilation — the reference throws MalformedPatternException
       def validateSeq(es: Vector[GElem[E]]): Unit = {
@@ -359,12 +398,15 @@ object GroupCep {
       // `A*`) is fine: its entry epsilon-walks on to completion, so the
       // zero-occurrence match emits the moment the mandatory prefix
       // completes (NFAITCase testEndWithOptional / testEndWithZeroOrMore)
-      validateSeq(elems)
+      validateSeq(if (terminalNot.isDefined) elems.init else elems)
       this
     }
   }
 
   object GPattern {
+    /** A pattern from an element tree built elsewhere (the DSL compile). */
+    private[graft] def of[E](elems: Vector[GElem[E]],
+        withinMs: Option[Long]): GPattern[E] = new GPattern(elems, withinMs)
     def begin[E](name: String)(pred: E => Boolean): GPattern[E] =
       new GPattern(Vector(GLeaf(name, pred, TillNext)), None)
     def begin[E](sub: GPattern[E]): GPattern[E] =
@@ -391,7 +433,8 @@ object GroupCep {
   private final case class GNode(id: Int, children: Vector[Node], mode: Int,
       min: Int, max: Int, optional: Boolean, loopMode: Int,
       untilIdx: Int, // untilIdx: index into untils, -1 = none
-      greedy: Boolean, relMark: Boolean = false) extends Node
+      greedy: Boolean, relMark: Boolean = false,
+      maximal: Boolean = false) extends Node
   /** Alternation fork: entering it epsilon-enters every branch (in
     * declaration order — leftmost-preference falls out of conf/emission
     * ordering); completing ANY branch completes the node. Branches are
@@ -405,9 +448,12 @@ object GroupCep {
     * `guard` >= 0 names a greedy group whose exit produced this target:
     * while waiting here, any event that loop could have consumed kills
     * the branch (NFACompiler updateWithGreedyCondition — NOT(take)
-    * conjoined onto every transition of the loop's sink state). */
+    * conjoined onto every transition of the loop's sink state);
+    * `guardKind` says which greedy rule (see [[GuardRef]]). `stops` are
+    * the negations this path carries past the optional groups it
+    * skipped. */
   private final case class At(slot: Int, mode: Int, reps: Map[Int, Int],
-      guard: Int = -1)
+      guard: Int = -1, guardKind: Int = GuardRef, stops: Long = 0L)
 
   final class Compiled[E] private[GroupCep] (pattern: GPattern[E])
       extends Serializable {
@@ -419,7 +465,8 @@ object GroupCep {
       * branch either takes an event or dies, so its captures form one
       * contiguous arrival-tag span and materialization-by-range is
       * exact. Relaxed boundaries (ignore edges) keep the exact vector. */
-    private[graft] val strictSpans: Boolean = pattern.allStrictPattern
+    private val allStrict = pattern.allStrictPattern
+    private[graft] lazy val strictSpans: Boolean = allStrict && !iterative
     /** No epsilon walk can mint two IDENTICAL branches: with every
       * element a required leaf/group (no alternation forks, no
       * optional/min-0 entry skips, no TillAny re-fires), each target of
@@ -449,12 +496,20 @@ object GroupCep {
     @transient private[graft] var forceEpsilonDedup: Boolean = false
     @transient private val slotNames = Vector.newBuilder[String]
     @transient private val slotPreds = Vector.newBuilder[E => Boolean]
+    @transient private val slotCtxPreds = Vector.newBuilder[CtxPred[E]]
     @transient private val untilsB = Vector.newBuilder[E => Boolean]
-    // per-slot stop conditions (notFollowedBy persistent / notNext fresh-only)
-    @transient private val stopsFollowB = scala.collection.mutable.Map
-      .empty[Int, List[E => Boolean]]
-    @transient private val stopsNextB = scala.collection.mutable.Map
-      .empty[Int, List[E => Boolean]]
+    @transient private val untilCtxB = Vector.newBuilder[CtxPred[E]]
+    // negative conditions: one bit each in a stop mask (notNext bits
+    // only stop a branch that has not ignored an event yet)
+    @transient private val notPredsB = Vector.newBuilder[E => Boolean]
+    @transient private val notNextB = Vector.newBuilder[Boolean]
+    private var nNots = 0
+    @transient private val entryMaskB =
+      scala.collection.mutable.Map.empty[Int, Long] // slot → entry nots
+    @transient private val afterMaskB =
+      scala.collection.mutable.Map.empty[Int, Long] // loop group → nots after it
+    @transient private val skipMaskB =
+      scala.collection.mutable.Map.empty[Int, Long] // optional group → nots before it
     @transient private val slotUntilB = scala.collection.mutable.Map.empty[Int, Int]
     private var nSlots = 0
     private var nGroups = 0
@@ -464,23 +519,26 @@ object GroupCep {
       * group's until (reference: getTakeCondition consults only
       * currentGroupPattern — the innermost group). */
     private def build(e: GElem[E], untilIdx: Int): Node = e match {
-      case GLeaf(name, pred, mode) =>
+      case GLeaf(name, pred, mode, ctxPred) =>
         val s = nSlots; nSlots += 1
-        slotNames += name; slotPreds += pred
+        slotNames += name; slotPreds += pred; slotCtxPreds += ctxPred
         if (untilIdx >= 0) slotUntilB(s) = untilIdx
         SNode(s, mode)
       case g: GGroup[E] =>
         val id = nGroups; nGroups += 1
-        val gUntil = g.untilPred match {
-          case Some(p) => untilsB += p; untilsCount += 1; untilsCount - 1
-          case None => -1
-        }
+        val gUntil =
+          if (g.untilPred.isEmpty && g.untilCtx == null) -1
+          else {
+            untilsB += g.untilPred.getOrElse(_ => false)
+            untilCtxB += g.untilCtx
+            untilsCount += 1; untilsCount - 1
+          }
         // this group's until scopes over its DIRECT slots; a nested group
         // re-scopes to its own (possibly absent) until — the reference's
         // currentGroupPattern is the innermost group, with no fallthrough
         val children = buildSeq(g.elems, gUntil)
         val node = GNode(id, children, g.mode, g.min, g.max, g.optional,
-          g.loopMode, gUntil, g.greedy, g.relMark)
+          g.loopMode, gUntil, g.greedy, g.relMark, g.maximal)
         children.foreach(parentB(_) = node)
         node
       case a: GAlt[E] =>
@@ -500,28 +558,43 @@ object GroupCep {
     }
     private var untilsCount = 0
 
-    /** Builds a sibling sequence, converting GNot elements into stop
-      * conditions on the entry slots of the following elements (walking
-      * through optional elements like getCurrentNotCondition). */
+    /** Builds a sibling sequence, turning GNot elements into stop-mask
+      * bits: on the entry slots of the following element; on the
+      * in-loop branches of a repeating group the nots FOLLOW (a banned
+      * event kills a run that may still grow — the reference discards the
+      * whole path once a stop state is reached, NFA.doProcess
+      * shouldDiscardPath — while a loop's own re-entries are exempt from
+      * the nots BEFORE it, released by its first take); and, across an
+      * optional group, on the branches that skip it (the proceed path
+      * keeps the ban pending, like getCurrentNotCondition). */
     private def buildSeq(elems: Vector[GElem[E]], untilIdx: Int): Vector[Node] = {
       val nodes = Vector.newBuilder[Node]
-      var pendingNots = List.empty[(E => Boolean, Boolean)]
+      var fresh = 0L // nots since the previous element
+      var spill = 0L // nots pending past an optional alternation
+      var prev: Node = null
       elems.foreach {
         case GNot(_, pred, nextOnly) =>
-          pendingNots ::= (pred, nextOnly)
+          require(nNots < 64, "at most 64 notFollowedBy/notNext elements")
+          fresh |= 1L << nNots
+          notPredsB += pred; notNextB += nextOnly; nNots += 1
         case e =>
           val n = build(e, untilIdx)
           nodes += n
-          if (pendingNots.nonEmpty) {
-            firstSlots(n).foreach { s =>
-              pendingNots.foreach { case (pred, nextOnly) =>
-                if (nextOnly) stopsNextB(s) = pred :: stopsNextB.getOrElse(s, Nil)
-                else stopsFollowB(s) = pred :: stopsFollowB.getOrElse(s, Nil)
-              }
-            }
-            // nots stay pending only across optional elements
-            if (!isOptional(n)) pendingNots = Nil
+          prev match {
+            case g: GNode if fresh != 0L && g.max > 1 => afterMaskB(g.id) = fresh
+            case _ => ()
           }
+          val entry = fresh | spill
+          if (entry != 0L) firstSlots(n).foreach { s =>
+            entryMaskB(s) = entryMaskB.getOrElse(s, 0L) | entry
+          }
+          spill = 0L
+          if (entry != 0L && isOptional(n)) n match {
+            case g: GNode => skipMaskB(g.id) = entry
+            case _ => spill = entry
+          }
+          fresh = 0L
+          prev = n
       }
       nodes.result()
     }
@@ -544,8 +617,12 @@ object GroupCep {
       case a: ANode => a.branches.flatMap(firstSlots)
     }
 
+    /** Terminal negation (a trailing top-level notFollowedBy/notNext):
+      * the library drivers hold completed matches at a [[Cep.NegGate]]. */
+    private[graft] val terminalNot: Option[GNot[E]] = pattern.terminalNot
     private val realRoot: GNode = {
-      val children = buildSeq(pattern.elems, -1)
+      val children = buildSeq(
+        if (terminalNot.isDefined) pattern.elems.init else pattern.elems, -1)
       val r = GNode(nGroups, children, TillNext, 1, 1, optional = false,
         TillNext, -1, greedy = false)
       nGroups += 1
@@ -555,9 +632,18 @@ object GroupCep {
     private val parents: Map[Node, Node] = parentB.toMap
     private val names = slotNames.result()
     private val preds = slotPreds.result()
+    private val ctxPreds = slotCtxPreds.result()
     private val untils = untilsB.result()
-    private val stopsFollow = stopsFollowB.toMap
-    private val stopsNext = stopsNextB.toMap
+    private val untilCtxs = untilCtxB.result()
+    /** Any iterative condition: branch captures feed predicates, so they
+      * must stay materializable (no [[SpanCaps]]). */
+    private[GroupCep] val iterative: Boolean =
+      ctxPreds.exists(_ != null) || untilCtxs.exists(_ != null)
+    private val notPreds = notPredsB.result()
+    private val notNextOnly = notNextB.result()
+    private val entryMask = Array.tabulate(nSlots)(entryMaskB.getOrElse(_, 0L))
+    private val afterMask = afterMaskB.toMap
+    private val skipMask = skipMaskB.toMap
     private val slotUntil = slotUntilB.toMap
     private val slotNodes: Map[Int, SNode] = {
       def collect(n: Node): Vector[SNode] = n match {
@@ -567,6 +653,33 @@ object GroupCep {
       }
       collect(realRoot).map(s => s.slot -> s).toMap
     }
+    /** Slot → id of its innermost enclosing group (-1 at the root), and
+      * whether the slot is one of that group's entry slots. */
+    private val slotGroup: Array[Int] = Array.tabulate(nSlots) { s =>
+      parents.get(slotNodes(s)) match {
+        case Some(g: GNode) if g.id != realRoot.id => g.id
+        case _ => -1
+      }
+    }
+    private val slotFirst: Array[Boolean] = Array.tabulate(nSlots) { s =>
+      parents.get(slotNodes(s)) match {
+        case Some(g: GNode) => firstSlots(g).contains(s)
+        case _ => true
+      }
+    }
+    /** Entry slots of a NON-greedy loop with an until: the branch waiting
+      * to enter survives the until event (only greedy loops conjoin
+      * NOT(until) onto that ignore edge — UntilConditionITCase
+      * testUntilConditionFollowedByAnyOneOrMore). */
+    private val untilSparesSlot: Array[Boolean] = Array.tabulate(nSlots) { s =>
+      slotFirst(s) && slotUntil.contains(s) && (parents.get(slotNodes(s)) match {
+        case Some(g: GNode) => !g.greedy && !g.maximal
+        case _ => false
+      })
+    }
+    private[GroupCep] def untilSparesEntry(s: Int,
+        reps: Map[Int, Int]): Boolean =
+      untilSparesSlot(s) && reps.getOrElse(slotGroup(s), 0) == 0
 
     /** Slot → structural path from the root, one (parentIsAlt,
       * childIdx) entry per tree level — the decision lattice
@@ -714,18 +827,35 @@ object GroupCep {
       * slots are that loop's sink state). */
     private def enter(n: Node, mode: Int, reps: Map[Int, Int],
         out: scala.collection.mutable.Builder[At, Vector[At]], done: () => Unit,
-        guard: Int): Unit = n match {
-      case SNode(s, _) => out += At(s, mode, reps, guard)
+        guard: Int, kind: Int, stops: Long): Unit = n match {
+      case SNode(s, _) => out += At(s, mode, reps, guard, kind, stops)
       case g: GNode =>
         val r = clearInside(g, reps).updated(g.id, 0)
-        enter(g.children.head, mode, r, out, done, guard)
-        if (g.optional || g.min == 0)
-          continueAfter(g, reps, out, done,
-            if (g.greedy) g.id else guard)
+        enter(g.children.head, mode, r, out, done, guard, kind, stops)
+        // the skip-past branch shadows the entry branch, whose mode is
+        // this boundary's, and keeps the nots before the group pending
+        if (g.optional || g.min == 0) {
+          val (g2, k2) = guardAfter(g, mode, guard, kind)
+          continueAfter(g, reps, out, done, g2, k2,
+            stops | skipMask.getOrElse(g.id, 0L))
+        }
       case a: ANode =>
         // fork: one epsilon branch per alternative, declaration order
-        a.branches.foreach(b => enter(b, mode, reps, out, done, guard))
+        a.branches.foreach(b =>
+          enter(b, mode, reps, out, done, guard, kind, stops))
     }
+
+    /** The guard on the branches past greedy group `g`, whose loop (or
+      * entry) branch waits with mode `sibMode`: the reference guard for
+      * [[GGroup.greedy]]; the DSL's maximal-run guard for
+      * [[GGroup.maximal]] unless that sibling is TILL_ANY (it survives
+      * its own takes, so nothing is ever shadowed). */
+    private def guardAfter(g: GNode, sibMode: Int, guard: Int,
+        kind: Int): (Int, Int) =
+      if (g.greedy) (g.id, GuardRef)
+      else if (g.maximal && sibMode != TillAny)
+        (g.id, if (sibMode == Strict) GuardOnce else GuardUntil)
+      else (guard, kind)
 
     /** Epsilon-walk after completing element `n`: next sibling, or close a
       * repetition of the parent group (exit and/or loop-back forks), or
@@ -734,28 +864,28 @@ object GroupCep {
       * state whose transitions the reference conjoins with NOT(take). */
     private def continueAfter(n: Node, reps: Map[Int, Int],
         out: scala.collection.mutable.Builder[At, Vector[At]], done: () => Unit,
-        guard: Int): Unit =
+        guard: Int, kind: Int, stops: Long): Unit =
       parents.get(n) match {
         case None => done() // n is the root
         case Some(a: ANode) =>
           // completing any branch completes the alternation
-          continueAfter(a, reps, out, done, guard)
+          continueAfter(a, reps, out, done, guard, kind, stops)
         case Some(_: SNode) =>
           throw new IllegalStateException("a leaf cannot be a parent")
         case Some(p: GNode) =>
           val idx = p.children.indexWhere(_ eq n)
           if (idx < p.children.size - 1) {
             val sib = p.children(idx + 1)
-            enter(sib, declMode(sib), reps, out, done, guard)
+            enter(sib, declMode(sib), reps, out, done, guard, kind, stops)
           } else if (p.id == realRoot.id) {
             done()
           } else {
             val r = reps.getOrElse(p.id, 0) + 1
             // loop-back forks BEFORE the exit: the branch that stays in
             // the loop is ordered (and so emits) ahead of the one that
-            // left it on the same event — the linear engine's order
-            // (its extended run precedes its transitions), which the
-            // skip queue's same-start tie-break and MATCH_NUMBER() see
+            // left it on the same event (an extended run precedes its
+            // transitions), which the skip queue's same-start tie-break
+            // and MATCH_NUMBER() see
             if (r < p.max) {
               // unbounded loops: saturate the counter at p.min — both
               // future threshold reads (r' >= min always once reached;
@@ -768,11 +898,16 @@ object GroupCep {
               val base = clearInside(p, reps)
               val r2 = if (base.getOrElse(p.id, -1) == rStore) base
                        else base.updated(p.id, rStore)
-              enter(p.children.head, p.loopMode, r2, out, done, guard)
+              enter(p.children.head, p.loopMode, r2, out, done, guard, kind,
+                stops)
             }
-            if (r >= p.min)
-              continueAfter(p, reps - p.id, out, done,
-                if (p.greedy) p.id else guard)
+            // a capped loop has no loop-back branch to shadow
+            if (r >= p.min) {
+              val (g2, k2) =
+                if (r < p.max || p.greedy) guardAfter(p, p.loopMode, guard, kind)
+                else (guard, kind)
+              continueAfter(p, reps - p.id, out, done, g2, k2, stops)
+            }
           }
       }
 
@@ -780,7 +915,8 @@ object GroupCep {
         reps: Map[Int, Int]): (Vector[At], Boolean) = {
       val out = Vector.newBuilder[At]
       var complete = false
-      continueAfter(slotNodes(slot), reps, out, () => complete = true, -1)
+      continueAfter(slotNodes(slot), reps, out, () => complete = true, -1,
+        GuardRef, 0L)
       (out.result(), complete)
     }
     /** [[succ]] is pure in (slot, reps) and — with the saturating rep
@@ -808,10 +944,21 @@ object GroupCep {
       }
       v
     }
+    /** Step name → no events: the context an opening event sees. */
+    private[GroupCep] lazy val emptyCtx: Map[String, Seq[E]] =
+      scala.collection.immutable.ListMap(
+        stepNames.map(_ -> Vector.empty[E]): _*)
+    /** Can `e` open a branch at start-frontier entry `t`? */
+    private[GroupCep] def opens(t: At, e: E): Boolean =
+      !(t.guardKind == GuardRef && guardHit(t.guard, e)) && {
+        val cp = ctxPreds(t.slot)
+        if (cp == null) preds(t.slot)(e) else cp(e, emptyCtx)
+      }
     private[GroupCep] lazy val startFrontier: Vector[At] = {
       val out = Vector.newBuilder[At]
       val first = realRoot.children.head
-      enter(first, declMode(first), Map.empty, out, () => (), -1)
+      enter(first, declMode(first), Map.empty, out, () => (), -1, GuardRef,
+        0L)
       out.result()
     }
     /** Greedy group id → its loop take condition (the disjunction of its
@@ -820,26 +967,47 @@ object GroupCep {
     private val greedyGuards: Map[Int, Vector[Int]] = {
       def collect(n: Node): Vector[GNode] = n match {
         case _: SNode => Vector.empty
-        case g: GNode => (if (g.greedy) Vector(g) else Vector.empty) ++
-          g.children.flatMap(collect)
+        case g: GNode =>
+          (if (g.greedy || g.maximal) Vector(g) else Vector.empty) ++
+            g.children.flatMap(collect)
         case a: ANode => a.branches.flatMap(collect)
       }
       collect(realRoot).map(g => g.id -> firstSlots(g)).toMap
     }
     private[GroupCep] def guardHit(guard: Int, e: E): Boolean =
       guard >= 0 && greedyGuards(guard).exists(s => preds(s)(e))
+    private[GroupCep] def guardSlots(guard: Int): Vector[Int] =
+      greedyGuards(guard)
     private[GroupCep] def predOf(s: Int): E => Boolean = preds(s)
+    /** The slot's iterative condition, or null for a plain predicate. */
+    private[GroupCep] def ctxPredOf(s: Int): CtxPred[E] = ctxPreds(s)
     private[graft] def slotCount: Int = preds.length
     private[GroupCep] def nameOf(s: Int): String = names(s)
     /** Step name of a capture slot — the planned exec maps each
       * captured event's slot to its declared step index. */
     private[graft] def stepNameOf(s: Int): String = nameOf(s)
-    private[GroupCep] def stopsFollowOf(s: Int): List[E => Boolean] =
-      stopsFollow.getOrElse(s, Nil)
-    private[GroupCep] def stopsNextOf(s: Int): List[E => Boolean] =
-      stopsNext.getOrElse(s, Nil)
+    private[GroupCep] def notPred(id: Int): E => Boolean = notPreds(id)
+    private[GroupCep] def notNext(id: Int): Boolean = notNextOnly(id)
+    /** The stop mask a branch waiting on slot `s` answers to (see
+      * [[buildSeq]]): a loop's re-entry answers to the nots after the
+      * loop, a slot deeper inside a repeating group to both, any other
+      * slot to its entry nots. */
+    private[GroupCep] def stopMask(s: Int, reps: Map[Int, Int]): Long = {
+      val g = slotGroup(s)
+      if (g < 0) entryMask(s)
+      else {
+        val am = afterMask.getOrElse(g, 0L)
+        if (am == 0L && entryMask(s) == 0L) 0L
+        else if (!slotFirst(s)) entryMask(s) | am
+        else if (reps.getOrElse(g, 0) >= 1) am
+        else entryMask(s)
+      }
+    }
     private[GroupCep] def untilOf(s: Int): Option[E => Boolean] =
       slotUntil.get(s).map(untils)
+    /** The slot's iterative until, or null. */
+    private[GroupCep] def untilCtxOf(s: Int): CtxPred[E] =
+      slotUntil.get(s).map(untilCtxs).orNull
     def stepNames: Vector[String] = names.distinct
   }
 
@@ -849,14 +1017,16 @@ object GroupCep {
   /** An in-flight branch: waiting on `slot` with consuming mode `mode`;
     * `fresh` = has not ignored an event since arriving (notNext window);
     * `guard` >= 0 = this branch exited that greedy group and dies on any
-    * event its loop could have consumed (prefer-longer semantics).
+    * event its loop could have consumed (prefer-longer semantics), by the
+    * rule `guardKind` names. `stops`: negations carried past skipped
+    * optional groups (see [[Compiled.stopMask]] for the slot's own).
     * `captured` is the branch's capture sequence in representation `C`
     * (see [[CapOps]]): the exact per-event vector, or the round-12
     * range-compressed [[SpanCaps]] runs for strict-contiguity batch
     * scans. */
   final case class Conf[E, C](slot: Int, mode: Int, reps: Map[Int, Int],
       captured: C, startTs: Long, fresh: Boolean,
-      guard: Int = -1)
+      guard: Int = -1, guardKind: Int = GuardRef, stops: Long = 0L)
 
   /** The exact-capture branch type the streaming drivers persist in
     * keyed state (field-for-field the pre-round-12 GConf, so derived
@@ -1030,8 +1200,7 @@ object GroupCep {
     // fast path: no live branch and the event opens none — skip the
     // per-event memo/builder set-up below (the planned exec drives one
     // call per row)
-    if (alive.isEmpty && !(canStart && c.startFrontier.exists(t =>
-        !c.guardHit(t.guard, e) && c.predOf(t.slot)(e))))
+    if (alive.isEmpty && !(canStart && c.startFrontier.exists(c.opens(_, e))))
       return (alive, Vector.empty)
     val out = Vector.newBuilder[Conf[E, C]]
     val matches = Vector.newBuilder[C]
@@ -1045,7 +1214,7 @@ object GroupCep {
     // (greedy-group ids, not slot-bounded) get a 1-entry cache: every
     // post-loop branch of one pattern shares one guard id in practice.
     val memoizable = c.slotCount <= 64
-    var predE, predV, stopFE, stopFV, stopNE, stopNV, untilE, untilV = 0L
+    var predE, predV, untilE, untilV = 0L
     def predM(s: Int): Boolean =
       if (!memoizable) c.predOf(s)(e)
       else {
@@ -1055,26 +1224,27 @@ object GroupCep {
           val r = c.predOf(s)(e); predE |= bit; if (r) predV |= bit; r
         }
       }
-    def stopFM(s: Int): Boolean =
-      if (!memoizable) c.stopsFollowOf(s).exists(_(e))
+    // negations are at most 64 (one mask bit each): memoized per id
+    var notE, notV = 0L
+    def notM(id: Int): Boolean = {
+      val bit = 1L << id
+      if ((notE & bit) != 0L) (notV & bit) != 0L
       else {
-        val bit = 1L << s
-        if ((stopFE & bit) != 0L) (stopFV & bit) != 0L
-        else {
-          val r = c.stopsFollowOf(s).exists(_(e))
-          stopFE |= bit; if (r) stopFV |= bit; r
-        }
+        val r = c.notPred(id)(e); notE |= bit; if (r) notV |= bit; r
       }
-    def stopNM(s: Int): Boolean =
-      if (!memoizable) c.stopsNextOf(s).exists(_(e))
-      else {
-        val bit = 1L << s
-        if ((stopNE & bit) != 0L) (stopNV & bit) != 0L
-        else {
-          val r = c.stopsNextOf(s).exists(_(e))
-          stopNE |= bit; if (r) stopNV |= bit; r
-        }
+    }
+    // does any negation in `mask` stop a branch (fresh: has not ignored
+    // an event since its last take — the notNext window)?
+    def stoppedBy(mask: Long, fresh: Boolean): Boolean = {
+      var m = mask
+      var hit = false
+      while (m != 0L && !hit) {
+        val id = java.lang.Long.numberOfTrailingZeros(m)
+        hit = (fresh || !c.notNext(id)) && notM(id)
+        m &= m - 1
       }
+      hit
+    }
     def untilM(s: Int): Boolean =
       if (!memoizable) c.untilOf(s).exists(_(e))
       else {
@@ -1098,31 +1268,64 @@ object GroupCep {
       if (complete) matches += cap2
       targets.foreach { t =>
         out += Conf(t.slot, t.mode, t.reps, cap2, conf.startTs,
-          fresh = true, guard = t.guard)
+          fresh = true, guard = t.guard, guardKind = t.guardKind,
+          stops = t.stops)
       }
     }
+    // slot take / until for one branch; an iterative condition reads the
+    // branch's captures (`ctx`, built per branch only for iterative
+    // patterns — null otherwise)
+    def takes(s: Int, ctx: Map[String, Seq[E]]): Boolean = {
+      val cp = if (ctx == null) null else c.ctxPredOf(s)
+      if (cp == null) predM(s) else cp(e, ctx)
+    }
+    def untilHit(s: Int, ctx: Map[String, Seq[E]]): Boolean =
+      untilM(s) || (ctx != null && {
+        val cp = c.untilCtxOf(s)
+        cp != null && cp(e, ctx)
+      })
 
     // a branch that waits past this event (reused when already stale —
     // long relaxed waits would otherwise copy every branch every event)
     def waited(conf: Conf[E, C]): Conf[E, C] =
       if (conf.fresh) conf.copy(fresh = false) else conf
     alive.foreach { conf =>
+      val ctx =
+        if (c.iterative) toGroups(c, ops.toVector(conf.captured)) else null
       // greedy: a branch past a greedy loop dies on any event that loop
       // could have consumed — NOT(take) on every sink transition
-      val greedyKill = guardM(conf.guard)
-      val stopped = stopFM(conf.slot) || (conf.fresh && stopNM(conf.slot))
-      val untilKill = untilM(conf.slot)
-      if (!greedyKill && !stopped && !untilKill) {
-        val takes = predM(conf.slot)
-        if (takes) {
+      val greedyKill = conf.guardKind == GuardRef && guardM(conf.guard)
+      val mask = c.stopMask(conf.slot, conf.reps) | conf.stops
+      val stopped = mask != 0L && stoppedBy(mask, conf.fresh)
+      val untilKill = untilHit(conf.slot, ctx)
+      if (untilKill) {
+        // an until event is never taken: it kills the in-loop branches
+        // and a greedy loop's entry; a non-greedy loop's entry waits on
+        if (!greedyKill && !stopped && conf.mode != Strict &&
+            c.untilSparesEntry(conf.slot, conf.reps)) out += waited(conf)
+      } else if (!greedyKill && !stopped) {
+        if (takes(conf.slot, ctx)) {
           fire(conf)
           // TILL_ANY: the waiting branch survives its own take and can
           // re-fire on a later occurrence
           if (conf.mode == TillAny) out += waited(conf)
         } else if (conf.mode != Strict) {
-          out += waited(conf) // ignore edge
+          // ignore edge; under the DSL's maximal-run guard a branch the
+          // loop extends past dies, and the guard lapses with the loop
+          // branch it shadows
+          if (conf.guard < 0 || conf.guardKind == GuardRef) out += waited(conf)
+          else {
+            val loop = c.guardSlots(conf.guard)
+            if (!loop.exists(s => takes(s, ctx) && !untilHit(s, ctx))) {
+              val lapsed = conf.guardKind == GuardOnce ||
+                loop.exists(s => untilHit(s, ctx))
+              out += (if (lapsed) conf.copy(fresh = false, guard = -1,
+                        guardKind = GuardRef)
+                      else waited(conf))
+            }
+          }
         } // strict: branch dies
-      } // stop/until: branch dies
+      } // stop: branch dies
     }
 
     // the start state is always active: try to open new branches. A
@@ -1134,7 +1337,8 @@ object GroupCep {
     // only the key's arrival-0 event may open a branch, so every
     // candidate is partition-head-anchored by construction.
     if (canStart) c.startFrontier.foreach { t =>
-      if (!guardM(t.guard) && predM(t.slot))
+      if (!(t.guardKind == GuardRef && guardM(t.guard)) &&
+          takes(t.slot, if (c.iterative) c.emptyCtx else null))
         fire(Conf(t.slot, t.mode, t.reps, ops.empty, ts, fresh = true))
     }
     var outConfs = {
@@ -1335,6 +1539,30 @@ object GroupCep {
       }
   }
 
+  /** Cheap-key-first order-preserving dedup: hash only `cheap(x)`, deep
+    * equality solely within same-key buckets (linear for the near-always
+    * singleton buckets; avoids deep-hashing captured event vectors — a
+    * plain `.distinct` would be quadratic along a long `oneOrMore` scan)
+    * — [[advanceC]]'s branch and match dedup. */
+  private def dedupBy[T](xs: Vector[T])(cheap: T => Any): Vector[T] =
+    if (xs.length <= 1) xs
+    else {
+      val buckets = scala.collection.mutable.HashMap.empty[Any, List[T]]
+      val b = Vector.newBuilder[T]
+      xs.foreach { x =>
+        val k = cheap(x)
+        val seen = buckets.getOrElse(k, Nil)
+        if (!seen.contains(x)) { buckets(k) = x :: seen; b += x }
+      }
+      b.result()
+    }
+
+  /** Un-tag a per-step capture map, preserving declaration order. */
+  private def unliftGroups[E](groups: Map[String, Seq[(E, Long)]]):
+      Map[String, Seq[E]] =
+    scala.collection.immutable.ListMap(groups.toSeq
+      .map { case (n, g) => n -> g.map(_._1) }: _*)
+
   /** Shapes a capture list into step-name → events (capture order). */
   def toGroups[E](c: Compiled[E],
       captured: Vector[(Int, E)]): Map[String, Seq[E]] = {
@@ -1348,14 +1576,18 @@ object GroupCep {
 
   /** Lift a group pattern over arrival-tagged events: every predicate
     * reads through the wrapper, so structural branch dedup then keys on
-    * the tag — the reference's SharedBuffer EventId identity, exactly
-    * [[Cep.liftPattern]] for the group engine. */
+    * the tag — the reference's SharedBuffer EventId identity. */
+  private def liftCtx[E](cp: CtxPred[E]): CtxPred[(E, Long)] =
+    if (cp == null) null
+    else (w: (E, Long), ctx: Map[String, Seq[(E, Long)]]) =>
+      cp(w._1, unliftGroups(ctx))
   private def liftElem[E](e: GElem[E]): GElem[(E, Long)] = e match {
-    case GLeaf(n, p, m) => GLeaf(n, (w: (E, Long)) => p(w._1), m)
+    case GLeaf(n, p, m, cp) =>
+      GLeaf(n, (w: (E, Long)) => p(w._1), m, liftCtx(cp))
     case g: GGroup[E] => GGroup(g.elems.map(liftElem[E]), g.mode, g.min,
       g.max, g.optional, g.loopMode,
       g.untilPred.map(up => (w: (E, Long)) => up(w._1)), g.greedy,
-      g.relMark)
+      g.relMark, g.maximal, liftCtx(g.untilCtx))
     case GNot(n, p, no) => GNot(n, (w: (E, Long)) => p(w._1), no)
     case a: GAlt[E] => GAlt(a.branches.map(_.map(liftElem[E])), a.mode)
   }
@@ -1489,35 +1721,89 @@ object GroupCep {
       }
   }
 
-  /** One key's bounded scan: the shared NFA + after-match skip queue —
-    * generic over the capture representation (the span-compressed path
-    * is picked by callers when [[Compiled.strictSpans]]). */
+  /** Terminal negation and after-match skipping do not compose (the
+    * planned operator's rule): a named rejection at the driver call. */
+  private def requireSkipFor(c: Compiled[_], skip: Cep.AfterMatchSkip): Unit =
+    require(c.terminalNot.isEmpty || skip == Cep.NoSkip,
+      "terminal negation requires the default NoSkip strategy")
+
+  /** The terminal-negation gate for a run, or null. */
+  private[graft] def negGate[E, C](c: Compiled[E], ts: E => Long,
+      ops: CapOps[E, C]): Cep.NegGate[E, C] =
+    c.terminalNot.map(n => new Cep.NegGate[E, C](n.pred, n.nextOnly,
+      c.withinMs, (m: C) => ts(ops.head(m)))).orNull
+
+  /** Event `e` at `t` decides the gate's pending entries (horizon, then
+    * ban) before this event's own completions `ms` join it; returns the
+    * confirmed matches. */
+  private[graft] def gateStep[E, C](g: Cep.NegGate[E, C], e: E, t: Long,
+      ms: Vector[C]): Vector[C] =
+    if (g.isEmpty) { g.add(ms); Vector.empty }
+    else {
+      val v = Vector.newBuilder[C]
+      g.onTime(t, v += _, (_, _) => ())
+      g.onEvent(e, v += _)
+      g.add(ms)
+      v.result()
+    }
+
+  /** One key's bounded scan: the shared NFA, the terminal-negation gate
+    * and the after-match emission policy — generic over the capture
+    * representation (the span-compressed path is picked by callers when
+    * [[Compiled.strictSpans]]). Returns the outputs and the branches
+    * still open at the end of the run. */
   private def runKeyCore[K, E2, O, C](k: K, events: Vector[E2],
       ts: E2 => Long, compiled: Compiled[E2], skip: Cep.AfterMatchSkip,
       finish: (K, Map[String, Seq[E2]]) => O,
-      stats: Cep.HotKeyStats, ops: CapOps[E2, C]): Vector[O] = {
+      stats: Cep.HotKeyStats, ops: CapOps[E2, C])
+      : (Vector[O], Vector[Conf[E2, C]]) = {
     var confs = Vector.empty[Conf[E2, C]]
     val outs = Vector.newBuilder[O]
     // reluctant + non-default skip composes since round 10; the emitter
     // owns the resolver/skip-queue interplay (see [[GroupRunEmitter]])
     val em = new GroupRunEmitter[E2, C](compiled, ts, skip,
       anchorHead = false, anchorTail = false, tagOf = _ => 0L, ops)
+    val gate = negGate(compiled, ts, ops)
     def emitOut(m: C): Unit =
       outs += finish(k, toGroups(compiled, ops.toVector(m)))
     var maxConfs = 0
     events.foreach { e =>
-      val (next, ms) = advanceC(compiled, confs, e, ts(e), canStart = true,
-        ops)
+      val t = ts(e)
+      val (next, ms) = advanceC(compiled, confs, e, t, canStart = true, ops)
       if (stats != null && next.size > maxConfs) maxConfs = next.size
-      confs = em.step(next, ms, emitOut)
+      confs = em.step(next, if (gate == null) ms else gateStep(gate, e, t, ms),
+        emitOut)
     }
-    // end of input: no live branch blocks emission any more
+    // end of input: no banned event can follow any more (notFollowedBy
+    // entries confirm) and no live branch blocks emission
+    if (gate != null) {
+      val v = Vector.newBuilder[C]
+      gate.flushEnd(v += _)
+      confs = em.step(confs, v.result(), emitOut)
+    }
     em.finish(events.size.toLong - 1, emitOut)
     if (stats != null) {
       stats.maxKeyEvents.add(events.size.toLong)
       stats.maxPartials.add(maxConfs.toLong)
     }
-    outs.result()
+    (outs.result(), confs)
+  }
+
+  /** Test seam behind `Cep.runMatches`: the batch driver's run of one
+    * key over pre-timestamped events (ties keep input order — the
+    * reference's feedNFA contract); returns the matches and the
+    * branches still open at the end. */
+  private[graft] def runKeyTimed[E](events: Seq[(E, Long)],
+      pattern: GPattern[E], skip: Cep.AfterMatchSkip)
+      : (Vector[Map[String, Seq[E]]], Vector[GConf[(E, Long)]]) = {
+    val compiled = compile(liftG(pattern))
+    requireSkipFor(compiled, skip)
+    val tsArr = events.map(_._2).toArray
+    val wrapped = events.indices.map(i => (events(i)._1, i.toLong)).toVector
+      .sortBy(w => (tsArr(w._2.toInt), w._2))
+    runKeyCore[Unit, (E, Long), Map[String, Seq[E]], Vector[(Int, (E, Long))]](
+      (), wrapped, w => tsArr(w._2.toInt), compiled, skip,
+      (_, groups) => unliftGroups(groups), null, vecOps[(E, Long)])
   }
 
   /** [[runKeyCore]] with the exact-vector representation. */
@@ -1525,7 +1811,7 @@ object GroupCep {
       ts: E2 => Long, compiled: Compiled[E2], skip: Cep.AfterMatchSkip,
       finish: (K, Map[String, Seq[E2]]) => O,
       stats: Cep.HotKeyStats = null): Vector[O] =
-    runKeyCore(k, events, ts, compiled, skip, finish, stats, vecOps[E2])
+    runKeyCore(k, events, ts, compiled, skip, finish, stats, vecOps[E2])._1
 
   /** Span ops over an arrival-tagged key run: positions ARE the tags
     * (the drivers zipWithIndex), so materialization indexes the run. */
@@ -1557,16 +1843,16 @@ object GroupCep {
     if (useSpans)
       runKeyCore[Unit, (E, Long), Map[String, Seq[E]], SpanCaps[(E, Long)]](
         (), wrapped, w => ts(w._1), compiled, skip, fin, null,
-        spanOpsFor(wrapped))
+        spanOpsFor(wrapped))._1
     else
       runKeyCore[Unit, (E, Long), Map[String, Seq[E]],
         Vector[(Int, (E, Long))]](
         (), wrapped, w => ts(w._1), compiled, skip, fin, null,
-        vecOps[(E, Long)])
+        vecOps[(E, Long)])._1
   }
 
   /** One key's bounded scan for RELUCTANT patterns under ^/\$ PARTITION
-    * ANCHORS (batch only — the [[Cep.matchBatchGroups]] anchored twin):
+    * ANCHORS (batch only — [[matchBatchGroups]] with anchors):
     * every candidate match is buffered to end of input (no in-scan
     * selection: the first completion per start may FAIL an anchor that
     * a longer same-start candidate passes), then the anchor gates
@@ -1627,7 +1913,7 @@ object GroupCep {
         runKeyCore[Unit, (E, Long), O, SpanCaps[(E, Long)]]((), wrapped,
           w => ts(w._1), compiled, skip,
           (_, groups) => finish(unliftGroups(groups)), null,
-          spanOpsFor(wrapped))
+          spanOpsFor(wrapped))._1
       else
         runKeyBatch[Unit, (E, Long), O]((), wrapped, w => ts(w._1), compiled,
           skip, (_, groups) => finish(unliftGroups(groups)))
@@ -1635,17 +1921,17 @@ object GroupCep {
   }
 
   /** Run a group pattern over a batch Dataset: one event-time-sorted scan
-    * per key (the [[Cep.matchBatchGroups]] twin for group patterns).
-    * `skip` runs the reference's deferred-emission after-match machinery
-    * with the same semantics as [[Cep.SkipQueue]], over group captures.
-    * `arrivalIds` (DEFAULT) runs the reference's SharedBuffer EventId
-    * identity: value-identical events at one timestamp are distinct
-    * branch states, like the linear drivers since round 8. */
+    * per key — the batch driver behind every library route
+    * (`Cep.matchBatchGroups`, MATCH_RECOGNIZE). `skip` runs the
+    * reference's deferred-emission after-match machinery
+    * ([[GroupSkipQueue]]). Event identity is the reference's SharedBuffer
+    * EventId: each event is tagged with its arrival position in the key's
+    * sorted run, so value-identical events at one timestamp are distinct
+    * branch states. */
   def matchBatchGroups[K, E, O: Encoder](ds: Dataset[E], key: E => K,
       ts: E => Long, pattern: GPattern[E],
       tie: E => Long = (_: E) => 0L,
       skip: Cep.AfterMatchSkip = Cep.NoSkip,
-      arrivalIds: Boolean = true,
       stats: Cep.HotKeyStats = null,
       anchorHead: Boolean = false,
       anchorTail: Boolean = false)(
@@ -1656,7 +1942,6 @@ object GroupCep {
       // round 11: non-default skip composes too (gate → select → skip),
       // and so does GREEDY selection (already deferred — the gate
       // filters candidates, then the greedy preference selects)
-      require(arrivalIds, "anchor gates need arrival identity")
       val compiled = compile(liftG(
         if (pattern.greedySel) pattern else pattern.deferredReluctant))
       require(compiled.reluctantSel || compiled.greedySel,
@@ -1670,14 +1955,9 @@ object GroupCep {
           compiled, anchorHead, anchorTail, skip,
           (kk, groups) => finish(kk, unliftGroups(groups))).iterator
       }
-    } else if (!arrivalIds) {
-      val compiled = compile(pattern)
-      ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
-        runKeyBatch(k, it.toVector.sortBy(e => (ts(e), tie(e))), ts,
-          compiled, skip, finish, stats).iterator
-      }
     } else {
       val compiled = compile(liftG(pattern))
+      requireSkipFor(compiled, skip)
       ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
         val wrapped = it.toVector.sortBy(e => (ts(e), tie(e)))
           .zipWithIndex.map { case (e, i) => (e, i.toLong) }
@@ -1687,7 +1967,7 @@ object GroupCep {
           runKeyCore[K, (E, Long), O, SpanCaps[(E, Long)]](k, wrapped,
             w => ts(w._1), compiled, skip,
             (kk, groups) => finish(kk, unliftGroups(groups)),
-            stats, spanOpsFor(wrapped)).iterator
+            stats, spanOpsFor(wrapped))._1.iterator
         else
           runKeyBatch[K, (E, Long), O](k, wrapped, w => ts(w._1), compiled,
             skip,
@@ -1696,7 +1976,8 @@ object GroupCep {
       }
     }
 
-  /** [[Cep.SkipQueue]]'s semantics over group captures: completed
+  /** Reference-exact after-match machinery
+    * (NFA.processMatchesAccordingToSkipStrategy): completed
     * matches wait in a start-ordered queue until no earlier-started
     * branch is live; each emission prunes both the open branches and the
     * still-queued matches by the strategy's boundary (SkipPastLastEvent:
@@ -1774,6 +2055,18 @@ object GroupCep {
     }
   }
 
+  /** Arm the `within` expiry timer on the oldest start still held:
+    * expiry is `time - start >= within` (NFA.java prunes at timestamp -
+    * startTs >= windowTime), so the timer fires exactly at
+    * `start + within` — never at or before the current watermark. */
+  private def armExpiry(state: GroupState[_], withinMs: Option[Long],
+      starts: Iterable[Long]): Unit =
+    withinMs.foreach { w =>
+      if (starts.nonEmpty)
+        state.setTimeoutTimestamp(
+          math.max(starts.min + w, state.getCurrentWatermarkMs() + 1))
+    }
+
   /** The per-key state-transition function behind [[matchStream]], exposed
     * so a TestGroupState harness can drive the timeout path directly (the
     * reference tests within-pruning via NFA watermark advance in
@@ -1791,6 +2084,9 @@ object GroupCep {
       "deferred-selection patterns (reluctant × alternation, greedy " +
         "selection) — use matchStreamSkipFn/matchStream (GStreamState " +
         "carries the deferred candidates)")
+    require(compiled.terminalNot.isEmpty,
+      "terminal negation — use matchStreamSkipFn/matchStream " +
+        "(GStreamState carries the gated matches)")
     (k: K, it: Iterator[E], state: GroupState[Vector[GConf[E]]]) =>
       if (state.hasTimedOut) {
         val w = compiled.withinMs.get
@@ -1800,7 +2096,7 @@ object GroupCep {
         if (live.isEmpty) state.remove()
         else {
           state.update(live)
-          state.setTimeoutTimestamp(live.map(_.startTs).min + w + 1)
+          armExpiry(state, compiled.withinMs, live.map(_.startTs))
         }
         Iterator.empty
       } else {
@@ -1814,51 +2110,52 @@ object GroupCep {
         if (confs.isEmpty) state.remove()
         else {
           state.update(confs)
-          compiled.withinMs.foreach { w =>
-            val target = confs.map(_.startTs).min + w + 1
-            state.setTimeoutTimestamp(
-              math.max(target, state.getCurrentWatermarkMs() + 1))
-          }
+          armExpiry(state, compiled.withinMs, confs.map(_.startTs))
         }
         outs.result().iterator
       }
   }
 
-  /** Streaming keyed state for [[matchStreamSkipFn]]: the open branches
-    * plus the completed matches still deferred by the after-match skip
-    * queue (they wait for every earlier-started live branch to resolve,
-    * which can take more micro-batches). `pending` non-empty implies
-    * `confs` non-empty — with no live branch the drain empties the queue.
+  /** Streaming keyed state for [[matchStreamSkipFn]]: the open branches,
+    * the completed matches still deferred by the after-match skip queue
+    * (they wait for every earlier-started live branch to resolve, which
+    * can take more micro-batches), the deferred selection candidates,
+    * and the matches waiting at the terminal-negation gate. `pending`
+    * non-empty implies `confs` non-empty — with no live branch the drain
+    * empties the queue.
     *
-    * STATE-FORMAT NOTE: this layout has changed across generations
-    * (`pendingSel` was added as a third field in the reluctant-resolver
-    * round). Since round 13 every Dataset-level streaming driver
-    * persists its state through [[CepStateEnvelope]] — a (version INT,
-    * kryo BINARY) row whose version column is readable against any
+    * STATE-FORMAT NOTE: every Dataset-level streaming driver persists
+    * this state through [[CepStateEnvelope]] — a (version INT, kryo
+    * BINARY) row whose version column is readable against any
     * checkpoint generation — so restoring state written by a different
     * format generation raises the named [[CepStateVersionException]]
     * instead of an opaque KryoException (layout change) or a silent
     * wrong resume (semantic change with unchanged layout). Bump
-    * [[CepStateCodec.GroupVersion]] whenever this class or its meaning
-    * changes (versions are PER FAMILY — the linear engine's
-    * [[CepStateCodec.ArrivalVersion]] is independent); the recovery
-    * posture stays the standard Spark one — restart from a fresh
-    * checkpoint after reprocessing. */
+    * [[CepStateCodec.GroupVersion]] whenever this class, [[Conf]] or
+    * their meaning changes; the recovery posture stays the standard
+    * Spark one — restart from a fresh checkpoint after reprocessing. */
   final case class GStreamState[E](confs: Vector[GConf[E]],
       pending: Vector[Vector[(Int, E)]],
-      pendingSel: Vector[Vector[(Int, E)]] = Vector.empty)
+      pendingSel: Vector[Vector[(Int, E)]] = Vector.empty,
+      gated: Vector[Vector[(Int, E)]] = Vector.empty)
 
   /** [[matchStreamFn]] plus the after-match skip machinery — the
     * [[GroupSkipQueue]] the batch path runs, its deferred matches carried
-    * across micro-batches in [[GStreamState]] (the streaming analog of the
-    * linear driver storing completed partials in state). NoSkip runs the
-    * queue-free immediate path. */
+    * across micro-batches in [[GStreamState]] — the terminal-negation gate
+    * and the timed-out-partials side channel (PatternStream.select with
+    * a timeout tag): when `onTimeout` is set, every partial match whose
+    * `within` horizon passes surfaces once, as step name → captured
+    * events plus the expiry time, interleaved with matches at its
+    * event-time position (timeouts fired by a watermark advance surface
+    * when the timer runs). NoSkip runs the queue-free immediate path. */
   def matchStreamSkipFn[K, E, O](compiled: Compiled[E], ts: E => Long,
       tie: E => Long, skip: Cep.AfterMatchSkip,
       finish: (K, Map[String, Seq[E]]) => O,
       stats: Cep.HotKeyStats = null,
-      canStart: E => Boolean = null):
-      (K, Iterator[E], GroupState[GStreamState[E]]) => Iterator[O] =
+      canStart: E => Boolean = null,
+      onTimeout: (K, Map[String, Seq[E]], Long) => O = null):
+      (K, Iterator[E], GroupState[GStreamState[E]]) => Iterator[O] = {
+    requireSkipFor(compiled, skip)
     (k: K, it: Iterator[E], state: GroupState[GStreamState[E]]) => {
       val st = state.getOption.getOrElse(GStreamState[E](Vector.empty,
         Vector.empty))
@@ -1876,21 +2173,37 @@ object GroupCep {
       val sq = if (skip == Cep.NoSkip) null
                else new GroupSkipQueue[E, Vector[(Int, E)]](skip, compiled,
                  ts, ops, rr)
+      val gate = negGate(compiled, ts, ops)
       if (sq != null) sq.restore(st.pending)
       if (rr != null) rr.restore(st.pendingSel)
+      if (gate != null) gate.add(st.gated)
       def emit(m: Vector[(Int, E)]): Unit =
         outs += finish(k, toGroups(compiled, m))
       // resolver releases feed the skip queue when one is active (the
       // reluctant + skip composition), else emit directly
       def release(m: Vector[(Int, E)]): Unit =
         if (sq != null) sq.add(Vector(m)) else emit(m)
+      def timedOut(m: Vector[(Int, E)], at: Long): Unit =
+        if (onTimeout != null)
+          outs += onTimeout(k, toGroups(compiled, m).filter(_._2.nonEmpty), at)
       var confs = st.confs
+      // time reaches `t` (an event's time, or the watermark): the gate
+      // decides entries whose horizon passed, and expired branches
+      // surface on the timeout channel — once per distinct capture (a
+      // loop's stay and exit branches are one partial match)
+      def advanceTime(t: Long): Unit = compiled.withinMs.foreach { w =>
+        if (gate != null) gate.onTime(t, emit, timedOut)
+        if (!confs.forall(c => t - c.startTs < w)) {
+          val (dead, live) = confs.partition(c => t - c.startTs >= w)
+          confs = live
+          if (onTimeout != null)
+            dedupBy(dead.map(_.captured))(_.length).foreach(timedOut(_, t))
+        }
+      }
       if (state.hasTimedOut) {
         // watermark advance: expired branches die, which may release
         // deferred matches whose only blockers they were
-        val w = compiled.withinMs.get
-        val wm = state.getCurrentWatermarkMs()
-        confs = confs.filter(c => wm - c.startTs < w)
+        advanceTime(state.getCurrentWatermarkMs())
         if (rr != null) rr.drain(confs, release)
         if (sq != null) confs = sq.drain(confs, emit)
       } else {
@@ -1899,11 +2212,18 @@ object GroupCep {
         val sorted = it.toVector.sortBy(e => (ts(e), tie(e)))
         var maxConfs = 0
         sorted.foreach { e =>
-          val (next, ms) = advance(compiled, confs, e, ts(e),
+          val t = ts(e)
+          if (gate != null || onTimeout != null) advanceTime(t)
+          val (next, ms) = advance(compiled, confs, e, t,
             canStart == null || canStart(e))
           confs = next
           if (stats != null && confs.size > maxConfs) maxConfs = confs.size
-          if (rr != null) {
+          if (gate != null) {
+            // the event decides every pending entry before this event's
+            // own completions join the gate
+            gate.onEvent(e, emit)
+            gate.add(ms)
+          } else if (rr != null) {
             rr.add(ms)
             if (ms.nonEmpty) confs = rr.pruneDominated(confs)
             rr.drain(confs, release)
@@ -1930,23 +2250,26 @@ object GroupCep {
                       else rr.toPending
       val sqPending = if (sq == null) Vector.empty[Vector[(Int, E)]]
                       else sq.toPending
-      if (confs.isEmpty && rrPending.isEmpty && sqPending.isEmpty)
+      val gated = if (gate == null) Vector.empty[Vector[(Int, E)]]
+                  else gate.toState
+      if (confs.isEmpty && rrPending.isEmpty && sqPending.isEmpty &&
+          gated.isEmpty)
         state.remove()
       else {
-        state.update(GStreamState(confs, sqPending, rrPending))
-        compiled.withinMs.foreach { w =>
-          val target = confs.map(_.startTs).min + w + 1
-          state.setTimeoutTimestamp(
-            math.max(target, state.getCurrentWatermarkMs() + 1))
-        }
+        state.update(GStreamState(confs, sqPending, rrPending, gated))
+        armExpiry(state, compiled.withinMs,
+          confs.map(_.startTs) ++ gated.map(m => ts(m.head._2)))
       }
       outs.result().iterator
     }
+  }
 
-  /** Streaming keyed state for the arrival-identity group driver: the
-    * per-key cross-batch arrival counter plus the skip-capable state over
-    * arrival-tagged events ([[Cep.ArrivalState]]'s group twin), the
-    * per-key match ordinal (MATCH_NUMBER()) and the PREV() row carry. */
+  /** Streaming keyed state for the arrival-identity drivers: the per-key
+    * cross-batch arrival counter (the reference's SharedBuffer EventId
+    * allocator — flink-cep/.../nfa/sharedbuffer/EventId.java assigns each
+    * arriving event a per-key ordinal) plus the skip-capable state over
+    * arrival-tagged events, the per-key match ordinal (MATCH_NUMBER())
+    * and the PREV() row carry. */
   final case class GArrivalState[E](nextSeq: Long,
       inner: GStreamState[(E, Long)],
       matchSeq: Long = 0L, carry: Vector[E] = Vector.empty)
@@ -2002,17 +2325,19 @@ object GroupCep {
 
   /** Arrival-identity streaming driver: tags each batch's events with
     * consecutive per-key ordinals (counter carried in state) and runs
-    * [[matchStreamSkipFn]] over the lifted pattern — the group twin of
-    * [[Cep.matchStreamGroupsArrivalFn]]. */
+    * [[matchStreamSkipFn]] over the lifted pattern — the state function
+    * behind every library streaming route. `onTimeout`, when set, is
+    * [[matchStreamSkipFn]]'s timed-out-partials channel. */
   def matchStreamArrivalFn[K, E, O](pattern: GPattern[E], ts: E => Long,
       tie: E => Long, skip: Cep.AfterMatchSkip,
       finish: (K, Map[String, Seq[E]]) => O,
       stats: Cep.HotKeyStats = null,
-      anchorHead: Boolean = false):
+      anchorHead: Boolean = false,
+      onTimeout: (K, Map[String, Seq[E]], Long) => O = null):
       (K, Iterator[E], GroupState[GArrivalState[E]]) => Iterator[O] =
     matchStreamNumberedArrivalFn(pattern, ts, tie, skip, null,
       (kk: K, _: Long, groups: Map[String, Seq[E]]) => finish(kk, groups),
-      stats, numbered = false, anchorHead = anchorHead)
+      stats, numbered = false, anchorHead = anchorHead, onTimeout)
 
   /** [[matchStreamArrivalFn]] plus the round-9 SQL extras: finish receives
     * the 1-based cross-batch per-key match ordinal (streaming
@@ -2024,9 +2349,15 @@ object GroupCep {
       pre: (Vector[E], E) => (Vector[E], E),
       finish: (K, Long, Map[String, Seq[E]]) => O,
       stats: Cep.HotKeyStats = null, numbered: Boolean = true,
-      anchorHead: Boolean = false):
+      anchorHead: Boolean = false,
+      onTimeout: (K, Map[String, Seq[E]], Long) => O = null):
       (K, Iterator[E], GroupState[GArrivalState[E]]) => Iterator[O] = {
     val compiled = compile(liftG(pattern))
+    requireSkipFor(compiled, skip)
+    val liftedTimeout =
+      if (onTimeout == null) null
+      else (kk: K, groups: Map[String, Seq[(E, Long)]], at: Long) =>
+        onTimeout(kk, unliftGroups(groups), at)
     (k: K, it: Iterator[E], state: GroupState[GArrivalState[E]]) => {
       val st = state.getOption
       var seq = st.map(_.nextSeq).getOrElse(0L)
@@ -2038,7 +2369,8 @@ object GroupCep {
         stats,
         // ^ gate: only the key's first-EVER event (cross-batch arrival
         // tag 0) may open a branch
-        canStart = if (anchorHead) (w: (E, Long)) => w._2 == 0L else null)
+        canStart = if (anchorHead) (w: (E, Long)) => w._2 == 0L else null,
+        onTimeout = liftedTimeout)
       val sorted = it.toVector.sortBy(e => (ts(e), tie(e)))
       val preApplied = if (pre == null) sorted else sorted.map { e =>
         val (c2, e2) = pre(carry, e); carry = c2; e2
@@ -2059,8 +2391,7 @@ object GroupCep {
     * matches ride keyed state until their blocking branches resolve.
     * Event identity is the reference's SharedBuffer EventId semantics
     * (arrival identity, [[GArrivalState]]'s cross-batch counter), like
-    * the batch driver; use [[matchStreamFn]]/[[matchStreamSkipFn]]
-    * directly for value identity.
+    * the batch driver.
     *
     * Patterns with `within` require a watermarked input (`withWatermark`
     * upstream): expiry of idle keys' partial branches rides event-time
@@ -2074,7 +2405,7 @@ object GroupCep {
       anchorHead: Boolean = false)(
       finish: (K, Map[String, Seq[E]]) => O)(
       implicit ke: Encoder[K]): Dataset[O] = {
-    compile(pattern) // validate eagerly
+    requireSkipFor(compile(pattern), skip) // validate eagerly
     val timeoutConf =
       if (pattern.withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
       else GroupStateTimeout.NoTimeout()
@@ -2099,7 +2430,7 @@ object GroupCep {
       anchorHead: Boolean = false)(
       finish: (K, Long, Map[String, Seq[E]]) => O)(
       implicit ke: Encoder[K]): Dataset[O] = {
-    compile(pattern) // validate eagerly
+    requireSkipFor(compile(pattern), skip) // validate eagerly
     val timeoutConf =
       if (pattern.withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
       else GroupStateTimeout.NoTimeout()

@@ -154,13 +154,8 @@ class PropertySpec extends SparkSuite {
     check(Prop.forAll(evGen) { evsRaw =>
       // distinct timestamps keep ordering unambiguous
       val evs = evsRaw.distinctBy(_._1).sortBy(_._1)
-      var partials = Vector.empty[Cep.Partial[(Long, String)]]
-      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      evs.foreach { e =>
-        val (next, ms) = Cep.advance(pattern, partials, e, e._1)
-        partials = next
-        ms.foreach(m => got += ((m(0).head._1, m(1).head._1)))
-      }
+      val got = Cep.runMatches(pattern, evs.map(e => (e, e._1)))._1
+        .map(m => (m(0).head._1, m(1).head._1))
       // brute force: each 'a' pairs with the first 'b' strictly after it
       // and strictly inside the window (NFA.java prunes the partial at
       // timestamp - startTs >= windowTime, so a b exactly at +50 is out)
@@ -325,10 +320,10 @@ class PropertySpec extends SparkSuite {
     })
   }
 
-  test("linear CEP streaming is split-invariant (arrival counter + skip queue + negation gate)") {
-    // the linear-engine twin, with within-horizons + terminal negation in
-    // the pool; split points also land INSIDE same-value duplicate runs
-    import graft.streaming.{Cep, VirtualClockHarness}
+  test("DSL CEP streaming is split-invariant (arrival counter + skip queue + negation gate)") {
+    // the flink-cep DSL twin (Cep.Pattern compiled onto GroupCep); split
+    // points also land INSIDE same-value duplicate runs
+    import graft.streaming.{Cep, GroupCep, VirtualClockHarness}
     import org.apache.spark.sql.streaming.GroupStateTimeout
     type E = (String, Long)
     def pat1 = Cep.Pattern.begin[E]("a")(_._1 == "a")
@@ -350,12 +345,12 @@ class PropertySpec extends SparkSuite {
           (n, (i / 2).toLong)
         }
         val (i, j) = (math.min(i0, j0), math.max(i0, j0))
-        val fn = Cep.matchStreamGroupsArrivalFn[Int, E, Seq[Long]](
+        val fn = Cep.matchStreamGroupsFn[Int, E, Seq[Long]](
           pats(pi)(), _._2, skips(si), _ => 0L,
           (_, groups) => groups.values.flatten.map(_._2).toVector)
         def run(chunks: Seq[Seq[E]]): Map[Seq[Long], Int] = {
           val h = new VirtualClockHarness[Int, E,
-            Cep.ArrivalState[E], Seq[Long]](
+            GroupCep.GArrivalState[E], Seq[Long]](
             GroupStateTimeout.NoTimeout(), fn)
           chunks.flatMap(c => h.input(0, c: _*))
             .groupBy(identity).view.mapValues(_.size).toMap

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** FLAT patterns (a sequence of leaf steps, negations between them or at
   * the end) through the one planned CEP operator: they must agree with
-  * the linear library NFA (different engine, same reference semantics)
-  * and must get their shuffle + sort from the planner, not from
+  * the library drivers (same NFA, Dataset-level data movement) and
+  * must get their shuffle + sort from the planner, not from
   * Dataset-level operations. */
 final case class E(event_id: Long, ts: java.sql.Timestamp,
     event_type: String, user_id: Long)
@@ -238,7 +238,7 @@ class CepPlanSpec extends SparkSuite {
     // under value identity structural dedup would merge them into one.
     // The reference's SharedBuffer EventId semantics (SameElementITCase)
     // demand two matches — which is also what the library batch driver
-    // (arrivalIds default) produces.
+    // (arrival identity) produces.
     val dup = Seq(
       (1L, ts("2024-01-01 10:00:00"), "view", 9L),
       (1L, ts("2024-01-01 10:00:00"), "view", 9L),

@@ -200,8 +200,8 @@ class GroupCepPlanSpec extends SparkSuite {
   test("arrival identity: value-identical same-timestamp rows are distinct branch states") {
     // two byte-identical 'a' rows at one timestamp under a followedByAny
     // group entry: the reference's SharedBuffer EventId semantics demand
-    // TWO matches — which is what the library batch driver (arrivalIds
-    // default) produces; value identity would dedup the branches to one
+    // TWO matches — which is what the library batch driver (arrival
+    // identity) produces; value identity would dedup the branches to one
     val dup = Seq(
       (1L, 1L, "c", 9L), (2L, 2L, "a", 9L), (2L, 2L, "a", 9L),
       (3L, 3L, "b", 9L), (4L, 4L, "d", 9L)

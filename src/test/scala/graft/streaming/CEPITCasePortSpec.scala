@@ -111,7 +111,7 @@ class CEPITCasePortSpec extends SparkSuite {
       .within(3L)
     // Ev.user carries the price tag (x10 to stay integral)
     def price(e: Ev): String = (e.user / 10.0).toString
-    val h = new VirtualClockHarness[Int, Ev, Vector[Partial[Ev]],
+    val h = new VirtualClockHarness[Int, Ev, GroupCep.GArrivalState[Ev],
       Either[String, String]](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamWithTimeoutsFn[Int, Ev, Either[String, String]](

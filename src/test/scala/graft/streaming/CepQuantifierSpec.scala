@@ -18,18 +18,10 @@ class CepQuantifierSpec extends SparkSuite {
   private case class RE(id: Int, name: String, price: Double)
 
   private def feed(pattern: Pattern[RE], events: Seq[(RE, Long)]):
-      Vector[Vector[Vector[RE]]] = {
-    // no end-of-input flush: final-step loops emit every satisfied
-    // length as it forms (eager proceed-to-Final)
-    var partials = Vector.empty[Partial[RE]]
-    val all = Vector.newBuilder[Vector[Vector[RE]]]
-    events.foreach { case (e, ts) =>
-      val (next, ms) = advance(pattern, partials, e, ts)
-      partials = next
-      ms.foreach(all += _)
-    }
-    all.result()
-  }
+      Vector[Vector[Vector[RE]]] =
+    // final-step loops emit every satisfied length as it forms (eager
+    // proceed-to-Final), not at the end of input
+    Cep.runMatches(pattern, events)._1
 
   private def names(m: Vector[Vector[RE]]): Seq[Seq[Int]] = m.map(_.map(_.id))
 
@@ -418,16 +410,8 @@ class CepQuantifierSpec extends SparkSuite {
 
   // feed for arbitrary event types (the RE-typed feed is above)
   private def feed2[E](pattern: Pattern[E], events: Seq[(E, Long)]):
-      Vector[Vector[Vector[E]]] = {
-    var partials = Vector.empty[Partial[E]]
-    val all = Vector.newBuilder[Vector[Vector[E]]]
-    events.foreach { case (e, ts) =>
-      val (next, ms) = advance(pattern, partials, e, ts)
-      partials = next
-      ms.foreach(all += _)
-    }
-    all.result()
-  }
+      Vector[Vector[Vector[E]]] =
+    Cep.runMatches(pattern, events)._1
 
   private def flatIds(ms: Vector[Vector[Vector[RE]]]): Seq[Seq[Int]] =
     ms.map(_.flatten.map(_.id))
@@ -1163,16 +1147,8 @@ class CepQuantifierSpec extends SparkSuite {
 
   /** Like [[feed]] but also returns the survivors after the last event. */
   private def feedState(pattern: Pattern[RE], events: Seq[(RE, Long)]):
-      (Vector[Vector[Vector[RE]]], Vector[Partial[RE]]) = {
-    var partials = Vector.empty[Partial[RE]]
-    val all = Vector.newBuilder[Vector[Vector[RE]]]
-    events.foreach { case (e, ts) =>
-      val (next, ms) = advance(pattern, partials, e, ts)
-      partials = next
-      ms.foreach(all += _)
-    }
-    (all.result(), partials)
-  }
+      (Vector[Vector[Vector[RE]]], Vector[GroupCep.GConf[(RE, Long)]]) =
+    Cep.runMatches(pattern, events)
 
   private val Prune = RE(99, "prune", 0.0) // matches no step predicate
 

@@ -23,14 +23,11 @@ class CepSpec extends SparkSuite {
     val relaxed = Pattern.begin[Ev]("a")(_.typ == "a").followedBy("b")(_.typ == "b")
     val a = Ev(1, "a", 0); val x = Ev(1, "x", 1); val b = Ev(1, "b", 2)
 
-    val (p1, m1) = advance(strict, Vector.empty, a, 0)
-    val (p2, m2) = advance(strict, p1, x, 1)
-    val (_, m3) = advance(strict, p2, b, 2)
-    assert(m1.isEmpty && m2.isEmpty && m3.isEmpty) // a-x-b: strict killed
+    val events = Seq(a -> 0L, x -> 1L, b -> 2L)
+    val (m3, _) = Cep.runMatches(strict, events)
+    assert(m3.isEmpty) // a-x-b: strict killed
 
-    val (q1, _) = advance(relaxed, Vector.empty, a, 0)
-    val (q2, _) = advance(relaxed, q1, x, 1)
-    val (_, n3) = advance(relaxed, q2, b, 2)
+    val (n3, _) = Cep.runMatches(relaxed, events)
     assert(n3 == Vector(Vector(Vector(a), Vector(b)))) // relaxed skipped x
   }
 
@@ -99,8 +96,7 @@ class CepSpec extends SparkSuite {
 
   test("advance: within prunes old partials") {
     val a = Ev(1, "login", 0); val e = Ev(1, "error", 500)
-    val (p1, _) = advance(loginThenError, Vector.empty, a, 0)
-    val (_, m) = advance(loginThenError, p1, e, 500)
+    val (m, _) = Cep.runMatches(loginThenError, Seq(a -> 0L, e -> 500L))
     assert(m.isEmpty) // 500 > within(100)
   }
 
@@ -131,7 +127,8 @@ class CepSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions.timestamp_millis
-    implicit val stEnc: Encoder[Cep.ArrivalState[Ev]] = ExpressionEncoder()
+    implicit val stEnc: Encoder[GroupCep.GArrivalState[Ev]] =
+      ExpressionEncoder()
     val input = MemoryStream[Ev]
     // within(100) patterns ride event-time timers for state expiry, so the
     // input must carry a watermark (matchStream's documented contract)
@@ -160,18 +157,18 @@ class CepSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     val p = Pattern.begin[Ev]("login")(_.typ == "login")
       .followedBy("error")(_.typ == "error").within(100L)
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]], MatchOut](
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev], MatchOut](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamFn[Long, Ev, MatchOut](p, _.ts, Cep.NoSkip, _ => 0L,
         (u, m) => MatchOut(u, m("login").ts, m("error").ts)))
     assert(h.input(7L, Ev(7, "login", 0L)).isEmpty)
-    assert(h.stateOf(7L).exists(_.nonEmpty))
+    assert(h.stateOf(7L).exists(_.inner.confs.nonEmpty))
     // the partial expires at startTs + within (NFA.java prunes at
     // timestamp - startTs >= windowTime), so the timer fires exactly there
     assert(h.timerOf(7L).contains(100L))
     // short of the horizon: the partial survives and can still complete
     assert(h.advanceWatermarkTo(50L).isEmpty)
-    assert(h.stateOf(7L).exists(_.nonEmpty))
+    assert(h.stateOf(7L).exists(_.inner.confs.nonEmpty))
     // past the horizon: the idle key's state is observably cleared
     assert(h.advanceWatermarkTo(150L).isEmpty)
     assert(h.stateOf(7L).isEmpty && h.timerOf(7L).isEmpty)
@@ -194,7 +191,7 @@ class CepSpec extends SparkSuite {
       .followedByAny("end")(_.typ == "end")
       .within(10L)
     // output: (isTimeout, startTs, atOrEndTs, capturedEvents)
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]],
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev],
       (Boolean, Long, Long, Int)](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamWithTimeoutsFn[Long, Ev, (Boolean, Long, Long, Int)](
@@ -224,7 +221,7 @@ class CepSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     val p = Pattern.begin[Ev]("start")(_.typ == "start")
       .followedBy("end")(_.typ == "end").within(10L)
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]],
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev],
       (Boolean, Long, Long)](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamWithTimeoutsFn[Long, Ev, (Boolean, Long, Long)](
@@ -241,7 +238,7 @@ class CepSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     val p = Pattern.begin[Ev]("start")(_.typ == "start")
       .followedBy("end")(_.typ == "end").within(10L)
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]],
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev],
       (Boolean, Long, Long)](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamWithTimeoutsFn[Long, Ev, (Boolean, Long, Long)](
@@ -366,7 +363,7 @@ class CepSpec extends SparkSuite {
   // ---- round-6 ports: the REST of AfterMatchSkipITCase, including the
   // deferred-emission semantics (a completed match waits while an
   // earlier-started partial is live; emission prunes partials AND the
-  // queued matches) now implemented by Cep.SkipQueue.
+  // queued matches) of GroupCep's skip queue.
 
   private def skipMatches(p: Pattern[Ev], skip: Cep.AfterMatchSkip,
       evs: Seq[Ev]): Seq[Seq[Long]] =
@@ -513,9 +510,10 @@ class CepSpec extends SparkSuite {
     // streaming twin: the same accumulators ride the state fn across
     // micro-batches (per-batch key-run granularity)
     val stats2 = new Cep.HotKeyStats(spark.sparkContext, "spec2")
-    val h = new VirtualClockHarness[Long, Ev, Cep.ArrivalState[Ev], Long](
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev],
+      Long](
       org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
-      Cep.matchStreamGroupsArrivalFn[Long, Ev, Long](p, _.ts, Cep.NoSkip,
+      Cep.matchStreamGroupsFn[Long, Ev, Long](p, _.ts, Cep.NoSkip,
         _ => 0L, (_, m) => m("login").head.ts, stats2))
     h.input(7L, (1 to 30).map(i => Ev(7, "login", i.toLong)): _*)
     h.input(7L, Ev(7, "error", 99))

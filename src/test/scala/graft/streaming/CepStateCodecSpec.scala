@@ -18,29 +18,31 @@ class CepStateCodecSpec extends SparkSuite {
 
   test("envelope roundtrips the arrival state bit-faithfully") {
     val ev = Ev(1L, "error", 10L)
-    val st = Cep.ArrivalState[Ev](nextSeq = 7L,
-      partials = Vector(Cep.Partial(10L, Vector(Vector((ev, 6L))),
-        runOpen = true, virgin = true)))
-    val env = CepStateCodec.enc(CepStateCodec.ArrivalVersion, st)
-    assert(env.version == CepStateCodec.ArrivalVersion)
-    val back = CepStateCodec.dec[Cep.ArrivalState[Ev]](env,
-      CepStateCodec.ArrivalVersion, "spec")
+    val conf: GroupCep.GConf[(Ev, Long)] = GroupCep.Conf(1, GroupCep.TillNext,
+      Map(0 -> 1), Vector((0, (ev, 6L))), 10L, fresh = true, guard = 0,
+      guardKind = GroupCep.GuardOnce)
+    val st = GroupCep.GArrivalState[Ev](nextSeq = 7L,
+      inner = GroupCep.GStreamState(Vector(conf), Vector.empty,
+        gated = Vector(Vector((1, (ev, 6L))))))
+    val env = CepStateCodec.enc(CepStateCodec.GroupVersion, st)
+    assert(env.version == CepStateCodec.GroupVersion)
+    val back = CepStateCodec.dec[GroupCep.GArrivalState[Ev]](env,
+      CepStateCodec.GroupVersion, "spec")
     assert(back == st)
   }
 
   test("the linear and group families never share a format version") {
-    // flat MATCH_RECOGNIZE clauses persisted Cep.ArrivalState at version
-    // 3 and now persist GroupCep.GArrivalState: equal numbers would let
-    // one family's checkpoint reach kryo as the other's class
-    assert(CepStateCodec.ArrivalVersion != CepStateCodec.GroupVersion)
-    assert(CepStateCodec.GroupVersion > 3 && CepStateCodec.ArrivalVersion > 3)
+    // the retired linear engine persisted Cep.ArrivalState at 5 (and
+    // flat MATCH_RECOGNIZE clauses at the old shared 3): the one
+    // remaining family skips both, so no old linear checkpoint can reach
+    // kryo as a GroupCep class
+    assert(CepStateCodec.GroupVersion > 5)
   }
 
   test("a pre-change flat-clause checkpoint fails by name in the group driver") {
-    // the state a flat clause wrote before it moved onto GroupCep: a
-    // Cep.ArrivalState envelope at the old shared version 3
-    val old = CepStateCodec.enc(3,
-      Cep.ArrivalState[Ev](nextSeq = 2L, partials = Vector.empty))
+    // the state a flat clause wrote before it moved onto GroupCep: an
+    // envelope at the old shared version 3 (its payload is never read)
+    val old = CepStateEnvelope(3, Array[Byte](1, 2, 3))
     val fn = CepStateCodec.versionedFn("GroupCep.GArrivalState",
       CepStateCodec.GroupVersion,
       GroupCep.matchStreamArrivalFn[Long, Ev, Long](
@@ -55,6 +57,27 @@ class CepStateCodecSpec extends SparkSuite {
     assert(ex.found == 3)
     assert(ex.expected == CepStateCodec.GroupVersion)
     assert(ex.getMessage.contains("GroupCep.GArrivalState"))
+  }
+
+  test("a linear-engine checkpoint (version 5) fails by name in Cep.matchStream's state function") {
+    // the DSL's streams persisted the linear engine's Cep.ArrivalState at
+    // version 5 before they moved onto GroupCep; resuming one must raise
+    // the named error, not a KryoException over the old class layout
+    val p = Cep.Pattern.begin[Ev]("v")(_.kind == "view")
+      .followedBy("e")(_.kind == "error")
+    val fn = CepStateCodec.versionedFn("GroupCep.GArrivalState",
+      CepStateCodec.GroupVersion,
+      Cep.matchStreamFn[Long, Ev, Long](p, _.ts, Cep.NoSkip, _ => 0L,
+        (k, _) => k))
+    val linear = CepStateEnvelope(5, CepStateCodec.toBytes(Vector(7L)))
+    val resumed = TestGroupState.create[CepStateEnvelope](
+      Optional.of(linear), GroupStateTimeout.NoTimeout(), 0L,
+      Optional.empty[Long](), hasTimedOut = false)
+    val ex = intercept[CepStateVersionException] {
+      fn(1L, Iterator(Ev(1L, "error", 20L)), resumed).toList
+    }
+    assert(ex.found == 5)
+    assert(ex.expected == CepStateCodec.GroupVersion)
   }
 
   test("a wrong-version blob raises the named error before kryo decodes") {

@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   * FLINK-23958): the match emits at the window horizon if no banned event
   * arrived — the "A not followed by B within w" funnel shape. All three
   * execution paths (library batch, planned GroupCepExec, streaming state
-  * function) run the same [[Cep.NegGate]].
+  * function) run the same [[Cep.NegGate]]; a pattern ending in a
+  * negation runs the default NoSkip strategy only.
   */
 class CepTerminalNegationSpec extends SparkSuite {
   import spark.implicits._
@@ -63,6 +64,28 @@ class CepTerminalNegationSpec extends SparkSuite {
     }
     assert(e.getMessage.contains(
       "NotFollowedBy is not supported as a last part of a Pattern"))
+  }
+
+  test("terminal negation rejects a non-default skip strategy by name") {
+    // the planned operator's rule on every driver: the gate holds
+    // matches outside the skip queue, so the two do not compose
+    val p = Pattern.begin[Ev]("v")(_.typ == "view")
+      .notFollowedBy("p")(_.typ == "purchase")
+      .within(30L)
+    val batch = intercept[IllegalArgumentException] {
+      Cep.matchBatchGroups(spark.createDataset(Seq(Ev(1, "view", 1))),
+        (e: Ev) => e.user, (e: Ev) => e.ts, p, Cep.SkipPastLastEvent) {
+        (u, _) => u
+      }
+    }
+    assert(batch.getMessage.contains(
+      "terminal negation requires the default NoSkip strategy"))
+    val stream = intercept[IllegalArgumentException] {
+      Cep.matchStreamFn[Long, Ev, Long](p, _.ts, Cep.SkipToFirst("v"),
+        _ => 0L, (u, _) => u)
+    }
+    assert(stream.getMessage.contains(
+      "terminal negation requires the default NoSkip strategy"))
   }
 
   test("funnel: view NOT followed by purchase within the window (batch)") {
@@ -130,17 +153,17 @@ class CepTerminalNegationSpec extends SparkSuite {
     val p = Pattern.begin[Ev]("v")(_.typ == "view")
       .notFollowedBy("p")(_.typ == "purchase")
       .within(100L)
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]], Long](
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev], Long](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamFn[Long, Ev, Long](p, _.ts, Cep.NoSkip, _ => 0L,
         (_, m) => m("v").ts))
     assert(h.input(1L, Ev(1, "view", 0)).isEmpty)
-    // the pending entry is state (negPending) with the timer at its horizon
-    assert(h.stateOf(1L).exists(_.exists(_.negPending)))
+    // the pending entry is state (gated) with the timer at its horizon
+    assert(h.stateOf(1L).exists(_.inner.gated.nonEmpty))
     assert(h.timerOf(1L).contains(100L))
     // short of the horizon: still pending
     assert(h.advanceWatermarkTo(50L).isEmpty)
-    assert(h.stateOf(1L).exists(_.nonEmpty))
+    assert(h.stateOf(1L).exists(_.inner.gated.nonEmpty))
     // horizon passes idle: the match emits from the timeout path
     assert(h.advanceWatermarkTo(150L) === Seq(0L))
     assert(h.stateOf(1L).isEmpty)
@@ -150,7 +173,7 @@ class CepTerminalNegationSpec extends SparkSuite {
     val p = Pattern.begin[Ev]("v")(_.typ == "view")
       .notFollowedBy("p")(_.typ == "purchase")
       .within(100L)
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]], Long](
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev], Long](
       GroupStateTimeout.EventTimeTimeout(),
       Cep.matchStreamFn[Long, Ev, Long](p, _.ts, Cep.NoSkip, _ => 0L,
         (_, m) => m("v").ts))
@@ -163,29 +186,35 @@ class CepTerminalNegationSpec extends SparkSuite {
   test("arrivalIds: value-identical events at one timestamp are distinct states (SharedBuffer EventId parity)") {
     // two bit-identical 'b' events: the reference's SharedBuffer assigns
     // each an arrival EventId and emits TWO value-identical matches —
-    // the batch-driver DEFAULT since round 7; arrivalIds=false reverts
-    // to value identity, which collapses them to one
+    // the batch driver's identity; value identity (the raw NFA advance
+    // over untagged events) collapses them to one
     val events = Seq(
       Ev(1, "a", 1), Ev(1, "b", 2), Ev(1, "b", 2), Ev(1, "c", 3))
     val p = Pattern.begin[Ev]("s")(_.typ == "a")
       .followedByAny("m")(_.typ == "b")
       .followedBy("e")(_.typ == "c")
-    def run(ids: Boolean): Seq[Seq[Long]] =
-      Cep.matchBatchGroups(spark.createDataset(events), (e: Ev) => e.user,
-        (e: Ev) => e.ts, p, tie = (e: Ev) => e.ts, arrivalIds = ids) {
+    def runOn(evs: Seq[Ev], ids: Boolean): Seq[Seq[Long]] =
+      if (ids) Cep.matchBatchGroups(spark.createDataset(evs),
+        (e: Ev) => e.user, (e: Ev) => e.ts, p, tie = (e: Ev) => e.ts) {
         (_, groups) => groups.values.flatten.toSeq.sortBy(_.ts).map(_.ts)
       }.collect().toSeq
+      else {
+        val c = GroupCep.compile(p.toGroup)
+        var confs = Vector.empty[GroupCep.GConf[Ev]]
+        evs.flatMap { e =>
+          val (next, ms) = GroupCep.advance(c, confs, e, e.ts)
+          confs = next
+          ms.map(m => m.map(_._2.ts))
+        }
+      }
+    def run(ids: Boolean): Seq[Seq[Long]] = runOn(events, ids)
     assert(run(false) === Seq(Seq(1L, 2L, 3L)))
     assert(run(true) === Seq(Seq(1L, 2L, 3L), Seq(1L, 2L, 3L)))
     // distinct-valued events are unaffected by the mode
     val distinctEvents = Seq(
       Ev(2, "a", 1), Ev(2, "b", 2), Ev(2, "b", 3), Ev(2, "c", 4))
     def run2(ids: Boolean): Set[Seq[Long]] =
-      Cep.matchBatchGroups(spark.createDataset(distinctEvents),
-        (e: Ev) => e.user, (e: Ev) => e.ts, p, tie = (e: Ev) => e.ts,
-        arrivalIds = ids) {
-        (_, groups) => groups.values.flatten.toSeq.sortBy(_.ts).map(_.ts)
-      }.collect().toSet
+      runOn(distinctEvents, ids).toSet
     assert(run2(false) === run2(true))
     assert(run2(true) === Set(Seq(1L, 2L, 4L), Seq(1L, 3L, 4L)))
   }
@@ -194,20 +223,20 @@ class CepTerminalNegationSpec extends SparkSuite {
     val p = Pattern.begin[Ev]("s")(_.typ == "a")
       .followedBy("e")(_.typ == "d")
       .notNext("n")(_.typ == "b")
-    val h = new VirtualClockHarness[Long, Ev, Vector[Partial[Ev]],
+    val h = new VirtualClockHarness[Long, Ev, GroupCep.GArrivalState[Ev],
       (Long, Long)](
       GroupStateTimeout.NoTimeout(),
       Cep.matchStreamFn[Long, Ev, (Long, Long)](p, _.ts, Cep.NoSkip,
         _ => 0L, (_, m) => (m("s").ts, m("e").ts)))
     // batch 1 completes the consuming steps; emission waits at the gate
     assert(h.input(1L, Ev(1, "a", 1), Ev(1, "d", 2)).isEmpty)
-    assert(h.stateOf(1L).exists(_.exists(_.negPending)))
+    assert(h.stateOf(1L).exists(_.inner.gated.nonEmpty))
     // batch 2's first event is not banned -> the match emits
     assert(h.input(1L, Ev(1, "z", 3)) === Seq((1L, 2L)))
     // same script, banned second batch -> killed
     assert(h.input(2L, Ev(2, "a", 1), Ev(2, "d", 2)).isEmpty)
     assert(h.input(2L, Ev(2, "b", 3)).isEmpty)
-    assert(h.stateOf(2L).forall(_.forall(p =>
-      !p.negPending)) || h.stateOf(2L).isEmpty)
+    assert(h.stateOf(2L).forall(_.inner.gated.isEmpty) ||
+      h.stateOf(2L).isEmpty)
   }
 }

@@ -512,11 +512,20 @@ class GroupCepSpec extends SparkSuite {
         .followedBy("m2")(_.typ == "b"))
       .followedBy("end")(_.typ == "d")
     def run(ids: Boolean): Seq[Seq[Long]] =
-      GroupCep.matchBatchGroups(events.toDS(), (e: Ev) => e.user,
-        (e: Ev) => e.ts, p, tie = (e: Ev) => e.ts,
-        arrivalIds = ids) { (_, groups) =>
+      if (ids) GroupCep.matchBatchGroups(events.toDS(), (e: Ev) => e.user,
+        (e: Ev) => e.ts, p, tie = (e: Ev) => e.ts) { (_, groups) =>
         groups.values.flatten.map(_.ts).toSeq
       }.collect().toSeq
+      else {
+        // value identity: the raw advance over the untagged events
+        val c = GroupCep.compile(p)
+        var confs = Vector.empty[GConf[Ev]]
+        events.flatMap { e =>
+          val (next, ms) = GroupCep.advance(c, confs, e, e.ts)
+          confs = next
+          ms.map(m => GroupCep.toGroups(c, m).values.flatten.map(_.ts).toSeq)
+        }
+      }
     assert(run(false) === Seq(Seq(1L, 3L, 4L, 5L)))
     assert(run(true) === Seq(Seq(1L, 3L, 4L, 5L), Seq(1L, 3L, 4L, 5L)))
   }
@@ -776,8 +785,9 @@ class GroupCepSpec extends SparkSuite {
     val (a1, b1) = (RE(41, "a", 2.0), RE(42, "b", 3.0))
     assert(h.input(1L, (c, 0L), (a1, 10L), (b1, 20L)).isEmpty)
     assert(h.stateOf(1L).exists(_.nonEmpty))
-    // timer armed at oldest branch's startTs + within + 1
-    assert(h.timerOf(1L).contains(101L))
+    // timer armed at oldest branch's startTs + within (the expiry
+    // point: NFA.java prunes at timestamp - startTs >= windowTime)
+    assert(h.timerOf(1L).contains(100L))
     // watermark short of the horizon: branches survive
     assert(h.advanceWatermarkTo(50L).isEmpty)
     assert(h.stateOf(1L).exists(_.nonEmpty))
@@ -804,7 +814,7 @@ class GroupCepSpec extends SparkSuite {
     // startTs=80 one is not (40 <= 100) — prune one, keep one, re-arm
     assert(h.advanceWatermarkTo(120L).isEmpty)
     assert(h.stateOf(1L).exists(s => s.size === 1 && s.head.startTs === 80L))
-    assert(h.timerOf(1L).contains(181L))
+    assert(h.timerOf(1L).contains(180L))
     // wm past the survivor's horizon: state fully cleared
     assert(h.advanceWatermarkTo(181L).isEmpty)
     assert(h.stateOf(1L).isEmpty && h.timerOf(1L).isEmpty)
@@ -853,7 +863,7 @@ class GroupCepSpec extends SparkSuite {
     import spark.implicits._
     type T = (Long, String, Long)
     // c (a b){1,2} d twice over one key: all-starts yields overlapping
-    // exit-fork matches; each strategy prunes like Cep.SkipQueue
+    // exit-fork matches; each strategy prunes like AfterMatchSkipITCase
     val ds = Seq(
       (1L, "c", 1L), (1L, "a", 2L), (1L, "b", 3L), (1L, "a", 4L),
       (1L, "b", 5L), (1L, "d", 6L),

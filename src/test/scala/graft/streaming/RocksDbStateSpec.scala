@@ -74,7 +74,7 @@ class RocksDbStateSpec extends SparkSuite {
     // the other kryo-carrying state shape: NonWindowJoinSql's
     // JoinStateEnvelope (version, schema digest, blob) rows must cross
     // micro-batch boundaries through RocksDB exactly like the CEP
-    // ArrivalState does — a buffered left null-pads in batch 1 and
+    // GArrivalState does — a buffered left null-pads in batch 1 and
     // retracts/pairs when its right arrives in batch 2
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col

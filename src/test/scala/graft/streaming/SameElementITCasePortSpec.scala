@@ -17,7 +17,7 @@ class SameElementITCasePortSpec extends SparkSuite {
   private case class SE(id: Int, name: String, price: Double)
 
   private def feed(p: Pattern[SE], events: Seq[(SE, Long)]):
-      (Seq[Seq[(String, Double)]], Vector[Partial[(SE, Long)]]) = {
+      (Seq[Seq[(String, Double)]], Vector[GroupCep.GConf[(SE, Long)]]) = {
     val (ms, survivors) = Cep.runMatches(p, events)
     (ms.map(_.flatten.map(e => (e.name, e.price))), survivors)
   }

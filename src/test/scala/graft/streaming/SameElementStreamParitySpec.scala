@@ -11,10 +11,10 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
 /** Streaming arrival-identity parity (round-8 VERDICT #1): the
   * SameElementITCase scripts (flink-cep nfa/SameElementITCase.java —
   * value-identical events at one timestamp) replayed through
-  * [[Cep.matchStreamGroupsArrivalFn]] split across micro-batches must
+  * [[Cep.matchStreamGroupsFn]] split across micro-batches must
   * produce EXACTLY the batch driver's output ([[Cep.runMatches]], the
   * reference-verified arrival-tagged identity) — the cross-batch
-  * [[Cep.ArrivalState]] counter is what makes two value-identical events
+  * [[GroupCep.GArrivalState]] counter is what makes two value-identical events
   * in DIFFERENT batches distinct computation states, like the reference's
   * SharedBuffer EventId allocator surviving checkpoints.
   *
@@ -48,10 +48,10 @@ class SameElementStreamParitySpec extends SparkSuite {
     * by the harness's state map. */
   private def feedStream(p: Pattern[E], chunks: Seq[Seq[E]]):
       Seq[Vector[(String, Double)]] = {
-    val fn = Cep.matchStreamGroupsArrivalFn[Int, E, Vector[(String, Double)]](
+    val fn = Cep.matchStreamGroupsFn[Int, E, Vector[(String, Double)]](
       p, _._2, Cep.NoSkip, _ => 0L,
       (_, groups) => vals(groups.values.flatten.toSeq))
-    val h = new VirtualClockHarness[Int, E, ArrivalState[E],
+    val h = new VirtualClockHarness[Int, E, GroupCep.GArrivalState[E],
       Vector[(String, Double)]](GroupStateTimeout.NoTimeout(), fn)
     chunks.flatMap(c => h.input(0, c: _*))
   }
@@ -161,11 +161,11 @@ class SameElementStreamParitySpec extends SparkSuite {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     val p = Pattern.begin[E]("v")(_._1.name == "v")
       .followedBy("e")(_._1.name == "e").within(100L)
-    val fn = Cep.matchStreamWithTimeoutsArrivalFn[Int, E, (Boolean, Long)](
+    val fn = Cep.matchStreamWithTimeoutsFn[Int, E, (Boolean, Long)](
       p, _._2, Cep.NoSkip, _ => 0L,
       (_, m) => (true, m("e")._2),
       (_, groups, at) => (false, at))
-    val h = new VirtualClockHarness[Int, E, ArrivalState[E],
+    val h = new VirtualClockHarness[Int, E, GroupCep.GArrivalState[E],
       (Boolean, Long)](GroupStateTimeout.EventTimeTimeout(), fn)
     val v = SE(1, "v", 1.0)
     assert(h.input(0, v -> 10L, v -> 10L).isEmpty)
@@ -181,7 +181,8 @@ class SameElementStreamParitySpec extends SparkSuite {
   test("MemoryStream: duplicate multiplicities survive micro-batch boundaries") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    implicit val stEnc: Encoder[ArrivalState[SEv]] = ExpressionEncoder()
+    implicit val stEnc: Encoder[GroupCep.GArrivalState[SEv]] =
+      ExpressionEncoder()
     val p = Pattern.begin[SEv]("start")(_.name == "c")
       .followedByAny("middle")(_.name == "a")
       .followedBy("end1")(_.name == "b")
