@@ -40,8 +40,8 @@ import org.apache.spark.sql.types.LongType
   * alternation, and within. The SQL:2016 compositions — pattern-level
   * reluctant or greedy selection, ^/$ anchor gates (gate before
   * selection) and the after-match skip queue — all run through
-  * [[GroupCep.GroupRunEmitter]], the same object the library drivers
-  * run, so planned and library routes share one source of truth for the
+  * [[GroupCep.KeyRun]], the key-run driver the library routes step too,
+  * so planned and library routes share one source of truth for the
   * evaluation order.
   */
 object GroupCepPlan {
@@ -120,18 +120,22 @@ object GroupCepPlan {
     }
   }
 
-  /** Rebuild the GPattern from the skeleton (terminal negation already
-    * split off) with `pred(i)` as the i-th predicate — runs once per
+  /** Rebuild the GPattern from the skeleton with `pred(i)` as the i-th
+    * predicate, `within` and the selection modes applied — runs once per
     * partition with bound predicates, and once at plan time with
-    * placeholders to check the anchor contract. The pattern runs over
+    * placeholders, so GPattern's own rules (and [[GroupCep.KeyRun]]'s)
+    * reject a malformed pattern at the driver. The pattern runs over
     * ARRIVAL-TAGGED rows (row, per-key-run ordinal) — the SharedBuffer
     * EventId identity: events arrive key-sorted, so a local counter
-    * suffices. */
-  private def buildPattern(skel: Seq[Skel],
+    * suffices. Anchors force DEFERRED reluctant selection (every
+    * candidate of a start must reach the gates). */
+  private def buildPattern(skel: Seq[Skel], within: Option[Long],
+      reluctant: Boolean, sqlGreedy: Boolean, anchored: Boolean,
       pred: Int => ((InternalRow, Long)) => Boolean)
       : GPattern[(InternalRow, Long)] = {
     type T = (InternalRow, Long)
     def build(elems: Seq[Skel]): GPattern[T] = {
+      require(elems.nonEmpty, "empty pattern group")
       var p: GPattern[T] = null
       elems.foreach {
         case l: LeafSkel =>
@@ -155,7 +159,10 @@ object GroupCepPlan {
           if (g.untilIdx >= 0) p = p.until(pred(g.untilIdx))
         case n: NotSkel =>
           val f = pred(n.predIdx)
-          p = if (n.nextOnly) p.notNext(n.name)(f)
+          // a leading negation builds too: compile rejects it by name
+          p = if (p == null) GPattern.of(
+                Vector(GroupCep.GNot(n.name, f, n.nextOnly)), None)
+              else if (n.nextOnly) p.notNext(n.name)(f)
               else p.notFollowedBy(n.name)(f)
         case a: AltSkel =>
           val alts = a.branches.map(build)
@@ -166,7 +173,11 @@ object GroupCepPlan {
       }
       p
     }
-    build(skel)
+    var pat = build(skel)
+    within.foreach(w => pat = pat.within(w))
+    if (reluctant) pat = pat.reluctant
+    if (sqlGreedy) pat = pat.greedySelect
+    if (anchored && reluctant) pat.deferredReluctant else pat
   }
 
   /** Predicate indices whose match can be CAPTURED by a branch (leaf
@@ -179,9 +190,9 @@ object GroupCepPlan {
     case _: NotSkel => Seq.empty
   }.toSet
 
-  /** Physical operator: shared [[GroupCep.advance]] NFA over each sorted
-    * key run. Output: `key`, then per step its capture COUNT and every
-    * child column of the step's first captured event (null if none). */
+  /** Physical operator: a [[GroupCep.KeyRun]] over each sorted key run.
+    * Output: `key`, then per step its capture COUNT and every child
+    * column of the step's first captured event (null if none). */
   final case class GroupCepExec(
       keyExpr: Expression, tsExpr: Expression, tieExpr: Expression,
       skeleton: Seq[Skel], leafPreds: Seq[Expression],
@@ -238,19 +249,11 @@ object GroupCepPlan {
         val bound = preds.map { p =>
           val bp = Predicate.create(p, childOutput); bp.initialize(0); bp
         }.toIndexedSeq
-        var pat = buildPattern(skel, i => w => bound(i).eval(w._1))
-        within.foreach(w => pat = pat.within(w))
-        if (rel) pat = pat.reluctant
-        if (sqlG) pat = pat.greedySelect
-        // anchors need every candidate buffered to the end of the key
-        // run — force DEFERRED selection so advance's in-flight
-        // shortest-per-start kill stays off (the emitter gates first);
-        // greedy selection is already deferred
-        if ((aHead || aTail) && rel) pat = pat.deferredReluctant
         // rows are tagged with per-key arrival ordinals below — mark
         // the pattern so the dedup-skip fast path applies (see
         // Compiled.noEpsilonDup)
-        val compiled = GroupCep.compile(pat.withArrivalIdentity)
+        val compiled = GroupCep.compile(buildPattern(skel, within, rel, sqlG,
+          aHead || aTail, i => w => bound(i).eval(w._1)).withArrivalIdentity)
         val tsOf: ((InternalRow, Long)) => Long =
           w => tsEval.eval(w._1).asInstanceOf[Long]
         // only leaf-step matches can be captured; not/until guard rows
@@ -289,78 +292,32 @@ object GroupCepPlan {
               maxKeyBranches.add(v - repBranches); repBranches = v
             }
           private var done = false
-          // NFA driver generic over the capture representation: the
-          // exec's output is (count, first event) per step, which
-          // [[fillSteps]] reads straight off the run
+          // the key-run driver shared with the library routes (NFA,
+          // terminal-negation gate, anchor gates / resolver / skip queue),
+          // rebuilt at each key switch. The exec's output is (count, first
+          // event) per step, which [[fillSteps]] reads straight off the run
           // encoding — so under strict contiguity the span-compressed
-          // [[GroupCep.SpanCaps]] branches never materialize a
-          // per-event capture vector at all (O(#runs) per branch
-          // instead of O(match length); the round-12 greedy/deferred
-          // capture-churn fix, now on the planned route too).
-          private final class Runner[C](
-              ops: GroupCep.CapOps[(InternalRow, Long), C]) {
-            private var confs =
-              Vector.empty[GroupCep.Conf[(InternalRow, Long), C]]
-            private var emitter = newEmitter()
-            private def newEmitter() =
-              new GroupCep.GroupRunEmitter[(InternalRow, Long), C](
-                compiled, tsOf, skipStrat, aHead, aTail, tagOf = _._2, ops)
-            // terminal negation: completed matches wait at the SAME gate
-            // the library drivers run; only its verdicts reach the emitter
-            private var gate = GroupCep.negGate(compiled, tsOf, ops)
-            private def doEmit(m: C): Unit = {
-              numMatches.add(1); matchSeq += 1
-              if (aRows) emitAll(curKey, matchSeq, ops.runs(m), ops.runs(m))
-              else emit(curKey, matchSeq, ops.runs(m))
-            }
-            /** One event through the NFA + emission policy; returns the
-              * live branch count (hot-key metric). Under ^ only the run's
-              * first row may open a branch — no later start could pass
-              * the gate. With terminal negation the event first decides
-              * the pending gate entries (horizon, then ban), the NFA's
-              * new matches join the gate, and the confirmed ones go on
-              * to the emitter. */
-            def advanceRow(w: (InternalRow, Long), ts: Long): Int = {
-              val (next, matches) = GroupCep.advanceC(compiled, confs, w,
-                ts, canStart = !aHead || w._2 == 0L, ops)
-              val out =
-                if (gate == null) matches
-                else GroupCep.gateStep(gate, w, ts, matches)
-              confs = emitter.step(next, out, doEmit)
-              confs.size
-            }
-            /** End of key run: the gate's notFollowedBy entries confirm
-              * (no banned event can follow any more), anchored
-              * candidates gate + select, deferred resolver/skip-queue
-              * entries release. */
-            def flush(lastTag: Long): Unit = {
-              if (gate != null) {
-                val v = Vector.newBuilder[C]
-                gate.flushEnd(v += _)
-                confs = emitter.step(confs, v.result(), doEmit)
-              }
-              emitter.finish(lastTag, doEmit)
-            }
-            def reset(): Unit = {
-              confs = Vector.empty; emitter = newEmitter()
-              gate = GroupCep.negGate(compiled, tsOf, ops)
-            }
-          }
-          // per-key-run emission policy (anchor gates / reluctant
-          // resolver / skip queue) — ONE emitter shared with the
-          // library drivers, reset per key run. Arrival tags ARE run
-          // positions, so SpanOps needs no event buffer — and with
-          // run-walk emission (ALL ROWS included: the per-row output
-          // derives from slot runs alone), nothing ever calls eventAt.
-          private val runner: Runner[_] =
-            if (compiled.strictSpans)
-              new Runner(new GroupCep.SpanOps[(InternalRow, Long)](
-                _._2.toInt,
-                i => throw new IllegalStateException(
-                  s"GroupCepExec never materializes captures (pos $i)")))
-            else new Runner(GroupCep.vecOps[(InternalRow, Long)])
+          // [[GroupCep.SpanCaps]] branches never materialize a per-event
+          // capture vector (O(#runs) per branch instead of O(match
+          // length)). Arrival tags ARE run positions, so SpanOps needs no
+          // event buffer — and with run-walk emission (ALL ROWS included:
+          // the per-row output derives from slot runs alone), nothing
+          // ever calls eventAt.
+          private def keyRun[C](ops: GroupCep.CapOps[(InternalRow, Long), C]) =
+            new GroupCep.KeyRun[(InternalRow, Long), C](compiled, tsOf,
+              skipStrat, ops, _._2, aHead, aTail, { m =>
+                numMatches.add(1); matchSeq += 1
+                if (aRows) emitAll(curKey, matchSeq, ops.runs(m), ops.runs(m))
+                else emit(curKey, matchSeq, ops.runs(m))
+              })
+          private val spanOps =
+            if (!compiled.strictSpans) null
+            else new GroupCep.SpanOps[(InternalRow, Long)](_._2.toInt,
+              i => throw new IllegalStateException(
+                s"GroupCepExec never materializes captures (pos $i)"))
+          private var run: GroupCep.KeyRun[(InternalRow, Long), _] = null
           private def flushKey(): Unit =
-            if (haveKey) runner.flush(arrSeq - 1)
+            if (haveKey) run.end(arrSeq - 1)
 
           /** The per-match final block from offset `off`: per step its
             * capture count, then the child columns of its first captured
@@ -449,12 +406,13 @@ object GroupCepPlan {
                   val k = keyEval.eval(row)
                   if (!haveKey || !java.util.Objects.equals(k, curKey)) {
                     // a key switch flushes the finished run's deferred
-                    // emissions, then resets the branch set + emitter
+                    // emissions, then starts a fresh key run
                     flushKey()
                     arrSeq = 0L
                     keyEvents = 0L
                     matchSeq = 0L
-                    runner.reset()
+                    run = if (spanOps != null) keyRun(spanOps)
+                          else keyRun(GroupCep.vecOps[(InternalRow, Long)])
                     curKey = k match {
                       case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
                       case other => other
@@ -465,9 +423,8 @@ object GroupCepPlan {
                   arrSeq += 1
                   keyEvents += 1
                   bumpEvents(keyEvents)
-                  val nBranches =
-                    runner.advanceRow(w, tsVal.asInstanceOf[Long])
-                  bumpBranches(nBranches.toLong)
+                  run.event(w, tsVal.asInstanceOf[Long])
+                  bumpBranches(run.maxLive.toLong)
                 }
               }
             }
@@ -521,81 +478,6 @@ object GroupCepPlan {
       sqlGreedy: Boolean = false,
       allRows: Boolean = false): DataFrame = {
     require(elems.nonEmpty, "at least one pattern element")
-    require(!(sqlGreedy && reluctant),
-      "sqlGreedy excludes the pattern-level reluctant mode " +
-        "(per-quantifier polarity rides GGroupSpec.relMark)")
-    val terminalNot = elems.last match {
-      case n: GNotSpec => Some(n)
-      case _ => None
-    }
-    terminalNot.foreach { n =>
-      require(n.nextOnly || withinMicros.isDefined,
-        "NotFollowedBy is not supported as a last part of a Pattern! " +
-          "(without within)")
-      require(skip == Cep.NoSkip,
-        "terminal negation requires the default NoSkip strategy")
-      require(!reluctant && !sqlGreedy,
-        "terminal negation does not compose with a selection mode")
-      require(!anchorTail, "$ anchor cannot combine with terminal negation")
-    }
-    // mirror the selection modes' GPattern contracts at PLAN time (the
-    // executor-side build would only fail per task): >= 1 SEMANTIC
-    // quantified element; with several (or greedy selection), sibling-
-    // only nesting and strict contiguity — the ranking's preconditions
-    if (reluctant || sqlGreedy) {
-      def quantCount(es: Seq[GSpec]): Int = es.map {
-        case g: GGroupSpec =>
-          (if (g.min != g.max || g.max > 1 || g.optional) 1 else 0) +
-            quantCount(g.elems)
-        case a: GAltSpec => a.branches.map(quantCount).sum
-        case _ => 0
-      }.sum
-      def nested(es: Seq[GSpec]): Boolean = es.exists {
-        case g: GGroupSpec =>
-          val self = g.min != g.max || g.max > 1 || g.optional
-          (self && quantCount(g.elems) > 0) || nested(g.elems)
-        case a: GAltSpec => a.branches.exists(nested)
-        case _ => false
-      }
-      def allStrict(es: Seq[GSpec]): Boolean = es.zipWithIndex.forall {
-        case (g: GGroupSpec, i) =>
-          (i == 0 || g.strict) &&
-            (g.max <= 1 || g.consecutive) && allStrict(g.elems)
-        case (l: GLeafSpec, i) => i == 0 || l.strict
-        case (a: GAltSpec, i) =>
-          (i == 0 || a.strict) && a.branches.forall(allStrict)
-        case _ => true
-      }
-      val n = quantCount(elems)
-      require(n >= 1, (if (sqlGreedy) "a greedy-select"
-        else "a reluctant") + " pattern needs at least one quantified " +
-        "element (fixed {n} counts and plain variables carry no " +
-        "selection choice)")
-      if (n > 1 || sqlGreedy) {
-        require(!nested(elems),
-          "selection-mode quantifiers must be sibling elements")
-        require(allStrict(elems),
-          "selection modes require strict contiguity " +
-            "(strict/consecutive) throughout the pattern")
-      }
-    }
-    // The head/last negation rules hold RECURSIVELY: a nested group whose
-    // elems end in a GNotSpec would have its pending negation silently
-    // dropped by buildSeq — the reference instead throws
-    // MalformedPatternException (Pattern.java notFollowedBy-terminal).
-    def validateSeq(es: Seq[GSpec]): Unit = {
-      require(es.nonEmpty, "empty pattern group")
-      require(!es.head.isInstanceOf[GNotSpec],
-        "a pattern (or group) cannot begin with notFollowedBy/notNext")
-      require(!es.last.isInstanceOf[GNotSpec],
-        "notFollowedBy/notNext must be followed by another pattern element")
-      es.foreach {
-        case g: GGroupSpec => validateSeq(g.elems)
-        case a: GAltSpec => a.branches.foreach(validateSeq)
-        case _ => ()
-      }
-    }
-    validateSeq(if (terminalNot.isDefined) elems.init else elems)
     val spark = df.sparkSession
     register(spark)
     val child = GraftSqlShim.analyzed(df)
@@ -627,19 +509,23 @@ object GroupCepPlan {
         NotSkel(n.name, nPreds - 1, n.nextOnly)
     }
     val skeleton = elems.map(skeletonOf)
-    if ((anchorHead || anchorTail) && !reluctant && !sqlGreedy) {
-      // work the contract out from the compiled pattern (placeholder
-      // predicates): without a selection mode to choose, a start must
-      // not be able to complete two candidates
-      val placeholder = buildPattern(skeleton, _ => _ => false)
-      val compiled = GroupCep.compile(
-        withinMicros.fold(placeholder)(placeholder.within))
-      require(compiled.oneCandidatePerStart,
+    // validate at PLAN time on a placeholder build (the executor-side
+    // build would only fail per task): GPattern's rules (quantifier
+    // count, nesting and contiguity under a selection mode, negation
+    // placement, terminal negation against within and the selection
+    // modes) and the key-run driver's (terminal negation against skip
+    // and the $ anchor)
+    val placeholder = GroupCep.compile(buildPattern(skeleton, withinMicros,
+      reluctant, sqlGreedy, anchorHead || anchorTail, _ => _ => false))
+    GroupCep.KeyRun.check(placeholder, skip, anchorTail)
+    // without a selection mode to choose, an anchored start must not be
+    // able to complete two candidates
+    if ((anchorHead || anchorTail) && !reluctant && !sqlGreedy)
+      require(placeholder.oneCandidatePerStart,
         "planned ^/$ anchors require a selection mode (reluctant or " +
           "sqlGreedy) unless every start completes at most one " +
           "candidate (no quantified element, alternation or " +
           "followedByAny)")
-    }
     // negative elements capture nothing: they contribute no output slots
     def leafNames(e: GSpec): Seq[String] = e match {
       case l: GLeafSpec => Seq(l.name)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** Complex-event-processing subset: the reference's CEP pattern DSL
   * (flink-cep Pattern.java:123-474 — begin/next/followedBy/where/within,
@@ -410,23 +410,6 @@ object Cep {
     sc.register(maxPartials, s"$name.maxPartials")
   }
 
-  /** The keyed-state driver every streaming entry point shares: state
-    * crosses micro-batches as a version-tagged [[CepStateEnvelope]];
-    * `within` patterns ride event-time timers. */
-  private def streamDriver[K, E, O: Encoder](ds: Dataset[E], key: E => K,
-      pattern: Pattern[E],
-      fn: (K, Iterator[E], GroupState[GroupCep.GArrivalState[E]]) =>
-        Iterator[O])(implicit ke: Encoder[K]): Dataset[O] = {
-    val timeoutConf =
-      if (pattern.withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    implicit val senc: Encoder[CepStateEnvelope] = CepStateCodec.envelopeEncoder
-    ds.groupByKey(key).flatMapGroupsWithState[CepStateEnvelope, O](
-      OutputMode.Append(), timeoutConf)(
-      CepStateCodec.versionedFn("GroupCep.GArrivalState",
-        CepStateCodec.GroupVersion, fn))
-  }
-
   /** Run a pattern over a streaming Dataset: partials persist in keyed
     * state across micro-batches ([[GroupCep.GArrivalState]], whose
     * per-key arrival counter keeps value-identical events distinct
@@ -444,7 +427,7 @@ object Cep {
       tie: E => Long = (_: E) => 0L)(
       finish: (K, Map[String, E]) => O)(
       implicit ke: Encoder[K]): Dataset[O] =
-    streamDriver(ds, key, pattern,
+    GroupCep.streamDriver(ds, key, pattern.withinMs,
       matchStreamFn(pattern, ts, skip, tie, finish))
 
   /** [[matchStream]] plus the reference's TIMED-OUT-partials channel
@@ -476,7 +459,7 @@ object Cep {
       finish: (K, Map[String, E]) => O)(
       onTimeout: (K, Map[String, Seq[E]], Long) => O)(
       implicit ke: Encoder[K]): Dataset[O] =
-    streamDriver(ds, key, pattern,
+    GroupCep.streamDriver(ds, key, pattern.withinMs,
       matchStreamWithTimeoutsFn(pattern, ts, skip, tie, finish, onTimeout))
 
   /** The state-transition function behind [[matchStreamWithTimeouts]]. */
@@ -514,7 +497,7 @@ object Cep {
       stats: HotKeyStats = null)(
       finish: (K, Map[String, Seq[E]]) => O)(
       implicit ke: Encoder[K]): Dataset[O] =
-    streamDriver(ds, key, pattern,
+    GroupCep.streamDriver(ds, key, pattern.withinMs,
       matchStreamGroupsFn(pattern, ts, skip, tie, finish, stats))
 
   /** The per-key state-transition function behind [[matchStreamGroups]]
@@ -543,9 +526,9 @@ object Cep {
     *    horizon passing emits. Batch end-of-input emits all pending.
     *
     * Generic over the pending-match representation `M` (`startOf` reads
-    * an entry's window start): the library drivers hold [[GroupCep]]
-    * capture vectors (persisted in streaming state), the planned
-    * [[graft.plans.GroupCepPlan.GroupCepExec]] its run-encoded captures. */
+    * an entry's window start): [[GroupCep.KeyRun]] holds it for every
+    * route, over exact capture vectors (persisted in streaming state) or
+    * the planned exec's run-encoded captures. */
   final class NegGate[E, M](ban: E => Boolean, nextOnly: Boolean,
       withinMs: Option[Long], startOf: M => Long) {
     private var pending = Vector.empty[M]

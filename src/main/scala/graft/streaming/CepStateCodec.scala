@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.GroupState
 
 /** Versioned envelope for the CEP streaming keyed state.
   *
-  * The CEP drivers' state ([[GroupCep.GStreamState]],
+  * The CEP drivers' state (today the one flat row
   * [[GroupCep.GArrivalState]]) used to cross micro-batches as one opaque
   * kryo binary column. That format has no runtime-detectable marker: a
   * layout change surfaces as a raw KryoException deep in the state store,
@@ -50,8 +50,10 @@ object CepStateCodec {
     * GArrivalState; 5 — the retired linear engine's Cep.ArrivalState,
     * never reused; 6 — every DSL stream persists GArrivalState, whose
     * GStreamState gains the terminal-negation gate (`gated`) and whose
-    * branches carry a greedy-guard kind. */
-  val GroupVersion = 6    // GroupCep.GArrivalState / GStreamState
+    * branches carry a greedy-guard kind; 7 — one flat GArrivalState row
+    * (GStreamState's fields inlined), the match ordinal persisted only
+    * for numbered streams. */
+  val GroupVersion = 7    // GroupCep.GArrivalState
 
   /** The envelope's product encoder — a stable (int, binary) row, never
     * the kryo-opaque single column. */

@@ -38,8 +38,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    before that element takes); `notNext` stops only while the branch
   *    has not yet ignored an event (NFACompiler.createMiddleStates);
   *  - a top-level trailing `notFollowedBy`/`notNext` is TERMINAL
-  *    negation: completed matches wait at a [[Cep.NegGate]] in the
-  *    library drivers (notNext: the next event decides; notFollowedBy
+  *    negation: completed matches wait at a [[Cep.NegGate]] in
+  *    [[KeyRun]] (notNext: the next event decides; notFollowedBy
   *    needs `within` and emits at the window horizon).
   */
 object GroupCep {
@@ -618,7 +618,7 @@ object GroupCep {
     }
 
     /** Terminal negation (a trailing top-level notFollowedBy/notNext):
-      * the library drivers hold completed matches at a [[Cep.NegGate]]. */
+      * [[KeyRun]] holds completed matches at a [[Cep.NegGate]]. */
     private[graft] val terminalNot: Option[GNot[E]] = pattern.terminalNot
     private val realRoot: GNode = {
       val children = buildSeq(
@@ -1028,9 +1028,9 @@ object GroupCep {
       captured: C, startTs: Long, fresh: Boolean,
       guard: Int = -1, guardKind: Int = GuardRef, stops: Long = 0L)
 
-  /** The exact-capture branch type the streaming drivers persist in
-    * keyed state (field-for-field the pre-round-12 GConf, so derived
-    * state encoders keep their layout). */
+  /** The exact-capture branch type the streaming state function
+    * persists in keyed state (field-for-field the pre-round-12 GConf, so
+    * derived state encoders keep their layout). */
   type GConf[E] = Conf[E, Vector[(Int, E)]]
 
   /** One run of a range-compressed capture sequence: `count` consecutive
@@ -1177,17 +1177,18 @@ object GroupCep {
       }
   }
 
-  /** One NFA transition over all live branches. Pure; shared by the batch
-    * and streaming drivers. Returns surviving branches and completed
-    * matches as (slotIdx, event) capture lists in match order. */
+  /** One NFA transition over all live branches (test seam; every driver
+    * steps [[advanceC]] through [[KeyRun]]). Pure. Returns surviving
+    * branches and completed matches as (slotIdx, event) capture lists
+    * in match order. */
   def advance[E](c: Compiled[E], confs: Vector[GConf[E]], e: E,
       ts: Long, canStart: Boolean = true)
       : (Vector[GConf[E]], Vector[Vector[(Int, E)]]) =
     advanceC(c, confs, e, ts, canStart, vecOps[E])
 
   /** [[advance]] generic over the capture representation `C` — the one
-    * NFA every driver (batch vector, batch span-compressed, streaming,
-    * planned exec) steps through. */
+    * NFA transition, stepped by [[KeyRun]] for every driver (batch
+    * vector, batch span-compressed, streaming, planned exec). */
   private[graft] def advanceC[E, C](c: Compiled[E], confs: Vector[Conf[E, C]],
       e: E, ts: Long, canStart: Boolean, ops: CapOps[E, C])
       : (Vector[Conf[E, C]], Vector[C]) = {
@@ -1462,7 +1463,7 @@ object GroupCep {
     * start only when no open branch sharing it remains — at which point
     * the buffered candidate is THE SQL:2016-preferred match. Pending
     * candidates serialize as plain capture vectors, so the streaming
-    * driver carries them in [[GStreamState.pending]] across
+    * driver carries them in [[GArrivalState.pendingSel]] across
     * micro-batches exactly like skip-deferred matches. */
   private final class ReluctantResolver[E, C](c: Compiled[E], ts: E => Long,
       ops: CapOps[E, C]) {
@@ -1595,32 +1596,28 @@ object GroupCep {
     new GPattern(p.elems.map(liftElem[E]), p.withinMs, p.reluctantSel,
       p.deferSel, p.greedySel, arrivalTagged = true)
 
-  /** Per-key-run emission policy unifying the batch drivers and the
-    * PLANNED [[graft.plans.GroupCepPlan.GroupCepExec]] operator — ONE
-    * source of truth for the SQL:2016 evaluation order (anchor-gate,
-    * then preference-select, then after-match skip):
-    *  - anchors set ⇒ every candidate buffers to the end of the key run
-    *    (the first completion per start may fail an anchor a longer
-    *    candidate passes), then the gates filter on arrival tags, the
+  /** Per-key-run emission policy, owned by [[KeyRun]] — ONE source of
+    * truth for the SQL:2016 evaluation order (anchor-gate, then
+    * preference-select, then after-match skip):
+    *  - the $ anchor ⇒ every candidate buffers to the end of the key run
+    *    (the first completion per start may fail the gate a longer
+    *    candidate passes), then the gate filters on arrival tags, the
     *    most-preferred gate-passing candidate per start wins, and
     *    emission is start-ordered — requires the pattern compiled with
     *    [[GPattern.deferredReluctant]] so [[advance]]'s in-flight
     *    shortest-per-start kill stays off (greedy selection always
     *    defers; a [[Compiled.oneCandidatePerStart]] pattern has nothing
-    *    to select);
-    *  - deferred reluctant (alternation) ⇒ [[ReluctantResolver]];
+    *    to select). The ^ anchor needs no buffering: [[KeyRun]] lets
+    *    only the run's arrival-0 event open a branch;
+    *  - deferred selection ⇒ [[ReluctantResolver]];
     *  - non-default skip ⇒ [[GroupSkipQueue]] (composing with the
     *    resolver when both apply);
     *  - otherwise matches emit as [[advance]] produces them.
-    * `tagOf` supplies the arrival ordinal consulted by the anchor
-    * gates. Call [[step]] after each advance (it returns the possibly
-    * skip-pruned branch set) and [[finish]] once at end of the run. */
-  private[graft] final class GroupRunEmitter[E, C](
+    * `tagOf` supplies the arrival ordinal consulted by the $ gate. */
+  private final class GroupRunEmitter[E, C](
       c: Compiled[E], ts: E => Long, skip: Cep.AfterMatchSkip,
-      anchorHead: Boolean, anchorTail: Boolean, tagOf: E => Long,
-      ops: CapOps[E, C]) {
-    private val anchored = anchorHead || anchorTail
-    if (anchored) {
+      anchorTail: Boolean, tagOf: E => Long, ops: CapOps[E, C]) {
+    if (anchorTail) {
       require((c.reluctantSel && c.reluctantDeferred) || c.greedySel ||
         c.oneCandidatePerStart,
         "anchor gates need DEFERRED selection (compile a reluctant " +
@@ -1629,80 +1626,88 @@ object GroupCep {
           "start — the gate-then-select order cannot run on " +
           "in-flight-killed candidates")
     }
-    // anchored: per start, the most-preferred candidate STILL able to
-    // pass the gates — O(starts) memory, not O(candidates). The ^ gate
-    // is decidable at completion (head tag 0: filter at add). The $
-    // gate folds VERSIONED by each candidate's last captured tag:
-    // events arrive in tag order, so a newly completed candidate ends
-    // at-or-after every buffered one, and a buffered candidate ending
-    // EARLIER is already dead (the run now provably extends past it) —
-    // replace it; equal ends compete on [[preferC]]. Equivalent to
-    // buffering every candidate and gate-then-select at run end, which
-    // is what O(views x errors) per key would have cost at 100x scale.
+    // $: per start, the most-preferred candidate STILL able to pass the
+    // gate — O(starts) memory, not O(candidates). The gate folds
+    // VERSIONED by each candidate's last captured tag: events arrive in
+    // tag order, so a newly completed candidate ends at-or-after every
+    // buffered one, and a buffered candidate ending EARLIER is already
+    // dead (the run now provably extends past it) — replace it; equal
+    // ends compete on [[preferC]]. Equivalent to buffering every
+    // candidate and gate-then-select at run end, which is what
+    // O(views x errors) per key would have cost at 100x scale.
     private val aBest =
-      if (anchored) scala.collection.mutable.LinkedHashMap
+      if (anchorTail) scala.collection.mutable.LinkedHashMap
         .empty[E, (Long, C)]
       else null
-    // $ gate: the newest last tag held — every candidate completing on
-    // one event shares that event's tag, so a newer tag proves every
+    // the newest last tag held — every candidate completing on one
+    // event shares that event's tag, so a newer tag proves every
     // buffered candidate dead (O(candidates per event), not O(matches))
     private var aBestLt = -1L
     private val rr =
-      if (!anchored && c.selDeferred) new ReluctantResolver[E, C](c, ts, ops)
+      if (!anchorTail && c.selDeferred) new ReluctantResolver[E, C](c, ts, ops)
       else null
-    // round 11: anchors × skip composes — the SQL:2016 evaluation
-    // order is gate, then select, then skip, so under anchors the
-    // queue only runs at [[finish]], over the gate-passing selected
-    // candidates (no live branch can block: the run has ended)
+    // anchors × skip composes — the SQL:2016 evaluation order is gate,
+    // then select, then skip, so under $ the queue only runs at
+    // [[finish]], over the gate-passing selected candidates (no live
+    // branch can block: the run has ended)
     private val sq =
       if (skip != Cep.NoSkip) new GroupSkipQueue[E, C](skip, c, ts, ops, rr)
       else null
 
+    /** Matches the skip queue and the resolver still defer. */
+    def queued: Vector[C] = if (sq == null) Vector.empty else sq.toPending
+    def selecting: Vector[C] = if (rr == null) Vector.empty else rr.toPending
+    def restore(queued: Vector[C], selecting: Vector[C]): Unit = {
+      if (sq != null) sq.restore(queued)
+      if (rr != null) rr.restore(selecting)
+    }
+
+    /** After each advance: takes its completions `ms`, returns the
+      * possibly skip-pruned branch set. */
     def step(confs: Vector[Conf[E, C]], ms: Vector[C],
         emit: C => Unit): Vector[Conf[E, C]] =
-      if (anchored) {
+      if (anchorTail) {
         ms.foreach { m =>
-          if (!anchorHead || tagOf(ops.head(m)) == 0L) {
-            val s0 = ops.head(m)
-            if (anchorTail) {
-              val lt = tagOf(ops.last(m))
-              if (lt > aBestLt) { aBest.clear(); aBestLt = lt }
-              aBest.get(s0) match {
-                case Some((plt, p)) if plt == lt =>
-                  aBest(s0) = (lt, preferC(c, p, m, ops))
-                case Some((plt, _)) if plt > lt => () // defensive: tag order
-                case _ => aBest(s0) = (lt, m)
-              }
-            } else aBest(s0) = (0L,
-              aBest.get(s0).map(p => preferC(c, p._2, m, ops)).getOrElse(m))
+          val s0 = ops.head(m)
+          val lt = tagOf(ops.last(m))
+          if (lt > aBestLt) { aBest.clear(); aBestLt = lt }
+          aBest.get(s0) match {
+            case Some((plt, p)) if plt == lt =>
+              aBest(s0) = (lt, preferC(c, p, m, ops))
+            case Some((plt, _)) if plt > lt => () // defensive: tag order
+            case _ => aBest(s0) = (lt, m)
           }
         }
         confs
       }
-      else if (rr != null && sq != null) {
+      else if (rr != null) {
         rr.add(ms)
         // domination can only change when a fold just ran — skipping
         // the scan on quiet events keeps its cost proportional to
         // completions, not to run length (missing a prune is only a
         // perf, never a correctness, matter)
         val live = if (ms.isEmpty) confs else rr.pruneDominated(confs)
-        rr.drain(live, m => sq.add(Vector(m)))
-        sq.drain(live, emit)
-      } else if (rr != null) {
-        rr.add(ms)
-        val live = if (ms.isEmpty) confs else rr.pruneDominated(confs)
-        rr.drain(live, emit)
-        live
+        rr.drain(live, m => if (sq != null) sq.add(Vector(m)) else emit(m))
+        if (sq != null) sq.drain(live, emit) else live
       }
       else if (sq == null) { ms.foreach(emit); confs }
       else { sq.add(ms); sq.drain(confs, emit) }
 
+    /** A micro-batch boundary: prune dominated branches once (the
+      * per-event prune is gated on completions; a branch can first
+      * diverge-and-lose on a quiet event under relaxed contiguity), so a
+      * decided start's release never waits past the current batch. */
+    def settle(confs: Vector[Conf[E, C]],
+        emit: C => Unit): Vector[Conf[E, C]] =
+      step(if (rr == null) confs else rr.pruneDominated(confs),
+        Vector.empty, emit)
+
     /** End of the key run; `lastTag` = the run's highest arrival tag
       * (only consulted by the $ gate). */
     def finish(lastTag: Long, emit: C => Unit): Unit =
-      if (anchored) {
+      if (anchorTail) {
         val selected = aBest.iterator.collect {
-          case (_, (lt, m)) if !anchorTail || lt == lastTag => m
+          case (_, (lt, m)) if lt == lastTag => m
         }.toVector
           .sortBy(m => (ts(ops.head(m)), tagOf(ops.head(m))))
         if (sq == null) selected.foreach(emit)
@@ -1721,73 +1726,142 @@ object GroupCep {
       }
   }
 
-  /** Terminal negation and after-match skipping do not compose (the
-    * planned operator's rule): a named rejection at the driver call. */
-  private def requireSkipFor(c: Compiled[_], skip: Cep.AfterMatchSkip): Unit =
-    require(c.terminalNot.isEmpty || skip == Cep.NoSkip,
-      "terminal negation requires the default NoSkip strategy")
+  /** One key's run through the NFA — the one driver loop behind every CEP
+    * consumer, as the reference runs every caller through one NFA over
+    * one per-key NFAState (NFA.java process / advanceTime): the library
+    * batch driver steps it over each sorted key run, the planned
+    * [[graft.plans.GroupCepPlan.GroupCepExec]] over each key run of its
+    * sorted partition, and the streaming state function
+    * ([[matchStreamArrivalFn]]) over each micro-batch, saving and
+    * restoring its entries in [[GArrivalState]]. Generic over the
+    * capture representation `C` (see [[CapOps]]).
+    *
+    * It owns the live branches, the terminal-negation gate (completed
+    * matches of a pattern ending in notFollowedBy/notNext wait at a
+    * [[Cep.NegGate]]), the [[GroupRunEmitter]], the ^ start rule (only
+    * the key's arrival-0 event may open a branch, so every candidate is
+    * head-anchored by construction) and `within` expiry with the
+    * timed-out channel (`onTimeout`: an expired partial match, or a
+    * notNext gate entry whose window passed, with the expiry time).
+    *
+    * `event` feeds one event at its time; `time` advances event time
+    * without an event (a watermark); `endOfBatch` settles deferred
+    * emission at a micro-batch boundary; `end` closes a bounded run
+    * (`lastTag` = its highest arrival tag, for the $ gate). */
+  private[graft] final class KeyRun[E, C](c: Compiled[E], ts: E => Long,
+      skip: Cep.AfterMatchSkip, ops: CapOps[E, C], tagOf: E => Long,
+      anchorHead: Boolean, anchorTail: Boolean, emit: C => Unit,
+      onTimeout: (C, Long) => Unit = null) {
+    KeyRun.check(c, skip, anchorTail)
+    private var confs = Vector.empty[Conf[E, C]]
+    private val em = new GroupRunEmitter[E, C](c, ts, skip, anchorTail,
+      tagOf, ops)
+    private val gate = c.terminalNot.map(n => new Cep.NegGate[E, C](n.pred,
+      n.nextOnly, c.withinMs, (m: C) => ts(ops.head(m)))).orNull
+    private val expired: (C, Long) => Unit =
+      if (onTimeout == null) (_, _) => () else onTimeout
+    private var peak = 0
 
-  /** The terminal-negation gate for a run, or null. */
-  private[graft] def negGate[E, C](c: Compiled[E], ts: E => Long,
-      ops: CapOps[E, C]): Cep.NegGate[E, C] =
-    c.terminalNot.map(n => new Cep.NegGate[E, C](n.pred, n.nextOnly,
-      c.withinMs, (m: C) => ts(ops.head(m)))).orNull
-
-  /** Event `e` at `t` decides the gate's pending entries (horizon, then
-    * ban) before this event's own completions `ms` join it; returns the
-    * confirmed matches. */
-  private[graft] def gateStep[E, C](g: Cep.NegGate[E, C], e: E, t: Long,
-      ms: Vector[C]): Vector[C] =
-    if (g.isEmpty) { g.add(ms); Vector.empty }
-    else {
-      val v = Vector.newBuilder[C]
-      g.onTime(t, v += _, (_, _) => ())
-      g.onEvent(e, v += _)
-      g.add(ms)
-      v.result()
+    def event(e: E, t: Long): Unit = {
+      if (gate != null || onTimeout != null) time(t)
+      val (next, ms) = advanceC(c, confs, e, t,
+        canStart = !anchorHead || tagOf(e) == 0L, ops)
+      if (next.size > peak) peak = next.size
+      // the event decides every pending gate entry before its own
+      // completions join the gate
+      val out = if (gate == null) ms
+                else { gate.onEvent(e, emit); gate.add(ms); Vector.empty }
+      confs = em.step(next, out, emit)
     }
 
-  /** One key's bounded scan: the shared NFA, the terminal-negation gate
-    * and the after-match emission policy — generic over the capture
-    * representation (the span-compressed path is picked by callers when
-    * [[Compiled.strictSpans]]). Returns the outputs and the branches
-    * still open at the end of the run. */
-  private def runKeyCore[K, E2, O, C](k: K, events: Vector[E2],
-      ts: E2 => Long, compiled: Compiled[E2], skip: Cep.AfterMatchSkip,
-      finish: (K, Map[String, Seq[E2]]) => O,
-      stats: Cep.HotKeyStats, ops: CapOps[E2, C])
-      : (Vector[O], Vector[Conf[E2, C]]) = {
-    var confs = Vector.empty[Conf[E2, C]]
+    /** Event time reaches `t`: the gate decides entries whose horizon
+      * passed, and expired branches die — surfacing on the timeout
+      * channel once per distinct capture (a loop's stay and exit
+      * branches are one partial match). */
+    def time(t: Long): Unit = c.withinMs.foreach { w =>
+      if (gate != null) gate.onTime(t, emit, expired)
+      if (!confs.forall(p => t - p.startTs < w)) {
+        val (dead, live) = confs.partition(p => t - p.startTs >= w)
+        confs = live
+        if (onTimeout != null)
+          dedupBy(dead.map(_.captured))(ops.length).foreach(onTimeout(_, t))
+      }
+    }
+
+    def endOfBatch(): Unit = confs = em.settle(confs, emit)
+
+    /** End of a bounded run: no banned event can follow any more
+      * (notFollowedBy entries confirm) and no live branch blocks
+      * emission. */
+    def end(lastTag: Long): Unit = {
+      if (gate != null) gate.flushEnd(emit)
+      em.finish(lastTag, emit)
+    }
+
+    /** Peak live branches after an advance (hot-key diagnostics). */
+    def maxLive: Int = peak
+    def branches: Vector[Conf[E, C]] = confs
+    def queued: Vector[C] = em.queued
+    def selecting: Vector[C] = em.selecting
+    def gated: Vector[C] = if (gate == null) Vector.empty else gate.toState
+    /** Resume from saved entries (streaming state). */
+    def restore(branches: Vector[Conf[E, C]], queued: Vector[C],
+        selecting: Vector[C], gated: Vector[C]): Unit = {
+      confs = branches
+      em.restore(queued, selecting)
+      if (gate != null) gate.add(gated)
+    }
+  }
+
+  private[graft] object KeyRun {
+    /** The driver-level rules a pattern must meet: terminal negation
+      * holds matches outside the skip queue and waits past the match's
+      * last row, so it composes with neither a non-default skip nor the
+      * $ anchor (which demands that row be the run's last). */
+    def check(c: Compiled[_], skip: Cep.AfterMatchSkip,
+        anchorTail: Boolean): Unit = {
+      require(c.terminalNot.isEmpty || skip == Cep.NoSkip,
+        "terminal negation requires the default NoSkip strategy")
+      require(c.terminalNot.isEmpty || !anchorTail,
+        "$ anchor cannot combine with terminal negation")
+    }
+  }
+
+  /** One arrival-tagged key run through [[KeyRun]] (events sorted, tags
+    * = run positions); returns the outputs and the branches still open
+    * at the end of the run. */
+  private def runKeyCore[K, E, O, C](k: K, events: Vector[(E, Long)],
+      ts: ((E, Long)) => Long, compiled: Compiled[(E, Long)],
+      skip: Cep.AfterMatchSkip, anchorHead: Boolean, anchorTail: Boolean,
+      finish: (K, Map[String, Seq[E]]) => O, stats: Cep.HotKeyStats,
+      ops: CapOps[(E, Long), C]): (Vector[O], Vector[Conf[(E, Long), C]]) = {
     val outs = Vector.newBuilder[O]
-    // reluctant + non-default skip composes since round 10; the emitter
-    // owns the resolver/skip-queue interplay (see [[GroupRunEmitter]])
-    val em = new GroupRunEmitter[E2, C](compiled, ts, skip,
-      anchorHead = false, anchorTail = false, tagOf = _ => 0L, ops)
-    val gate = negGate(compiled, ts, ops)
-    def emitOut(m: C): Unit =
-      outs += finish(k, toGroups(compiled, ops.toVector(m)))
-    var maxConfs = 0
-    events.foreach { e =>
-      val t = ts(e)
-      val (next, ms) = advanceC(compiled, confs, e, t, canStart = true, ops)
-      if (stats != null && next.size > maxConfs) maxConfs = next.size
-      confs = em.step(next, if (gate == null) ms else gateStep(gate, e, t, ms),
-        emitOut)
-    }
-    // end of input: no banned event can follow any more (notFollowedBy
-    // entries confirm) and no live branch blocks emission
-    if (gate != null) {
-      val v = Vector.newBuilder[C]
-      gate.flushEnd(v += _)
-      confs = em.step(confs, v.result(), emitOut)
-    }
-    em.finish(events.size.toLong - 1, emitOut)
+    val run = new KeyRun[(E, Long), C](compiled, ts, skip, ops, _._2,
+      anchorHead, anchorTail,
+      m => outs += finish(k, unliftGroups(toGroups(compiled, ops.toVector(m)))))
+    events.foreach(w => run.event(w, ts(w)))
+    run.end(events.size.toLong - 1)
     if (stats != null) {
       stats.maxKeyEvents.add(events.size.toLong)
-      stats.maxPartials.add(maxConfs.toLong)
+      stats.maxPartials.add(run.maxLive.toLong)
     }
-    (outs.result(), confs)
+    (outs.result(), run.branches)
   }
+
+  /** [[runKeyCore]] in the cheapest exact representation: strict
+    * contiguity ⇒ range-compressed [[SpanCaps]] captures (O(#runs) per
+    * branch instead of O(match length)), else the exact vector. */
+  private def runKey[K, E, O](k: K, events: Vector[(E, Long)],
+      ts: ((E, Long)) => Long, compiled: Compiled[(E, Long)],
+      skip: Cep.AfterMatchSkip, anchorHead: Boolean, anchorTail: Boolean,
+      finish: (K, Map[String, Seq[E]]) => O,
+      stats: Cep.HotKeyStats): Vector[O] =
+    if (compiled.strictSpans)
+      runKeyCore(k, events, ts, compiled, skip, anchorHead, anchorTail,
+        finish, stats, spanOpsFor(events))._1
+    else
+      runKeyCore(k, events, ts, compiled, skip, anchorHead, anchorTail,
+        finish, stats, vecOps[(E, Long)])._1
 
   /** Test seam behind `Cep.runMatches`: the batch driver's run of one
     * key over pre-timestamped events (ties keep input order — the
@@ -1796,22 +1870,14 @@ object GroupCep {
   private[graft] def runKeyTimed[E](events: Seq[(E, Long)],
       pattern: GPattern[E], skip: Cep.AfterMatchSkip)
       : (Vector[Map[String, Seq[E]]], Vector[GConf[(E, Long)]]) = {
-    val compiled = compile(liftG(pattern))
-    requireSkipFor(compiled, skip)
     val tsArr = events.map(_._2).toArray
     val wrapped = events.indices.map(i => (events(i)._1, i.toLong)).toVector
       .sortBy(w => (tsArr(w._2.toInt), w._2))
-    runKeyCore[Unit, (E, Long), Map[String, Seq[E]], Vector[(Int, (E, Long))]](
-      (), wrapped, w => tsArr(w._2.toInt), compiled, skip,
-      (_, groups) => unliftGroups(groups), null, vecOps[(E, Long)])
+    runKeyCore[Unit, E, Map[String, Seq[E]], Vector[(Int, (E, Long))]](
+      (), wrapped, w => tsArr(w._2.toInt), compile(liftG(pattern)), skip,
+      anchorHead = false, anchorTail = false, (_, groups) => groups, null,
+      vecOps[(E, Long)])
   }
-
-  /** [[runKeyCore]] with the exact-vector representation. */
-  private def runKeyBatch[K, E2, O](k: K, events: Vector[E2],
-      ts: E2 => Long, compiled: Compiled[E2], skip: Cep.AfterMatchSkip,
-      finish: (K, Map[String, Seq[E2]]) => O,
-      stats: Cep.HotKeyStats = null): Vector[O] =
-    runKeyCore(k, events, ts, compiled, skip, finish, stats, vecOps[E2])._1
 
   /** Span ops over an arrival-tagged key run: positions ARE the tags
     * (the drivers zipWithIndex), so materialization indexes the run. */
@@ -1819,18 +1885,18 @@ object GroupCep {
       : CapOps[(E, Long), SpanCaps[(E, Long)]] =
     new SpanOps[(E, Long)](_._2.toInt, i => events(i))
 
-  /** Test seam: ONE key run under an EXPLICIT capture representation.
-    * The representation choice is a pure optimization — the vec-vs-span
-    * equivalence property (PropertySpec) drives random strict patterns
-    * through both and asserts identical match sequences, which the
-    * drivers' automatic `strictSpans` routing is not directly testable
-    * for (they pick one representation). */
   /** Test seam: whether the lifted form of `pattern` takes the
     * [[Compiled.noEpsilonDup]] dedup skip — the differential property
     * asserts its patterns actually exercise the skip. */
   private[graft] def noEpsilonDupForTest[E](pattern: GPattern[E]): Boolean =
     compile(liftG(pattern)).noEpsilonDup
 
+  /** Test seam: ONE key run under an EXPLICIT capture representation.
+    * The representation choice is a pure optimization — the vec-vs-span
+    * equivalence property (PropertySpec) drives random strict patterns
+    * through both and asserts identical match sequences, which the
+    * drivers' automatic `strictSpans` routing is not directly testable
+    * for (they pick one representation). */
   private[graft] def runKeyRepForTest[E](events: Vector[E], ts: E => Long,
       pattern: GPattern[E], skip: Cep.AfterMatchSkip, useSpans: Boolean,
       forceDedup: Boolean = false): Vector[Map[String, Seq[E]]] = {
@@ -1839,86 +1905,34 @@ object GroupCep {
     require(!useSpans || compiled.strictSpans,
       "span representation requires an all-strict pattern")
     val wrapped = events.zipWithIndex.map { case (e, i) => (e, i.toLong) }
-    val fin = (_: Unit, g: Map[String, Seq[(E, Long)]]) => unliftGroups(g)
+    val fin = (_: Unit, g: Map[String, Seq[E]]) => g
     if (useSpans)
-      runKeyCore[Unit, (E, Long), Map[String, Seq[E]], SpanCaps[(E, Long)]](
-        (), wrapped, w => ts(w._1), compiled, skip, fin, null,
-        spanOpsFor(wrapped))._1
+      runKeyCore((), wrapped, (w: (E, Long)) => ts(w._1), compiled, skip,
+        false, false, fin, null, spanOpsFor(wrapped))._1
     else
-      runKeyCore[Unit, (E, Long), Map[String, Seq[E]],
-        Vector[(Int, (E, Long))]](
-        (), wrapped, w => ts(w._1), compiled, skip, fin, null,
-        vecOps[(E, Long)])._1
+      runKeyCore((), wrapped, (w: (E, Long)) => ts(w._1), compiled, skip,
+        false, false, fin, null, vecOps[(E, Long)])._1
   }
 
-  /** One key's bounded scan for RELUCTANT patterns under ^/\$ PARTITION
-    * ANCHORS (batch only — [[matchBatchGroups]] with anchors):
-    * every candidate match is buffered to end of input (no in-scan
-    * selection: the first completion per start may FAIL an anchor that
-    * a longer same-start candidate passes), then the anchor gates
-    * filter on the arrival tags (head ⇒ first captured row is tag 0,
-    * tail ⇒ last captured row is the partition's last tag), and the
-    * most-preferred GATE-PASSING candidate per start emits — anchors
-    * participate in matching BEFORE preference selection, the SQL:2016
-    * order. */
-  private def runKeyAnchoredReluctant[K, E, O](k: K,
-      events: Vector[(E, Long)], ts: ((E, Long)) => Long,
-      compiled: Compiled[(E, Long)], anchorHead: Boolean,
-      anchorTail: Boolean, skip: Cep.AfterMatchSkip,
-      finish: (K, Map[String, Seq[(E, Long)]]) => O): Vector[O] =
-    if (compiled.strictSpans)
-      runKeyAnchoredCore(k, events, ts, compiled, anchorHead, anchorTail,
-        skip, finish, spanOpsFor(events))
-    else
-      runKeyAnchoredCore(k, events, ts, compiled, anchorHead, anchorTail,
-        skip, finish, vecOps[(E, Long)])
-
-  private def runKeyAnchoredCore[K, E, O, C](k: K,
-      events: Vector[(E, Long)], ts: ((E, Long)) => Long,
-      compiled: Compiled[(E, Long)], anchorHead: Boolean,
-      anchorTail: Boolean, skip: Cep.AfterMatchSkip,
-      finish: (K, Map[String, Seq[(E, Long)]]) => O,
-      ops: CapOps[(E, Long), C]): Vector[O] = {
-    var confs = Vector.empty[Conf[(E, Long), C]]
-    val em = new GroupRunEmitter[(E, Long), C](compiled, ts, skip,
-      anchorHead, anchorTail, tagOf = _._2, ops)
-    events.foreach { e =>
-      val (next, ms) = advanceC(compiled, confs, e, ts(e), canStart = true,
-        ops)
-      confs = em.step(next, ms, _ => ())
-    }
-    val outs = Vector.newBuilder[O]
-    em.finish(events.size.toLong - 1,
-      m => outs += finish(k, toGroups(compiled, ops.toVector(m))))
-    outs.result()
-  }
+  /** Compile for a batch run: ^/$ anchors need every candidate of a
+    * start buffered, so reluctant selection is forced DEFERRED (greedy
+    * selection always is). */
+  private def compileBatch[E](pattern: GPattern[E],
+      anchored: Boolean): Compiled[(E, Long)] =
+    compile(liftG(if (anchored) pattern.deferredReluctant else pattern))
 
   /** Pure single-key batch run over in-order events — the property-test
-    * seam onto the batch drivers (compile + arrival tags + the
-    * [[GroupRunEmitter]] end-of-input flush), exactly what
-    * [[matchBatchGroups]] does per key without a Dataset/session. */
+    * seam onto the batch driver (compile + arrival tags + [[KeyRun]]'s
+    * end-of-input flush), exactly what [[matchBatchGroups]] does per key
+    * without a Dataset/session. */
   private[graft] def runKeyEvents[E, O](events: Vector[E], ts: E => Long,
       pattern: GPattern[E], skip: Cep.AfterMatchSkip = Cep.NoSkip,
       anchorHead: Boolean = false, anchorTail: Boolean = false)(
-      finish: Map[String, Seq[E]] => O): Vector[O] = {
-    val wrapped = events.zipWithIndex.map { case (e, i) => (e, i.toLong) }
-    if (anchorHead || anchorTail) {
-      val compiled = compile(liftG(pattern.deferredReluctant))
-      runKeyAnchoredReluctant[Unit, E, O]((), wrapped, w => ts(w._1),
-        compiled, anchorHead, anchorTail, skip,
-        (_, groups) => finish(unliftGroups(groups)))
-    } else {
-      val compiled = compile(liftG(pattern))
-      if (compiled.strictSpans)
-        runKeyCore[Unit, (E, Long), O, SpanCaps[(E, Long)]]((), wrapped,
-          w => ts(w._1), compiled, skip,
-          (_, groups) => finish(unliftGroups(groups)), null,
-          spanOpsFor(wrapped))._1
-      else
-        runKeyBatch[Unit, (E, Long), O]((), wrapped, w => ts(w._1), compiled,
-          skip, (_, groups) => finish(unliftGroups(groups)))
-    }
-  }
+      finish: Map[String, Seq[E]] => O): Vector[O] =
+    runKey[Unit, E, O]((),
+      events.zipWithIndex.map { case (e, i) => (e, i.toLong) },
+      w => ts(w._1), compileBatch(pattern, anchorHead || anchorTail), skip,
+      anchorHead, anchorTail, (_, groups) => finish(groups), null)
 
   /** Run a group pattern over a batch Dataset: one event-time-sorted scan
     * per key — the batch driver behind every library route
@@ -1927,7 +1941,8 @@ object GroupCep {
     * ([[GroupSkipQueue]]). Event identity is the reference's SharedBuffer
     * EventId: each event is tagged with its arrival position in the key's
     * sorted run, so value-identical events at one timestamp are distinct
-    * branch states. */
+    * branch states. ^/$ anchors are a selection-mode composition (gate,
+    * then select, then skip). */
   def matchBatchGroups[K, E, O: Encoder](ds: Dataset[E], key: E => K,
       ts: E => Long, pattern: GPattern[E],
       tie: E => Long = (_: E) => 0L,
@@ -1936,45 +1951,21 @@ object GroupCep {
       anchorHead: Boolean = false,
       anchorTail: Boolean = false)(
       finish: (K, Map[String, Seq[E]]) => O)(
-      implicit ke: Encoder[K]): Dataset[O] =
-    if (anchorHead || anchorTail) {
-      // the reluctant × anchors composition (see runKeyAnchoredReluctant);
-      // round 11: non-default skip composes too (gate → select → skip),
-      // and so does GREEDY selection (already deferred — the gate
-      // filters candidates, then the greedy preference selects)
-      val compiled = compile(liftG(
-        if (pattern.greedySel) pattern else pattern.deferredReluctant))
-      require(compiled.reluctantSel || compiled.greedySel,
-        "anchor gates are a selection-mode composition (reluctant or " +
-          "greedySelect); plain anchored group patterns post-filter on " +
-          "boundary flags instead")
-      ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
-        val wrapped = it.toVector.sortBy(e => (ts(e), tie(e)))
-          .zipWithIndex.map { case (e, i) => (e, i.toLong) }
-        runKeyAnchoredReluctant[K, E, O](k, wrapped, w => ts(w._1),
-          compiled, anchorHead, anchorTail, skip,
-          (kk, groups) => finish(kk, unliftGroups(groups))).iterator
-      }
-    } else {
-      val compiled = compile(liftG(pattern))
-      requireSkipFor(compiled, skip)
-      ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
-        val wrapped = it.toVector.sortBy(e => (ts(e), tie(e)))
-          .zipWithIndex.map { case (e, i) => (e, i.toLong) }
-        // strict contiguity ⇒ range-compressed captures (round 12):
-        // O(#runs) per branch instead of O(match length)
-        if (compiled.strictSpans)
-          runKeyCore[K, (E, Long), O, SpanCaps[(E, Long)]](k, wrapped,
-            w => ts(w._1), compiled, skip,
-            (kk, groups) => finish(kk, unliftGroups(groups)),
-            stats, spanOpsFor(wrapped))._1.iterator
-        else
-          runKeyBatch[K, (E, Long), O](k, wrapped, w => ts(w._1), compiled,
-            skip,
-            (kk, groups) => finish(kk, unliftGroups(groups)),
-            stats).iterator
-      }
+      implicit ke: Encoder[K]): Dataset[O] = {
+    val anchored = anchorHead || anchorTail
+    val compiled = compileBatch(pattern, anchored)
+    if (anchored) require(compiled.reluctantSel || compiled.greedySel,
+      "anchor gates are a selection-mode composition (reluctant or " +
+        "greedySelect); plain anchored group patterns post-filter on " +
+        "boundary flags instead")
+    KeyRun.check(compiled, skip, anchorTail) // validate eagerly
+    ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
+      val wrapped = it.toVector.sortBy(e => (ts(e), tie(e)))
+        .zipWithIndex.map { case (e, i) => (e, i.toLong) }
+      runKey[K, E, O](k, wrapped, w => ts(w._1), compiled, skip, anchorHead,
+        anchorTail, finish, stats).iterator
     }
+  }
 
   /** Reference-exact after-match machinery
     * (NFA.processMatchesAccordingToSkipStrategy): completed
@@ -1990,7 +1981,7 @@ object GroupCep {
     private var pending = Vector.empty[C]
 
     /** Deferred matches still waiting on a live earlier branch — carried
-      * across micro-batches by the streaming driver's [[GStreamState]]. */
+      * across micro-batches by the streaming driver's [[GArrivalState]]. */
     def toPending: Vector[C] = pending
     def restore(ms: Vector[C]): Unit = pending = ms
 
@@ -2067,319 +2058,139 @@ object GroupCep {
           math.max(starts.min + w, state.getCurrentWatermarkMs() + 1))
     }
 
-  /** The per-key state-transition function behind [[matchStream]], exposed
-    * so a TestGroupState harness can drive the timeout path directly (the
-    * reference tests within-pruning via NFA watermark advance in
-    * flink-cep/.../nfa/NFATest.java; Spark's analog is TestGroupState).
+  /** Streaming keyed state, one flat row per key: the per-key cross-batch
+    * arrival counter (the reference's SharedBuffer EventId allocator —
+    * flink-cep/.../nfa/sharedbuffer/EventId.java assigns each arriving
+    * event a per-key ordinal), the open branches over arrival-tagged
+    * events, the completed matches the after-match skip queue still
+    * defers (they wait for every earlier-started live branch to resolve,
+    * which can take more micro-batches), the deferred selection
+    * candidates, the matches waiting at the terminal-negation gate, the
+    * per-key match ordinal (streaming MATCH_NUMBER()) and the PREV() row
+    * carry — [[KeyRun]]'s entries between micro-batches.
     *
-    * When the pattern has `within`, idle keys are pruned by event-time
-    * timers: on timeout, branches whose within horizon has passed the
-    * watermark are dropped and the timer re-arms on the oldest survivor
-    * (reference: flink-cep/.../nfa/NFA.java advanceTime pruning). Without
-    * this, a key that goes quiet would retain partial branches forever. */
-  def matchStreamFn[K, E, O](compiled: Compiled[E], ts: E => Long,
-      tie: E => Long, finish: (K, Map[String, Seq[E]]) => O):
-      (K, Iterator[E], GroupState[Vector[GConf[E]]]) => Iterator[O] = {
-    require(!compiled.selDeferred,
-      "deferred-selection patterns (reluctant × alternation, greedy " +
-        "selection) — use matchStreamSkipFn/matchStream (GStreamState " +
-        "carries the deferred candidates)")
-    require(compiled.terminalNot.isEmpty,
-      "terminal negation — use matchStreamSkipFn/matchStream " +
-        "(GStreamState carries the gated matches)")
-    (k: K, it: Iterator[E], state: GroupState[Vector[GConf[E]]]) =>
-      if (state.hasTimedOut) {
-        val w = compiled.withinMs.get
-        val wm = state.getCurrentWatermarkMs()
-        val live = state.getOption.getOrElse(Vector.empty)
-          .filter(c => wm - c.startTs < w)
-        if (live.isEmpty) state.remove()
-        else {
-          state.update(live)
-          armExpiry(state, compiled.withinMs, live.map(_.startTs))
-        }
-        Iterator.empty
-      } else {
-        var confs = state.getOption.getOrElse(Vector.empty)
-        val outs = Vector.newBuilder[O]
-        it.toVector.sortBy(e => (ts(e), tie(e))).foreach { e =>
-          val (next, ms) = advance(compiled, confs, e, ts(e))
-          confs = next
-          ms.foreach(m => outs += finish(k, toGroups(compiled, m)))
-        }
-        if (confs.isEmpty) state.remove()
-        else {
-          state.update(confs)
-          armExpiry(state, compiled.withinMs, confs.map(_.startTs))
-        }
-        outs.result().iterator
-      }
-  }
-
-  /** Streaming keyed state for [[matchStreamSkipFn]]: the open branches,
-    * the completed matches still deferred by the after-match skip queue
-    * (they wait for every earlier-started live branch to resolve, which
-    * can take more micro-batches), the deferred selection candidates,
-    * and the matches waiting at the terminal-negation gate. `pending`
-    * non-empty implies `confs` non-empty — with no live branch the drain
-    * empties the queue.
-    *
-    * STATE-FORMAT NOTE: every Dataset-level streaming driver persists
-    * this state through [[CepStateEnvelope]] — a (version INT, kryo
-    * BINARY) row whose version column is readable against any
-    * checkpoint generation — so restoring state written by a different
-    * format generation raises the named [[CepStateVersionException]]
-    * instead of an opaque KryoException (layout change) or a silent
-    * wrong resume (semantic change with unchanged layout). Bump
-    * [[CepStateCodec.GroupVersion]] whenever this class, [[Conf]] or
-    * their meaning changes; the recovery posture stays the standard
-    * Spark one — restart from a fresh checkpoint after reprocessing. */
-  final case class GStreamState[E](confs: Vector[GConf[E]],
-      pending: Vector[Vector[(Int, E)]],
-      pendingSel: Vector[Vector[(Int, E)]] = Vector.empty,
-      gated: Vector[Vector[(Int, E)]] = Vector.empty)
-
-  /** [[matchStreamFn]] plus the after-match skip machinery — the
-    * [[GroupSkipQueue]] the batch path runs, its deferred matches carried
-    * across micro-batches in [[GStreamState]] — the terminal-negation gate
-    * and the timed-out-partials side channel (PatternStream.select with
-    * a timeout tag): when `onTimeout` is set, every partial match whose
-    * `within` horizon passes surfaces once, as step name → captured
-    * events plus the expiry time, interleaved with matches at its
-    * event-time position (timeouts fired by a watermark advance surface
-    * when the timer runs). NoSkip runs the queue-free immediate path. */
-  def matchStreamSkipFn[K, E, O](compiled: Compiled[E], ts: E => Long,
-      tie: E => Long, skip: Cep.AfterMatchSkip,
-      finish: (K, Map[String, Seq[E]]) => O,
-      stats: Cep.HotKeyStats = null,
-      canStart: E => Boolean = null,
-      onTimeout: (K, Map[String, Seq[E]], Long) => O = null):
-      (K, Iterator[E], GroupState[GStreamState[E]]) => Iterator[O] = {
-    requireSkipFor(compiled, skip)
-    (k: K, it: Iterator[E], state: GroupState[GStreamState[E]]) => {
-      val st = state.getOption.getOrElse(GStreamState[E](Vector.empty,
-        Vector.empty))
-      val outs = Vector.newBuilder[O]
-      // streaming keeps the EXACT capture vectors: the deferred
-      // candidates / queued matches ride keyed state across
-      // micro-batches and must materialize without the batch drivers'
-      // key-run event array
-      val ops = vecOps[E]
-      // see runKeyBatch: immediate reluctant selection feeds the queue
-      // directly; the deferred (alternation) resolver releases into it
-      val rr = if (compiled.selDeferred)
-                 new ReluctantResolver[E, Vector[(Int, E)]](compiled, ts, ops)
-               else null
-      val sq = if (skip == Cep.NoSkip) null
-               else new GroupSkipQueue[E, Vector[(Int, E)]](skip, compiled,
-                 ts, ops, rr)
-      val gate = negGate(compiled, ts, ops)
-      if (sq != null) sq.restore(st.pending)
-      if (rr != null) rr.restore(st.pendingSel)
-      if (gate != null) gate.add(st.gated)
-      def emit(m: Vector[(Int, E)]): Unit =
-        outs += finish(k, toGroups(compiled, m))
-      // resolver releases feed the skip queue when one is active (the
-      // reluctant + skip composition), else emit directly
-      def release(m: Vector[(Int, E)]): Unit =
-        if (sq != null) sq.add(Vector(m)) else emit(m)
-      def timedOut(m: Vector[(Int, E)], at: Long): Unit =
-        if (onTimeout != null)
-          outs += onTimeout(k, toGroups(compiled, m).filter(_._2.nonEmpty), at)
-      var confs = st.confs
-      // time reaches `t` (an event's time, or the watermark): the gate
-      // decides entries whose horizon passed, and expired branches
-      // surface on the timeout channel — once per distinct capture (a
-      // loop's stay and exit branches are one partial match)
-      def advanceTime(t: Long): Unit = compiled.withinMs.foreach { w =>
-        if (gate != null) gate.onTime(t, emit, timedOut)
-        if (!confs.forall(c => t - c.startTs < w)) {
-          val (dead, live) = confs.partition(c => t - c.startTs >= w)
-          confs = live
-          if (onTimeout != null)
-            dedupBy(dead.map(_.captured))(_.length).foreach(timedOut(_, t))
-        }
-      }
-      if (state.hasTimedOut) {
-        // watermark advance: expired branches die, which may release
-        // deferred matches whose only blockers they were
-        advanceTime(state.getCurrentWatermarkMs())
-        if (rr != null) rr.drain(confs, release)
-        if (sq != null) confs = sq.drain(confs, emit)
-      } else {
-        // a branch may have expired on the timer between batches
-        if (sq != null) confs = sq.drain(confs, emit)
-        val sorted = it.toVector.sortBy(e => (ts(e), tie(e)))
-        var maxConfs = 0
-        sorted.foreach { e =>
-          val t = ts(e)
-          if (gate != null || onTimeout != null) advanceTime(t)
-          val (next, ms) = advance(compiled, confs, e, t,
-            canStart == null || canStart(e))
-          confs = next
-          if (stats != null && confs.size > maxConfs) maxConfs = confs.size
-          if (gate != null) {
-            // the event decides every pending entry before this event's
-            // own completions join the gate
-            gate.onEvent(e, emit)
-            gate.add(ms)
-          } else if (rr != null) {
-            rr.add(ms)
-            if (ms.nonEmpty) confs = rr.pruneDominated(confs)
-            rr.drain(confs, release)
-            if (sq != null) confs = sq.drain(confs, emit)
-          }
-          else if (sq == null) ms.foreach(emit)
-          else { sq.add(ms); confs = sq.drain(confs, emit) }
-        }
-        if (stats != null) {
-          stats.maxKeyEvents.add(sorted.size.toLong)
-          stats.maxPartials.add(maxConfs.toLong)
-        }
-      }
-      // end-of-batch: prune dominated branches ONCE per batch (the
-      // per-event prune is gated on completions; a branch can first
-      // diverge-and-lose on a quiet event under relaxed contiguity) so
-      // a decided start's release never waits past the current batch
-      if (rr != null && !state.hasTimedOut) {
-        confs = rr.pruneDominated(confs)
-        rr.drain(confs, release)
-        if (sq != null) confs = sq.drain(confs, emit)
-      }
-      val rrPending = if (rr == null) Vector.empty[Vector[(Int, E)]]
-                      else rr.toPending
-      val sqPending = if (sq == null) Vector.empty[Vector[(Int, E)]]
-                      else sq.toPending
-      val gated = if (gate == null) Vector.empty[Vector[(Int, E)]]
-                  else gate.toState
-      if (confs.isEmpty && rrPending.isEmpty && sqPending.isEmpty &&
-          gated.isEmpty)
-        state.remove()
-      else {
-        state.update(GStreamState(confs, sqPending, rrPending, gated))
-        armExpiry(state, compiled.withinMs,
-          confs.map(_.startTs) ++ gated.map(m => ts(m.head._2)))
-      }
-      outs.result().iterator
-    }
-  }
-
-  /** Streaming keyed state for the arrival-identity drivers: the per-key
-    * cross-batch arrival counter (the reference's SharedBuffer EventId
-    * allocator — flink-cep/.../nfa/sharedbuffer/EventId.java assigns each
-    * arriving event a per-key ordinal) plus the skip-capable state over
-    * arrival-tagged events, the per-key match ordinal (MATCH_NUMBER())
-    * and the PREV() row carry. */
+    * STATE-FORMAT NOTE: the streaming driver persists this row through
+    * [[CepStateEnvelope]] — a (version INT, kryo BINARY) row whose
+    * version column is readable against any checkpoint generation — so
+    * restoring state written by a different format generation raises the
+    * named [[CepStateVersionException]] instead of an opaque
+    * KryoException (layout change) or a silent wrong resume (semantic
+    * change with unchanged layout). Bump [[CepStateCodec.GroupVersion]]
+    * whenever this class, [[Conf]] or their meaning changes; the recovery
+    * posture stays the standard Spark one — restart from a fresh
+    * checkpoint after reprocessing. */
   final case class GArrivalState[E](nextSeq: Long,
-      inner: GStreamState[(E, Long)],
+      confs: Vector[GConf[(E, Long)]],
+      pending: Vector[Vector[(Int, (E, Long))]] = Vector.empty,
+      pendingSel: Vector[Vector[(Int, (E, Long))]] = Vector.empty,
+      gated: Vector[Vector[(Int, (E, Long))]] = Vector.empty,
       matchSeq: Long = 0L, carry: Vector[E] = Vector.empty)
 
-  /** Cross-batch per-key match ordinal (SQL MATCH_NUMBER() under
-    * streaming): starts from the persisted count, `next()` is 1-based. */
-  final class MatchCounter(start: Long) extends Serializable {
-    private[streaming] var n: Long = start
-    def next(): Long = { n += 1; n }
-  }
-
-  /** [[GroupState]] view exposing the inner [[GStreamState]] of a
-    * [[GArrivalState]]; `update` re-attaches the advanced counter (plus
-    * the match ordinal and PREV carry, read at update time). A key that
-    * has emitted a match or holds a carry persists an empty state row
-    * instead of being removed — the ordinal and the predecessor row must
-    * survive quiet periods. */
-  private final class GArrivalView[E](u: GroupState[GArrivalState[E]],
-      newSeq: Long, counter: MatchCounter = null,
-      carry: () => Vector[E] = () => Vector.empty,
-      persistSeq: Boolean = false)
-      extends GroupState[GStreamState[(E, Long)]] {
-    def exists: Boolean = u.exists
-    def get: GStreamState[(E, Long)] = u.get.inner
-    def getOption: Option[GStreamState[(E, Long)]] = u.getOption.map(_.inner)
-    def update(s: GStreamState[(E, Long)]): Unit =
-      u.update(GArrivalState(newSeq, s,
-        if (counter == null) 0L else counter.n, carry()))
-    // the arrival counter may safely restart when nothing survives
-    // (identity only disambiguates events LIVE branches reference), but
-    // a ^-anchored pattern gives tag 0 ABSOLUTE meaning (the
-    // partition's first-EVER event) — dropping the counter would let a
-    // later batch re-tag from 0 and a mid-partition event wrongly open
-    // an "anchored" branch — the inherent state price of first-ever
-    // semantics.
-    def remove(): Unit =
-      if ((counter != null && counter.n > 0L) || carry().nonEmpty ||
-          (persistSeq && newSeq > 0L))
-        update(GStreamState(Vector.empty, Vector.empty))
-      else u.remove()
-    def hasTimedOut: Boolean = u.hasTimedOut
-    def setTimeoutDuration(ms: Long): Unit = u.setTimeoutDuration(ms)
-    def setTimeoutDuration(d: String): Unit = u.setTimeoutDuration(d)
-    def setTimeoutTimestamp(ms: Long): Unit = u.setTimeoutTimestamp(ms)
-    def setTimeoutTimestamp(ms: Long, d: String): Unit =
-      u.setTimeoutTimestamp(ms, d)
-    def setTimeoutTimestamp(t: java.sql.Date): Unit = u.setTimeoutTimestamp(t)
-    def setTimeoutTimestamp(t: java.sql.Date, d: String): Unit =
-      u.setTimeoutTimestamp(t, d)
-    def getCurrentWatermarkMs(): Long = u.getCurrentWatermarkMs()
-    def getCurrentProcessingTimeMs(): Long = u.getCurrentProcessingTimeMs()
-  }
-
-  /** Arrival-identity streaming driver: tags each batch's events with
-    * consecutive per-key ordinals (counter carried in state) and runs
-    * [[matchStreamSkipFn]] over the lifted pattern — the state function
-    * behind every library streaming route. `onTimeout`, when set, is
-    * [[matchStreamSkipFn]]'s timed-out-partials channel. */
+  /** The one streaming state function, behind every library streaming
+    * route: tags each micro-batch's events (sorted by `(ts, tie)`) with
+    * consecutive per-key arrival ordinals and steps a [[KeyRun]] over
+    * them, resuming from and saving to the key's [[GArrivalState]].
+    * Exposed so a TestGroupState harness can drive the timeout path
+    * directly (the reference tests within-pruning via NFA watermark
+    * advance in flink-cep/.../nfa/NFATest.java).
+    *
+    * When the pattern has `within`, idle keys are pruned by event-time
+    * timers: on timeout, branches whose horizon the watermark passed die
+    * (surfacing on `onTimeout`, when set, as step name → captured events
+    * plus the expiry time — PatternStream.select with a timeout tag;
+    * within a batch the two channels interleave at their event-time
+    * positions) and the timer re-arms on the oldest survivor (reference:
+    * NFA.java advanceTime). `anchorHead` lets only the key's first-EVER
+    * event open a branch. `pre(carriedRows, event)`, when set, rewrites
+    * each event with the key's previous rows visible (streaming PREV()).
+    * `numbered`, when set, replaces `finish` and receives the 1-based
+    * cross-batch per-key match ordinal (streaming MATCH_NUMBER()).
+    *
+    * The call decides what outlives a key's last open entry: the arrival
+    * counter under `anchorHead` (tag 0 then means the partition's
+    * first-EVER event — the inherent state price of first-ever
+    * semantics; otherwise identity only disambiguates events live
+    * branches reference and the counter restarts), the match ordinal
+    * under `numbered`, the carry under `pre`. */
   def matchStreamArrivalFn[K, E, O](pattern: GPattern[E], ts: E => Long,
       tie: E => Long, skip: Cep.AfterMatchSkip,
       finish: (K, Map[String, Seq[E]]) => O,
       stats: Cep.HotKeyStats = null,
       anchorHead: Boolean = false,
-      onTimeout: (K, Map[String, Seq[E]], Long) => O = null):
-      (K, Iterator[E], GroupState[GArrivalState[E]]) => Iterator[O] =
-    matchStreamNumberedArrivalFn(pattern, ts, tie, skip, null,
-      (kk: K, _: Long, groups: Map[String, Seq[E]]) => finish(kk, groups),
-      stats, numbered = false, anchorHead = anchorHead, onTimeout)
-
-  /** [[matchStreamArrivalFn]] plus the round-9 SQL extras: finish receives
-    * the 1-based cross-batch per-key match ordinal (streaming
-    * MATCH_NUMBER()), and `pre(carriedRows, event)` — when non-null —
-    * transforms each event with the key's previous rows visible, its
-    * carry persisted in [[GArrivalState.carry]] (streaming PREV()). */
-  def matchStreamNumberedArrivalFn[K, E, O](pattern: GPattern[E],
-      ts: E => Long, tie: E => Long, skip: Cep.AfterMatchSkip,
-      pre: (Vector[E], E) => (Vector[E], E),
-      finish: (K, Long, Map[String, Seq[E]]) => O,
-      stats: Cep.HotKeyStats = null, numbered: Boolean = true,
-      anchorHead: Boolean = false,
-      onTimeout: (K, Map[String, Seq[E]], Long) => O = null):
+      onTimeout: (K, Map[String, Seq[E]], Long) => O = null,
+      pre: (Vector[E], E) => (Vector[E], E) = null,
+      numbered: (K, Long, Map[String, Seq[E]]) => O = null):
       (K, Iterator[E], GroupState[GArrivalState[E]]) => Iterator[O] = {
+    type W = (E, Long)
+    type C = Vector[(Int, W)]
     val compiled = compile(liftG(pattern))
-    requireSkipFor(compiled, skip)
-    val liftedTimeout =
-      if (onTimeout == null) null
-      else (kk: K, groups: Map[String, Seq[(E, Long)]], at: Long) =>
-        onTimeout(kk, unliftGroups(groups), at)
+    KeyRun.check(compiled, skip, anchorTail = false) // validate eagerly
+    val tsW = (w: W) => ts(w._1)
     (k: K, it: Iterator[E], state: GroupState[GArrivalState[E]]) => {
-      val st = state.getOption
-      var seq = st.map(_.nextSeq).getOrElse(0L)
-      val counter = new MatchCounter(st.map(_.matchSeq).getOrElse(0L))
-      var carry = st.map(_.carry).getOrElse(Vector.empty[E])
-      val inner = matchStreamSkipFn[K, (E, Long), O](compiled,
-        w => ts(w._1), _._2, skip,
-        (kk, groups) => finish(kk, counter.next(), unliftGroups(groups)),
-        stats,
-        // ^ gate: only the key's first-EVER event (cross-batch arrival
-        // tag 0) may open a branch
-        canStart = if (anchorHead) (w: (E, Long)) => w._2 == 0L else null,
-        onTimeout = liftedTimeout)
-      val sorted = it.toVector.sortBy(e => (ts(e), tie(e)))
-      val preApplied = if (pre == null) sorted else sorted.map { e =>
-        val (c2, e2) = pre(carry, e); carry = c2; e2
+      val st = state.getOption.getOrElse(GArrivalState[E](0L, Vector.empty))
+      var seq = st.nextSeq
+      var matchSeq = st.matchSeq
+      var carry = st.carry
+      val outs = Vector.newBuilder[O]
+      def groups(m: C) = unliftGroups(toGroups(compiled, m))
+      // streaming keeps the EXACT capture vectors: deferred candidates
+      // and queued matches ride keyed state across micro-batches and
+      // must materialize without a key-run event array
+      val run = new KeyRun[W, C](compiled, tsW, skip, vecOps[W], _._2,
+        anchorHead, anchorTail = false,
+        m => outs += (
+          if (numbered == null) finish(k, groups(m))
+          else { matchSeq += 1; numbered(k, matchSeq, groups(m)) }),
+        if (onTimeout == null) null
+        else (m, at) => outs += onTimeout(k, groups(m).filter(_._2.nonEmpty), at))
+      run.restore(st.confs, st.pending, st.pendingSel, st.gated)
+      if (state.hasTimedOut) run.time(state.getCurrentWatermarkMs())
+      else {
+        val sorted = it.toVector.sortBy(e => (ts(e), tie(e)))
+        sorted.foreach { e0 =>
+          val e = if (pre == null) e0
+                  else { val (c2, e2) = pre(carry, e0); carry = c2; e2 }
+          run.event((e, seq), ts(e))
+          seq += 1
+        }
+        if (stats != null) {
+          stats.maxKeyEvents.add(sorted.size.toLong)
+          stats.maxPartials.add(run.maxLive.toLong)
+        }
       }
-      val tagged = preApplied.map { e => val w = (e, seq); seq += 1; w }
-      inner(k, tagged.iterator, new GArrivalView[E](state, seq,
-        if (numbered || pre != null) counter else null, () => carry,
-        persistSeq = anchorHead))
+      run.endOfBatch()
+      val row = GArrivalState(seq, run.branches, run.queued, run.selecting,
+        run.gated, matchSeq, carry)
+      val open = row.confs.nonEmpty || row.pending.nonEmpty ||
+        row.pendingSel.nonEmpty || row.gated.nonEmpty
+      if (open || (anchorHead && seq > 0L) ||
+          (numbered != null && matchSeq > 0L) || carry.nonEmpty) {
+        state.update(row)
+        if (open) armExpiry(state, compiled.withinMs,
+          row.confs.map(_.startTs) ++ row.gated.map(m => tsW(m.head._2)))
+      } else state.remove()
+      outs.result().iterator
     }
+  }
+
+  /** The keyed-state driver every streaming CEP route shares (the DSL's
+    * `Cep.matchStream*`, MATCH_RECOGNIZE, [[matchStream]]): runs a
+    * [[matchStreamArrivalFn]] state function under
+    * `flatMapGroupsWithState`, the state crossing micro-batches as a
+    * version-tagged [[CepStateEnvelope]]; `within` patterns ride
+    * event-time timers. */
+  private[streaming] def streamDriver[K, E, O: Encoder](ds: Dataset[E],
+      key: E => K, withinMs: Option[Long],
+      fn: (K, Iterator[E], GroupState[GArrivalState[E]]) => Iterator[O])(
+      implicit ke: Encoder[K]): Dataset[O] = {
+    val timeoutConf =
+      if (withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    implicit val senc: Encoder[CepStateEnvelope] = CepStateCodec.envelopeEncoder
+    ds.groupByKey(key).flatMapGroupsWithState[CepStateEnvelope, O](
+      OutputMode.Append(), timeoutConf)(
+      CepStateCodec.versionedFn("GroupCep.GArrivalState",
+        CepStateCodec.GroupVersion, fn))
   }
 
   /** Streaming twin: branches persist in keyed state across micro-batches.
@@ -2404,42 +2215,7 @@ object GroupCep {
       stats: Cep.HotKeyStats = null,
       anchorHead: Boolean = false)(
       finish: (K, Map[String, Seq[E]]) => O)(
-      implicit ke: Encoder[K]): Dataset[O] = {
-    requireSkipFor(compile(pattern), skip) // validate eagerly
-    val timeoutConf =
-      if (pattern.withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    implicit val senc: Encoder[CepStateEnvelope] = CepStateCodec.envelopeEncoder
-    ds.groupByKey(key).flatMapGroupsWithState[CepStateEnvelope, O](
-      OutputMode.Append(), timeoutConf)(
-      CepStateCodec.versionedFn("GroupCep.GArrivalState",
-        CepStateCodec.GroupVersion,
-        matchStreamArrivalFn(pattern, ts, tie, skip, finish, stats,
-          anchorHead = anchorHead)))
-  }
-
-  /** [[matchStream]] with the cross-batch per-key match ordinal in
-    * `finish` (streaming MATCH_NUMBER()) and an optional carried-rows
-    * transform `pre` (streaming PREV()). */
-  def matchStreamNumbered[K, E, O: Encoder](ds: Dataset[E], key: E => K,
-      ts: E => Long, pattern: GPattern[E],
-      tie: E => Long = (_: E) => 0L,
-      skip: Cep.AfterMatchSkip = Cep.NoSkip,
-      pre: (Vector[E], E) => (Vector[E], E) = null,
-      stats: Cep.HotKeyStats = null,
-      anchorHead: Boolean = false)(
-      finish: (K, Long, Map[String, Seq[E]]) => O)(
-      implicit ke: Encoder[K]): Dataset[O] = {
-    requireSkipFor(compile(pattern), skip) // validate eagerly
-    val timeoutConf =
-      if (pattern.withinMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    implicit val senc: Encoder[CepStateEnvelope] = CepStateCodec.envelopeEncoder
-    ds.groupByKey(key).flatMapGroupsWithState[CepStateEnvelope, O](
-      OutputMode.Append(), timeoutConf)(
-      CepStateCodec.versionedFn("GroupCep.GArrivalState",
-        CepStateCodec.GroupVersion,
-        matchStreamNumberedArrivalFn(pattern, ts, tie, skip, pre, finish,
-          stats, anchorHead = anchorHead)))
-  }
+      implicit ke: Encoder[K]): Dataset[O] =
+    streamDriver(ds, key, pattern.withinMs,
+      matchStreamArrivalFn(pattern, ts, tie, skip, finish, stats, anchorHead))
 }

@@ -88,7 +88,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   *                                  -- ^ ALSO works on streaming
   *                                  -- clauses via the cross-batch
   *                                  -- arrival ordinal (the
-  *                                  -- advance-level canStart gate);
+  *                                  -- key-run ^ start rule);
   *                                  -- flat unquantified clauses
   *                                  -- route onto the PLANNED
   *                                  -- GroupCepExec with the anchors
@@ -145,7 +145,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * surface over the same NFA core.
   *
   * STREAMING inputs route the same parsed clause onto
-  * [[GroupCep.matchStream]]: partial matches persist in keyed state
+  * [[GroupCep.streamDriver]]: partial matches persist in keyed state
   * across micro-batches and complete whenever their events arrive.
   * WITHIN requires a watermark on the ORDER BY column upstream
   * (`df.withWatermark(ord, ...)`) — expired partials are then pruned by
@@ -788,7 +788,7 @@ object MatchRecognize {
     // The ^ head anchor alone IS knowable on a stream (round 10): the
     // cross-batch arrival ordinal pins the partition's first event, so
     // the streaming driver gates branch creation on arrival tag 0
-    // (GroupCep.advance canStart) instead of the batch boundary-flag
+    // (GroupCep.KeyRun's ^ start rule) instead of the batch boundary-flag
     // post-filter — for any pattern shape. $ still requires batch input
     // — the partition tail is unknowable before end of input.
     val anchorStreamHead = anchored && streamingIn
@@ -998,7 +998,7 @@ object MatchRecognize {
     val qVars = quantifiedVars(elems, inQuant = false)
     // round 11: the reluctant compositions route planned — ^/$ anchors
     // (buffer-to-run-end gate-before-selection) and non-default skip
-    // both live in GroupCepExec via the same GroupRunEmitter the
+    // both live in GroupCepExec via the same GroupCep.KeyRun the
     // library drivers run. A FLAT unquantified clause needs no
     // selection mode under anchors (each start completes at most one
     // candidate), so its anchors become NFA-level gates with NO
@@ -1314,8 +1314,8 @@ object MatchRecognize {
     // deserializes its own closure copy, and flatMapGroups feeds each
     // key's matches contiguously). Streaming (round 9): the ordinal
     // persists in keyed state across micro-batches
-    // (GArrivalState.matchSeq) and arrives through the numbered driver
-    // below.
+    // (GArrivalState.matchSeq) and arrives through the streaming state
+    // function's `numbered` finish below.
     val needsMatchNum = measures.map(baseOf)
       .exists(_.isInstanceOf[MatchNumMeasure])
     var mnHasKey = false
@@ -1382,10 +1382,6 @@ object MatchRecognize {
       }
     val finish: (Row, Map[String, Seq[Row]]) => Row = (k, groups) =>
       mkRow(k, if (needsMatchNum) nextMatchNum(k) else 0L, groups)
-    // streaming routes through the numbered driver only when the clause
-    // needs the cross-batch extras (keys then persist a counter row past
-    // their last partial — don't pay that for every query)
-    val needsNumbered = streamingIn && (needsMatchNum || preFn != null)
     // ALL ROWS: the driver emits one array-typed row per match; the
     // stateless explode below flattens it (works identically on the
     // streaming output)
@@ -1483,15 +1479,12 @@ object MatchRecognize {
         // ORDER BY column upstream (`df.withWatermark(ord, ...)`) so
         // idle keys' expired partials are pruned by event-time timers.
         // State crosses batches as a version-tagged envelope
-        // (CepStateCodec).
-        if (needsNumbered)
-          GroupCep.matchStreamNumbered[Row, Row, Row](
-            prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
-            pre = preFn, anchorHead = anchorStreamHead)(mkRow)(
-            outEnc, keyEnc).toDF()
-        else GroupCep.matchStream[Row, Row, Row](
-          prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
-          anchorHead = anchorStreamHead)(finish)(
+        // (CepStateCodec). MATCH_NUMBER() takes the state-persisted
+        // ordinal (`numbered`); PREV() carries the key's last rows (`pre`)
+        GroupCep.streamDriver[Row, Row, Row](prepared, keyFn, gp.withinMs,
+          GroupCep.matchStreamArrivalFn[Row, Row, Row](gp, ordFn, tieFn,
+            skip, finish, anchorHead = anchorStreamHead, pre = preFn,
+            numbered = if (needsMatchNum) mkRow else null))(
           outEnc, keyEnc).toDF()
       } else
         GroupCep.matchBatchGroups[Row, Row, Row](

@@ -279,6 +279,102 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  test("planned GroupCepExec equals the library batch driver on random strict patterns") {
+    // The planned operator and the library batch driver step one key-run
+    // driver; drive the vec-vs-span property's all-strict pool through
+    // both — every skip strategy, selection mode (none, reluctant,
+    // sqlGreedy), with and without `within`, ^/$ anchors where a mode
+    // selects — and compare each key's matches in match_number order,
+    // step by step: capture count and first captured tag.
+    import graft.streaming.{Cep, GroupCep}
+    import graft.streaming.GroupCep.GPattern
+    import graft.plans.GroupCepPlan
+    import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
+    import org.apache.spark.sql.functions.col
+    type E = (String, Long)
+    def pv(s: String) = (e: E) => e._1 == s
+    def anyB = (e: E) => e._1 != "d" // wide middle: heavy branch churn
+    def is(s: String) = col("name") === s
+    def loop(name: String, pred: org.apache.spark.sql.Column,
+        rel: Boolean = false) =
+      GGroupSpec(Seq(GLeafSpec(name, pred)), max = Int.MaxValue,
+        consecutive = true, strict = true, relMark = rel)
+    def last(name: String, s: String) = GLeafSpec(name, is(s), strict = true)
+    def p1 = GPattern.begin[E]("v")(pv("a"))
+      .next("b")(anyB).oneOrMore.consecutive.next("e")(pv("d"))
+    def p6 = GPattern.begin[E]("v")(pv("a"))
+      .next("b")(anyB).oneOrMore.consecutive
+      .next("c")(pv("c")).oneOrMore.consecutive
+    // (planned spec, library pattern, step names, has a quantifier)
+    val pool: Vector[(Seq[GSpec], () => GPattern[E], Seq[String], Boolean)] =
+      Vector(
+        (Seq(GLeafSpec("v", is("a")), loop("b", col("name") =!= "d"),
+          last("e", "d")), () => p1, Seq("v", "b", "e"), true),
+        (Seq(GLeafSpec("s", is("c")),
+          GGroupSpec(Seq(GLeafSpec("m1", is("a")), last("m2", "b")),
+            max = 2, consecutive = true, strict = true), last("e", "d")),
+          () => GPattern.begin[E]("s")(pv("c"))
+            .next(GPattern.begin[E]("m1")(pv("a")).next("m2")(pv("b")))
+            .times(1, 2).consecutive.next("e")(pv("d")),
+          Seq("s", "m1", "m2", "e"), true),
+        (Seq(GLeafSpec("s", is("c")), GAltSpec(Seq(
+            Seq(GLeafSpec("m1", is("a"))), Seq(GLeafSpec("m2", is("b")))),
+            strict = true), last("e", "d")),
+          () => GPattern.begin[E]("s")(pv("c"))
+            .next(Seq(GPattern.begin[E]("m1")(pv("a")),
+              GPattern.begin[E]("m2")(pv("b"))))
+            .next("e")(pv("d")),
+          Seq("s", "m1", "m2", "e"), false),
+        (Seq(GLeafSpec("v", is("a")), loop("b", col("name") =!= "d"),
+          loop("c", is("c")), last("e", "d")),
+          () => p6.next("e")(pv("d")), Seq("v", "b", "c", "e"), true),
+        (Seq(GLeafSpec("v", is("a")),
+          loop("b", col("name") =!= "d", rel = true), loop("c", is("c")),
+          last("e", "d")),
+          () => GPattern.begin[E]("v")(pv("a"))
+            .next("b")(anyB).oneOrMore.consecutive.markReluctant
+            .next("c")(pv("c")).oneOrMore.consecutive.next("e")(pv("d")),
+          Seq("v", "b", "c", "e"), true))
+    val skips = Vector(Cep.NoSkip, Cep.SkipPastLastEvent,
+      Cep.SkipToFirst("b"), Cep.SkipToLast("b"))
+    val keysGen = Gen.listOfN(3,
+      Gen.listOfN(22, Gen.oneOf("a", "b", "c", "d", "x")))
+    check(Prop.forAll(keysGen, Gen.choose(0, pool.size - 1),
+      Gen.choose(0, skips.size - 1), Gen.choose(0, 2), Gen.oneOf(false, true),
+      Gen.choose(0, 3)) { (keys, pi, si, sel0, within, anch) =>
+      val (spec, pat, steps, selectable) = pool(pi)
+      val sel = if (selectable) sel0 else 0
+      // anchors need a mode to choose among a start's candidates
+      val (head, tail) =
+        if (sel == 0) (false, false) else (anch % 2 == 1, anch >= 2)
+      var gp = pat()
+      if (within) gp = gp.within(6L)
+      if (sel == 1) gp = gp.reluctant
+      if (sel == 2) gp = gp.greedySelect
+      val library = keys.indices.map { k =>
+        val events = keys(k).zipWithIndex
+          .map { case (n, i) => (n, i.toLong) }.toVector
+        GroupCep.runKeyEvents[E, Seq[(Long, Option[Long])]](events, _._2,
+          gp, skips(si), head, tail)(g =>
+          steps.map(n => (g(n).size.toLong, g(n).headOption.map(_._2))))
+      }
+      val df = keys.zipWithIndex.flatMap { case (ns, k) =>
+        ns.zipWithIndex.map { case (n, i) => (k, n, i.toLong) }
+      }.toDF("k", "name", "ts")
+      val planned = GroupCepPlan.matchGroupPattern(df, col("k"), col("ts"),
+        col("ts"), spec, if (within) Some(6L) else None,
+        reluctant = sel == 1, anchorHead = head, anchorTail = tail,
+        skip = skips(si), sqlGreedy = sel == 2).collect()
+        .groupBy(_.getAs[Int]("key")).map { case (k, rs) =>
+          k -> rs.sortBy(_.getAs[Long]("match_number")).toSeq.map(r =>
+            steps.map(n => (r.getAs[Long](s"${n}_count"),
+              Option(r.getAs[java.lang.Long](s"${n}_ts")).map(_.longValue))))
+        }
+      keys.indices.forall(k =>
+        library(k) == planned.getOrElse(k, Seq.empty))
+    })
+  }
+
   test("group CEP: per-event branch dedup forced on vs skipped is a no-op for eligible patterns") {
     // ADVICE r13: noEpsilonDup skips the per-event outConfs dedup on a
     // structural argument (arrival-tagged, no alternation forks, no
@@ -392,7 +488,7 @@ class PropertySpec extends SparkSuite {
       .next("e")(_._1 == "e")
       .reluctant
     // round 10: reluctant × ALTERNATION defers per-start selection
-    // (candidates buffered in GStreamState.pending until their open
+    // (candidates buffered in GArrivalState.pendingSel until their open
     // branches resolve) — the deferral itself must be split-invariant,
     // including a split landing between a less-preferred completion and
     // the preferred branch's later completion. Overlapping branch

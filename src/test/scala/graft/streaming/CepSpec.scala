@@ -162,13 +162,13 @@ class CepSpec extends SparkSuite {
       Cep.matchStreamFn[Long, Ev, MatchOut](p, _.ts, Cep.NoSkip, _ => 0L,
         (u, m) => MatchOut(u, m("login").ts, m("error").ts)))
     assert(h.input(7L, Ev(7, "login", 0L)).isEmpty)
-    assert(h.stateOf(7L).exists(_.inner.confs.nonEmpty))
+    assert(h.stateOf(7L).exists(_.confs.nonEmpty))
     // the partial expires at startTs + within (NFA.java prunes at
     // timestamp - startTs >= windowTime), so the timer fires exactly there
     assert(h.timerOf(7L).contains(100L))
     // short of the horizon: the partial survives and can still complete
     assert(h.advanceWatermarkTo(50L).isEmpty)
-    assert(h.stateOf(7L).exists(_.inner.confs.nonEmpty))
+    assert(h.stateOf(7L).exists(_.confs.nonEmpty))
     // past the horizon: the idle key's state is observably cleared
     assert(h.advanceWatermarkTo(150L).isEmpty)
     assert(h.stateOf(7L).isEmpty && h.timerOf(7L).isEmpty)

@@ -21,9 +21,8 @@ class CepStateCodecSpec extends SparkSuite {
     val conf: GroupCep.GConf[(Ev, Long)] = GroupCep.Conf(1, GroupCep.TillNext,
       Map(0 -> 1), Vector((0, (ev, 6L))), 10L, fresh = true, guard = 0,
       guardKind = GroupCep.GuardOnce)
-    val st = GroupCep.GArrivalState[Ev](nextSeq = 7L,
-      inner = GroupCep.GStreamState(Vector(conf), Vector.empty,
-        gated = Vector(Vector((1, (ev, 6L))))))
+    val st = GroupCep.GArrivalState[Ev](nextSeq = 7L, confs = Vector(conf),
+      gated = Vector(Vector((1, (ev, 6L)))))
     val env = CepStateCodec.enc(CepStateCodec.GroupVersion, st)
     assert(env.version == CepStateCodec.GroupVersion)
     val back = CepStateCodec.dec[GroupCep.GArrivalState[Ev]](env,
@@ -80,12 +79,35 @@ class CepStateCodecSpec extends SparkSuite {
     assert(ex.expected == CepStateCodec.GroupVersion)
   }
 
+  test("a nested-row checkpoint (version 6) fails by name in Cep.matchStreamFn's state function") {
+    // version 6 persisted GArrivalState wrapping a GStreamState (the row
+    // before it went flat); its payload must never reach kryo as the
+    // flat row — the named error, not a KryoException
+    val p = Cep.Pattern.begin[Ev]("v")(_.kind == "view")
+      .followedBy("e")(_.kind == "error")
+    val fn = CepStateCodec.versionedFn("GroupCep.GArrivalState",
+      CepStateCodec.GroupVersion,
+      Cep.matchStreamFn[Long, Ev, Long](p, _.ts, Cep.NoSkip, _ => 0L,
+        (k, _) => k))
+    val nested = CepStateEnvelope(6,
+      CepStateCodec.toBytes((7L, (Vector.empty[Int], Vector.empty[Int]))))
+    val resumed = TestGroupState.create[CepStateEnvelope](
+      Optional.of(nested), GroupStateTimeout.NoTimeout(), 0L,
+      Optional.empty[Long](), hasTimedOut = false)
+    val ex = intercept[CepStateVersionException] {
+      fn(1L, Iterator(Ev(1L, "error", 20L)), resumed).toList
+    }
+    assert(ex.found == 6)
+    assert(ex.expected == CepStateCodec.GroupVersion)
+    assert(ex.getMessage.contains("GroupCep.GArrivalState"))
+  }
+
   test("a wrong-version blob raises the named error before kryo decodes") {
     val env = CepStateCodec.enc(CepStateCodec.GroupVersion,
-      GroupCep.GStreamState[Ev](Vector.empty, Vector.empty))
+      GroupCep.GArrivalState[Ev](0L, Vector.empty))
     val stale = env.copy(version = CepStateCodec.GroupVersion - 1)
     val ex = intercept[CepStateVersionException] {
-      CepStateCodec.dec[GroupCep.GStreamState[Ev]](stale,
+      CepStateCodec.dec[GroupCep.GArrivalState[Ev]](stale,
         CepStateCodec.GroupVersion, "GroupCep spec")
     }
     assert(ex.found == CepStateCodec.GroupVersion - 1)

@@ -159,11 +159,11 @@ class CepTerminalNegationSpec extends SparkSuite {
         (_, m) => m("v").ts))
     assert(h.input(1L, Ev(1, "view", 0)).isEmpty)
     // the pending entry is state (gated) with the timer at its horizon
-    assert(h.stateOf(1L).exists(_.inner.gated.nonEmpty))
+    assert(h.stateOf(1L).exists(_.gated.nonEmpty))
     assert(h.timerOf(1L).contains(100L))
     // short of the horizon: still pending
     assert(h.advanceWatermarkTo(50L).isEmpty)
-    assert(h.stateOf(1L).exists(_.inner.gated.nonEmpty))
+    assert(h.stateOf(1L).exists(_.gated.nonEmpty))
     // horizon passes idle: the match emits from the timeout path
     assert(h.advanceWatermarkTo(150L) === Seq(0L))
     assert(h.stateOf(1L).isEmpty)
@@ -230,13 +230,13 @@ class CepTerminalNegationSpec extends SparkSuite {
         _ => 0L, (_, m) => (m("s").ts, m("e").ts)))
     // batch 1 completes the consuming steps; emission waits at the gate
     assert(h.input(1L, Ev(1, "a", 1), Ev(1, "d", 2)).isEmpty)
-    assert(h.stateOf(1L).exists(_.inner.gated.nonEmpty))
+    assert(h.stateOf(1L).exists(_.gated.nonEmpty))
     // batch 2's first event is not banned -> the match emits
     assert(h.input(1L, Ev(1, "z", 3)) === Seq((1L, 2L)))
     // same script, banned second batch -> killed
     assert(h.input(2L, Ev(2, "a", 1), Ev(2, "d", 2)).isEmpty)
     assert(h.input(2L, Ev(2, "b", 3)).isEmpty)
-    assert(h.stateOf(2L).forall(_.inner.gated.isEmpty) ||
+    assert(h.stateOf(2L).forall(_.gated.isEmpty) ||
       h.stateOf(2L).isEmpty)
   }
 }

@@ -558,7 +558,7 @@ class GroupCepSpec extends SparkSuite {
   test("streaming skip: a deferred match is released when its blocking branch EXPIRES on the timer") {
     // ((A B V)+ C) within 100: the start@2 branch completes at c@5 but
     // start@1 is older and still mid-repetition, so the match defers in
-    // GStreamState.pending. No further event arrives — the WATERMARK
+    // GArrivalState.pending. No further event arrives — the WATERMARK
     // passes start@1's within horizon, the idle-key timer fires, the
     // blocker dies, and the drain releases the deferred match.
     import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -617,7 +617,7 @@ class GroupCepSpec extends SparkSuite {
       === Seq(Seq(1L, 3L, 6L, 9L)))
     // nothing deferred survives the prune
     assert(h.stateOf(1L).forall(s =>
-      s.inner.pending.isEmpty && s.inner.confs.isEmpty))
+      s.pending.isEmpty && s.confs.isEmpty))
   }
 
   test("hot-key diagnostics: GroupCep HotKeyStats reports hottest key and peak branches") {
@@ -777,20 +777,21 @@ class GroupCepSpec extends SparkSuite {
       .followedBy(GPattern.begin[(RE, Long)]("m1")(_._1.name == "a")
         .followedBy("m2")(_._1.name == "b")).times(2)
       .followedBy("end")(_._1.name == "d").within(100L)
-    val compiled = GroupCep.compile(p)
-    val h = new VirtualClockHarness[Long, (RE, Long), Vector[GConf[(RE, Long)]], Int](
+    val h = new VirtualClockHarness[Long, (RE, Long),
+      GroupCep.GArrivalState[(RE, Long)], Int](
       GroupStateTimeout.EventTimeTimeout(),
-      GroupCep.matchStreamFn[Long, (RE, Long), Int](
-        compiled, _._2, _ => 0L, (_, g) => g("end").head._1.id))
+      GroupCep.matchStreamArrivalFn[Long, (RE, Long), Int](
+        p, _._2, _ => 0L, graft.streaming.Cep.NoSkip,
+        (_, g) => g("end").head._1.id))
     val (a1, b1) = (RE(41, "a", 2.0), RE(42, "b", 3.0))
     assert(h.input(1L, (c, 0L), (a1, 10L), (b1, 20L)).isEmpty)
-    assert(h.stateOf(1L).exists(_.nonEmpty))
+    assert(h.stateOf(1L).exists(_.confs.nonEmpty))
     // timer armed at oldest branch's startTs + within (the expiry
     // point: NFA.java prunes at timestamp - startTs >= windowTime)
     assert(h.timerOf(1L).contains(100L))
     // watermark short of the horizon: branches survive
     assert(h.advanceWatermarkTo(50L).isEmpty)
-    assert(h.stateOf(1L).exists(_.nonEmpty))
+    assert(h.stateOf(1L).exists(_.confs.nonEmpty))
     // watermark past startTs + within: all branches pruned, state removed
     assert(h.advanceWatermarkTo(150L).isEmpty)
     assert(h.stateOf(1L).isEmpty && h.timerOf(1L).isEmpty)
@@ -802,18 +803,20 @@ class GroupCepSpec extends SparkSuite {
       .followedBy(GPattern.begin[(RE, Long)]("m1")(_._1.name == "a")
         .followedBy("m2")(_._1.name == "b")).times(2)
       .followedBy("end")(_._1.name == "d").within(100L)
-    val compiled = GroupCep.compile(p)
-    val h = new VirtualClockHarness[Long, (RE, Long), Vector[GConf[(RE, Long)]], Int](
+    val h = new VirtualClockHarness[Long, (RE, Long),
+      GroupCep.GArrivalState[(RE, Long)], Int](
       GroupStateTimeout.EventTimeTimeout(),
-      GroupCep.matchStreamFn[Long, (RE, Long), Int](
-        compiled, _._2, _ => 0L, (_, g) => g("end").head._1.id))
+      GroupCep.matchStreamArrivalFn[Long, (RE, Long), Int](
+        p, _._2, _ => 0L, graft.streaming.Cep.NoSkip,
+        (_, g) => g("end").head._1.id))
     h.input(1L, (c, 0L))   // branch with startTs 0
     h.input(1L, (c, 80L))  // second branch with startTs 80
-    assert(h.stateOf(1L).exists(_.size === 2))
+    assert(h.stateOf(1L).exists(_.confs.size === 2))
     // wm=120: the startTs=0 branch is past its horizon (120 > 100), the
     // startTs=80 one is not (40 <= 100) — prune one, keep one, re-arm
     assert(h.advanceWatermarkTo(120L).isEmpty)
-    assert(h.stateOf(1L).exists(s => s.size === 1 && s.head.startTs === 80L))
+    assert(h.stateOf(1L).exists(s =>
+      s.confs.size === 1 && s.confs.head.startTs === 80L))
     assert(h.timerOf(1L).contains(180L))
     // wm past the survivor's horizon: state fully cleared
     assert(h.advanceWatermarkTo(181L).isEmpty)
@@ -826,11 +829,12 @@ class GroupCepSpec extends SparkSuite {
       .followedBy(GPattern.begin[(RE, Long)]("m1")(_._1.name == "a")
         .followedBy("m2")(_._1.name == "b")).times(2)
       .followedBy("end")(_._1.name == "d").within(100L)
-    val compiled = GroupCep.compile(p)
-    val h = new VirtualClockHarness[Long, (RE, Long), Vector[GConf[(RE, Long)]], Int](
+    val h = new VirtualClockHarness[Long, (RE, Long),
+      GroupCep.GArrivalState[(RE, Long)], Int](
       GroupStateTimeout.EventTimeTimeout(),
-      GroupCep.matchStreamFn[Long, (RE, Long), Int](
-        compiled, _._2, _ => 0L, (_, g) => g("end").head._1.id))
+      GroupCep.matchStreamArrivalFn[Long, (RE, Long), Int](
+        p, _._2, _ => 0L, graft.streaming.Cep.NoSkip,
+        (_, g) => g("end").head._1.id))
     val (a1, b1, a2, b2, d) = (RE(41, "a", 2.0), RE(42, "b", 3.0),
       RE(43, "a", 4.0), RE(44, "b", 5.0), RE(45, "d", 6.0))
     h.input(1L, (c, 0L), (a1, 10L), (b1, 20L))

@@ -1750,8 +1750,8 @@ class MatchRecognizeSpec extends SparkSuite {
             === expected, s"cut at $cut")
         } finally q.stop()
       }
-      // the arrival counter must survive state removal (GArrivalView's
-      // persistSeq contract): a
+      // the arrival counter must survive state removal (a ^-anchored
+      // state function keeps the key's row): a
       // key whose FIRST batch opens no branch must not re-tag its next
       // batch from 0 — user 3's view arrives in batch 2 but is the
       // partition's SECOND event, so ^ can never match it
