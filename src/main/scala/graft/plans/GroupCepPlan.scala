@@ -6,11 +6,12 @@ import graft.streaming.GroupCep.GPattern
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, Predicate, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, Predicate, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** CEP as a *planned* operator: custom `LogicalPlan` + `SparkStrategy` +
   * physical `SparkPlan` driving the [[GroupCep]] epsilon-NFA — the one
@@ -72,6 +73,15 @@ object GroupCepPlan {
   final case class GAltSpec(branches: Seq[Seq[GSpec]],
       strict: Boolean = false, any: Boolean = false) extends GSpec
 
+  /** What the operator emits per match (see [[matchGroupPattern]]). */
+  sealed trait OutputShape extends Serializable
+  /** One row per match: the per-step block (count + first captured row). */
+  case object MatchBlock extends OutputShape
+  /** One row per captured row: its step and ordinal, plus the block. */
+  case object RowBlock extends OutputShape
+  /** One row per match carrying every captured row, step-tagged. */
+  case object Captures extends OutputShape
+
   /** Serializable skeleton shipped to executors: structure only, leaf/
     * guard predicates referenced by index into the plan's expression
     * list (`untilIdx` -1 = none). A trailing top-level [[NotSkel]] is
@@ -97,7 +107,7 @@ object GroupCepPlan {
       stepNames: Seq[String], withinMicros: Option[Long],
       reluctant: Boolean, anchorHead: Boolean, anchorTail: Boolean,
       skip: Cep.AfterMatchSkip, sqlGreedy: Boolean,
-      allRows: Boolean,
+      shape: OutputShape,
       outputAttrs: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
     override def output: Seq[Attribute] = outputAttrs
     // the physical operator re-emits every child column per matched
@@ -114,7 +124,7 @@ object GroupCepPlan {
       case p: GroupCepMatchPlan =>
         GroupCepExec(p.keyExpr, p.tsExpr, p.tieExpr, p.skeleton, p.leafPreds,
           p.stepNames, p.withinMicros, p.reluctant, p.anchorHead,
-          p.anchorTail, p.skip, p.sqlGreedy, p.allRows, p.outputAttrs,
+          p.anchorTail, p.skip, p.sqlGreedy, p.shape, p.outputAttrs,
           planLater(p.child)) :: Nil
       case _ => Nil
     }
@@ -190,16 +200,15 @@ object GroupCepPlan {
     case _: NotSkel => Seq.empty
   }.toSet
 
-  /** Physical operator: a [[GroupCep.KeyRun]] over each sorted key run.
-    * Output: `key`, then per step its capture COUNT and every child
-    * column of the step's first captured event (null if none). */
+  /** Physical operator: a [[GroupCep.KeyRun]] over each sorted key run,
+    * emitting `shape` (see [[matchGroupPattern]]). */
   final case class GroupCepExec(
       keyExpr: Expression, tsExpr: Expression, tieExpr: Expression,
       skeleton: Seq[Skel], leafPreds: Seq[Expression],
       stepNames: Seq[String], withinMicros: Option[Long],
       reluctant: Boolean, anchorHead: Boolean, anchorTail: Boolean,
       skip: Cep.AfterMatchSkip, sqlGreedy: Boolean,
-      allRows: Boolean,
+      shape: OutputShape,
       outputAttrs: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
 
     override def output: Seq[Attribute] = outputAttrs
@@ -236,15 +245,18 @@ object GroupCepPlan {
       val (kE, tsE) = (keyExpr, tsExpr)
       val (skel, preds, names, within) =
         (skeleton, leafPreds, stepNames, withinMicros)
-      val (rel, aHead, aTail, skipStrat, sqlG, aRows) =
-        (reluctant, anchorHead, anchorTail, skip, sqlGreedy, allRows)
+      val (rel, aHead, aTail, skipStrat, sqlG, out) =
+        (reluctant, anchorHead, anchorTail, skip, sqlGreedy, shape)
       val outTypes = outputAttrs.map(_.dataType).toArray
       val numMatches = longMetric("numMatches")
       val maxKeyEvents = longMetric("maxKeyEvents")
       val maxKeyBranches = longMetric("maxKeyBranches")
 
       child.execute().mapPartitions({ rows =>
-        val keyEval = BindReferences.bindReference(kE, childOutput)
+        // keys compare by value: the key's unsafe bytes, so struct, array
+        // and binary keys form one run per distinct value
+        val keyProj = UnsafeProjection.create(Seq(kE), childOutput)
+        val keyType = kE.dataType
         val tsEval = BindReferences.bindReference(tsE, childOutput)
         val bound = preds.map { p =>
           val bp = Predicate.create(p, childOutput); bp.initialize(0); bp
@@ -274,7 +286,7 @@ object GroupCepPlan {
 
         new Iterator[InternalRow] {
           private val queue = new scala.collection.mutable.Queue[InternalRow]
-          private var curKey: Any = null
+          private var curKey: UnsafeRow = null
           private var haveKey = false
           // per-key-run arrival counter (EventId allocator)
           private var arrSeq = 0L
@@ -294,24 +306,30 @@ object GroupCepPlan {
           private var done = false
           // the key-run driver shared with the library routes (NFA,
           // terminal-negation gate, anchor gates / resolver / skip queue),
-          // rebuilt at each key switch. The exec's output is (count, first
+          // rebuilt at each key switch. The block shapes are (count, first
           // event) per step, which [[fillSteps]] reads straight off the run
           // encoding — so under strict contiguity the span-compressed
           // [[GroupCep.SpanCaps]] branches never materialize a per-event
           // capture vector (O(#runs) per branch instead of O(match
           // length)). Arrival tags ARE run positions, so SpanOps needs no
-          // event buffer — and with run-walk emission (ALL ROWS included:
-          // the per-row output derives from slot runs alone), nothing
-          // ever calls eventAt.
+          // event buffer — and with run-walk emission (the per-row shape
+          // included: it derives from slot runs alone), nothing ever calls
+          // eventAt. The capture shape reads every captured row, so it
+          // runs on the exact capture vectors.
           private def keyRun[C](ops: GroupCep.CapOps[(InternalRow, Long), C]) =
             new GroupCep.KeyRun[(InternalRow, Long), C](compiled, tsOf,
               skipStrat, ops, _._2, aHead, aTail, { m =>
                 numMatches.add(1); matchSeq += 1
-                if (aRows) emitAll(curKey, matchSeq, ops.runs(m), ops.runs(m))
-                else emit(curKey, matchSeq, ops.runs(m))
+                val key = curKey.get(0, keyType)
+                out match {
+                  case MatchBlock => emit(key, matchSeq, ops.runs(m))
+                  case RowBlock =>
+                    emitAll(key, matchSeq, ops.runs(m), ops.runs(m))
+                  case Captures => emitCaptures(key, matchSeq, ops.toVector(m))
+                }
               })
           private val spanOps =
-            if (!compiled.strictSpans) null
+            if (!compiled.strictSpans || out == Captures) null
             else new GroupCep.SpanOps[(InternalRow, Long)](_._2.toInt,
               i => throw new IllegalStateException(
                 s"GroupCepExec never materializes captures (pos $i)"))
@@ -370,6 +388,19 @@ object GroupCepPlan {
             }
           }
 
+          /** The capture shape: every captured row in capture order, as
+            * (step index, child row). */
+          private def emitCaptures(key: Any, matchNum: Long,
+              caps: Vector[(Int, (InternalRow, Long))]): Unit = {
+            val tagged = caps.map { case (slot, (r, _)) =>
+              new GenericInternalRow(Array[Any](slotStep(slot),
+                new GenericInternalRow(Array.tabulate[Any](nCols)(
+                  c => r.get(c, colTypes(c))))))
+            }
+            queue += proj(new GenericInternalRow(Array[Any](key, matchNum,
+              new GenericArrayData(tagged)))).copy()
+          }
+
           private def emit(key: Any, matchNum: Long,
               runs: Iterator[GroupCep.CapRun[(InternalRow, Long)]]): Unit = {
             val vals = new Array[Any](2 + nSteps * (1 + nCols))
@@ -403,8 +434,8 @@ object GroupCepPlan {
                     i += 1
                   }
                   val row = if (retainable) raw.copy() else raw
-                  val k = keyEval.eval(row)
-                  if (!haveKey || !java.util.Objects.equals(k, curKey)) {
+                  val k = keyProj(row)
+                  if (!haveKey || k != curKey) {
                     // a key switch flushes the finished run's deferred
                     // emissions, then starts a fresh key run
                     flushKey()
@@ -413,10 +444,7 @@ object GroupCepPlan {
                     matchSeq = 0L
                     run = if (spanOps != null) keyRun(spanOps)
                           else keyRun(GroupCep.vecOps[(InternalRow, Long)])
-                    curKey = k match {
-                      case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
-                      case other => other
-                    }
+                    curKey = k.copy()
                     haveKey = true
                   }
                   val w = (row, arrSeq)
@@ -459,16 +487,22 @@ object GroupCepPlan {
     * [[Cep.NegGate]] semantics. It combines with neither a non-default
     * `skip`, a selection mode, nor the $ anchor.
     *
-    * Anchors: ^/$ gate candidates on the key run's first/last row. They
-    * run without a selection mode only when every start completes at
-    * most one candidate (no quantified element, alternation or
-    * followedByAny); otherwise `reluctant` or `sqlGreedy` picks among a
-    * start's gate-passing candidates.
+    * Anchors: ^ lets only the key run's first row open a branch; $ keeps
+    * the candidates ending on its last row — all of them, or under
+    * `reluctant`/`sqlGreedy` the preferred one per start.
     *
-    * @return one row per match: `key`, `match_number` (1-based per-key
-    *         ordinal in emission order), then per step `<step>_count` and
-    *         every child column as `<step>_<col>` (first captured event of
-    *         the step's group, null where the step captured nothing).
+    * @return `key`, `match_number` (1-based per-key ordinal in emission
+    *         order), then per `shape`:
+    *          - [[MatchBlock]]: one row per match; per step `<step>_count`
+    *            and every child column as `<step>_<col>` (first captured
+    *            event of the step's group, null where it captured nothing);
+    *          - [[RowBlock]]: one row per captured event in capture order:
+    *            `cls_idx` (its step index), `within_ord` (1-based ordinal
+    *            within that step's captures), then the match's block;
+    *          - [[Captures]]: one row per match; `captures`, every captured
+    *            child row in capture order as a (`step` index, `row`)
+    *            struct. Steps index the distinct leaf names in
+    *            declaration order.
     */
   def matchGroupPattern(df: DataFrame, key: Column, ts: Column, tie: Column,
       elems: Seq[GSpec], withinMicros: Option[Long] = None,
@@ -476,7 +510,7 @@ object GroupCepPlan {
       anchorHead: Boolean = false, anchorTail: Boolean = false,
       skip: Cep.AfterMatchSkip = Cep.NoSkip,
       sqlGreedy: Boolean = false,
-      allRows: Boolean = false): DataFrame = {
+      shape: OutputShape = MatchBlock): DataFrame = {
     require(elems.nonEmpty, "at least one pattern element")
     val spark = df.sparkSession
     register(spark)
@@ -518,14 +552,6 @@ object GroupCepPlan {
     val placeholder = GroupCep.compile(buildPattern(skeleton, withinMicros,
       reluctant, sqlGreedy, anchorHead || anchorTail, _ => _ => false))
     GroupCep.KeyRun.check(placeholder, skip, anchorTail)
-    // without a selection mode to choose, an anchored start must not be
-    // able to complete two candidates
-    if ((anchorHead || anchorTail) && !reluctant && !sqlGreedy)
-      require(placeholder.oneCandidatePerStart,
-        "planned ^/$ anchors require a selection mode (reluctant or " +
-          "sqlGreedy) unless every start completes at most one " +
-          "candidate (no quantified element, alternation or " +
-          "followedByAny)")
     // negative elements capture nothing: they contribute no output slots
     def leafNames(e: GSpec): Seq[String] = e match {
       case l: GLeafSpec => Seq(l.name)
@@ -535,35 +561,35 @@ object GroupCepPlan {
     }
     val stepNames = elems.flatMap(leafNames).distinct
     val keyE = resolve(key)
-    // reject keys without value equality on the evaluated path (the
-    // PlanKeys contract)
-    PlanKeys.requireValueEqualityKey(keyE)
     // match_number = 1-based per-key match ordinal in emission order —
     // the SAME ordinal the library drivers produce (batch) and carry in
-    // keyed state (streaming), so MATCH_NUMBER() queries route planned
-    // without the routing decision changing semantics
-    // ALL ROWS adds the per-row pair (step index of the row's variable,
-    // 1-based ordinal within that variable's captures) ahead of the
-    // shared per-match final block — RUNNING measures derive from the
-    // pair + block as plain column expressions (codegen'd CASEs)
-    val perRowAttrs =
-      if (!allRows) Nil
-      else Seq(
-        AttributeReference("cls_idx",
-          org.apache.spark.sql.types.IntegerType, nullable = false)(),
-        AttributeReference("within_ord", LongType, nullable = false)())
-    val outAttrs = (AttributeReference("key", keyE.dataType)() +:
+    // keyed state (streaming)
+    def blockAttrs = stepNames.flatMap { name =>
+      AttributeReference(s"${name}_count", LongType, nullable = false)() +:
+        child.output.map(a =>
+          AttributeReference(s"${name}_${a.name}", a.dataType, nullable = true)())
+    }
+    val shapeAttrs = shape match {
+      case MatchBlock => blockAttrs
+      case RowBlock =>
+        AttributeReference("cls_idx", IntegerType, nullable = false)() +:
+          AttributeReference("within_ord", LongType, nullable = false)() +:
+          blockAttrs
+      case Captures =>
+        val tagged = StructType(Seq(
+          StructField("step", IntegerType, nullable = false),
+          StructField("row", StructType(child.output.map(a =>
+            StructField(a.name, a.dataType, a.nullable))), nullable = false)))
+        Seq(AttributeReference("captures",
+          ArrayType(tagged, containsNull = false), nullable = false)())
+    }
+    val outAttrs = AttributeReference("key", keyE.dataType)() +:
       AttributeReference("match_number", LongType, nullable = false)() +:
-      perRowAttrs) ++
-      stepNames.flatMap { name =>
-        AttributeReference(s"${name}_count", LongType, nullable = false)() +:
-          child.output.map(a =>
-            AttributeReference(s"${name}_${a.name}", a.dataType, nullable = true)())
-      }
+      shapeAttrs
     GraftSqlShim.ofRows(spark, GroupCepMatchPlan(
       keyE, resolve(ts), resolve(tie), skeleton, predsB.result(), stepNames,
       withinMicros, reluctant, anchorHead, anchorTail, skip, sqlGreedy,
-      allRows, outAttrs, child))
+      shape, outAttrs, child))
   }
 }
 

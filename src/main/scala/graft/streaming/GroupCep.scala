@@ -790,21 +790,6 @@ object GroupCep {
       quants == 1 && !alt
     }
 
-    /** Every start completes at most ONE candidate: no quantified group,
-      * no alternation fork and no followedByAny boundary, so each
-      * branch follows one deterministic path (negations, untils and
-      * `within` only kill). The ^/$ anchor gates then need no selection
-      * mode to choose among same-start candidates. */
-    private[graft] val oneCandidatePerStart: Boolean = {
-      def walk(n: Node): Boolean = n match {
-        case SNode(_, mode) => mode != TillAny
-        case g: GNode => g.min == 1 && g.max == 1 && !g.optional &&
-          g.mode != TillAny && g.children.forall(walk)
-        case _: ANode => false
-      }
-      realRoot.children.forall(walk)
-    }
-
     private def declMode(n: Node): Int = n match {
       case SNode(_, m) => m
       case g: GNode => g.mode
@@ -1601,14 +1586,16 @@ object GroupCep {
     * preference-select, then after-match skip):
     *  - the $ anchor ⇒ every candidate buffers to the end of the key run
     *    (the first completion per start may fail the gate a longer
-    *    candidate passes), then the gate filters on arrival tags, the
-    *    most-preferred gate-passing candidate per start wins, and
-    *    emission is start-ordered — requires the pattern compiled with
+    *    candidate passes), then the gate keeps the candidates ending on
+    *    the run's last arrival tag. Under a selection mode the
+    *    most-preferred of them per start wins and emission is
+    *    start-ordered — a reluctant pattern must be compiled with
     *    [[GPattern.deferredReluctant]] so [[advance]]'s in-flight
     *    shortest-per-start kill stays off (greedy selection always
-    *    defers; a [[Compiled.oneCandidatePerStart]] pattern has nothing
-    *    to select). The ^ anchor needs no buffering: [[KeyRun]] lets
-    *    only the run's arrival-0 event open a branch;
+    *    defers). Without one every gate-passing candidate emits, in the
+    *    order [[advance]] produced them. The ^ anchor needs no
+    *    buffering: [[KeyRun]] lets only the run's arrival-0 event open a
+    *    branch;
     *  - deferred selection ⇒ [[ReluctantResolver]];
     *  - non-default skip ⇒ [[GroupSkipQueue]] (composing with the
     *    resolver when both apply);
@@ -1617,31 +1604,22 @@ object GroupCep {
   private final class GroupRunEmitter[E, C](
       c: Compiled[E], ts: E => Long, skip: Cep.AfterMatchSkip,
       anchorTail: Boolean, tagOf: E => Long, ops: CapOps[E, C]) {
-    if (anchorTail) {
-      require((c.reluctantSel && c.reluctantDeferred) || c.greedySel ||
-        c.oneCandidatePerStart,
-        "anchor gates need DEFERRED selection (compile a reluctant " +
-          "pattern with deferredReluctant; greedy selection always " +
-          "defers) or a pattern completing at most one candidate per " +
-          "start — the gate-then-select order cannot run on " +
-          "in-flight-killed candidates")
-    }
-    // $: per start, the most-preferred candidate STILL able to pass the
-    // gate — O(starts) memory, not O(candidates). The gate folds
-    // VERSIONED by each candidate's last captured tag: events arrive in
-    // tag order, so a newly completed candidate ends at-or-after every
-    // buffered one, and a buffered candidate ending EARLIER is already
-    // dead (the run now provably extends past it) — replace it; equal
-    // ends compete on [[preferC]]. Equivalent to buffering every
+    private val selects = c.reluctantSel || c.greedySel
+    // $: the candidates STILL able to pass the gate — all of them without
+    // a selection mode, else the most-preferred per start (O(starts)
+    // memory, not O(candidates)). Events arrive in tag order, so a newly
+    // completed candidate ends at-or-after every buffered one, and a
+    // buffered candidate ending EARLIER is already dead (the run now
+    // provably extends past it): a newer last tag clears the buffer,
+    // equal ends compete on [[preferC]]. Equivalent to buffering every
     // candidate and gate-then-select at run end, which is what
     // O(views x errors) per key would have cost at 100x scale.
     private val aBest =
-      if (anchorTail) scala.collection.mutable.LinkedHashMap
-        .empty[E, (Long, C)]
+      if (anchorTail && selects)
+        scala.collection.mutable.LinkedHashMap.empty[E, C]
       else null
-    // the newest last tag held — every candidate completing on one
-    // event shares that event's tag, so a newer tag proves every
-    // buffered candidate dead (O(candidates per event), not O(matches))
+    private var aAll = Vector.empty[C]
+    // the newest last tag held
     private var aBestLt = -1L
     private val rr =
       if (!anchorTail && c.selDeferred) new ReluctantResolver[E, C](c, ts, ops)
@@ -1668,14 +1646,18 @@ object GroupCep {
         emit: C => Unit): Vector[Conf[E, C]] =
       if (anchorTail) {
         ms.foreach { m =>
-          val s0 = ops.head(m)
           val lt = tagOf(ops.last(m))
-          if (lt > aBestLt) { aBest.clear(); aBestLt = lt }
-          aBest.get(s0) match {
-            case Some((plt, p)) if plt == lt =>
-              aBest(s0) = (lt, preferC(c, p, m, ops))
-            case Some((plt, _)) if plt > lt => () // defensive: tag order
-            case _ => aBest(s0) = (lt, m)
+          if (lt > aBestLt) {
+            if (aBest != null) aBest.clear()
+            aAll = Vector.empty
+            aBestLt = lt
+          }
+          if (lt == aBestLt) { // an older end is already dead
+            if (aBest == null) aAll :+= m
+            else {
+              val s0 = ops.head(m)
+              aBest(s0) = aBest.get(s0).fold(m)(preferC(c, _, m, ops))
+            }
           }
         }
         confs
@@ -1706,10 +1688,11 @@ object GroupCep {
       * (only consulted by the $ gate). */
     def finish(lastTag: Long, emit: C => Unit): Unit =
       if (anchorTail) {
-        val selected = aBest.iterator.collect {
-          case (_, (lt, m)) if lt == lastTag => m
-        }.toVector
-          .sortBy(m => (ts(ops.head(m)), tagOf(ops.head(m))))
+        val selected =
+          if (aBestLt != lastTag) Vector.empty
+          else if (aBest == null) aAll
+          else aBest.valuesIterator.toVector
+            .sortBy(m => (ts(ops.head(m)), tagOf(ops.head(m))))
         if (sq == null) selected.foreach(emit)
         else {
           // skip runs LAST: over the selected matches in start order
@@ -1935,35 +1918,27 @@ object GroupCep {
       anchorHead, anchorTail, (_, groups) => finish(groups), null)
 
   /** Run a group pattern over a batch Dataset: one event-time-sorted scan
-    * per key — the batch driver behind every library route
-    * (`Cep.matchBatchGroups`, MATCH_RECOGNIZE). `skip` runs the
-    * reference's deferred-emission after-match machinery
-    * ([[GroupSkipQueue]]). Event identity is the reference's SharedBuffer
-    * EventId: each event is tagged with its arrival position in the key's
-    * sorted run, so value-identical events at one timestamp are distinct
-    * branch states. ^/$ anchors are a selection-mode composition (gate,
-    * then select, then skip). */
+    * per key — the batch driver behind the DSL's library route
+    * (`Cep.matchBatchGroups`). `skip` runs the reference's
+    * deferred-emission after-match machinery ([[GroupSkipQueue]]). Event
+    * identity is the reference's SharedBuffer EventId: each event is
+    * tagged with its arrival position in the key's sorted run, so
+    * value-identical events at one timestamp are distinct branch
+    * states. */
   def matchBatchGroups[K, E, O: Encoder](ds: Dataset[E], key: E => K,
       ts: E => Long, pattern: GPattern[E],
       tie: E => Long = (_: E) => 0L,
       skip: Cep.AfterMatchSkip = Cep.NoSkip,
-      stats: Cep.HotKeyStats = null,
-      anchorHead: Boolean = false,
-      anchorTail: Boolean = false)(
+      stats: Cep.HotKeyStats = null)(
       finish: (K, Map[String, Seq[E]]) => O)(
       implicit ke: Encoder[K]): Dataset[O] = {
-    val anchored = anchorHead || anchorTail
-    val compiled = compileBatch(pattern, anchored)
-    if (anchored) require(compiled.reluctantSel || compiled.greedySel,
-      "anchor gates are a selection-mode composition (reluctant or " +
-        "greedySelect); plain anchored group patterns post-filter on " +
-        "boundary flags instead")
-    KeyRun.check(compiled, skip, anchorTail) // validate eagerly
+    val compiled = compile(liftG(pattern))
+    KeyRun.check(compiled, skip, anchorTail = false) // validate eagerly
     ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
       val wrapped = it.toVector.sortBy(e => (ts(e), tie(e)))
         .zipWithIndex.map { case (e, i) => (e, i.toLong) }
-      runKey[K, E, O](k, wrapped, w => ts(w._1), compiled, skip, anchorHead,
-        anchorTail, finish, stats).iterator
+      runKey[K, E, O](k, wrapped, w => ts(w._1), compiled, skip,
+        anchorHead = false, anchorTail = false, finish, stats).iterator
     }
   }
 

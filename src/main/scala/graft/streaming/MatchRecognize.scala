@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.{array, coalesce, col, expr, lit, max, min, struct, unix_micros, when}
+import org.apache.spark.sql.functions.{array, coalesce, col, expr, lit, unix_micros, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 /** MATCH_RECOGNIZE-style SQL entry point over the CEP library — beyond
@@ -88,14 +88,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   *                                  -- ^ ALSO works on streaming
   *                                  -- clauses via the cross-batch
   *                                  -- arrival ordinal (the
-  *                                  -- key-run ^ start rule);
-  *                                  -- flat unquantified clauses
-  *                                  -- route onto the PLANNED
-  *                                  -- GroupCepExec with the anchors
-  *                                  -- as NFA-level gates — one
-  *                                  -- exchange, no window; quantified/
-  *                                  -- grouped ones post-filter on
-  *                                  -- boundary-struct flags);
+  *                                  -- key-run ^ start rule); batch
+  *                                  -- anchors gate inside the planned
+  *                                  -- GroupCepExec — one exchange, no
+  *                                  -- window);
   *                                  -- INTERIOR top-level anchors =
   *                                  -- SQL:2016 degenerate boundary
   *                                  -- semantics: `A? ^ B` rewrites to
@@ -138,11 +134,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * evaluated as Catalyst columns BEFORE the NFA (codegen'd, pushed into
   * the scan where possible); the NFA then reads pre-computed booleans
   * off each row. The input is projected to the columns the measures
-  * actually reference, so captured groups stay narrow. One hash shuffle
-  * on the partition key (groupByKey), one in-memory sort per key — the
-  * planned operator ([[graft.plans.GroupCepPlan]]) remains the
-  * shuffle-elidable performance path; this is the SQL-text convenience
-  * surface over the same NFA core.
+  * actually reference, so captured groups stay narrow. BATCH inputs plan
+  * onto the one planned operator ([[graft.plans.GroupCepPlan]]): one hash
+  * exchange and one sort on (key, ord, tie), both elidable by upstream
+  * partitioning. Measures the operator's per-match block carries lower
+  * to plain columns; every other clause reads the operator's captured
+  * rows through the same row-level measure evaluator streaming uses.
   *
   * STREAMING inputs route the same parsed clause onto
   * [[GroupCep.streamDriver]]: partial matches persist in keyed state
@@ -519,11 +516,6 @@ object MatchRecognize {
     // standard's semantics evaluate to. Anchors nested inside groups
     // still reject in the grammar.
     var neverMatches = false
-    // variables the interior-anchor rewrite dropped (they matched ZERO
-    // rows): the library measure evaluator yields NULL for them
-    // (groups.getOrElse), but the planned operators' output schemas
-    // would not carry their columns — those routes are disabled below
-    var droppedVars = Set.empty[String]
     locally {
       var depth = 0
       val tops = Vector.newBuilder[(Char, Int)]
@@ -580,15 +572,11 @@ object MatchRecognize {
             // rows below, so quantifiers/structure/duplicates drop
             allNames.distinct.mkString(" ")
           else ptext.substring(from, until)
+        // measures over a variable of a dropped (zero-rows) segment
+        // evaluate to NULL/0: it is no step, so the clause reads the
+        // captured rows, where it has none
         require(ptext.trim.nonEmpty,
           "interior anchors left an empty pattern body")
-        if (!neverMatches)
-          // variables of the dropped (zero-rows) segments: measures
-          // over them must evaluate to NULL/0, which only the library
-          // path's groups.getOrElse does — the planned routes' output
-          // schemas lack their columns and are disabled below
-          droppedVars =
-            allNames.toSet -- patVarNames(parsePattern(ptext).elems)
       }
     }
     if (neverMatches) { anchorStart = false; anchorEnd = false }
@@ -708,7 +696,7 @@ object MatchRecognize {
       // of input, the anchor gates filter BEFORE per-start preference
       // selection (a shortest completion failing $ must lose to a
       // longer same-start candidate that reaches the partition tail),
-      // all inside the GroupCep anchored driver. STREAMING: the ^
+      // all inside the operator's key-run driver. STREAMING: the ^
       // head anchor composes too (the NFA-level arrival-0 gate means
       // every candidate is anchored by construction, so the immediate
       // shortest-per-start selection stays exact); $ — and therefore
@@ -722,12 +710,6 @@ object MatchRecognize {
       // composes too — the queue runs over the gate-passing selected
       // candidates at end of the key run.
     }
-    // batch reluctant × anchors: route through the GroupCep anchored
-    // driver (NFA-side gates), not the boundary-flag post-filter
-    val reluctantAnchored = hasReluctant && anchored && !df.isStreaming
-    // greedy selection × batch anchors: the same gate-then-select
-    // driver, greedy polarity (round 11 late)
-    val greedyAnchored = sqlGreedy && anchored && !df.isStreaming
     // SQL:2016 ALL ROWS PER MATCH WITH UNMATCHED ROWS (round 10, beyond
     // Flink 1.7): rows that are part of NO emitted match are also
     // output, with NULL measures, alongside the pass-through ORDER BY
@@ -778,43 +760,31 @@ object MatchRecognize {
     // contract). Sub-millisecond ordering within one key falls back to
     // the tie column under streaming.
     val streamingIn = df.isStreaming
-    // Anchors are enforced by post-filtering candidate matches on the
-    // partition-boundary flags below. That is EXACT under the default
-    // all-starts skip (candidates are independent) but would mis-consume
-    // the skip queue under PAST LAST ROW / TO FIRST / TO LAST (an
-    // anchor-rejected candidate must not suppress overlapping ones), and
-    // partition boundaries are unknowable on an unbounded stream — both
-    // combinations reject rather than approximate.
-    // The ^ head anchor alone IS knowable on a stream (round 10): the
-    // cross-batch arrival ordinal pins the partition's first event, so
-    // the streaming driver gates branch creation on arrival tag 0
-    // (GroupCep.KeyRun's ^ start rule) instead of the batch boundary-flag
-    // post-filter — for any pattern shape. $ still requires batch input
-    // — the partition tail is unknowable before end of input.
-    val anchorStreamHead = anchored && streamingIn
+    // Anchors gate inside the key-run driver (GroupCep.KeyRun): ^ lets
+    // only the partition's arrival-0 row open a branch — on a stream too,
+    // where the cross-batch arrival ordinal pins the partition's first
+    // event — and $ keeps the candidates ending on the partition's last
+    // row, which only batch input can know. Under the default all-starts
+    // skip the candidates are independent, so the gate is exact; a
+    // non-default skip must not be consumed by an anchor-rejected
+    // candidate, which only the selection modes' gate-select-skip order
+    // guarantees — other combinations reject rather than approximate.
     if (anchored) {
       if (streamingIn) require(anchorStart && !anchorEnd,
         "under streaming only the ^ head anchor is supported; the $ " +
           "tail requires batch input (the partition end is unknowable " +
           "on an unbounded stream)")
-      // round 11: anchors × skip composes on the BATCH RELUCTANT route
-      // (SQL:2016 evaluation order — the gates filter candidates, the
-      // preference selects per start, THEN the skip queue consumes over
-      // the selected matches; under $ + PAST LAST ROW that collapses
-      // each partition to its earliest-start match). The boundary-flag
-      // post-filter path still rejects: an anchor-rejected candidate
-      // must not consume the skip queue there.
+      // round 11: anchors × skip composes on batch selection-mode
+      // clauses (SQL:2016 evaluation order — the gates filter
+      // candidates, the preference selects per start, THEN the skip
+      // queue consumes over the selected matches; under $ + PAST LAST
+      // ROW that collapses each partition to its earliest-start match)
       require(skip == Cep.NoSkip ||
         ((hasReluctant || sqlGreedy) && !streamingIn),
         "^/$ anchors compose with a non-default AFTER MATCH SKIP only " +
           "on batch selection-mode patterns (the gate-select-skip " +
           "driver)")
     }
-    // the batch boundary-flag machinery (window pass + candidate
-    // post-filter) serves only the batch library path; the reluctant
-    // composition gates inside the GroupCep driver instead
-    val anchorBatch = anchored && !streamingIn && !reluctantAnchored &&
-      !greedyAnchored
     def ordExpr(name: String): Column = df.schema(name).dataType match {
       case TimestampType =>
         if (streamingIn) expr(s"unix_millis(`$name`)") else unix_micros(col(name))
@@ -872,11 +842,8 @@ object MatchRecognize {
     // Catalyst expression and the NFA still reads one boolean per row.
     // At the first row of a partition PREV is NULL, so the predicate
     // coalesces to false — the reference's semantics. Plan note: the
-    // window hash-partitions on the raw key column while groupByKey
-    // partitions on the encoded key, so Catalyst keeps BOTH exchanges —
-    // the known library-path trade (same data volume twice); the planned
-    // GroupCepExec path declares its distribution and would elide one, but
-    // has no PREV surface. qc16 still runs at 0.78x its pure-SQL oracle.
+    // window and the planned operator both cluster on the raw key column,
+    // so EnsureRequirements reuses the window's exchange — one shuffle.
     // STREAMING (round 9): a window function cannot be planned on a
     // stream, so PREV rides keyed state instead — the driver carries the
     // key's last maxOffset rows across micro-batches
@@ -942,29 +909,16 @@ object MatchRecognize {
         Seq(ordExpr(ordCol).as("__mr_ord"),
           tieCol.map(ordExpr).getOrElse(lit(0L)).as("__mr_tie")) ++
         vars.map(v => predCol(v).as(s"__mr_$v")): _*)
-    // every variable name appearing anywhere in PATTERN — measures over
-    // a variable NOT in this set stay on the library path, which gives
-    // them the SQL-defined degenerate results (COUNT = 0, null
-    // positional); the planned routes lower measures to columns named
-    // after pattern steps and have no column for an unknown variable
+    // every variable name appearing anywhere in PATTERN — a measure over
+    // any other name (a SUBSET, a variable the interior-anchor rewrite
+    // dropped) gets its SQL-defined degenerate result (COUNT = 0, null
+    // positional) from the captured rows, never a step column
     def allPatternVars(es: Vector[PElem]): Set[String] = es.flatMap {
       case PVar(v, _) => Seq(v)
       case PGrp(in, _) => allPatternVars(in)
       case PAlt(bs, _) => bs.flatMap(allPatternVars)
     }.toSet
     val patternVars = allPatternVars(elems)
-    // ONE ROW batch clauses — flat or grouped — route onto the planned
-    // GroupCepExec when its output shape can carry the measures. The
-    // planner then owns the data movement (exactly one exchange + one
-    // sort from EnsureRequirements, elidable by upstream partitioning)
-    // and predicates run codegen'd. The operator emits per leaf
-    // `<name>_count` + the FIRST captured event's columns, so
-    // FIRST()/COUNT() over any variable and any position over an
-    // UNQUANTIFIED variable (first = last = only) are expressible, and
-    // MATCH_NUMBER() maps to the operator's per-key ordinal column;
-    // LAST/aggregates over a repeated variable, {0,..} quantifiers,
-    // ALL ROWS, PREV, SUBSET, and non-default skip stay on the library
-    // path.
     def quantifiedVars(es: Vector[PElem], inQuant: Boolean): Set[String] =
       es.flatMap {
         case PVar(v, q) =>
@@ -972,211 +926,295 @@ object MatchRecognize {
         case PGrp(in, q) => quantifiedVars(in, inQuant || q.isDefined)
         case PAlt(bs, _) => bs.flatMap(b => quantifiedVars(b, inQuant = true))
       }.toSet
-    def quantOf(q: String): Option[(Int, Int, Boolean)] = q match {
-      // round 11: reluctant quantifiers route planned too — the bounds
-      // parse from the base quantifier; the reluctant marker itself
-      // becomes the operator's pattern-level flag
-      case r if isReluctantQ(r) => quantOf(r.dropRight(1))
-      case "?" => Some((1, 1, true))
-      case "*" => Some((1, Int.MaxValue, true))
-      case "+" => Some((1, Int.MaxValue, false))
-      case b => b.substring(1, b.length - 1).split(",", -1) match {
-        case Array(n) if n.toInt >= 1 => Some((n.toInt, n.toInt, false))
-        case Array(n, "") if n.toInt >= 1 =>
-          Some((n.toInt, Int.MaxValue, false))
-        case Array(n, m) if n.toInt >= 1 =>
-          Some((n.toInt, m.toInt, false))
-        case _ => None // {0,..}: the library path owns zero-min repeats
-      }
-    }
-    def quantsOk(es: Vector[PElem]): Boolean = es.forall {
-      case PVar(_, q) => q.forall(quantOf(_).isDefined)
-      case PGrp(in, q) => q.forall(quantOf(_).isDefined) && quantsOk(in)
-      // round 11: alternation/PERMUTE joins the planned twin (GAltSpec)
-      case PAlt(bs, q) => q.forall(quantOf(_).isDefined) && bs.forall(quantsOk)
-    }
     val qVars = quantifiedVars(elems, inQuant = false)
-    // round 11: the reluctant compositions route planned — ^/$ anchors
-    // (buffer-to-run-end gate-before-selection) and non-default skip
-    // both live in GroupCepExec via the same GroupCep.KeyRun the
-    // library drivers run. A FLAT unquantified clause needs no
-    // selection mode under anchors (each start completes at most one
-    // candidate), so its anchors become NFA-level gates with NO
-    // boundary-flag window pass. Other anchored and plain
-    // non-default-skip group clauses keep their library routes
-    // (boundary-flag window / groupByKey skip queue) unchanged.
-    val flatUnquantified = !nested && elems.forall(_.quant.isEmpty)
-    val groupPlanRoutable = !streamingIn &&
-      (!anchored || hasReluctant || sqlGreedy || flatUnquantified) &&
-      !neverMatches && droppedVars.isEmpty &&
-      quantsOk(elems) &&
-      (skip == Cep.NoSkip || hasReluctant || sqlGreedy) &&
-      prevVars.isEmpty &&
-      subsets.isEmpty && excluded.isEmpty &&
-      AllRowsRe.findFirstMatchIn(clause).isEmpty &&
-      measures.nonEmpty && measures.forall { m =>
-        (m match { case FinalMeasure(i) => i; case o => o }) match {
-          case PosMeasure(v, _, _, last, 0) =>
-            patternVars(v) && (!qVars(v) || !last)
-          case CountMeasure(v, _) => patternVars(v)
-          // round 10: GroupCepExec emits the per-key match ordinal, so
-          // MATCH_NUMBER() queries take the planned route too
-          case MatchNumMeasure(_) => true
-          case _ => false
-        }
+    // (min, max, optional) of a quantifier as the GPattern builder reads
+    // them: {0,m} and {0,} reach `times(0, m)`, which makes the element
+    // optional; {0} is rejected there by name
+    def quantOf(q: String): (Int, Int, Boolean) = q match {
+      case r if isReluctantQ(r) => quantOf(r.dropRight(1))
+      case "?" => (1, 1, true)
+      case "*" => (1, Int.MaxValue, true)
+      case "+" => (1, Int.MaxValue, false)
+      case b => b.substring(1, b.length - 1).split(",", -1) match {
+        case Array(n) => (n.toInt, n.toInt, false)
+        case Array(n, "") => (n.toInt, Int.MaxValue, false)
+        case Array(n, m) => (n.toInt, m.toInt, false)
       }
-    if (groupPlanRoutable) {
-      import graft.plans.GroupCepPlan.{GGroupSpec, GLeafSpec, GSpec}
-      def toSpec(e: PElem): GSpec = e match {
-        case PVar(v, None) => GLeafSpec(v, col(s"__mr_$v"), strict = true)
-        case PVar(v, Some(q)) =>
-          val (mn, mx, opt) = quantOf(q).get
-          GGroupSpec(Seq(GLeafSpec(v, col(s"__mr_$v"))), mn, mx,
-            optional = opt, consecutive = true, strict = true,
-            relMark = sqlGreedy && isReluctantQ(q))
-        case PGrp(in, q) =>
-          val (mn, mx, opt) = q.flatMap(quantOf).getOrElse((1, 1, false))
-          GGroupSpec(in.map(toSpec), mn, mx,
-            optional = opt, consecutive = true, strict = true,
-            relMark = sqlGreedy && q.exists(isReluctantQ))
-        case PAlt(branches, q) =>
-          val alt = graft.plans.GroupCepPlan.GAltSpec(
-            branches.map(_.map(toSpec)), strict = true)
-          q.flatMap(quantOf) match {
-            case None => alt
-            case Some((mn, mx, opt)) =>
-              // a quantified alternation reuses the group loop machinery
-              GGroupSpec(Seq(alt), mn, mx,
-                optional = opt, consecutive = true, strict = true,
-                relMark = sqlGreedy && q.exists(isReluctantQ))
-          }
-      }
-      val planned = graft.plans.GroupCepPlan.matchGroupPattern(basePrepared,
-        col(partCol), col("__mr_ord"), col("__mr_tie"),
-        elems.map(toSpec), withinMicros = withinOrd,
-        reluctant = hasReluctant,
-        anchorHead = anchored && anchorStart,
-        anchorTail = anchored && anchorEnd,
-        skip = skip, sqlGreedy = sqlGreedy)
-      return planned.select(col("key").as(partCol) +: measures.map { m =>
-        (m match { case FinalMeasure(i) => i; case o => o }) match {
-          case PosMeasure(v, c, alias, _, _) => col(s"${v}_${c}").as(alias)
-          case CountMeasure(v, alias) => col(s"${v}_count").as(alias)
-          case MatchNumMeasure(alias) => col("match_number").as(alias)
-          case other => throw new IllegalStateException(s"unroutable $other")
-        }
-      }: _*)
     }
 
-    // ALL ROWS PER MATCH planned route (round 13): flat variable chains
-    // emit one operator row per captured event — (cls_idx, within_ord)
-    // plus the per-match final block — and every routable measure
-    // becomes a codegen'd column expression over that pair: RUNNING
-    // COUNT(X.*) is a CASE on the row's step position (before X → 0, at
-    // X → within_ord, past X → the final count), RUNNING positional
-    // firsts null out before their step starts, CLASSIFIER() indexes
-    // the step-name array. This replaces the library route's external
-    // Row emission + array explode for the output-heavy ALL ROWS class
-    // (the greedy variant emits ~#input × avg-span rows). Exclusions
-    // are a plan-side filter on cls_idx — selection already ran over
-    // the full pattern. Anchors and WITH UNMATCHED stay on the library
-    // path (boundary flags / anti-join machinery).
-    val allRowsClause = AllRowsRe.findFirstMatchIn(clause).isDefined
-    val allRowsPlanRoutable = allRowsClause && !streamingIn && !anchored &&
-      !withUnmatched && !neverMatches && droppedVars.isEmpty &&
-      elems.forall(_.isInstanceOf[PVar]) &&
-      // cls_idx indexes DISTINCT step names: a repeated variable would
-      // fold two positions onto one index — keep those on the library path
-      elems.collect { case PVar(v, _) => v }.distinct.size ==
-        elems.size &&
-      quantsOk(elems) &&
-      (skip == Cep.NoSkip || hasReluctant || sqlGreedy) &&
-      prevVars.isEmpty && subsets.isEmpty &&
-      measures.nonEmpty && measures.forall { m =>
-        (m match { case FinalMeasure(i) => i; case o => o }) match {
-          // LAST over a quantified variable needs the last captured
-          // row, which the final block does not carry; unknown
-          // variables (not in patternVars) keep the library path
+    // ALL ROWS PER MATCH: one output row per matched event in match
+    // order, measures with RUNNING semantics (the SQL default in this
+    // mode — evaluated over the prefix up to the current row) and
+    // CLASSIFIER() = the row's pattern variable. ONE ROW PER MATCH
+    // keeps FINAL semantics (the whole match is the prefix);
+    // CLASSIFIER() there is the last matched row's variable.
+    val allRows = AllRowsRe.findFirstMatchIn(clause).isDefined
+    if (allRows) require(measures.nonEmpty,
+      "ALL ROWS PER MATCH requires at least one measure")
+    // SQL:2016: row-pattern exclusion only affects ALL ROWS output (and
+    // Oracle/standard practice requires that mode when one is written)
+    if (excluded.nonEmpty) require(allRows,
+      "{- -} exclusions require ALL ROWS PER MATCH")
+
+    val schema = basePrepared.schema
+    val keyIdx = schema.fieldIndex(partCol)
+    val ordIdx = schema.fieldIndex("__mr_ord")
+    val tieIdx = schema.fieldIndex("__mr_tie")
+
+    // flatten a match to (variable, event) in match order — sort by the
+    // precomputed (ord, tie) longs, stable across engines
+    def flatten(groups: Map[String, Seq[Row]]): Seq[(String, Row)] =
+      groups.toSeq.flatMap { case (n, evs) => evs.map(n -> _) }
+        .sortBy { case (_, e) => (e.getLong(ordIdx), e.getLong(tieIdx)) }
+
+    // extend a capture map with each SUBSET's union rows (match order) so
+    // measures can reference the subset name like any variable
+    def withSubsets(g: Map[String, Seq[Row]]): Map[String, Seq[Row]] =
+      if (subsets.isEmpty) g
+      else g ++ subsets.map { case (u, ms) =>
+        u -> ms.flatMap(g.getOrElse(_, Seq.empty))
+          .sortBy(e => (e.getLong(ordIdx), e.getLong(tieIdx)))
+      }
+
+    val outSchema = StructType(
+      schema(keyIdx).copy(name = partCol) +: measures.map(_.field(schema)))
+    // WITH UNMATCHED ROWS: each matched output row additionally carries
+    // the raw ORDER BY value (the row's identity for the user) and the
+    // internal (ord, tie) longs (the row's identity for the anti-join)
+    val rawOrdIdx = if (withUnmatched) schema.fieldIndex(ordCol) else -1
+    val entryStruct = StructType(
+      (if (withUnmatched)
+        Seq(StructField(ordCol, schema(rawOrdIdx).dataType, nullable = true))
+      else Nil) ++
+      measures.map(_.field(schema)) ++
+      (if (withUnmatched)
+        Seq(StructField("__mr_uord", LongType, nullable = false),
+          StructField("__mr_utie", LongType, nullable = false))
+      else Nil))
+    val arrSchema = StructType(Seq(schema(keyIdx).copy(name = partCol),
+      StructField("__mr_rows",
+        org.apache.spark.sql.types.ArrayType(entryStruct))))
+    val outEnc = Encoders.row(if (allRows) arrSchema else outSchema)
+
+    // mkRow — the one row-level measure evaluator — shapes one match
+    // (key, 1-based per-partition MATCH_NUMBER, step → captured rows):
+    // batch passes the planned operator's ordinal, streaming the
+    // state-persisted one
+    val mkRow: (Row, Long, Map[String, Seq[Row]]) => Row =
+      if (!allRows) { (k, mn, groups) =>
+        val cls = flatten(groups).lastOption.map(_._1).orNull
+        Row.fromSeq(k.get(0) +:
+          measures.map(_.eval(withSubsets(groups), schema, cls, mn)))
+      } else { (k, mn, groups) =>
+        // FINAL measures see the whole match and its final classifier;
+        // RUNNING (default) measures see the prefix up to the row
+        val fl = flatten(groups)
+        val finalCls = fl.lastOption.map(_._1).orNull
+        val gAll = withSubsets(groups)
+        // FINAL values are row-independent — evaluate ONCE per match,
+        // not once per output row (a FINAL positional measure walks
+        // the capture map on every eval)
+        val finalVals: Array[Any] = measures.iterator.map(m =>
+          if (m.isFinal) m.eval(gAll, schema, finalCls, mn)
+          else null).toArray
+        val anyRunning = measures.exists(!_.isFinal)
+        val prefix = scala.collection.mutable.Map.empty[String, Seq[Row]]
+        // excluded rows still advance the RUNNING prefix (they matched;
+        // SQL:2016 exclusion removes them from OUTPUT only)
+        val rows = fl.flatMap { case (n, e) =>
+          prefix(n) = prefix.getOrElse(n, Vector.empty) :+ e
+          if (excluded(n)) None
+          else {
+            // running measures read the prefix map directly — a
+            // per-row immutable copy only when SUBSET unions must be
+            // spliced in
+            val pfx: scala.collection.Map[String, Seq[Row]] =
+              if (!anyRunning) null
+              else if (subsets.isEmpty) prefix
+              else withSubsets(prefix.toMap)
+            Some(Row.fromSeq(
+              (if (withUnmatched) Seq(e.get(rawOrdIdx)) else Nil) ++
+              measures.iterator.zipWithIndex.map { case (m, i) =>
+                if (m.isFinal) finalVals(i)
+                else m.eval(pfx, schema, n, mn)
+              }.toSeq ++
+              (if (withUnmatched)
+                Seq(e.getLong(ordIdx), e.getLong(tieIdx)) else Nil)))
+          }
+        }
+        Row(k.get(0), rows)
+      }
+    // ALL ROWS: mkRow yields one array-typed row per match; the
+    // stateless explode below flattens it (works identically on the
+    // streaming output)
+    val post: DataFrame => DataFrame =
+      if (!allRows) identity
+      else d => {
+        val fields =
+          (if (withUnmatched) Seq(col(s"__mr_r.`$ordCol`").as(ordCol))
+          else Nil) ++
+          measures.map(m => col(s"__mr_r.${m.alias}").as(m.alias)) ++
+          (if (withUnmatched) Seq(col("__mr_r.__mr_uord").as("__mr_uord"),
+            col("__mr_r.__mr_utie").as("__mr_utie"))
+          else Nil)
+        val exploded = d.select(col(partCol),
+            org.apache.spark.sql.functions.explode(col("__mr_rows"))
+              .as("__mr_r"))
+          .select(col(partCol) +: fields: _*)
+        if (!withUnmatched) exploded
+        else {
+          // unmatched rows: everything the matched (ord, tie) key set
+          // does not cover, with NULL measures — one distinct + one
+          // left_anti join, both on the narrow key triple
+          val keys = exploded.select(col(partCol).as("__mr_k"),
+            col("__mr_uord"), col("__mr_utie")).distinct()
+          val un = basePrepared.join(keys,
+              basePrepared(partCol) === keys("__mr_k") &&
+                basePrepared("__mr_ord") === keys("__mr_uord") &&
+                basePrepared("__mr_tie") === keys("__mr_utie"),
+              "left_anti")
+            .select(col(partCol) +: (col(ordCol) +:
+              measures.map(m => lit(null).cast(m.field(schema).dataType)
+                .as(m.alias))): _*)
+          exploded.drop("__mr_uord", "__mr_utie").unionByName(un)
+        }
+      }
+    // an unsatisfiable interior-anchor pattern evaluates to ZERO rows:
+    // the constant-false filter folds the whole subtree away
+    def result(d: DataFrame): DataFrame =
+      if (neverMatches) d.where(lit(false)) else d
+
+    // BATCH: every clause plans onto the GroupCepExec operator — the
+    // planner owns the data movement (exactly one exchange + one sort from
+    // EnsureRequirements, elidable by upstream partitioning) and the
+    // DEFINE predicates run codegen'd. SQL adjacency is strict between
+    // siblings AND between the repetitions of a quantified element
+    // (consecutive). ^/$ and AFTER MATCH run inside the operator's key-run
+    // driver, so only the output lowering depends on the measures.
+    if (!streamingIn) {
+      import graft.plans.GroupCepPlan
+      import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
+      // the reluctant marker is pattern-level in the default mode
+      // (`reluctant` below) and per-quantifier polarity under sqlGreedy
+      def group(inner: Seq[GSpec], q: Option[String]): GGroupSpec = {
+        val (mn, mx, opt) = q.map(quantOf).getOrElse((1, 1, false))
+        GGroupSpec(inner, mn, mx, optional = opt, consecutive = true,
+          strict = true, relMark = sqlGreedy && q.exists(isReluctantQ))
+      }
+      def toSpec(e: PElem): GSpec = e match {
+        case PVar(v, None) => GLeafSpec(v, col(s"__mr_$v"), strict = true)
+        case PVar(v, q) => group(Seq(GLeafSpec(v, col(s"__mr_$v"))), q)
+        case PGrp(in, q) => group(in.map(toSpec), q)
+        case PAlt(branches, q) =>
+          // SQL:2016 alternation: exactly one branch matches, leftmost
+          // preferred; a quantified one reuses the group loop machinery
+          val alt = GAltSpec(branches.map(_.map(toSpec)), strict = true)
+          if (q.isEmpty) alt else group(Seq(alt), q)
+      }
+      // the per-match block carries per step its capture count and first
+      // captured row: FIRST()/COUNT() over any variable, any position over
+      // an unquantified one (first = last = only), and MATCH_NUMBER(). A
+      // flat chain of distinct variables under ALL ROWS adds each row's
+      // step index (`cls_idx`) and ordinal within its step, which lowers
+      // RUNNING measures and CLASSIFIER() to CASEs. Everything else —
+      // LAST/aggregates over a repeated variable, SUBSET, a variable the
+      // interior-anchor rewrite dropped, WITH UNMATCHED — reads the
+      // captured rows through mkRow.
+      val stepOrder = elems.collect { case PVar(v, _) => v }
+      val rowBlockable = !withUnmatched &&
+        stepOrder.distinct.size == elems.size
+      val blockCarries = (!allRows || rowBlockable) && measures.forall { m =>
+        baseOf(m) match {
           case PosMeasure(v, _, _, last, 0) =>
             patternVars(v) && (!last || !qVars(v))
           case CountMeasure(v, _) => patternVars(v)
           case MatchNumMeasure(_) => true
-          // FINAL CLASSIFIER (the match's last variable) is not in
-          // the block; the RUNNING default is the row's own variable
-          case ClassifierMeasure(_) => !m.isFinal
+          // FINAL CLASSIFIER (the match's last variable) is not in the
+          // block; the RUNNING default is the row's own variable
+          case ClassifierMeasure(_) => allRows && !m.isFinal
           case _ => false
         }
       }
-    if (allRowsPlanRoutable) {
-      import graft.plans.GroupCepPlan.{GGroupSpec, GLeafSpec, GSpec}
-      val stepOrder: Vector[String] =
-        elems.map { case PVar(v, _) => v case _ => "" }
-      val stepIdxOf = stepOrder.zipWithIndex.toMap
-      def toSpec(e: PElem): GSpec = (e: @unchecked) match {
-        case PVar(v, None) => GLeafSpec(v, col(s"__mr_$v"), strict = true)
-        case PVar(v, Some(q)) =>
-          val (mn, mx, opt) = quantOf(q).get
-          GGroupSpec(Seq(GLeafSpec(v, col(s"__mr_$v"))), mn, mx,
-            optional = opt, consecutive = true, strict = true,
-            relMark = sqlGreedy && isReluctantQ(q))
-      }
-      val planned = graft.plans.GroupCepPlan.matchGroupPattern(basePrepared,
+      val shape =
+        if (!blockCarries) GroupCepPlan.Captures
+        else if (allRows) GroupCepPlan.RowBlock
+        else GroupCepPlan.MatchBlock
+      val planned = GroupCepPlan.matchGroupPattern(basePrepared,
         col(partCol), col("__mr_ord"), col("__mr_tie"),
         elems.map(toSpec), withinMicros = withinOrd,
-        reluctant = hasReluctant, skip = skip, sqlGreedy = sqlGreedy,
-        allRows = true)
-      val clsIdx = col("cls_idx")
-      val clsName = org.apache.spark.sql.functions.element_at(
-        array(stepOrder.map(lit): _*), clsIdx + 1)
-      val filtered =
-        if (excluded.isEmpty) planned
-        else planned.where(!clsIdx.isin(
-          excluded.toSeq.map(stepIdxOf): _*))
-      return filtered.select(col("key").as(partCol) +: measures.map { m =>
-        val fin = m.isFinal
-        (m match { case FinalMeasure(i) => i; case o => o }) match {
-          case PosMeasure(v, c, alias, _, _) =>
-            if (fin) col(s"${v}_${c}").as(alias)
-            else when(clsIdx >= stepIdxOf(v), col(s"${v}_${c}"))
-              .as(alias)
-          case CountMeasure(v, alias) =>
-            if (fin) col(s"${v}_count").as(alias)
-            else when(clsIdx > stepIdxOf(v), col(s"${v}_count"))
-              .when(clsIdx === stepIdxOf(v), col("within_ord"))
-              .otherwise(lit(0L)).as(alias)
-          case ClassifierMeasure(alias) => clsName.as(alias)
-          case MatchNumMeasure(alias) => col("match_number").as(alias)
-          case other => throw new IllegalStateException(s"unroutable $other")
-        }
-      }: _*)
+        reluctant = hasReluctant, anchorHead = anchorStart,
+        anchorTail = anchorEnd, skip = skip, sqlGreedy = sqlGreedy,
+        shape = shape)
+      val key = col("key").as(partCol)
+      return result(shape match {
+        case GroupCepPlan.MatchBlock =>
+          planned.select(key +: measures.map { m =>
+            baseOf(m) match {
+              case PosMeasure(v, c, alias, _, _) => col(s"${v}_${c}").as(alias)
+              case CountMeasure(v, alias) => col(s"${v}_count").as(alias)
+              case MatchNumMeasure(alias) => col("match_number").as(alias)
+              case other => throw new IllegalStateException(s"unroutable $other")
+            }
+          }: _*)
+        case GroupCepPlan.RowBlock =>
+          val stepIdxOf = stepOrder.zipWithIndex.toMap
+          val clsIdx = col("cls_idx")
+          val clsName = org.apache.spark.sql.functions.element_at(
+            array(stepOrder.map(lit): _*), clsIdx + 1)
+          // exclusions are a plan-side filter on cls_idx — selection
+          // already ran over the full pattern
+          val filtered =
+            if (excluded.isEmpty) planned
+            else planned.where(!clsIdx.isin(
+              excluded.toSeq.map(stepIdxOf): _*))
+          filtered.select(key +: measures.map { m =>
+            val fin = m.isFinal
+            baseOf(m) match {
+              case PosMeasure(v, c, alias, _, _) =>
+                if (fin) col(s"${v}_${c}").as(alias)
+                else when(clsIdx >= stepIdxOf(v), col(s"${v}_${c}"))
+                  .as(alias)
+              case CountMeasure(v, alias) =>
+                if (fin) col(s"${v}_count").as(alias)
+                else when(clsIdx > stepIdxOf(v), col(s"${v}_count"))
+                  .when(clsIdx === stepIdxOf(v), col("within_ord"))
+                  .otherwise(lit(0L)).as(alias)
+              case ClassifierMeasure(alias) => clsName.as(alias)
+              case MatchNumMeasure(alias) => col("match_number").as(alias)
+              case other => throw new IllegalStateException(s"unroutable $other")
+            }
+          }: _*)
+        case GroupCepPlan.Captures =>
+          // the operator's step indexes name the distinct leaves in
+          // declaration order; rebuild the step → rows map in that order
+          val steps = patVarNames(elems).distinct.toVector
+          post(planned.map { r =>
+            val g = scala.collection.mutable.LinkedHashMap
+              .empty[String, Vector[Row]]
+            steps.foreach(n => g(n) = Vector.empty)
+            r.getSeq[Row](2).foreach { c =>
+              val n = steps(c.getInt(0))
+              g(n) = g(n) :+ c.getStruct(1)
+            }
+            mkRow(Row(r.get(0)), r.getLong(1),
+              scala.collection.immutable.ListMap(g.toSeq: _*))
+          }(outEnc).toDF())
+      })
     }
 
-    // One unordered window computes BOTH boundary structs (min and max of
-    // (ord, tie) per partition): a single WindowExec with one exchange
-    // and a partition-key-only sort, where asc+desc row_number windows
-    // would each demand a full (ord, tie) sort. Rows EQUAL to the
-    // boundary struct are boundary rows — on an exact (ord, tie) tie at
-    // the edge every tied row counts as first/last, which is the only
-    // deterministic reading (row_number would crown one arbitrarily).
-    val prepared = if (!anchorBatch) basePrepared else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col(partCol))
-      val ordTie = struct(col("__mr_ord"), col("__mr_tie"))
-      basePrepared
-        .withColumn("__mr_head", ordTie === min(ordTie).over(w))
-        .withColumn("__mr_tail", ordTie === max(ordTie).over(w))
-    }
-    val schema = prepared.schema
-    val keyIdx = schema.fieldIndex(partCol)
-    val ordIdx = schema.fieldIndex("__mr_ord")
-    val tieIdx = schema.fieldIndex("__mr_tie")
+    // STREAMING: the same parsed clause runs on GroupCep.streamDriver —
+    // partials persist in keyed state across micro-batches; WITHIN
+    // patterns require a watermark on the ORDER BY column upstream
+    // (`df.withWatermark(ord, ...)`) so idle keys' expired partials are
+    // pruned by event-time timers. State crosses batches as a
+    // version-tagged envelope (CepStateCodec). MATCH_NUMBER() takes the
+    // state-persisted ordinal (`numbered`); PREV() carries the key's last
+    // rows (`pre`)
     val varIdx = vars.map(v => v -> schema.fieldIndex(s"__mr_$v")).toMap
-
     def pred(v: String): Row => Boolean = {
       val i = varIdx(v)
       r => !r.isNullAt(i) && r.getBoolean(i)
     }
-
     // Streaming PREV pre-transform: given the key's carried rows (its
     // previous maxOffset rows in event-time order, persisted across
     // micro-batches), rewrite this row's __mr_<var> booleans for the
@@ -1186,7 +1224,7 @@ object MatchRecognize {
     // encoder and the bound expression evaluates interpreted (the NFA is
     // per-key sequential anyway).
     val preFn: (Vector[Row], Row) => (Vector[Row], Row) =
-      if (!streamingIn || prevVars.isEmpty) null
+      if (prevVars.isEmpty) null
       else {
         import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
         import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, GenericRowWithSchema}
@@ -1234,197 +1272,6 @@ object MatchRecognize {
         }
       }
 
-    // ALL ROWS PER MATCH: one output row per matched event in match
-    // order, measures with RUNNING semantics (the SQL default in this
-    // mode — evaluated over the prefix up to the current row) and
-    // CLASSIFIER() = the row's pattern variable. ONE ROW PER MATCH
-    // keeps FINAL semantics (the whole match is the prefix);
-    // CLASSIFIER() there is the last matched row's variable.
-    val allRows = AllRowsRe.findFirstMatchIn(clause).isDefined
-    if (allRows) require(measures.nonEmpty,
-      "ALL ROWS PER MATCH requires at least one measure")
-    // the batch-anchored ONE ROW path reshapes output rows as measure
-    // structs (streaming ^ needs no reshaping — the NFA gate already
-    // rejects non-head candidates before they emit)
-    if (anchorBatch) require(measures.nonEmpty,
-      "^/$ anchors require at least one measure")
-    // SQL:2016: row-pattern exclusion only affects ALL ROWS output (and
-    // Oracle/standard practice requires that mode when one is written)
-    if (excluded.nonEmpty) require(allRows,
-      "{- -} exclusions require ALL ROWS PER MATCH")
-
-    // flatten a match to (variable, event) in match order — sort by the
-    // precomputed (ord, tie) longs, stable across engines
-    def flatten(groups: Map[String, Seq[Row]]): Seq[(String, Row)] =
-      groups.toSeq.flatMap { case (n, evs) => evs.map(n -> _) }
-        .sortBy { case (_, e) => (e.getLong(ordIdx), e.getLong(tieIdx)) }
-
-    // extend a capture map with each SUBSET's union rows (match order) so
-    // measures can reference the subset name like any variable
-    def withSubsets(g: Map[String, Seq[Row]]): Map[String, Seq[Row]] =
-      if (subsets.isEmpty) g
-      else g ++ subsets.map { case (u, ms) =>
-        u -> ms.flatMap(g.getOrElse(_, Seq.empty))
-          .sortBy(e => (e.getLong(ordIdx), e.getLong(tieIdx)))
-      }
-
-    // anchor check on a candidate match: its first/last MATCHED row (even
-    // an excluded one — exclusion is output-only) must sit on the
-    // partition boundary
-    val headIdx =
-      if (anchorBatch && anchorStart) schema.fieldIndex("__mr_head") else -1
-    val tailIdx =
-      if (anchorBatch && anchorEnd) schema.fieldIndex("__mr_tail") else -1
-    def anchorOk(groups: Map[String, Seq[Row]]): Boolean = {
-      val fl = flatten(groups)
-      fl.nonEmpty &&
-        (headIdx < 0 || fl.head._2.getBoolean(headIdx)) &&
-        (tailIdx < 0 || fl.last._2.getBoolean(tailIdx))
-    }
-
-    val outSchema = StructType(
-      schema(keyIdx).copy(name = partCol) +: measures.map(_.field(schema)))
-    // WITH UNMATCHED ROWS: each matched output row additionally carries
-    // the raw ORDER BY value (the row's identity for the user) and the
-    // internal (ord, tie) longs (the row's identity for the anti-join)
-    val rawOrdIdx = if (withUnmatched) schema.fieldIndex(ordCol) else -1
-    val entryStruct = StructType(
-      (if (withUnmatched)
-        Seq(StructField(ordCol, schema(rawOrdIdx).dataType, nullable = true))
-      else Nil) ++
-      measures.map(_.field(schema)) ++
-      (if (withUnmatched)
-        Seq(StructField("__mr_uord", LongType, nullable = false),
-          StructField("__mr_utie", LongType, nullable = false))
-      else Nil))
-    val arrSchema = StructType(Seq(schema(keyIdx).copy(name = partCol),
-      StructField("__mr_rows",
-        org.apache.spark.sql.types.ArrayType(entryStruct))))
-    val keyEnc = Encoders.row(StructType(Seq(schema(keyIdx))))
-    // anchored ONE ROW also routes through the array shape: an anchor-
-    // rejected candidate emits an empty array that explode() drops
-    val useArr = allRows || anchorBatch
-    val outEnc = Encoders.row(if (useArr) arrSchema else outSchema)
-    val keyFn = (r: Row) => Row(r.get(keyIdx))
-    val ordFn = (r: Row) => r.getLong(ordIdx)
-    val tieFn = (r: Row) => r.getLong(tieIdx)
-
-    // MATCH_NUMBER(): 1-based per-partition ordinal in match-emission
-    // order. Batch: task-local mutable state (each Spark task
-    // deserializes its own closure copy, and flatMapGroups feeds each
-    // key's matches contiguously). Streaming (round 9): the ordinal
-    // persists in keyed state across micro-batches
-    // (GArrivalState.matchSeq) and arrives through the streaming state
-    // function's `numbered` finish below.
-    val needsMatchNum = measures.map(baseOf)
-      .exists(_.isInstanceOf[MatchNumMeasure])
-    var mnHasKey = false
-    var mnKey: Any = null
-    var mnCounter = 0L
-    def nextMatchNum(k: Row): Long = {
-      val kv = k.get(0)
-      if (!mnHasKey || mnKey != kv) { mnHasKey = true; mnKey = kv; mnCounter = 0L }
-      mnCounter += 1
-      mnCounter
-    }
-
-    // mkRow shapes one match given its ordinal; the batch/plain-stream
-    // finish derives the ordinal task-locally, the numbered streaming
-    // drivers pass the state-persisted one
-    val mkRow: (Row, Long, Map[String, Seq[Row]]) => Row =
-      if (!allRows) { (k, mn, groups) =>
-        val cls = flatten(groups).lastOption.map(_._1).orNull
-        def vals = measures.map(_.eval(withSubsets(groups), schema, cls, mn))
-        if (!anchorBatch) Row.fromSeq(k.get(0) +: vals)
-        else Row(k.get(0),
-          if (anchorOk(groups)) Seq(Row.fromSeq(vals)) else Nil)
-      } else { (k, mn, groups) =>
-        if (anchorBatch && !anchorOk(groups)) Row(k.get(0), Seq.empty)
-        else {
-          // FINAL measures see the whole match and its final classifier;
-          // RUNNING (default) measures see the prefix up to the row
-          val fl = flatten(groups)
-          val finalCls = fl.lastOption.map(_._1).orNull
-          val gAll = withSubsets(groups)
-          // FINAL values are row-independent — evaluate ONCE per match,
-          // not once per output row (a FINAL positional measure walks
-          // the capture map on every eval)
-          val finalVals: Array[Any] = measures.iterator.map(m =>
-            if (m.isFinal) m.eval(gAll, schema, finalCls, mn)
-            else null).toArray
-          val anyRunning = measures.exists(!_.isFinal)
-          val prefix = scala.collection.mutable.Map.empty[String, Seq[Row]]
-          // excluded rows still advance the RUNNING prefix (they matched;
-          // SQL:2016 exclusion removes them from OUTPUT only)
-          val rows = fl.flatMap { case (n, e) =>
-            prefix(n) = prefix.getOrElse(n, Vector.empty) :+ e
-            if (excluded(n)) None
-            else {
-              // running measures read the prefix map directly — a
-              // per-row immutable copy only when SUBSET unions must be
-              // spliced in
-              val pfx: scala.collection.Map[String, Seq[Row]] =
-                if (!anyRunning) null
-                else if (subsets.isEmpty) prefix
-                else withSubsets(prefix.toMap)
-              Some(Row.fromSeq(
-                (if (withUnmatched) Seq(e.get(rawOrdIdx)) else Nil) ++
-                measures.iterator.zipWithIndex.map { case (m, i) =>
-                  if (m.isFinal) finalVals(i)
-                  else m.eval(pfx, schema, n, mn)
-                }.toSeq ++
-                (if (withUnmatched)
-                  Seq(e.getLong(ordIdx), e.getLong(tieIdx)) else Nil)))
-            }
-          }
-          Row(k.get(0), rows)
-        }
-      }
-    val finish: (Row, Map[String, Seq[Row]]) => Row = (k, groups) =>
-      mkRow(k, if (needsMatchNum) nextMatchNum(k) else 0L, groups)
-    // ALL ROWS: the driver emits one array-typed row per match; the
-    // stateless explode below flattens it (works identically on the
-    // streaming output)
-    val post: DataFrame => DataFrame =
-      if (!useArr) identity
-      else d => {
-        val fields =
-          (if (withUnmatched) Seq(col(s"__mr_r.`$ordCol`").as(ordCol))
-          else Nil) ++
-          measures.map(m => col(s"__mr_r.${m.alias}").as(m.alias)) ++
-          (if (withUnmatched) Seq(col("__mr_r.__mr_uord").as("__mr_uord"),
-            col("__mr_r.__mr_utie").as("__mr_utie"))
-          else Nil)
-        val exploded = d.select(col(partCol),
-            org.apache.spark.sql.functions.explode(col("__mr_rows"))
-              .as("__mr_r"))
-          .select(col(partCol) +: fields: _*)
-        if (!withUnmatched) exploded
-        else {
-          // unmatched rows: everything the matched (ord, tie) key set
-          // does not cover, with NULL measures — one distinct + one
-          // left_anti join, both on the narrow key triple
-          val keys = exploded.select(col(partCol).as("__mr_k"),
-            col("__mr_uord"), col("__mr_utie")).distinct()
-          val un = prepared.join(keys,
-              prepared(partCol) === keys("__mr_k") &&
-                prepared("__mr_ord") === keys("__mr_uord") &&
-                prepared("__mr_tie") === keys("__mr_utie"),
-              "left_anti")
-            .select(col(partCol) +: (col(ordCol) +:
-              measures.map(m => lit(null).cast(m.field(schema).dataType)
-                .as(m.alias))): _*)
-          exploded.drop("__mr_uord", "__mr_utie").unionByName(un)
-        }
-      }
-
-    // Every clause — flat or nested — compiles onto the GroupCep
-    // epsilon-NFA (the same engine behind the reference's GroupPattern —
-    // GroupITCase 16/16); a flat clause is a sequence of singleton
-    // leaves. SQL adjacency is strict between siblings AND between the
-    // repetitions of a quantified element (consecutive). AFTER MATCH runs
-    // GroupCep's GroupSkipQueue on both paths; on the streaming path its
-    // deferred matches ride keyed state (GArrivalState).
     def applyQuant(gp: GroupCep.GPattern[Row],
         q: String): GroupCep.GPattern[Row] = {
       // the reluctant marker is pattern-level on GroupCep in the
@@ -1472,28 +1319,15 @@ object MatchRecognize {
     withinOrd.foreach(w => gp = gp.within(w))
     if (hasReluctant) gp = gp.reluctant
     if (sqlGreedy) gp = gp.greedySelect
-    val __routed: DataFrame = post(
-      if (df.isStreaming) {
-        // STREAMING: partials persist in keyed state across
-        // micro-batches; WITHIN patterns require a watermark on the
-        // ORDER BY column upstream (`df.withWatermark(ord, ...)`) so
-        // idle keys' expired partials are pruned by event-time timers.
-        // State crosses batches as a version-tagged envelope
-        // (CepStateCodec). MATCH_NUMBER() takes the state-persisted
-        // ordinal (`numbered`); PREV() carries the key's last rows (`pre`)
-        GroupCep.streamDriver[Row, Row, Row](prepared, keyFn, gp.withinMs,
-          GroupCep.matchStreamArrivalFn[Row, Row, Row](gp, ordFn, tieFn,
-            skip, finish, anchorHead = anchorStreamHead, pre = preFn,
-            numbered = if (needsMatchNum) mkRow else null))(
-          outEnc, keyEnc).toDF()
-      } else
-        GroupCep.matchBatchGroups[Row, Row, Row](
-          prepared, keyFn, ordFn, gp, tie = tieFn, skip = skip,
-          anchorHead = (reluctantAnchored || greedyAnchored) && anchorStart,
-          anchorTail = (reluctantAnchored || greedyAnchored) && anchorEnd)(
-          finish)(outEnc, keyEnc).toDF())
-    // an unsatisfiable interior-anchor pattern evaluates to ZERO rows:
-    // the constant-false filter folds the whole subtree away
-    if (neverMatches) __routed.where(lit(false)) else __routed
+    val needsMatchNum = measures.map(baseOf)
+      .exists(_.isInstanceOf[MatchNumMeasure])
+    val keyEnc = Encoders.row(StructType(Seq(schema(keyIdx))))
+    result(post(GroupCep.streamDriver[Row, Row, Row](basePrepared,
+      (r: Row) => Row(r.get(keyIdx)), gp.withinMs,
+      GroupCep.matchStreamArrivalFn[Row, Row, Row](gp,
+        (r: Row) => r.getLong(ordIdx), (r: Row) => r.getLong(tieIdx), skip,
+        (k, groups) => mkRow(k, 0L, groups), anchorHead = anchorStart,
+        pre = preFn, numbered = if (needsMatchNum) mkRow else null))(
+      outEnc, keyEnc).toDF()))
   }
 }

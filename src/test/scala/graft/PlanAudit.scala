@@ -526,24 +526,26 @@ object PlanAudit {
       qj4.contains("Window") && !qj4.contains("CartesianProduct") &&
         !qj4.contains("BroadcastNestedLoopJoin") &&
         qj4.linesIterator.count(_.contains("Exchange hashpartitioning")) <= 2)
-    // SUBSET measures keep a clause on the library route (union
-    // variables are outside the planned exec's output shape) — still
-    // one key exchange into the NFA, no join machinery
-    for (n <- Seq("qc27_mr_alt_subset_agg", "qc18_match_recognize_permute")) {
+    // the capture lowering (SUBSET, LAST over a quantified variable,
+    // aggregates, PREV, WITH UNMATCHED): the operator's captured rows
+    // feed the row-level measure evaluator — the same one exchange into
+    // the planned operator, never a groupByKey
+    for (n <- Seq("qc27_mr_alt_subset_agg", "qc18_match_recognize_permute",
+        "qc14_match_recognize_all_rows")) {
       val pl = plan(n)
-      check(s"$n one key exchange into the NFA, no joins",
-        pl.contains("MapGroups") &&
-          pl.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1 &&
-          !pl.contains("Join"))
+      val gidx = pl.linesIterator.indexWhere(_.contains("- GroupCep "))
+      val below = pl.linesIterator.toVector.drop(gidx max 0)
+      check(s"$n routes onto the planned GroupCepExec", gidx >= 0)
+      check(s"$n exactly one shuffle below GroupCepExec",
+        below.count(_.contains("Exchange hashpartitioning")) == 1)
+      check(s"$n no MapGroups", !pl.contains("MapGroups"))
     }
-    // ALL ROWS with LAST over a quantified variable (outside the planned
-    // operator's per-match block) stays on the library route: one key
-    // exchange into the NFA, then the explode of the per-match arrays
-    val qc14 = plan("qc14_match_recognize_all_rows")
-    check("qc14 library route: MapGroups + explode (Generate), no GroupCepExec",
-      qc14.contains("MapGroups") && qc14.contains("Generate") &&
-        !qc14.contains("- GroupCep ") &&
-        qc14.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1)
+    // PREV's lag window and the operator cluster on the same raw key, so
+    // EnsureRequirements reuses the window's exchange
+    val qc16 = plan("qc16_match_recognize_prev")
+    check("qc16 one Exchange hashpartitioning (lag window + GroupCepExec)",
+      qc16.contains("- GroupCep ") &&
+        qc16.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1)
     // the reluctant compositions AND alternation/PERMUTE (round 11):
     // routed onto the planned GroupCepExec — one Exchange + one Sort
     // feeding the operator, no groupByKey MapGroups, no window pass

@@ -375,6 +375,94 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  test("default-mode anchored planned run equals the boundary filter of the unanchored library run") {
+    // With no selection mode the ^/$ gates keep EVERY candidate the
+    // boundary admits: ^ those opened by the key run's first row, $ those
+    // ending on its last. The reference is the unanchored library run,
+    // filtered on the captured tags, in its emission order. Overlapping
+    // alternation branches and loop/exit ambiguity let one start
+    // complete several candidates on the same last row.
+    import graft.streaming.GroupCep
+    import graft.streaming.GroupCep.GPattern
+    import graft.plans.GroupCepPlan
+    import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
+    import org.apache.spark.sql.functions.col
+    type E = (String, Long)
+    def pv(ns: String*) = (e: E) => ns.contains(e._1)
+    def is(ns: String*) = col("name").isin(ns: _*)
+    def leaf(n: String, ns: String*) = GLeafSpec(n, is(ns: _*), strict = true)
+    def loop(inner: Seq[GSpec], min: Int = 1, max: Int = Int.MaxValue,
+        optional: Boolean = false) =
+      GGroupSpec(inner, min, max, optional = optional, consecutive = true,
+        strict = true)
+    // (planned spec, library pattern, step names)
+    val pool: Vector[(Seq[GSpec], () => GPattern[E], Seq[String])] = Vector(
+      // a (m1|m2)+ : c matches both branches
+      (Seq(leaf("v", "a"), loop(Seq(GAltSpec(Seq(Seq(leaf("m1", "b", "c")),
+          Seq(leaf("m2", "c", "x"))), strict = true)))),
+        () => GPattern.begin[E]("v")(pv("a"))
+          .next(Seq(GPattern.begin[E]("m1")(pv("b", "c")),
+            GPattern.begin[E]("m2")(pv("c", "x")))).oneOrMore.consecutive,
+        Seq("v", "m1", "m2")),
+      // a b+ : one candidate per length
+      (Seq(leaf("v", "a"), loop(Seq(GLeafSpec("b", !is("a"))))),
+        () => GPattern.begin[E]("v")(pv("a"))
+          .next("b")(e => e._1 != "a").oneOrMore.consecutive,
+        Seq("v", "b")),
+      // (a b | a) b* : "a b" splits two ways on the same rows
+      (Seq(GAltSpec(Seq(Seq(leaf("p", "a"), leaf("q", "b")),
+          Seq(leaf("r", "a"))), strict = true),
+        loop(Seq(GLeafSpec("t", is("b"))), optional = true)),
+        () => GPattern.begin[E](Seq(
+            GPattern.begin[E]("p")(pv("a")).next("q")(pv("b")),
+            GPattern.begin[E]("r")(pv("a"))))
+          .next("t")(pv("b")).oneOrMore.consecutive.optional,
+        Seq("p", "q", "r", "t")),
+      // c (a|b){1,2} d? with a trailing optional
+      (Seq(leaf("s", "c"), loop(Seq(GAltSpec(Seq(Seq(leaf("m1", "a")),
+          Seq(leaf("m2", "a", "b"))), strict = true)), max = 2),
+        loop(Seq(GLeafSpec("e", is("d"))), max = 1, optional = true)),
+        () => GPattern.begin[E]("s")(pv("c"))
+          .next(Seq(GPattern.begin[E]("m1")(pv("a")),
+            GPattern.begin[E]("m2")(pv("a", "b")))).times(1, 2).consecutive
+          .next("e")(pv("d")).optional,
+        Seq("s", "m1", "m2", "e")))
+    val keysGen = Gen.listOfN(3,
+      Gen.choose(1, 10).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf("a", "b", "c", "d", "x"))))
+    check(Prop.forAll(keysGen, Gen.choose(0, pool.size - 1),
+      Gen.choose(1, 3)) { (keys, pi, anch) =>
+      val (spec, pat, steps) = pool(pi)
+      val (head, tail) = (anch % 2 == 1, anch >= 2)
+      val library = keys.map { names =>
+        val events = names.zipWithIndex
+          .map { case (n, i) => (n, i.toLong) }.toVector
+        GroupCep.runKeyEvents[E, (Seq[(Long, Option[Long])], Long, Long)](
+          events, _._2, pat())(g => (
+            steps.map(n => (g(n).size.toLong, g(n).headOption.map(_._2))),
+            g.values.flatten.map(_._2).min, g.values.flatten.map(_._2).max))
+          .collect { case (m, first, last)
+            if (!head || first == 0L) && (!tail || last == names.size - 1) =>
+            m
+          }
+      }
+      val df = keys.zipWithIndex.flatMap { case (ns, k) =>
+        ns.zipWithIndex.map { case (n, i) => (k, n, i.toLong) }
+      }.toDF("k", "name", "ts")
+      val planned = GroupCepPlan.matchGroupPattern(df, col("k"), col("ts"),
+        col("ts"), spec, anchorHead = head, anchorTail = tail).collect()
+        .groupBy(_.getAs[Int]("key")).map { case (k, rs) =>
+          k -> rs.sortBy(_.getAs[Long]("match_number")).toSeq.map(r =>
+            steps.map(n => (r.getAs[Long](s"${n}_count"),
+              Option(r.getAs[java.lang.Long](s"${n}_ts")).map(_.longValue))))
+        }
+      Prop(keys.indices.forall(k =>
+        library(k) == planned.getOrElse(k, Seq.empty))) :|
+        s"pattern $pi head=$head tail=$tail keys=$keys\n" +
+          s"library=$library\nplanned=$planned"
+    })
+  }
+
   test("group CEP: per-event branch dedup forced on vs skipped is a no-op for eligible patterns") {
     // ADVICE r13: noEpsilonDup skips the per-event outConfs dedup on a
     // structural argument (arrival-tagged, no alternation forks, no
@@ -536,8 +624,8 @@ class PropertySpec extends SparkSuite {
   }
 
   test("flat MATCH_RECOGNIZE clauses equal the linear DSL pattern (SQL-vs-DSL differential)") {
-    // Every MATCH_RECOGNIZE clause runs on the group NFA; the linear
-    // engine keeps serving the flink-cep DSL. Random flat clauses (2-4
+    // Every batch MATCH_RECOGNIZE clause plans onto GroupCepExec; the
+    // DSL runs the library batch driver. Random flat clauses (2-4
     // variables, every quantifier form, all four AFTER MATCH
     // strategies, overlapping DEFINEs over a 3-letter alphabet) must
     // answer exactly what the linear DSL pattern of the same shape
@@ -618,8 +706,8 @@ class PropertySpec extends SparkSuite {
         case scala.util.Failure(other) => throw other
         case scala.util.Success(dslOut) =>
           val measures = (Seq("MATCH_NUMBER() AS mn",
-            // SUM is never plan-routable: the clause stays on the
-            // library route, the one the DSL drivers mirror
+            // SUM is not in the operator's block: the clause reads the
+            // operator's captured rows through the row-level evaluator
             s"SUM(${name(0)}.event_id) AS s") ++
             (0 until n).flatMap(i => Seq(s"COUNT(${name(i)}.*) AS c$i",
               s"FIRST(${name(i)}.event_id) AS f$i",
@@ -648,7 +736,7 @@ class PropertySpec extends SparkSuite {
             (0 until r.length).map(i => fmt(r.get(i))).mkString("|"))
             .toSeq.sorted
           val ref = dslOut.collect().toSeq.sorted
-          Prop(!planned && sql == ref) :| s"pattern ($pattern) " +
+          Prop(planned && sql == ref) :| s"pattern ($pattern) " +
             s"skip $skipSql defines $defines planned=$planned\n" +
             s"sql=$sql\nref=$ref\nrows=$rows"
       }

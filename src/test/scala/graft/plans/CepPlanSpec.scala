@@ -324,18 +324,23 @@ class CepPlanSpec extends SparkSuite {
     assert(e.getMessage.contains("$ anchor cannot combine"), e.getMessage)
   }
 
-  test("composite/binary keys are rejected by name (evaluated-path equality)") {
-    // review r17: struct/array/map evaluate to InternalRow/ArrayData —
-    // identity equality on the run-boundary check would silently open a
-    // new run per row; binary keys (Array[Byte]) likewise. The planned
-    // operator rejects the shape at construction.
-    for (badKey <- Seq(struct(col("user_id"), col("event_type")),
-        array(col("user_id")), col("event_type").cast("binary"))) {
-      val g = intercept[IllegalArgumentException] {
-        GroupCepPlan.matchGroupPattern(events, badKey, col("ts"),
-          col("event_id"), Seq(GLeafSpec("v", col("event_type") === "view")))
-      }
-      assert(g.getMessage.contains("value equality"), g.getMessage)
+  test("struct, array and binary keys form one run per key value") {
+    // the operator compares keys by value (their unsafe bytes), so a
+    // composite or binary key partitions exactly like the atomic
+    // user_id: user 1's view -> error spans three rows of one run, which
+    // an identity compare would have split into a run per row
+    val expected = planned.select($"view_event_id", $"error_event_id")
+      .as[(Long, Long)].collect().toSet
+    assert(expected === Set((1L, 3L)))
+    for (k <- Seq(struct(col("user_id"), (col("user_id") % 2).as("odd")),
+        array(col("user_id")), col("user_id").cast("string").cast("binary"))) {
+      val got = GroupCepPlan.matchGroupPattern(events.withColumn("k", k),
+        col("k"), col("ts"), col("event_id"), viewError,
+        withinMicros = Some(hourMicros))
+      assert(got.select($"view_event_id", $"error_event_id")
+        .as[(Long, Long)].collect().toSet === expected, k.toString)
+      assert(got.select($"match_number").as[Long].collect().toSeq ===
+        Seq(1L), k.toString)
     }
   }
 

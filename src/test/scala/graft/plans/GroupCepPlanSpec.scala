@@ -261,27 +261,34 @@ class GroupCepPlanSpec extends SparkSuite {
     assert(df.queryExecution.executedPlan.toString.contains("GroupCep"))
   }
 
-  test("anchored quantified or followedByAny pattern needs a selection mode") {
-    // either shape lets one start complete several candidates — the
-    // anchors would have to pick one, which only a selection mode defines
+  test("anchored quantified or followedByAny pattern keeps every candidate") {
+    // either shape lets one start complete several candidates; with no
+    // selection mode to pick one, the gates keep them all — ^ those the
+    // run's first row opened, $ those ending on the run's last row
     val quantified = Seq(
       GLeafSpec("s", col("name") === "c"),
       GGroupSpec(Seq(GLeafSpec("a", col("name") === "a")), min = 1, max = 2),
       GLeafSpec("e", col("name") === "d"))
     val any = Seq(
       GLeafSpec("s", col("name") === "c"),
-      GLeafSpec("e", col("name") === "d", any = true))
-    for (elems <- Seq(quantified, any); (head, tail) <- Seq(
-        (true, false), (false, true))) {
-      val e = intercept[IllegalArgumentException] {
-        GroupCepPlan.matchGroupPattern(events,
-          key = col("user_id"), ts = col("ts"), tie = col("event_id"),
-          elems = elems, anchorHead = head, anchorTail = tail)
-      }
-      assert(e.getMessage.contains("anchors require a selection mode"),
-        e.getMessage)
-    }
-    // the same quantified pattern is accepted once a mode picks
+      GLeafSpec("e", col("name").isin("b", "d"), any = true))
+    def run(elems: Seq[GroupCepPlan.GSpec], head: Boolean, tail: Boolean,
+        out: String) =
+      GroupCepPlan.matchGroupPattern(events,
+        key = col("user_id"), ts = col("ts"), tie = col("event_id"),
+        elems = elems, anchorHead = head, anchorTail = tail)
+        .select($"key", col(out)).as[(Long, Long)].collect().toSeq.sorted
+    // user 1 (c a b a b d) completes one and two a's, both on its last
+    // row; user 2 (c a b d) one a
+    for ((head, tail) <- Seq((true, false), (false, true)))
+      assert(run(quantified, head, tail, "a_count") ===
+        Seq((1L, 1L), (1L, 2L), (2L, 1L)))
+    // followedByAny: every later b or d completes; only d ends the run
+    assert(run(any, head = true, tail = false, "e_event_id") ===
+      Seq((1L, 3L), (1L, 5L), (1L, 6L), (2L, 12L), (2L, 13L)))
+    assert(run(any, head = false, tail = true, "e_event_id") ===
+      Seq((1L, 6L), (2L, 13L)))
+    // a selection mode still picks among a start's candidates
     GroupCepPlan.matchGroupPattern(events,
       key = col("user_id"), ts = col("ts"), tie = col("event_id"),
       elems = quantified.map {

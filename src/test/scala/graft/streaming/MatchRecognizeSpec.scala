@@ -17,6 +17,23 @@ class MatchRecognizeSpec extends SparkSuite {
     (10L, 10L, "view", 2L), (11L, 20L, "view", 2L), (12L, 30L, "error", 2L)
   ).toDF("event_id", "ts", "event_type", "user_id")
 
+  // Every batch clause plans onto GroupCepExec; the lowering differs.
+  // Block: the measures are columns of the operator's per-match (or
+  // per-row) block. Capture: the operator emits each match's captured
+  // rows and the row-level measure evaluator reads them.
+  private def planOf(d: org.apache.spark.sql.DataFrame): String =
+    d.queryExecution.executedPlan.toString
+  private def blockLowered(d: org.apache.spark.sql.DataFrame): Boolean = {
+    val p = planOf(d)
+    p.contains("- GroupCep ") && !p.contains("Captures") &&
+      !p.contains("MapGroups")
+  }
+  private def captureLowered(d: org.apache.spark.sql.DataFrame): Boolean = {
+    val p = planOf(d)
+    p.contains("- GroupCep ") && p.contains("Captures") &&
+      !p.contains("MapGroups")
+  }
+
   test("V S* E equals the DSL's followedBy (first error per view)") {
     val got = MatchRecognize(events,
       """PARTITION BY user_id
@@ -167,11 +184,11 @@ class MatchRecognizeSpec extends SparkSuite {
   }
 
   test("MEASURES over a variable not in PATTERN keeps the library path's defined results (ADVICE r13)") {
-    // this shape would route PLANNED (flat distinct PVars, ALL ROWS)
-    // if every measure variable were a pattern step; the unknown Z must
-    // instead keep the library path — which defines COUNT(Z.*) = 0 and
-    // a null positional — rather than crash at plan time on the step
-    // index lookup
+    // this shape would lower to the per-row block (flat distinct PVars,
+    // ALL ROWS) if every measure variable were a pattern step; the
+    // unknown Z must instead read the captured rows — which define
+    // COUNT(Z.*) = 0 and a null positional — rather than crash at plan
+    // time on the step index lookup
     val df = Seq(
       (1L, 10L, "view", 1L), (2L, 20L, "click", 1L)
     ).toDF("event_id", "ts", "event_type", "user_id")
@@ -188,9 +205,9 @@ class MatchRecognizeSpec extends SparkSuite {
       .as[(Long, Option[Long], Long)].collect().toSeq
     assert(got === Seq((0L, None, 1L), (0L, None, 1L)))
 
-    // the ONE ROW PER MATCH planned route has the same gate: unknown Z
-    // must fall back to the library path's defined results, not an
-    // unresolved-column crash
+    // the ONE ROW PER MATCH block has the same gate: unknown Z must
+    // read the captured rows' defined results, not an unresolved-column
+    // crash
     val one = MatchRecognize(df,
       """PARTITION BY user_id
         |ORDER BY ts
@@ -365,7 +382,7 @@ class MatchRecognizeSpec extends SparkSuite {
       .as[(Long, Long)].collect().toSet
     assert(tail === Set((1L, 4L)))
     // the flat unquantified anchored clause ROUTES PLANNED (GroupCepExec, no
-    // boundary-flag window) — pin it so a silent library fallback fails
+    // window pass) — pin it so a silent fallback fails
     val headPlan = MatchRecognize(df,
       """PARTITION BY user_id
         |ORDER BY ts
@@ -462,16 +479,16 @@ class MatchRecognizeSpec extends SparkSuite {
     // $ before ^ needs the end before the start → zero rows
     assert(mr("E $ ^ E", "E.event_id AS e_id").count() == 0)
     // measures over a DROPPED (zero-rows) variable evaluate to NULL /
-    // 0 — never an unresolved-column crash: the planned operators'
-    // schemas lack the dropped variable, so such clauses route library
+    // 0 — never an unresolved-column crash: the operator's block lacks
+    // the dropped variable, so such clauses read the captured rows
     val d2 = mr("E? ^ V C",
       "E.event_id AS e_null, V.event_id AS v_id, COUNT(E.*) AS ne")
     assert(d2.as[(Long, Option[Long], Long, Long)].collect().toSet
       === Set((1L, None, 1L, 0L)))
-    // ...including the ALL-position-measures form, which would route
-    // planned (GroupCepExec) if the dropped variable did not disable it
+    // ...including the ALL-position-measures form, which would lower to
+    // the block if the dropped variable did not rule it out
     val d3 = mr("E? ^ V C", "E.event_id AS e_null, V.event_id AS v_id")
-    assert(!d3.queryExecution.executedPlan.toString.contains("- GroupCep "))
+    assert(captureLowered(d3))
     assert(d3.as[(Long, Option[Long], Long)].collect().toSet
       === Set((1L, None, 1L)))
   }
@@ -893,11 +910,10 @@ class MatchRecognizeSpec extends SparkSuite {
     val expected = planned.select("user_id", "mn", "v_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(expected === Set((1L, 1L, 1L), (1L, 2L, 4L), (2L, 1L, 10L)))
-    // LAST over a quantified variable forces the LIBRARY route — the
+    // LAST over a quantified variable forces the capture lowering — the
     // ordinals must be identical
     val library = MatchRecognize(df, clause("LAST(C.event_id) AS lc"))
-    assert(library.queryExecution.executedPlan.toString
-      .contains("MapGroups"))
+    assert(captureLowered(library))
     assert(library.select("user_id", "mn", "v_id")
       .as[(Long, Long, Long)].collect().toSet === expected)
     // the FLAT planned route carries the ordinal too: an
@@ -967,11 +983,11 @@ class MatchRecognizeSpec extends SparkSuite {
     val aGot = anchored.select("v_id", "e_id", "nb")
       .as[(Long, Long, Long)].collect().toSet
     assert(aGot === Set((1L, 6L, 4L), (4L, 6L, 1L)))
-    // LAST over the quantified B forces the LIBRARY anchored driver —
-    // same matches (route invariance)
+    // LAST over the quantified B forces the capture lowering — same
+    // matches (lowering invariance)
     val aLib = MatchRecognize(df,
       clause("PATTERN (V B+? E $)", ",\n  LAST(B.event_id) AS lb"))
-    assert(aLib.queryExecution.executedPlan.toString.contains("MapGroups"))
+    assert(captureLowered(aLib))
     assert(aLib.select("v_id", "e_id", "nb")
       .as[(Long, Long, Long)].collect().toSet === aGot)
 
@@ -989,7 +1005,7 @@ class MatchRecognizeSpec extends SparkSuite {
     val sLib = MatchRecognize(df,
       clause("AFTER MATCH SKIP PAST LAST ROW\nPATTERN (V B+? E)",
         ",\n  LAST(B.event_id) AS lb"))
-    assert(sLib.queryExecution.executedPlan.toString.contains("MapGroups"))
+    assert(captureLowered(sLib))
     assert(sLib.select("v_id", "e_id", "nb")
       .as[(Long, Long, Long)].collect().toSet === sGot)
 
@@ -1009,11 +1025,11 @@ class MatchRecognizeSpec extends SparkSuite {
     assert(ternToLast.select("v_id", "e_id", "nb")
       .as[(Long, Long, Long)].collect().toSet ===
       Set((1L, 6L, 4L), (4L, 6L, 1L)))
-    // library twin (LAST over B forces it) agrees
+    // capture twin (LAST over B forces it) agrees
     val ternLib = MatchRecognize(df,
       clause("AFTER MATCH SKIP PAST LAST ROW\nPATTERN (V B+? E $)",
         ",\n  LAST(B.event_id) AS lb"))
-    assert(ternLib.queryExecution.executedPlan.toString.contains("MapGroups"))
+    assert(captureLowered(ternLib))
     assert(ternLib.select("v_id", "e_id", "nb")
       .as[(Long, Long, Long)].collect().toSet === Set((1L, 6L, 4L)))
   }
@@ -1276,16 +1292,14 @@ class MatchRecognizeSpec extends SparkSuite {
       (1L, 1L, "V", 0L, 5L), (1L, 1L, "E", 3L, 5L),
       (2L, 10L, "V", 0L, 13L), (2L, 10L, "E", 2L, 13L),
       (2L, 11L, "V", 0L, 13L), (2L, 11L, "E", 1L, 13L)))
-    // LIBRARY-route greedy ALL ROWS (round 13): RUNNING LAST over a
-    // quantified variable is not plan-routable (the planned final block
-    // carries counts + FIRST rows only), so this shape falls back to
-    // the library mkRow/explode path — the pre-planned round-13 route,
-    // which must keep producing greedy winners there
+    // capture-lowered greedy ALL ROWS: RUNNING LAST over a quantified
+    // variable is not in the block (it carries counts + FIRST rows
+    // only), so this shape reads the captured rows through the
+    // mkRow/explode path, which must keep producing greedy winners
     val gLast = MatchRecognize(df,
       clause("V B+ E", "CLASSIFIER() AS cls, LAST(B.event_id) AS b_last",
         "ALL ROWS PER MATCH"), sqlGreedy = true)
-    assert(!gLast.queryExecution.executedPlan.toString
-      .contains("- GroupCep "))
+    assert(captureLowered(gLast))
     val gLastRows = gLast.select("user_id", "cls", "b_last")
       .as[(Long, String, Option[Long])].collect().toSeq
     assert(gLastRows.size === 12) // 5 + 4 + 3 winner rows
@@ -1294,15 +1308,14 @@ class MatchRecognizeSpec extends SparkSuite {
       (1L, "B", Some(4L)), (1L, "E", Some(4L)),
       (2L, "V", None), (2L, "B", Some(11L)), (2L, "B", Some(12L)),
       (2L, "E", Some(12L))))
-    // anchored greedy ALL ROWS also stays on the library path (the
-    // planned route excludes anchors); here every winner already ends
-    // at its partition tail, so the row set equals the unanchored one
+    // anchored greedy ALL ROWS lowers to the per-row block (the anchors
+    // gate inside the operator); here every winner already ends at its
+    // partition tail, so the row set equals the unanchored one
     val gAnchAll = MatchRecognize(df,
       clause("V B+ E $", "CLASSIFIER() AS cls, V.event_id AS v_id, " +
         "FINAL E.event_id AS e_id, COUNT(B.*) AS nb",
         "ALL ROWS PER MATCH"), sqlGreedy = true)
-    assert(!gAnchAll.queryExecution.executedPlan.toString
-      .contains("- GroupCep "))
+    assert(blockLowered(gAnchAll))
     assert(gAnchAll.select("user_id", "v_id", "cls", "nb", "e_id")
       .as[(Long, Long, String, Long, Long)].collect().toSet ===
       gAll.toSet)
@@ -2115,11 +2128,11 @@ class MatchRecognizeSpec extends SparkSuite {
 
   test("ALL ROWS planned route equals the library route on random inputs " +
       "(quantifier x selection mode x exclusion matrix, round 13)") {
-    // FINAL CLASSIFIER() is deliberately non-plan-routable (the match's
-    // last variable is not in the planned final block), so appending it
-    // forces the library mkRow/explode path while leaving every other
-    // measure's value untouched — an independent evaluator for the
-    // planned operator's per-row (cls_idx, within_ord) derivation.
+    // FINAL CLASSIFIER() is deliberately outside the block (the match's
+    // last variable is not in the final block), so appending it forces
+    // the capture lowering's mkRow/explode path while leaving every
+    // other measure's value untouched — an independent evaluator for
+    // the operator's per-row (cls_idx, within_ord) derivation.
     val types = Vector("view", "click", "error", "other")
     val rnd = new scala.util.Random(1307)
     def clause(pat: String, extraMeasure: String) =
@@ -2150,11 +2163,10 @@ class MatchRecognizeSpec extends SparkSuite {
       val lib = MatchRecognize(df,
         clause(pat, ",\n  FINAL CLASSIFIER() AS fcls"), sqlGreedy = greedy)
         .drop("fcls")
-      // the seam is only a seam if the two really take different routes
-      assert(planned.queryExecution.executedPlan.toString
-        .contains("- GroupCep "), s"$pat greedy=$greedy not planned")
-      assert(!lib.queryExecution.executedPlan.toString
-        .contains("- GroupCep "), s"$pat greedy=$greedy lib routed planned")
+      // the seam is only a seam if the two really take different
+      // lowerings
+      assert(blockLowered(planned), s"$pat greedy=$greedy not block-lowered")
+      assert(captureLowered(lib), s"$pat greedy=$greedy not capture-lowered")
       val cols = Seq("user_id", "cls", "mn", "nb", "v_id", "e_id")
       def rowsOf(d: org.apache.spark.sql.DataFrame) =
         d.select(cols.head, cols.tail: _*)
@@ -2199,13 +2211,148 @@ class MatchRecognizeSpec extends SparkSuite {
       val planned = MatchRecognize(df, clause(pat, ""))
       val lib = MatchRecognize(df,
         clause(pat, ", LAST(B.event_id) AS b_last"))
-      assert(planned.queryExecution.executedPlan.toString
-        .contains("- GroupCep "), s"$pat not planned")
-      assert(!lib.queryExecution.executedPlan.toString
-        .contains("- GroupCep "), s"$pat library clause routed planned")
+      assert(blockLowered(planned), s"$pat not block-lowered")
+      assert(captureLowered(lib), s"$pat not capture-lowered")
       assert(rows(lib) === exp, pat)
       // the planned route carries no b_last column
       assert(rows(planned) === exp.map(_.split(",").init.mkString(",")), pat)
+    }
+  }
+
+  // Clauses the former groupByKey library route answered: LAST over a
+  // quantified variable, aggregates, SUBSET, PREV, WITH UNMATCHED, {0,m}
+  // and {0,}, a nested ALL ROWS pattern, default-mode anchors, a dropped
+  // interior-anchor variable and a struct PARTITION BY key.
+  private lazy val oneRouteEvents = Seq(
+    (1L, 10L, "view", 1L, 5L), (2L, 20L, "click", 1L, 3L),
+    (3L, 30L, "click", 1L, 4L), (4L, 40L, "error", 1L, 2L),
+    (5L, 50L, "view", 1L, 6L), (6L, 60L, "click", 1L, 1L),
+    (7L, 70L, "error", 1L, 7L),
+    (10L, 10L, "view", 2L, 9L), (11L, 20L, "click", 2L, 8L),
+    (12L, 30L, "view", 2L, 2L), (13L, 40L, "click", 2L, 5L),
+    (14L, 50L, "click", 2L, 3L),
+    (20L, 10L, "click", 3L, 1L), (21L, 20L, "click", 3L, 2L),
+    (22L, 30L, "error", 3L, 3L)
+  ).toDF("event_id", "ts", "event_type", "user_id", "value")
+  private val vce = """DEFINE V AS event_type = 'view',
+      |       C AS event_type = 'click', E AS event_type = 'error'"""
+    .stripMargin
+  private def oneRouteClause(rest: String, key: String = "user_id") =
+    s"PARTITION BY $key\nORDER BY ts, event_id\n$rest"
+  private lazy val oneRouteCases: Seq[(String, String)] = Seq(
+    "last-quantified" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, V.event_id AS v, LAST(C.event_id) AS lc
+         |PATTERN (V C+)
+         |$vce""".stripMargin),
+    "aggregates" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, SUM(C.value) AS s, AVG(C.value) AS a,
+         |  MIN(C.value) AS lo, MAX(C.ts) AS hi
+         |PATTERN (V C{1,2})
+         |$vce""".stripMargin),
+    "subset" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, FIRST(U.event_id) AS fu,
+         |  LAST(U.event_id) AS lu, COUNT(U.*) AS nu
+         |PATTERN (V C+ E)
+         |SUBSET U = (C, E)
+         |$vce""".stripMargin),
+    "prev" -> oneRouteClause(
+      """MEASURES MATCH_NUMBER() AS mn, FIRST(D.event_id) AS f,
+        |  LAST(D.event_id) AS l
+        |PATTERN (D{2})
+        |DEFINE D AS value < PREV(value)""".stripMargin),
+    "unmatched" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, CLASSIFIER() AS who
+         |ALL ROWS PER MATCH WITH UNMATCHED ROWS
+         |PATTERN (V C)
+         |$vce""".stripMargin),
+    "zero-min" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, V.event_id AS v, COUNT(C.*) AS nc,
+         |  FIRST(C.event_id) AS fc, E.event_id AS e
+         |PATTERN (V C{0,2} E)
+         |$vce""".stripMargin),
+    "zero-min-unbounded" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, V.event_id AS v, COUNT(C.*) AS nc,
+         |  LAST(C.event_id) AS lc, E.event_id AS e
+         |PATTERN (V C{0,} E)
+         |$vce""".stripMargin),
+    "nested-all-rows" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, CLASSIFIER() AS cls,
+         |  COUNT(C.*) AS nc, LAST(R.event_id) AS rid
+         |ALL ROWS PER MATCH
+         |PATTERN (V (C E?){1,2})
+         |SUBSET R = (V, C, E)
+         |$vce""".stripMargin),
+    "tail-anchor" -> oneRouteClause(
+      """MEASURES MATCH_NUMBER() AS mn, A.event_id AS a, COUNT(B.*) AS nb
+        |PATTERN (A B+ $)
+        |DEFINE A AS event_type = 'view', B AS event_type <> 'view'"""
+        .stripMargin),
+    "head-anchor-alternation" -> oneRouteClause(
+      """MEASURES MATCH_NUMBER() AS mn, A.event_id AS a, COUNT(B.*) AS nb,
+        |  COUNT(C.*) AS nc
+        |PATTERN (^ A (B|C)+)
+        |DEFINE A AS event_type = 'view', B AS event_type = 'click',
+        |       C AS event_type <> 'view'""".stripMargin),
+    "dropped-interior-anchor" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, E.event_id AS e_null,
+         |  V.event_id AS v, COUNT(E.*) AS ne
+         |PATTERN (E? ^ V C)
+         |$vce""".stripMargin),
+    "struct-key" -> oneRouteClause(
+      s"""MEASURES MATCH_NUMBER() AS mn, V.event_id AS v, LAST(C.event_id) AS lc
+         |PATTERN (V C+)
+         |$vce""".stripMargin, key = "sk"))
+  private def oneRouteInput(name: String) =
+    if (name != "struct-key") oneRouteEvents
+    else oneRouteEvents.withColumn("sk", org.apache.spark.sql.functions
+      .struct($"user_id", ($"event_id" % 2).as("odd")))
+
+  test("every batch clause plans onto GroupCepExec and keeps its answers") {
+    // expected rows are the library route's answers, MATCH_NUMBER()
+    // included — except `A B+ $`, where that route also numbered the
+    // candidates the anchor rejected (it answered mn 5 and 3); the
+    // operator numbers only the matches it emits
+    val expected = Map(
+      "last-quantified" -> Seq(
+        "1,1,1,2", "1,2,1,3", "1,3,5,6", "2,1,10,11", "2,2,12,13", "2,3,12,14"),
+      "aggregates" -> Seq(
+        "1,1,3,3.0,3,20", "1,2,7,3.5,3,30", "1,3,1,1.0,1,60",
+        "2,1,8,8.0,8,20", "2,2,5,5.0,5,40", "2,3,8,4.0,3,50"),
+      "subset" -> Seq(
+        "1,1,2,4,3", "1,2,6,7,2"),
+      "prev" -> Seq(
+        "2,1,11,12"),
+      "unmatched" -> Seq(
+        "1,10,1,V", "1,20,1,C", "1,30,null,null", "1,40,null,null",
+        "1,50,2,V", "1,60,2,C", "1,70,null,null", "2,10,1,V", "2,20,1,C",
+        "2,30,2,V", "2,40,2,C", "2,50,null,null", "3,10,null,null",
+        "3,20,null,null", "3,30,null,null"),
+      "zero-min" -> Seq(
+        "1,1,1,2,2,4", "1,2,5,1,6,7"),
+      "zero-min-unbounded" -> Seq(
+        "1,1,1,2,3,4", "1,2,5,1,6,7"),
+      "nested-all-rows" -> Seq(
+        "1,1,C,1,2", "1,1,V,0,1", "1,2,C,1,2", "1,2,C,2,3", "1,2,V,0,1",
+        "1,3,C,1,2", "1,3,C,2,3", "1,3,E,2,4", "1,3,V,0,1", "1,4,C,1,6",
+        "1,4,V,0,5", "1,5,C,1,6", "1,5,E,1,7", "1,5,V,0,5", "2,1,C,1,11",
+        "2,1,V,0,10", "2,2,C,1,13", "2,2,V,0,12", "2,3,C,1,13", "2,3,C,2,14",
+        "2,3,V,0,12"),
+      "tail-anchor" -> Seq(
+        "1,1,5,2", "2,1,12,2"),
+      "head-anchor-alternation" -> Seq(
+        "1,1,1,1,0", "1,10,1,0,3", "1,2,1,0,1", "1,3,1,2,0", "1,4,1,1,1",
+        "1,5,1,1,1", "1,6,1,0,2", "1,7,1,2,1", "1,8,1,1,2", "1,9,1,1,2",
+        "2,1,10,1,0", "2,2,10,0,1"),
+      "dropped-interior-anchor" -> Seq(
+        "1,1,null,1,0", "2,1,null,10,0"),
+      "struct-key" -> Seq(
+        "[1,1],1,1,3", "[2,0],1,12,14"))
+    oneRouteCases.foreach { case (name, cl) =>
+      val d = MatchRecognize(oneRouteInput(name), cl)
+      assert(planOf(d).contains("- GroupCep ") &&
+        !planOf(d).contains("MapGroups"), name)
+      assert(d.collect().map(_.toSeq.mkString(",")).toSeq.sorted ===
+        expected(name), name)
     }
   }
 }
