@@ -47,31 +47,47 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   */
 object GroupCepPlan {
 
-  /** Public pattern spec: a sequence of elements, each a leaf step, a
-    * quantified sub-group, or a negative condition. `strict` ⇒ `next`
-    * contiguity to the previous element, `any` ⇒ `followedByAny`; default
-    * relaxed `followedBy`. The first element's contiguity flags are
-    * ignored (pattern start). `GGroupSpec.until` attaches the reference's
-    * stop condition: an event matching it kills every in-group branch
-    * outright. `GNotSpec` is notFollowedBy (notNext when `nextOnly`) —
-    * the branch dies if the banned event arrives before the following
-    * element takes; as the LAST top-level element it is terminal
-    * negation (see [[matchGroupPattern]]). */
-  sealed trait GSpec
-  final case class GLeafSpec(name: String, pred: Column,
-      strict: Boolean = false, any: Boolean = false) extends GSpec
-  final case class GGroupSpec(elems: Seq[GSpec], min: Int = 1, max: Int = 1,
-      optional: Boolean = false, consecutive: Boolean = false,
+  /** Pattern spec, generic in its predicate `P` (`Column` in the public
+    * API, an index into the plan's expression list in the tree shipped
+    * to executors): a sequence of elements, each a leaf step, a
+    * quantified sub-group, a negative condition or an alternation.
+    * `strict` ⇒ `next` contiguity to the previous element, `any` ⇒
+    * `followedByAny`; default relaxed `followedBy`. The first element's
+    * contiguity flags are ignored (pattern start). `GGroupSpec.until`
+    * attaches the reference's stop condition: an event matching it
+    * kills every in-group branch outright. `GNotSpec` is notFollowedBy
+    * (notNext when `nextOnly`) — the branch dies if the banned event
+    * arrives before the following element takes; as the LAST top-level
+    * element it is terminal negation (see [[matchGroupPattern]]). */
+  sealed trait GSpec[+P] {
+    /** The same tree with every predicate replaced by `f` of it, in
+      * declaration order (a group's `until` after its elements). */
+    def map[Q](f: P => Q): GSpec[Q]
+  }
+  final case class GLeafSpec[+P](name: String, pred: P,
+      strict: Boolean = false, any: Boolean = false) extends GSpec[P] {
+    def map[Q](f: P => Q): GLeafSpec[Q] = copy(pred = f(pred))
+  }
+  final case class GGroupSpec[+P](elems: Seq[GSpec[P]], min: Int = 1,
+      max: Int = 1, optional: Boolean = false, consecutive: Boolean = false,
       combinations: Boolean = false, strict: Boolean = false,
-      any: Boolean = false, until: Option[Column] = None,
-      relMark: Boolean = false) extends GSpec
-  final case class GNotSpec(name: String, pred: Column,
-      nextOnly: Boolean = false) extends GSpec
+      any: Boolean = false, until: Option[P] = None,
+      relMark: Boolean = false) extends GSpec[P] {
+    def map[Q](f: P => Q): GGroupSpec[Q] =
+      copy(elems = elems.map(_.map(f)), until = until.map(f))
+  }
+  final case class GNotSpec[+P](name: String, pred: P,
+      nextOnly: Boolean = false) extends GSpec[P] {
+    def map[Q](f: P => Q): GNotSpec[Q] = copy(pred = f(pred))
+  }
   /** Alternation `(b1 | b2 | ...)`: exactly one branch matches, leftmost
-    * preferred under reluctant selection (round 11 — alternation joins
-    * the planned twin; quantify it by wrapping in a [[GGroupSpec]]). */
-  final case class GAltSpec(branches: Seq[Seq[GSpec]],
-      strict: Boolean = false, any: Boolean = false) extends GSpec
+    * preferred under reluctant selection (quantify it by wrapping in a
+    * [[GGroupSpec]]). */
+  final case class GAltSpec[+P](branches: Seq[Seq[GSpec[P]]],
+      strict: Boolean = false, any: Boolean = false) extends GSpec[P] {
+    def map[Q](f: P => Q): GAltSpec[Q] =
+      copy(branches = branches.map(_.map(_.map(f))))
+  }
 
   /** What the operator emits per match (see [[matchGroupPattern]]). */
   sealed trait OutputShape extends Serializable
@@ -82,28 +98,13 @@ object GroupCepPlan {
   /** One row per match carrying every captured row, step-tagged. */
   case object Captures extends OutputShape
 
-  /** Serializable skeleton shipped to executors: structure only, leaf/
-    * guard predicates referenced by index into the plan's expression
-    * list (`untilIdx` -1 = none). A trailing top-level [[NotSkel]] is
-    * the terminal negation. */
-  sealed trait Skel extends Serializable
-  final case class LeafSkel(name: String, predIdx: Int, strict: Boolean,
-      any: Boolean) extends Skel
-  final case class GroupSkel(elems: Seq[Skel], min: Int, max: Int,
-      optional: Boolean, consecutive: Boolean, combinations: Boolean,
-      strict: Boolean, any: Boolean, untilIdx: Int = -1,
-      relMark: Boolean = false) extends Skel
-  final case class NotSkel(name: String, predIdx: Int,
-      nextOnly: Boolean) extends Skel
-  final case class AltSkel(branches: Seq[Seq[Skel]], strict: Boolean,
-      any: Boolean) extends Skel
-
   /** Logical node; resolved on construction (expressions come from
     * `df.col` against the analyzed child), `outputAttrs` fixed to keep
-    * exprIds stable under plan transforms. */
+    * exprIds stable under plan transforms. `spec` names each predicate
+    * by its index into `leafPreds`. */
   final case class GroupCepMatchPlan(
       keyExpr: Expression, tsExpr: Expression, tieExpr: Expression,
-      skeleton: Seq[Skel], leafPreds: Seq[Expression],
+      spec: Seq[GSpec[Int]], leafPreds: Seq[Expression],
       stepNames: Seq[String], withinMicros: Option[Long],
       reluctant: Boolean, anchorHead: Boolean, anchorTail: Boolean,
       skip: Cep.AfterMatchSkip, sqlGreedy: Boolean,
@@ -122,7 +123,7 @@ object GroupCepPlan {
   object GroupCepStrategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case p: GroupCepMatchPlan =>
-        GroupCepExec(p.keyExpr, p.tsExpr, p.tieExpr, p.skeleton, p.leafPreds,
+        GroupCepExec(p.keyExpr, p.tsExpr, p.tieExpr, p.spec, p.leafPreds,
           p.stepNames, p.withinMicros, p.reluctant, p.anchorHead,
           p.anchorTail, p.skip, p.sqlGreedy, p.shape, p.outputAttrs,
           planLater(p.child)) :: Nil
@@ -130,31 +131,29 @@ object GroupCepPlan {
     }
   }
 
-  /** Rebuild the GPattern from the skeleton with `pred(i)` as the i-th
-    * predicate, `within` and the selection modes applied — runs once per
-    * partition with bound predicates, and once at plan time with
-    * placeholders, so GPattern's own rules (and [[GroupCep.KeyRun]]'s)
-    * reject a malformed pattern at the driver. The pattern runs over
-    * ARRIVAL-TAGGED rows (row, per-key-run ordinal) — the SharedBuffer
-    * EventId identity: events arrive key-sorted, so a local counter
-    * suffices. Anchors force DEFERRED reluctant selection (every
-    * candidate of a start must reach the gates). */
-  private def buildPattern(skel: Seq[Skel], within: Option[Long],
-      reluctant: Boolean, sqlGreedy: Boolean, anchored: Boolean,
-      pred: Int => ((InternalRow, Long)) => Boolean)
-      : GPattern[(InternalRow, Long)] = {
-    type T = (InternalRow, Long)
-    def build(elems: Seq[Skel]): GPattern[T] = {
+  /** The one compiler from a spec to a GPattern: `pred(p)` is the
+    * predicate `p` stands for, and `within` and the selection modes are
+    * applied. It serves the exec (once per partition, over bound
+    * predicates), the plan-time check (once, over placeholders, so
+    * GPattern's own rules and [[GroupCep.KeyRun]]'s reject a malformed
+    * pattern at the driver) and the streaming MATCH_RECOGNIZE route.
+    * `deferSelection` forces DEFERRED reluctant selection: the batch
+    * anchor gates need every candidate of a start, while the streaming
+    * ^ gate works at the NFA and keeps the immediate selection. */
+  private[graft] def buildPattern[P, E](spec: Seq[GSpec[P]],
+      pred: P => E => Boolean, within: Option[Long], reluctant: Boolean,
+      sqlGreedy: Boolean, deferSelection: Boolean): GPattern[E] = {
+    def build(elems: Seq[GSpec[P]]): GPattern[E] = {
       require(elems.nonEmpty, "empty pattern group")
-      var p: GPattern[T] = null
+      var p: GPattern[E] = null
       elems.foreach {
-        case l: LeafSkel =>
-          val f = pred(l.predIdx)
-          p = if (p == null) GPattern.begin(l.name)(f)
-          else if (l.strict) p.next(l.name)(f)
-          else if (l.any) p.followedByAny(l.name)(f)
-          else p.followedBy(l.name)(f)
-        case g: GroupSkel =>
+        case GLeafSpec(name, lp, strict, any) =>
+          val f = pred(lp)
+          p = if (p == null) GPattern.begin(name)(f)
+          else if (strict) p.next(name)(f)
+          else if (any) p.followedByAny(name)(f)
+          else p.followedBy(name)(f)
+        case g: GGroupSpec[P] =>
           val sub = build(g.elems)
           p = if (p == null) GPattern.begin(sub)
           else if (g.strict) p.next(sub)
@@ -166,15 +165,15 @@ object GroupCepPlan {
           if (g.consecutive) p = p.consecutive
           if (g.combinations) p = p.allowCombinations
           if (g.relMark) p = p.markReluctant
-          if (g.untilIdx >= 0) p = p.until(pred(g.untilIdx))
-        case n: NotSkel =>
-          val f = pred(n.predIdx)
+          g.until.foreach(u => p = p.until(pred(u)))
+        case GNotSpec(name, np, nextOnly) =>
+          val f = pred(np)
           // a leading negation builds too: compile rejects it by name
           p = if (p == null) GPattern.of(
-                Vector(GroupCep.GNot(n.name, f, n.nextOnly)), None)
-              else if (n.nextOnly) p.notNext(n.name)(f)
-              else p.notFollowedBy(n.name)(f)
-        case a: AltSkel =>
+                Vector(GroupCep.GNot(name, f, nextOnly)), None)
+              else if (nextOnly) p.notNext(name)(f)
+              else p.notFollowedBy(name)(f)
+        case a: GAltSpec[P] =>
           val alts = a.branches.map(build)
           p = if (p == null) GPattern.begin(alts)
           else if (a.strict) p.next(alts)
@@ -183,28 +182,28 @@ object GroupCepPlan {
       }
       p
     }
-    var pat = build(skel)
+    var pat = build(spec)
     within.foreach(w => pat = pat.within(w))
     if (reluctant) pat = pat.reluctant
     if (sqlGreedy) pat = pat.greedySelect
-    if (anchored && reluctant) pat.deferredReluctant else pat
+    if (deferSelection && reluctant) pat.deferredReluctant else pat
   }
 
   /** Predicate indices whose match can be CAPTURED by a branch (leaf
     * steps) — negative/until guards only kill branches, so rows matching
     * only guards never need the defensive copy in the exec's scan. */
-  private def capturingIdx(skel: Seq[Skel]): Set[Int] = skel.flatMap {
-    case l: LeafSkel => Seq(l.predIdx)
-    case g: GroupSkel => capturingIdx(g.elems)
-    case a: AltSkel => a.branches.flatMap(capturingIdx)
-    case _: NotSkel => Seq.empty
+  private def capturingIdx(spec: Seq[GSpec[Int]]): Set[Int] = spec.flatMap {
+    case GLeafSpec(_, i, _, _) => Seq(i)
+    case g: GGroupSpec[Int] => capturingIdx(g.elems)
+    case a: GAltSpec[Int] => a.branches.flatMap(capturingIdx)
+    case _: GNotSpec[Int] => Seq.empty
   }.toSet
 
   /** Physical operator: a [[GroupCep.KeyRun]] over each sorted key run,
     * emitting `shape` (see [[matchGroupPattern]]). */
   final case class GroupCepExec(
       keyExpr: Expression, tsExpr: Expression, tieExpr: Expression,
-      skeleton: Seq[Skel], leafPreds: Seq[Expression],
+      spec: Seq[GSpec[Int]], leafPreds: Seq[Expression],
       stepNames: Seq[String], withinMicros: Option[Long],
       reluctant: Boolean, anchorHead: Boolean, anchorTail: Boolean,
       skip: Cep.AfterMatchSkip, sqlGreedy: Boolean,
@@ -243,8 +242,8 @@ object GroupCepPlan {
       val nSteps = stepNames.size
       val colTypes = childOutput.map(_.dataType)
       val (kE, tsE) = (keyExpr, tsExpr)
-      val (skel, preds, names, within) =
-        (skeleton, leafPreds, stepNames, withinMicros)
+      val (tree, preds, names, within) =
+        (spec, leafPreds, stepNames, withinMicros)
       val (rel, aHead, aTail, skipStrat, sqlG, out) =
         (reluctant, anchorHead, anchorTail, skip, sqlGreedy, shape)
       val outTypes = outputAttrs.map(_.dataType).toArray
@@ -264,21 +263,22 @@ object GroupCepPlan {
         // rows are tagged with per-key arrival ordinals below — mark
         // the pattern so the dedup-skip fast path applies (see
         // Compiled.noEpsilonDup)
-        val compiled = GroupCep.compile(buildPattern(skel, within, rel, sqlG,
-          aHead || aTail, i => w => bound(i).eval(w._1)).withArrivalIdentity)
+        val compiled = GroupCep.compile(buildPattern[Int, (InternalRow, Long)](
+          tree, i => w => bound(i).eval(w._1), within, rel, sqlG,
+          deferSelection = aHead || aTail).withArrivalIdentity)
         val tsOf: ((InternalRow, Long)) => Long =
           w => tsEval.eval(w._1).asInstanceOf[Long]
         // only leaf-step matches can be captured; not/until guard rows
         // merely kill branches and never need the defensive copy
-        val capturing = capturingIdx(skel).toArray.sorted
+        val capturing = capturingIdx(tree).toArray.sorted
         val nCapturing = capturing.length
         val proj = UnsafeProjection.create(outTypes)
         // each capture slot's declared step index (several slots can
         // share a step name under alternation)
         val slotStep: Array[Int] = Array.tabulate(compiled.slotCount)(
           s => names.indexOf(compiled.stepNameOf(s)))
-        // stepNames is built from the same specs, so this only guards
-        // a future caller: a named error, not an index of -1
+        // stepNames are the plan-time compile's, so this only guards a
+        // node built by another caller: a named error, not an index of -1
         require(slotStep.forall(_ >= 0),
           "every capture slot's step name must be in stepNames: " +
             s"${(0 until compiled.slotCount).filter(slotStep(_) < 0)
@@ -505,7 +505,7 @@ object GroupCepPlan {
     *            declaration order.
     */
   def matchGroupPattern(df: DataFrame, key: Column, ts: Column, tie: Column,
-      elems: Seq[GSpec], withinMicros: Option[Long] = None,
+      elems: Seq[GSpec[Column]], withinMicros: Option[Long] = None,
       reluctant: Boolean = false,
       anchorHead: Boolean = false, anchorTail: Boolean = false,
       skip: Cep.AfterMatchSkip = Cep.NoSkip,
@@ -521,45 +521,23 @@ object GroupCepPlan {
           child.output.find(_.name == u.name).getOrElse(throw new
               IllegalArgumentException(s"column ${u.name} not in ${child.output}"))
       }
-    val predsB = Seq.newBuilder[Expression]
-    var nPreds = 0
-    def skeletonOf(e: GSpec): Skel = e match {
-      case a: GAltSpec =>
-        AltSkel(a.branches.map(_.map(skeletonOf)), a.strict, a.any)
-      case l: GLeafSpec =>
-        predsB += resolve(l.pred); nPreds += 1
-        LeafSkel(l.name, nPreds - 1, l.strict, l.any)
-      case g: GGroupSpec =>
-        val inner = g.elems.map(skeletonOf)
-        val untilIdx = g.until match {
-          case Some(u) => predsB += resolve(u); nPreds += 1; nPreds - 1
-          case None => -1
-        }
-        GroupSkel(inner, g.min, g.max, g.optional,
-          g.consecutive, g.combinations, g.strict, g.any, untilIdx,
-          g.relMark)
-      case n: GNotSpec =>
-        predsB += resolve(n.pred); nPreds += 1
-        NotSkel(n.name, nPreds - 1, n.nextOnly)
-    }
-    val skeleton = elems.map(skeletonOf)
+    // the tree shipped to executors: each predicate becomes its index
+    // into the plan's expression list
+    val preds = scala.collection.mutable.ArrayBuffer.empty[Expression]
+    val spec = elems.map(_.map { c => preds += resolve(c); preds.size - 1 })
     // validate at PLAN time on a placeholder build (the executor-side
     // build would only fail per task): GPattern's rules (quantifier
     // count, nesting and contiguity under a selection mode, negation
     // placement, terminal negation against within and the selection
     // modes) and the key-run driver's (terminal negation against skip
     // and the $ anchor)
-    val placeholder = GroupCep.compile(buildPattern(skeleton, withinMicros,
-      reluctant, sqlGreedy, anchorHead || anchorTail, _ => _ => false))
+    val placeholder = GroupCep.compile(buildPattern[Int, Any](spec,
+      _ => _ => false, withinMicros, reluctant, sqlGreedy,
+      deferSelection = anchorHead || anchorTail))
     GroupCep.KeyRun.check(placeholder, skip, anchorTail)
-    // negative elements capture nothing: they contribute no output slots
-    def leafNames(e: GSpec): Seq[String] = e match {
-      case l: GLeafSpec => Seq(l.name)
-      case g: GGroupSpec => g.elems.flatMap(leafNames)
-      case a: GAltSpec => a.branches.flatMap(_.flatMap(leafNames))
-      case _: GNotSpec => Seq.empty
-    }
-    val stepNames = elems.flatMap(leafNames).distinct
+    // the distinct leaf names in declaration order (negative elements
+    // capture nothing: they contribute no output slots)
+    val stepNames = placeholder.stepNames
     val keyE = resolve(key)
     // match_number = 1-based per-key match ordinal in emission order —
     // the SAME ordinal the library drivers produce (batch) and carry in
@@ -587,7 +565,7 @@ object GroupCepPlan {
       AttributeReference("match_number", LongType, nullable = false)() +:
       shapeAttrs
     GraftSqlShim.ofRows(spark, GroupCepMatchPlan(
-      keyE, resolve(ts), resolve(tie), skeleton, predsB.result(), stepNames,
+      keyE, resolve(ts), resolve(tie), spec, preds.toVector, stepNames,
       withinMicros, reluctant, anchorHead, anchorTail, skip, sqlGreedy,
       shape, outAttrs, child))
   }

@@ -52,8 +52,10 @@ object CepStateCodec {
     * GStreamState gains the terminal-negation gate (`gated`) and whose
     * branches carry a greedy-guard kind; 7 — one flat GArrivalState row
     * (GStreamState's fields inlined), the match ordinal persisted only
-    * for numbered streams. */
-  val GroupVersion = 7    // GroupCep.GArrivalState
+    * for numbered streams; 8 — streaming MATCH_RECOGNIZE compiles the
+    * batch spec tree, so a quantified PERMUTE gains the group level its
+    * batch twin has and the group ids `Conf.reps` keys name shift. */
+  val GroupVersion = 8    // GroupCep.GArrivalState
 
   /** The envelope's product encoder — a stable (int, binary) row, never
     * the kryo-opaque single column. */

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{array, coalesce, col, expr, lit, unix_micros, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
+import graft.plans.GroupCepPlan
+import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
+
 /** MATCH_RECOGNIZE-style SQL entry point over the CEP library — beyond
   * the 1.6 reference, whose SQL surface registers no pattern functions
   * (flink-table FunctionCatalog.scala:302-462); Flink grew SQL
@@ -141,7 +144,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampT
   * to plain columns; every other clause reads the operator's captured
   * rows through the same row-level measure evaluator streaming uses.
   *
-  * STREAMING inputs route the same parsed clause onto
+  * STREAMING inputs compile the same pattern spec tree, through the
+  * same [[graft.plans.GroupCepPlan.buildPattern]], onto
   * [[GroupCep.streamDriver]]: partial matches persist in keyed state
   * across micro-batches and complete whenever their events arrive.
   * WITHIN requires a watermark on the ORDER BY column upstream
@@ -269,7 +273,7 @@ object MatchRecognize {
   private val WithinRe =
     """(?is)WITHIN\s+INTERVAL\s+'(\d+)'\s+(SECOND|MINUTE|HOUR|DAY)""".r
   private val DefineRe = """(?is)\bDEFINE\s+(.*)\z""".r
-  private val QuantRe = """\{\d+(,\d*)?\}""".r
+  private val QuantRe = """\{(\d+)(,(\d*))?\}""".r
   private val FirstLastRe =
     """(?is)(FIRST|LAST)\s*\(\s*(\w+)\.(\w+)\s*(?:,\s*(\d+)\s*)?\)""".r
   private val PrevRe = """(?is)\bPREV\s*\(\s*(\w+)\s*(?:,\s*(\d+)\s*)?\)""".r
@@ -293,16 +297,33 @@ object MatchRecognize {
   private def patVarNames(es: Seq[PElem]): Seq[String] = es.flatMap {
     case PVar(n, _) => Seq(n)
     case PGrp(in, _) => patVarNames(in)
-    case PAlt(bs, _) => bs.flatMap(patVarNames)
+    case PAlt(bs) => bs.flatMap(patVarNames)
   }
 
-  private sealed trait PElem { def quant: Option[String] }
-  private final case class PVar(name: String, quant: Option[String])
+  /** Every quantifier of a parsed pattern, outermost first. */
+  private def patQuants(es: Seq[PElem]): Seq[Quant] = es.flatMap {
+    case PVar(_, q) => q.toSeq
+    case PGrp(in, q) => q.toSeq ++ patQuants(in)
+    case PAlt(bs) => bs.flatMap(patQuants)
+  }
+
+  /** A parsed quantifier: `min` to `max` repetitions (`Int.MaxValue` =
+    * unbounded), `optional` for `?` and `*`, `reluctant` for the SQL:2016
+    * marker (`B+?`). `{0,m}` keeps `min` 0 — `GPattern.times` makes that
+    * element optional, and rejects `{0}` by name. */
+  private final case class Quant(min: Int, max: Int, optional: Boolean,
+      reluctant: Boolean) {
+    /** Can the quantified element match zero rows? */
+    def nullable: Boolean = optional || min == 0
+  }
+
+  private sealed trait PElem
+  private final case class PVar(name: String, quant: Option[Quant])
       extends PElem
-  private final case class PGrp(elems: Vector[PElem], quant: Option[String])
+  private final case class PGrp(elems: Vector[PElem], quant: Option[Quant])
       extends PElem
-  private final case class PAlt(branches: Vector[Vector[PElem]],
-      quant: Option[String]) extends PElem
+  /** Alternation; a quantified one is the sole element of a [[PGrp]]. */
+  private final case class PAlt(branches: Vector[Vector[PElem]]) extends PElem
 
   /** Balanced-paren PATTERN body (the old regex truncated at the first
     * ')', which is what made nested groups silently misparse). */
@@ -339,24 +360,33 @@ object MatchRecognize {
     def skipWs(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
     def fail(what: String): Nothing = throw new IllegalArgumentException(
       s"unsupported PATTERN syntax ($what) at '${s.substring(i)}' in ($s)")
-    def quant(): Option[String] = {
+    def quant(): Option[Quant] = {
       skipWs()
+      val base: Option[(Int, Int, Boolean)] =
+        if (i >= s.length) None
+        else s(i) match {
+          case '?' => i += 1; Some((1, 1, true))
+          case '*' => i += 1; Some((1, Int.MaxValue, true))
+          case '+' => i += 1; Some((1, Int.MaxValue, false))
+          case '{' if !s.startsWith("{-", i) =>
+            val j = s.indexOf('}', i)
+            if (j < 0) fail("unclosed quantifier")
+            val q = s.substring(i, j + 1)
+            i = j + 1
+            q match {
+              case QuantRe(n, null, _) => Some((n.toInt, n.toInt, false))
+              case QuantRe(n, _, "") => Some((n.toInt, Int.MaxValue, false))
+              case QuantRe(n, _, m) => Some((n.toInt, m.toInt, false))
+              case _ => fail(s"bad quantifier $q")
+            }
+          case _ => None
+        }
       // SQL:2016 reluctant marker: a '?' IMMEDIATELY after the base
       // quantifier (B+? B*? B?? B{n,m}?) — no whitespace, per the grammar
-      def rel(base: String): Some[String] =
-        if (i < s.length && s(i) == '?') { i += 1; Some(base + "?") }
-        else Some(base)
-      if (i >= s.length) None
-      else s(i) match {
-        case '?' | '*' | '+' => val q = s(i).toString; i += 1; rel(q)
-        case '{' if !s.startsWith("{-", i) =>
-          val j = s.indexOf('}', i)
-          if (j < 0) fail("unclosed quantifier")
-          val q = s.substring(i, j + 1)
-          if (!QuantRe.matches(q)) fail(s"bad quantifier $q")
-          i = j + 1
-          rel(q)
-        case _ => None
+      base.map { case (mn, mx, opt) =>
+        val rel = i < s.length && s(i) == '?'
+        if (rel) i += 1
+        Quant(mn, mx, opt, rel)
       }
     }
     def sequence(stopComma: Boolean = false): Vector[PElem] = {
@@ -371,12 +401,7 @@ object MatchRecognize {
           if (!s.startsWith("-}", i)) fail("unclosed {- exclusion")
           i += 2
           if (inner.isEmpty) fail("empty exclusion")
-          def leaves(es: Vector[PElem]): Vector[String] = es.flatMap {
-            case PVar(n, _) => Vector(n)
-            case PGrp(in, _) => leaves(in)
-            case PAlt(bs, _) => bs.flatMap(leaves)
-          }
-          excludedB ++= leaves(inner)
+          excludedB ++= patVarNames(inner)
           out ++= inner
         } else if (s(i) == '(') {
           i += 1
@@ -425,7 +450,10 @@ object MatchRecognize {
       val itemsV = items.result()
       if (itemsV.size > 6) fail("PERMUTE arity above 6 (720 branches)")
       if (itemsV.size == 1) PGrp(itemsV.head, quant())
-      else PAlt(itemsV.permutations.map(_.flatten).toVector, quant())
+      else {
+        val alt = PAlt(itemsV.permutations.map(_.flatten).toVector)
+        quant().fold[PElem](alt)(q => PGrp(Vector(alt), Some(q)))
+      }
     }
     // alternation binds loosest (SQL:2016): A B | C D = (A B) | (C D)
     def alternation(): Vector[PElem] = {
@@ -442,7 +470,7 @@ object MatchRecognize {
           if (b.isEmpty) fail("empty alternation branch")
           bs += b
         }
-        Vector(PAlt(bs.result(), None))
+        Vector(PAlt(bs.result()))
       }
     }
     val r = alternation()
@@ -526,16 +554,10 @@ object MatchRecognize {
       }
       val interior = tops.result()
       if (interior.nonEmpty) {
-        def nullableQ(q: Option[String]): Boolean = q.exists { s0 =>
-          val b = if (s0.length > 1 && s0.endsWith("?")) s0.dropRight(1)
-                  else s0
-          b == "?" || b == "*" ||
-            (b.startsWith("{") && b.drop(1).takeWhile(_.isDigit) == "0")
-        }
         def nullable(e: PElem): Boolean = e match {
-          case PVar(_, q) => nullableQ(q)
-          case PGrp(in, q) => nullableQ(q) || in.forall(nullable)
-          case PAlt(bs, q) => nullableQ(q) || bs.exists(_.forall(nullable))
+          case PVar(_, q) => q.exists(_.nullable)
+          case PGrp(in, q) => q.exists(_.nullable) || in.forall(nullable)
+          case PAlt(bs) => bs.exists(_.forall(nullable))
         }
         def allNullable(segment: String): Boolean = {
           val t = segment.trim
@@ -585,7 +607,6 @@ object MatchRecognize {
     val elems = parsed.elems
     val excluded = parsed.excluded
     require(elems.nonEmpty, "PATTERN must name at least one variable")
-    def leafNames(es: Seq[PElem]): Seq[String] = patVarNames(es)
     // groups AND alternation (variables may repeat across branches)
     val nested = elems.exists(e =>
       e.isInstanceOf[PGrp] || e.isInstanceOf[PAlt])
@@ -649,67 +670,31 @@ object MatchRecognize {
     // lattice: alternation levels prefer the leftmost branch (and
     // dominate in-branch loops), sequence levels prefer the exit —
     // fewest of the first quantifier, then fewest of the second, the
-    // `V B+? C+? E` SQL:2016 ranking; alternation/PERMUTE compose.
-    // Mixed greedy/reluctant and nested quantifiers reject by name.
-    def isReluctantQ(q: String): Boolean = q.length > 1 && q.endsWith("?")
-    def anyReluctant(es: Vector[PElem]): Boolean = es.exists {
-      case PVar(_, q) => q.exists(isReluctantQ)
-      case PGrp(in, q) => q.exists(isReluctantQ) || anyReluctant(in)
-      case PAlt(bs, q) => q.exists(isReluctantQ) || bs.exists(anyReluctant)
-    }
-    // under sqlGreedy the reluctant markers are PER-QUANTIFIER polarity
-    // (SQL:2016 mixed semantics) and must not trigger the default
-    // mode's pattern-level reluctant machinery
-    val hasReluctant = anyReluctant(elems) && !sqlGreedy
-    def countQuants(es: Vector[PElem]): Int = es.map {
-      case PVar(_, q) => q.size
-      case PGrp(in, q) => q.size + countQuants(in)
-      case PAlt(bs, q) => q.size + bs.map(countQuants).sum
-    }.sum
-    if (sqlGreedy) {
-      // round 11 (late): reluctant markers COMPOSE in this mode as
-      // per-quantifier polarity — `V B+ C+? E` maximizes B then
-      // minimizes C, the full SQL:2016 mixed ranking
-      require(countQuants(elems) >= 1,
-        "sqlGreedy selection needs at least one quantified element")
-    }
-    if (hasReluctant) {
-      if (countQuants(elems) > 1) {
-        // every decision point must rank the same way — a greedy
-        // quantifier inside a reluctant ranking has no defined
-        // preference interleaving (Calcite rejects the mix too)
-        def allReluctant(es: Vector[PElem]): Boolean = es.forall {
-          case PVar(_, q) => q.forall(isReluctantQ)
-          case PGrp(in, q) => q.forall(isReluctantQ) && allReluctant(in)
-          case PAlt(bs, q) => q.forall(isReluctantQ) && bs.forall(allReluctant)
-        }
-        require(allReluctant(elems),
-          "a pattern with several quantified elements must mark EVERY " +
-            "one reluctant (mixed greedy/reluctant ranking is not " +
-            "supported)")
-        // round 11 (late): alternation/PERMUTE compose with multiple
-        // quantifiers — GroupCep.prefer's structural decision lattice
-        // ranks branch choices (leftmost) above in-branch loops; the
-        // GPattern build rejects the remaining nested-quantifier case
-      }
-      // ROUND 10: anchors COMPOSE in batch — candidates buffer to end
-      // of input, the anchor gates filter BEFORE per-start preference
-      // selection (a shortest completion failing $ must lose to a
-      // longer same-start candidate that reaches the partition tail),
-      // all inside the operator's key-run driver. STREAMING: the ^
-      // head anchor composes too (the NFA-level arrival-0 gate means
-      // every candidate is anchored by construction, so the immediate
-      // shortest-per-start selection stays exact); $ — and therefore
-      // any gated-at-end form — still needs batch input, which the
-      // GENERAL streaming-anchor guard below already enforces.
-      // ROUND 10 (late): non-default AFTER MATCH SKIP also composes —
-      // the GroupCep drivers resolve THE preferred match per start
-      // first, then the skip queue emits/prunes over those selections
-      // (GroupSkipQueue prunes the resolver's buffered starts by the
-      // same boundary rule). ROUND 11: anchors × skip × reluctant
-      // composes too — the queue runs over the gate-passing selected
-      // candidates at end of the key run.
-    }
+    // `V B+? C+? E` SQL:2016 ranking. Nested quantifiers reject in the
+    // GPattern build. Under sqlGreedy the markers are PER-QUANTIFIER
+    // polarity (SQL:2016 mixed semantics, `V B+ C+? E` maximizes B then
+    // minimizes C) and must not trigger the pattern-level reluctant
+    // machinery.
+    val quants = patQuants(elems)
+    val hasReluctant = quants.exists(_.reluctant) && !sqlGreedy
+    // every decision point must rank the same way — a greedy quantifier
+    // inside a reluctant ranking has no defined preference interleaving
+    // (Calcite rejects the mix too)
+    if (hasReluctant && quants.size > 1)
+      require(quants.forall(_.reluctant),
+        "a pattern with several quantified elements must mark EVERY " +
+          "one reluctant (mixed greedy/reluctant ranking is not " +
+          "supported)")
+    // Anchors compose with reluctant selection: in batch the candidates
+    // buffer to the end of the key run and the anchor gates filter
+    // BEFORE per-start preference selection (a shortest completion
+    // failing $ must lose to a longer same-start candidate that reaches
+    // the partition tail); on a stream the ^ gate works at the NFA
+    // (arrival 0), so every candidate is anchored by construction and
+    // the immediate shortest-per-start selection stays exact. A
+    // non-default AFTER MATCH SKIP composes too: the drivers resolve THE
+    // preferred match per start first, then the skip queue runs over
+    // the gate-passing selections.
     // SQL:2016 ALL ROWS PER MATCH WITH UNMATCHED ROWS (round 10, beyond
     // Flink 1.7): rows that are part of NO emitted match are also
     // output, with NULL measures, alongside the pass-through ORDER BY
@@ -792,7 +777,7 @@ object MatchRecognize {
     }
     val withinOrd: Option[Long] =
       if (streamingIn) withinMicros.map(_ / 1000) else withinMicros
-    val varsAll = leafNames(elems).toVector
+    val varsAll = patVarNames(elems).toVector
     val vars = varsAll.distinct
     // exclusion is name-keyed: a variable appearing BOTH inside and
     // outside {- -} would need occurrence-level tracking — reject rather
@@ -913,34 +898,36 @@ object MatchRecognize {
     // any other name (a SUBSET, a variable the interior-anchor rewrite
     // dropped) gets its SQL-defined degenerate result (COUNT = 0, null
     // positional) from the captured rows, never a step column
-    def allPatternVars(es: Vector[PElem]): Set[String] = es.flatMap {
-      case PVar(v, _) => Seq(v)
-      case PGrp(in, _) => allPatternVars(in)
-      case PAlt(bs, _) => bs.flatMap(allPatternVars)
-    }.toSet
-    val patternVars = allPatternVars(elems)
+    val patternVars = vars.toSet
     def quantifiedVars(es: Vector[PElem], inQuant: Boolean): Set[String] =
       es.flatMap {
         case PVar(v, q) =>
           if (inQuant || q.isDefined) Seq(v) else Seq.empty
         case PGrp(in, q) => quantifiedVars(in, inQuant || q.isDefined)
-        case PAlt(bs, _) => bs.flatMap(b => quantifiedVars(b, inQuant = true))
+        case PAlt(bs) => bs.flatMap(b => quantifiedVars(b, inQuant = true))
       }.toSet
     val qVars = quantifiedVars(elems, inQuant = false)
-    // (min, max, optional) of a quantifier as the GPattern builder reads
-    // them: {0,m} and {0,} reach `times(0, m)`, which makes the element
-    // optional; {0} is rejected there by name
-    def quantOf(q: String): (Int, Int, Boolean) = q match {
-      case r if isReluctantQ(r) => quantOf(r.dropRight(1))
-      case "?" => (1, 1, true)
-      case "*" => (1, Int.MaxValue, true)
-      case "+" => (1, Int.MaxValue, false)
-      case b => b.substring(1, b.length - 1).split(",", -1) match {
-        case Array(n) => (n.toInt, n.toInt, false)
-        case Array(n, "") => (n.toInt, Int.MaxValue, false)
-        case Array(n, m) => (n.toInt, m.toInt, false)
-      }
+    // the one pattern tree, over variable names: batch ships it with
+    // each name's DEFINE column, streaming compiles it with the name's
+    // row predicate. SQL adjacency is strict between siblings AND
+    // between the repetitions of a quantified element (consecutive); the
+    // reluctant marker is pattern-level in the default mode
+    // (`hasReluctant`) and per-quantifier polarity under sqlGreedy
+    def group(inner: Seq[GSpec[String]], q: Option[Quant]): GSpec[String] = {
+      val Quant(mn, mx, opt, rel) = q.getOrElse(
+        Quant(1, 1, optional = false, reluctant = false))
+      GGroupSpec(inner, mn, mx, optional = opt, consecutive = true,
+        strict = true, relMark = sqlGreedy && rel)
     }
+    def toSpec(e: PElem): GSpec[String] = e match {
+      case PVar(v, None) => GLeafSpec(v, v, strict = true)
+      case PVar(v, q) => group(Seq(GLeafSpec(v, v)), q)
+      case PGrp(in, q) => group(in.map(toSpec), q)
+      // SQL:2016 alternation: exactly one branch matches, leftmost
+      // preferred
+      case PAlt(bs) => GAltSpec(bs.map(_.map(toSpec)), strict = true)
+    }
+    val spec = elems.map(toSpec)
 
     // ALL ROWS PER MATCH: one output row per matched event in match
     // order, measures with RUNNING semantics (the SQL default in this
@@ -1087,30 +1074,10 @@ object MatchRecognize {
     // BATCH: every clause plans onto the GroupCepExec operator — the
     // planner owns the data movement (exactly one exchange + one sort from
     // EnsureRequirements, elidable by upstream partitioning) and the
-    // DEFINE predicates run codegen'd. SQL adjacency is strict between
-    // siblings AND between the repetitions of a quantified element
-    // (consecutive). ^/$ and AFTER MATCH run inside the operator's key-run
-    // driver, so only the output lowering depends on the measures.
+    // DEFINE predicates run codegen'd. ^/$ and AFTER MATCH run inside the
+    // operator's key-run driver, so only the output lowering depends on
+    // the measures.
     if (!streamingIn) {
-      import graft.plans.GroupCepPlan
-      import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
-      // the reluctant marker is pattern-level in the default mode
-      // (`reluctant` below) and per-quantifier polarity under sqlGreedy
-      def group(inner: Seq[GSpec], q: Option[String]): GGroupSpec = {
-        val (mn, mx, opt) = q.map(quantOf).getOrElse((1, 1, false))
-        GGroupSpec(inner, mn, mx, optional = opt, consecutive = true,
-          strict = true, relMark = sqlGreedy && q.exists(isReluctantQ))
-      }
-      def toSpec(e: PElem): GSpec = e match {
-        case PVar(v, None) => GLeafSpec(v, col(s"__mr_$v"), strict = true)
-        case PVar(v, q) => group(Seq(GLeafSpec(v, col(s"__mr_$v"))), q)
-        case PGrp(in, q) => group(in.map(toSpec), q)
-        case PAlt(branches, q) =>
-          // SQL:2016 alternation: exactly one branch matches, leftmost
-          // preferred; a quantified one reuses the group loop machinery
-          val alt = GAltSpec(branches.map(_.map(toSpec)), strict = true)
-          if (q.isEmpty) alt else group(Seq(alt), q)
-      }
       // the per-match block carries per step its capture count and first
       // captured row: FIRST()/COUNT() over any variable, any position over
       // an unquantified one (first = last = only), and MATCH_NUMBER(). A
@@ -1141,7 +1108,7 @@ object MatchRecognize {
         else GroupCepPlan.MatchBlock
       val planned = GroupCepPlan.matchGroupPattern(basePrepared,
         col(partCol), col("__mr_ord"), col("__mr_tie"),
-        elems.map(toSpec), withinMicros = withinOrd,
+        spec.map(_.map(v => col(s"__mr_$v"))), withinMicros = withinOrd,
         reluctant = hasReluctant, anchorHead = anchorStart,
         anchorTail = anchorEnd, skip = skip, sqlGreedy = sqlGreedy,
         shape = shape)
@@ -1186,14 +1153,14 @@ object MatchRecognize {
           }: _*)
         case GroupCepPlan.Captures =>
           // the operator's step indexes name the distinct leaves in
-          // declaration order; rebuild the step → rows map in that order
-          val steps = patVarNames(elems).distinct.toVector
+          // declaration order (`vars`); rebuild the step → rows map in
+          // that order
           post(planned.map { r =>
             val g = scala.collection.mutable.LinkedHashMap
               .empty[String, Vector[Row]]
-            steps.foreach(n => g(n) = Vector.empty)
+            vars.foreach(n => g(n) = Vector.empty)
             r.getSeq[Row](2).foreach { c =>
-              val n = steps(c.getInt(0))
+              val n = vars(c.getInt(0))
               g(n) = g(n) :+ c.getStruct(1)
             }
             mkRow(Row(r.get(0)), r.getLong(1),
@@ -1202,7 +1169,7 @@ object MatchRecognize {
       })
     }
 
-    // STREAMING: the same parsed clause runs on GroupCep.streamDriver —
+    // STREAMING: the same spec tree runs on GroupCep.streamDriver —
     // partials persist in keyed state across micro-batches; WITHIN
     // patterns require a watermark on the ORDER BY column upstream
     // (`df.withWatermark(ord, ...)`) so idle keys' expired partials are
@@ -1272,53 +1239,8 @@ object MatchRecognize {
         }
       }
 
-    def applyQuant(gp: GroupCep.GPattern[Row],
-        q: String): GroupCep.GPattern[Row] = {
-      // the reluctant marker is pattern-level on GroupCep in the
-      // default mode (strip here, set GPattern.reluctant below); in
-      // sqlGreedy mode it marks THIS quantifier's polarity
-      val applied = (if (isReluctantQ(q)) q.dropRight(1) else q) match {
-        case "?" => gp.optional
-        case "*" => gp.oneOrMore.consecutive.optional
-        case "+" => gp.oneOrMore.consecutive
-        case b =>
-          b.substring(1, b.length - 1).split(",", -1) match {
-            case Array(n) => gp.times(n.toInt).consecutive
-            case Array(n, "") =>
-              gp.times(n.toInt, Int.MaxValue).consecutive
-            case Array(n, m) => gp.times(n.toInt, m.toInt).consecutive
-          }
-      }
-      if (sqlGreedy && isReluctantQ(q)) applied.markReluctant
-      else applied
-    }
-    def build(es: Vector[PElem],
-        init: GroupCep.GPattern[Row]): GroupCep.GPattern[Row] = {
-      var gp = init
-      es.foreach { e =>
-        gp = e match {
-          case PVar(v, _) =>
-            if (gp == null) GroupCep.GPattern.begin[Row](v)(pred(v))
-            else gp.next(v)(pred(v))
-          case PGrp(inner, _) =>
-            val sub = build(inner, null)
-            if (gp == null) GroupCep.GPattern.begin[Row](sub)
-            else gp.next(sub)
-          case PAlt(branches, _) =>
-            // SQL:2016 alternation: exactly one branch matches; branch
-            // preference (leftmost) rides the engine's fork order
-            val alts = branches.map(b => build(b, null))
-            if (gp == null) GroupCep.GPattern.begin[Row](alts)
-            else gp.next(alts)
-        }
-        e.quant.foreach(q => gp = applyQuant(gp, q))
-      }
-      gp
-    }
-    var gp = build(elems, null)
-    withinOrd.foreach(w => gp = gp.within(w))
-    if (hasReluctant) gp = gp.reluctant
-    if (sqlGreedy) gp = gp.greedySelect
+    val gp = GroupCepPlan.buildPattern[String, Row](spec, pred, withinOrd,
+      hasReluctant, sqlGreedy, deferSelection = false)
     val needsMatchNum = measures.map(baseOf)
       .exists(_.isInstanceOf[MatchNumMeasure])
     val keyEnc = Encoders.row(StructType(Seq(schema(keyIdx))))

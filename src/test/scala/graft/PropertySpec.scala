@@ -10,9 +10,9 @@ import org.scalacheck.{Gen, Test => SCTest, Prop}
 class PropertySpec extends SparkSuite {
   import spark.implicits._
 
-  private def check(p: Prop): Unit = {
+  private def check(p: Prop, cases: Int = 30): Unit = {
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(30), p)
+      SCTest.Parameters.default.withMinSuccessfulTests(cases), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -290,6 +290,7 @@ class PropertySpec extends SparkSuite {
     import graft.streaming.GroupCep.GPattern
     import graft.plans.GroupCepPlan
     import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
+    import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.col
     type E = (String, Long)
     def pv(s: String) = (e: E) => e._1 == s
@@ -306,7 +307,7 @@ class PropertySpec extends SparkSuite {
       .next("b")(anyB).oneOrMore.consecutive
       .next("c")(pv("c")).oneOrMore.consecutive
     // (planned spec, library pattern, step names, has a quantifier)
-    val pool: Vector[(Seq[GSpec], () => GPattern[E], Seq[String], Boolean)] =
+    val pool: Vector[(Seq[GSpec[Column]], () => GPattern[E], Seq[String], Boolean)] =
       Vector(
         (Seq(GLeafSpec("v", is("a")), loop("b", col("name") =!= "d"),
           last("e", "d")), () => p1, Seq("v", "b", "e"), true),
@@ -386,17 +387,18 @@ class PropertySpec extends SparkSuite {
     import graft.streaming.GroupCep.GPattern
     import graft.plans.GroupCepPlan
     import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
+    import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.col
     type E = (String, Long)
     def pv(ns: String*) = (e: E) => ns.contains(e._1)
     def is(ns: String*) = col("name").isin(ns: _*)
     def leaf(n: String, ns: String*) = GLeafSpec(n, is(ns: _*), strict = true)
-    def loop(inner: Seq[GSpec], min: Int = 1, max: Int = Int.MaxValue,
+    def loop(inner: Seq[GSpec[Column]], min: Int = 1, max: Int = Int.MaxValue,
         optional: Boolean = false) =
       GGroupSpec(inner, min, max, optional = optional, consecutive = true,
         strict = true)
     // (planned spec, library pattern, step names)
-    val pool: Vector[(Seq[GSpec], () => GPattern[E], Seq[String])] = Vector(
+    val pool: Vector[(Seq[GSpec[Column]], () => GPattern[E], Seq[String])] = Vector(
       // a (m1|m2)+ : c matches both branches
       (Seq(leaf("v", "a"), loop(Seq(GAltSpec(Seq(Seq(leaf("m1", "b", "c")),
           Seq(leaf("m2", "c", "x"))), strict = true)))),
@@ -623,6 +625,23 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  // MATCH_RECOGNIZE clause pieces shared by the SQL-vs-DSL and the
+  // streaming-vs-batch differentials: overlapping DEFINEs over a
+  // 3-letter alphabet, every quantifier form, all four AFTER MATCH
+  // strategies
+  private val mrAlphabet = Vector("a", "b", "c")
+  private val mrQuants =
+    Vector("", "?", "*", "+", "{2}", "{2,}", "{1,3}", "{0,2}")
+  private val mrSkips =
+    Vector("PAST LAST ROW", "TO NEXT ROW", "TO FIRST", "TO LAST")
+  private def mrSkipSql(si: Int, target: String): String =
+    if (si >= 2) s"${mrSkips(si)} $target" else mrSkips(si)
+  private def mrDefines(vars: Seq[String], defs: Seq[Set[String]]): String =
+    vars.zip(defs).map { case (v, d) =>
+      s"$v AS event_type IN (" +
+        d.toSeq.sorted.map(e => s"'$e'").mkString(", ") + ")"
+    }.mkString(", ")
+
   test("flat MATCH_RECOGNIZE clauses equal the linear DSL pattern (SQL-vs-DSL differential)") {
     // Every batch MATCH_RECOGNIZE clause plans onto GroupCepExec; the
     // DSL runs the library batch driver. Random flat clauses (2-4
@@ -636,20 +655,17 @@ class PropertySpec extends SparkSuite {
     import graft.streaming.{Cep, MatchRecognize}
     import org.apache.spark.sql.Encoders
     type Ev = (Long, Long, String, Long) // (event_id, ts, type, user_id)
-    val alphabet = Vector("a", "b", "c")
-    val quants = Vector("", "?", "*", "+", "{2}", "{2,}", "{1,3}", "{0,2}")
-    val skips = Vector("PAST LAST ROW", "TO NEXT ROW", "TO FIRST", "TO LAST")
     final case class Clause(quants: Vector[String], defs: Vector[Set[String]],
         skip: Int, target: Int)
     val clauseGen = for {
       n <- Gen.choose(2, 4)
-      qs <- Gen.listOfN(n, Gen.oneOf(quants))
-      defs <- Gen.listOfN(n, Gen.atLeastOne(alphabet).map(_.toSet))
-      si <- Gen.choose(0, skips.size - 1)
+      qs <- Gen.listOfN(n, Gen.oneOf(mrQuants))
+      defs <- Gen.listOfN(n, Gen.atLeastOne(mrAlphabet).map(_.toSet))
+      si <- Gen.choose(0, mrSkips.size - 1)
       target <- Gen.choose(0, n - 1)
     } yield Clause(qs.toVector, defs.toVector, si, target)
     val eventsGen = Gen.listOfN(16,
-      Gen.zip(Gen.oneOf(alphabet), Gen.choose(1L, 2L)))
+      Gen.zip(Gen.oneOf(mrAlphabet), Gen.choose(1L, 2L)))
     def name(i: Int) = s"P$i"
     def fmt(v: Any): String = if (v == null) "n" else v.toString
     check(Prop.forAll(clauseGen, eventsGen) { (cl, evs) =>
@@ -712,16 +728,10 @@ class PropertySpec extends SparkSuite {
             (0 until n).flatMap(i => Seq(s"COUNT(${name(i)}.*) AS c$i",
               s"FIRST(${name(i)}.event_id) AS f$i",
               s"LAST(${name(i)}.event_id) AS l$i"))).mkString(", ")
-          val skipSql = cl.skip match {
-            case 2 | 3 => s"${skips(cl.skip)} ${name(cl.target)}"
-            case _ => skips(cl.skip)
-          }
+          val skipSql = mrSkipSql(cl.skip, name(cl.target))
           val pattern = (0 until n).map(i => name(i) + cl.quants(i))
             .mkString(" ")
-          val defines = (0 until n).map(i =>
-            s"${name(i)} AS event_type IN (" +
-              cl.defs(i).toSeq.sorted.map(t => s"'$t'").mkString(", ") + ")")
-            .mkString(", ")
+          val defines = mrDefines((0 until n).map(name), cl.defs)
           val mr = MatchRecognize(
             rows.toDF("event_id", "ts", "event_type", "user_id"),
             s"""PARTITION BY user_id
@@ -741,6 +751,107 @@ class PropertySpec extends SparkSuite {
             s"sql=$sql\nref=$ref\nrows=$rows"
       }
     })
+  }
+
+  test("streaming MATCH_RECOGNIZE equals the batch clause on random clauses and micro-batch splits") {
+    // Batch and streaming compile one spec tree; this pins the two routes
+    // to one answer. Random clauses (the SQL-vs-DSL differential's
+    // quantified variables plus grouped `(X Y)` and alternation `(X | Y)`
+    // elements under every group quantifier, `?` included, reluctant
+    // markers on every quantifier, all four AFTER MATCH strategies) run
+    // once on the batch route and once through a MemoryStream fed in 2-3
+    // random micro-batches. Each key closes with a row no DEFINE
+    // accepts: under strict adjacency it ends every open branch, so the
+    // stream has resolved every start the batch run resolves at end of
+    // input, and the streamed multiset must equal the batch answer,
+    // MATCH_NUMBER() included. A clause one route rejects, the other
+    // must reject too.
+    import graft.streaming.MatchRecognize
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val groupQuants = Vector("", "?", "*", "+", "{2}")
+    // an element: 0 = variable, 1 = (X Y) group, 2 = (X | Y) alternation
+    final case class Clause(elems: Vector[(Int, String)], reluctant: Boolean,
+        defs: Vector[Set[String]], skip: Int, target: Int)
+    val clauseGen = for {
+      n <- Gen.choose(1, 3)
+      es <- Gen.listOfN(n, Gen.oneOf(
+        Gen.oneOf(mrQuants).map((0, _)),
+        Gen.oneOf(groupQuants).map((1, _)),
+        Gen.oneOf(groupQuants).map((2, _))))
+      rel <- Gen.frequency(3 -> false, 1 -> true)
+      nVars = es.map(e => if (e._1 == 0) 1 else 2).sum
+      defs <- Gen.listOfN(nVars, Gen.atLeastOne(mrAlphabet).map(_.toSet))
+      si <- Gen.choose(0, mrSkips.size - 1)
+      target <- Gen.choose(0, nVars - 1)
+    } yield Clause(es.toVector, rel, defs.toVector, si, target)
+    val eventsGen = Gen.listOfN(12,
+      Gen.zip(Gen.oneOf(mrAlphabet), Gen.choose(1L, 2L)))
+    // one or two cuts strictly inside the 14 rows (12 events and the two
+    // closing rows): 2-3 micro-batches
+    val cutsGen = Gen.listOfN(2, Gen.choose(1, 13))
+    def fmt(v: Any): String = if (v == null) "n" else v.toString
+    var runs = 0
+    check(Prop.forAll(clauseGen, eventsGen, cutsGen) { (cl, evs, cuts) =>
+      var nv = 0
+      def fresh(): String = { nv += 1; s"P${nv - 1}" }
+      val pattern = cl.elems.map { case (kind, q0) =>
+        val q = if (cl.reluctant && q0.nonEmpty) q0 + "?" else q0
+        kind match {
+          case 0 => fresh() + q
+          case 1 => s"(${fresh()} ${fresh()})$q"
+          case _ => s"(${fresh()} | ${fresh()})$q"
+        }
+      }.mkString(" ")
+      val names = (0 until nv).map(i => s"P$i")
+      val rows: Seq[(Long, Long, String, Long)] =
+        (evs :+ (("z", 1L)) :+ (("z", 2L))).zipWithIndex.map {
+          case ((t, u), i) => (i.toLong, i.toLong * 10, t, u)
+        }
+      val skipSql = mrSkipSql(cl.skip, names(cl.target))
+      val measures = ("MATCH_NUMBER() AS mn" +: names.flatMap(v =>
+        Seq(s"COUNT($v.*) AS ${v}_c", s"FIRST($v.event_id) AS ${v}_f",
+          s"LAST($v.event_id) AS ${v}_l"))).mkString(", ")
+      val defines = mrDefines(names, cl.defs)
+      val clause =
+        s"""PARTITION BY user_id
+           |ORDER BY ts, event_id
+           |MEASURES $measures
+           |AFTER MATCH SKIP $skipSql
+           |PATTERN ($pattern)
+           |DEFINE $defines""".stripMargin
+      def collected(rs: Array[org.apache.spark.sql.Row]): Seq[String] =
+        rs.map(r => (0 until r.length).map(i => fmt(r.get(i))).mkString("|"))
+          .toSeq.sorted
+      val input = MemoryStream[(Long, Long, String, Long)]
+      val sdf = input.toDF().toDF("event_id", "ts", "event_type", "user_id")
+      val batch = scala.util.Try(collected(MatchRecognize(
+        rows.toDF("event_id", "ts", "event_type", "user_id"), clause)
+        .collect()))
+      val streamed = scala.util.Try(MatchRecognize(sdf, clause)).map { mr =>
+        runs += 1
+        val sink = s"mr_stream_vs_batch_$runs"
+        val q = mr.writeStream.outputMode("append").format("memory")
+          .queryName(sink).start()
+        try {
+          val bounds = (0 +: cuts.distinct.sorted :+ rows.size)
+          bounds.zip(bounds.tail).foreach { case (from, until) =>
+            input.addData(rows.slice(from, until): _*)
+            q.processAllAvailable()
+          }
+          collected(spark.table(sink).collect())
+        } finally q.stop()
+      }
+      val same = (batch, streamed) match {
+        case (scala.util.Success(b), scala.util.Success(st)) => b == st
+        case (scala.util.Failure(_: IllegalArgumentException),
+            scala.util.Failure(_: IllegalArgumentException)) => true
+        case (scala.util.Failure(other), _) => throw other
+        case (_, scala.util.Failure(other)) => throw other
+      }
+      Prop(same) :| s"pattern ($pattern) skip $skipSql defines $defines " +
+        s"cuts $cuts\nbatch=$batch\nstream=$streamed\nrows=$rows"
+    }, cases = 12)
   }
 
   test("multi-quantifier reluctant equals the brute-force rn-lattice " +

@@ -272,8 +272,8 @@ class GroupCepPlanSpec extends SparkSuite {
     val any = Seq(
       GLeafSpec("s", col("name") === "c"),
       GLeafSpec("e", col("name").isin("b", "d"), any = true))
-    def run(elems: Seq[GroupCepPlan.GSpec], head: Boolean, tail: Boolean,
-        out: String) =
+    def run(elems: Seq[GroupCepPlan.GSpec[org.apache.spark.sql.Column]],
+        head: Boolean, tail: Boolean, out: String) =
       GroupCepPlan.matchGroupPattern(events,
         key = col("user_id"), ts = col("ts"), tie = col("event_id"),
         elems = elems, anchorHead = head, anchorTail = tail)
@@ -292,8 +292,9 @@ class GroupCepPlanSpec extends SparkSuite {
     GroupCepPlan.matchGroupPattern(events,
       key = col("user_id"), ts = col("ts"), tie = col("event_id"),
       elems = quantified.map {
-        case g: GGroupSpec => g.copy(strict = true, consecutive = true)
-        case l: GLeafSpec => l.copy(strict = true)
+        case g: GGroupSpec[org.apache.spark.sql.Column] =>
+          g.copy(strict = true, consecutive = true)
+        case l: GLeafSpec[org.apache.spark.sql.Column] => l.copy(strict = true)
         case o => o
       }, anchorHead = true, sqlGreedy = true)
   }
