@@ -61,6 +61,51 @@ object DedupQueries extends QueryModule {
         posexplode(expr("graft_minhash_bands(sh)")).as(Seq("band", "bv")): _*)
       .where(col("bv") =!= "")
 
+  /** The distinct ordered id pairs `(a < b)` of a bucket table that
+    * share every `keys` column, as columns `out` — the ONE
+    * candidate-pair definition (the LSH band join over [[bandsOf]]
+    * rows, and every other bucket self-join that keeps each pair
+    * once). The `same` columns must match too and lead the output
+    * (qp5's `lang`). Callers own the caching of `rows`. */
+  private[pipeline] def bucketPairs(rows: DataFrame, id: String,
+      keys: Seq[String], out: (String, String),
+      same: Seq[String] = Nil): DataFrame =
+    rows.as("x")
+      .join(rows.as("y"),
+        (same ++ keys).map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
+          && col(s"x.$id") < col(s"y.$id"))
+      .select(same.map(k => col(s"x.$k").as(k)) :+
+        col(s"x.$id").as(out._1) :+ col(s"y.$id").as(out._2): _*)
+      .distinct()
+
+  /** The ONE exact verify of candidate pairs: `cand`'s columns plus
+    * `ni` (the size of the pair's surrogate-set intersection) and `na`,
+    * `nb` (the two set sizes), joined by doc_id on its id columns `a`
+    * and `b`. A doc's set is its DISTINCT 8-byte md5-prefix shingle
+    * surrogates (`docs`: doc_id, sh), deduplicated map-side in the
+    * array domain, so the set size is a projection and the
+    * intersection is row-local — four exchanges and one aggregate
+    * fewer than an inverted-index join (optimization r18). Surrogates
+    * are bit-identical in both engines; a collision hits both alike.
+    * Row width is bounded by the two docs' shingle counts, fine for
+    * length-bounded documents; multi-GB documents would want the
+    * inverted-index form back. The set table feeds both join sides,
+    * so it is cached here. */
+  private[pipeline] def verifyPairs(cand: DataFrame, docs: DataFrame,
+      a: String, b: String): DataFrame = {
+    val dsets = docs.select(col("doc_id"),
+        array_distinct(expr(
+          "transform(sh, x -> unhex(substr(md5(x), 1, 16)))")).as("ds"))
+      .cache()
+    cand
+      .join(dsets.select(col("doc_id").as(a), col("ds").as("da")), a)
+      .join(dsets.select(col("doc_id").as(b), col("ds").as("db")), b)
+      .select(cand.columns.map(col) ++ Seq(
+        size(array_intersect(col("da"), col("db"))).cast("long").as("ni"),
+        size(col("da")).cast("long").as("na"),
+        size(col("db")).cast("long").as("nb")): _*)
+  }
+
   /** The h0..h7 DuckDB signature-column expressions — ONE builder
     * shared by [[duckSig]] (qp2/qp3/qp4/qp8's lang-free chain) and
     * [[DuckPairCte]] (qp5/qp32's lang-aware chain), so the two CTE
@@ -95,13 +140,8 @@ object DedupQueries extends QueryModule {
   private def dupClusters(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val bands = bandsOf(withShingles(t(s, d, "documents")))
-    val pairs = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("src"), col("y.doc_id").as("dst"))
-      .distinct()
+    val pairs = bucketPairs(bandsOf(withShingles(t(s, d, "documents"))),
+      "doc_id", Seq("band", "bv"), ("src", "dst"))
     // edgesDistinct: pairs is DISTINCT with doc_a < doc_b strict, so the
     // undirected union cannot create duplicates (optimization r18)
     graft.graph.GraphOps.connectedComponents(pairs, edgesDistinct = true)
@@ -135,60 +175,21 @@ object DedupQueries extends QueryModule {
     * (lang, doc_a, doc_b, ni, na, nb) — as ONE shared stage so qp5
     * (jaccard ranking) and qp32 (the dedup threshold curve) score the
     * same pair universe. Caches: shingle arrays once (every branch
-    * re-runs the lambda otherwise — a checkpoint table at 100 TB),
-    * band rows (both sides of the self-join), and the 8-byte
-    * md5-prefix shingle surrogate SETS in array form (~3× narrower
-    * shuffle keys; bit-identical in both engines, and a collision
-    * would affect both sides identically). Harness callers
-    * clearCache() per the QueryModule contract. */
+    * re-runs the lambda otherwise — a checkpoint table at 100 TB) and
+    * band rows (both sides of the self-join); [[verifyPairs]] caches
+    * the surrogate sets. Harness callers clearCache() per the
+    * QueryModule contract. */
   private def lshPairStats(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val docs = withShingles(t(s, d, "documents"))
       .select(col("doc_id"), col("lang"), col("sh")).cache()
     val bands = bandsOf(docs, Seq(col("lang"))).cache()
-    val cand = bands.as("x")
-      .join(bands.as("y"),
-        col("x.lang") === col("y.lang") && col("x.band") === col("y.band")
-          && col("x.bv") === col("y.bv") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.lang").as("lang"), col("x.doc_id").as("doc_a"),
-        col("y.doc_id").as("doc_b"))
-      .distinct()
-    // per-doc DISTINCT shingle surrogates, deduplicated map-side in the
-    // array domain: array_distinct removes within-doc repeats BEFORE any
-    // exchange (the only duplicates the former corpus-wide explode +
-    // DISTINCT ever removed, since its key was (doc_id, surrogate)), and
-    // the per-doc set size is size(ds) — a projection replacing the
-    // former groupBy exchange (optimization r18, guide §2.3 "aggregate
-    // before you shuffle" / §2.4).
-    val dsets = docs.select(col("doc_id"),
-        array_distinct(expr(
-          "transform(sh, x -> unhex(substr(md5(x), 1, 16)))")).as("ds"))
-      .cache()
-    // exact verify = per-pair SET INTERSECTION on the two surrogate
-    // arrays, replacing the former inverted-index join (cand ⋈ shd.a ⋈
-    // shd.b on the shingle surrogate + a (lang, pair) groupBy + two
-    // count joins). The array form shuffles the same surrogate bytes
-    // with no per-row pair keys on an exploded (pair × shingle)
-    // intermediate, and drops four exchanges + one aggregate from the
-    // stage (optimization r18, guide §2.3 "shuffle keys and metadata
-    // instead of payloads" — measured 0.99s → 0.83s median at sf0.1
-    // with bit-identical output; PairStatsProbe keeps the A/B). Row
-    // width is bounded by the two docs' shingle counts — fine for
-    // length-bounded pipeline documents; a corpus of multi-GB monsters
-    // would want the inverted-index form back. ni ≥ 1 by construction
-    // (a band match implies a shared minimizing shingle modulo md5
-    // collision); the ni > 0 guard pins the oracle's inner-join
-    // semantics even on that collision.
-    cand
-      .join(dsets.select(col("doc_id").as("doc_a"), col("ds").as("da")),
-        "doc_a")
-      .join(dsets.select(col("doc_id").as("doc_b"), col("ds").as("db")),
-        "doc_b")
-      .select(col("lang"), col("doc_a"), col("doc_b"),
-        size(array_intersect(col("da"), col("db"))).cast("long").as("ni"),
-        size(col("da")).cast("long").as("na"),
-        size(col("db")).cast("long").as("nb"))
+    // ni ≥ 1 by construction (a band match implies a shared minimizing
+    // shingle modulo md5 collision); the ni > 0 guard pins the oracle's
+    // inner-join semantics even on that collision
+    verifyPairs(bucketPairs(bands, "doc_id", Seq("band", "bv"),
+        ("doc_a", "doc_b"), same = Seq("lang")), docs, "doc_a", "doc_b")
       .where(col("ni") > 0)
   }
 
@@ -293,12 +294,7 @@ object DedupQueries extends QueryModule {
       // cache: the self-join would otherwise evaluate the MinHash scan
       // twice (at 100 TB this materialization is a checkpoint table).
       val bands = bandsOf(withShingles(t(s, d, "documents"))).cache()
-      bands.as("x")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bv") === col("y.bv")
-            && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
+      bucketPairs(bands, "doc_id", Seq("band", "bv"), ("doc_a", "doc_b"))
         .orderBy(col("doc_a"), col("doc_b"))
     },
 
@@ -725,12 +721,8 @@ object DedupQueries extends QueryModule {
       // bandsOf carries the bv <> '' guard (review r17: this inline copy
       // had dropped it — shingle-less docs would weld into candidate
       // pairs through their empty bands and poison the precision score)
-      val bands = bandsOf(docs)
-      val cand = bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bv") === col("y.bv")
-            && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct()
+      val cand = bucketPairs(bandsOf(docs), "doc_id", Seq("band", "bv"),
+          ("a", "b"))
         .cache()
       val hit = truth.join(cand, Seq("a", "b"))
       truth.agg(count(lit(1)).as("n_truth"))
@@ -959,27 +951,10 @@ object DedupQueries extends QueryModule {
           Seq("band", "bv"))
         .select(col("new_id"), col("old_id"))
         .distinct()
-      // exact verify = per-pair set intersection on the per-doc DISTINCT
-      // surrogate arrays (the qp5/lshPairStats shape, optimization r18):
-      // array_distinct dedups map-side where the former explode+DISTINCT
-      // paid a corpus-wide exchange, set sizes are projections, and the
-      // inverted-index join + (pair) re-aggregate collapse into one
-      // row-local array_intersect per candidate. An ni = 0 pair (md5
-      // collision) fails the 80% threshold exactly as it vanished from
-      // the former inner join — na, nb ≥ 1 for any banded doc.
-      val dsets = docs.select(col("doc_id"),
-          array_distinct(expr(
-            "transform(sh, x -> unhex(substr(md5(x), 1, 16)))")).as("ds"))
-        .cache()
-      val ver = cand
-        .join(dsets.select(col("doc_id").as("new_id"), col("ds").as("da")),
-          "new_id")
-        .join(dsets.select(col("doc_id").as("old_id"), col("ds").as("db")),
-          "old_id")
-        .select(col("new_id"), col("old_id"),
-          size(array_intersect(col("da"), col("db"))).cast("long").as("ni"),
-          size(col("da")).cast("long").as("na"),
-          size(col("db")).cast("long").as("nb"))
+      // an ni = 0 pair (md5 collision) fails the 80% threshold, as it
+      // is absent from the oracle's inner join — na, nb ≥ 1 for any
+      // banded doc
+      val ver = verifyPairs(cand, docs, "new_id", "old_id")
         .where(lit(100) * col("ni")
           >= lit(80) * (col("na") + col("nb") - col("ni")))
         .groupBy(col("new_id"))
@@ -1117,13 +1092,7 @@ object DedupQueries extends QueryModule {
       // df cap, then the corpus-wide pair form of winnowGate's join
       val prints = docPrints(docs).cache()
       val rare = rareCorpusPrints(prints, maxDf = 10)
-      val cand = rare.as("a")
-        .join(rare.as("b"),
-          col("a.fp") === col("b.fp")
-            && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-        .distinct()
-        .cache()
+      val cand = bucketPairs(rare, "doc_id", Seq("fp"), ("a", "b")).cache()
       val hx = docs
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .where(size(col("tk")) >= 6)
@@ -1137,13 +1106,7 @@ object DedupQueries extends QueryModule {
       val rg = hx.groupBy("g").agg(count(lit(1)).as("df"))
         .where(col("df") <= 10).select("g")
       val hxr = hx.join(rg, Seq("g"))
-      val truth = hxr.as("a")
-        .join(hxr.as("b"),
-          col("a.g") === col("b.g")
-            && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-        .distinct()
-        .cache()
+      val truth = bucketPairs(hxr, "doc_id", Seq("g"), ("a", "b")).cache()
       val hit = truth.join(cand, Seq("a", "b"))
       truth.agg(count(lit(1)).as("n_truth"))
         .crossJoin(cand.agg(count(lit(1)).as("n_cand")))

@@ -351,13 +351,8 @@ object EmbeddingQueries extends QueryModule {
       val banded = e.select(col("vec_id"),
         posexplode(expr("graft_hyperplane_bands(embedding)"))
           .as(Seq("band", "bkey")))
-      val cand = banded.as("x")
-        .join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-            && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .distinct()
-      cand
+      DedupQueries.bucketPairs(banded, "vec_id", Seq("band", "bkey"),
+          ("id_a", "id_b"))
         .join(e.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
           col("nrm").as("na")), "id_a")
         .join(e.select(col("vec_id").as("id_b"), col("embedding").as("eb"),

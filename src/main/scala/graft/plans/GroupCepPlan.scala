@@ -146,6 +146,13 @@ object GroupCepPlan {
     def build(elems: Seq[GSpec[P]]): GPattern[E] = {
       require(elems.nonEmpty, "empty pattern group")
       var p: GPattern[E] = null
+      def addAlt(a: GAltSpec[P]): Unit = {
+        val alts = a.branches.map(build)
+        p = if (p == null) GPattern.begin(alts)
+        else if (a.strict) p.next(alts)
+        else if (a.any) p.followedByAny(alts)
+        else p.followedBy(alts)
+      }
       elems.foreach {
         case GLeafSpec(name, lp, strict, any) =>
           val f = pred(lp)
@@ -154,11 +161,20 @@ object GroupCepPlan {
           else if (any) p.followedByAny(name)(f)
           else p.followedBy(name)(f)
         case g: GGroupSpec[P] =>
-          val sub = build(g.elems)
-          p = if (p == null) GPattern.begin(sub)
-          else if (g.strict) p.next(sub)
-          else if (g.any) p.followedByAny(sub)
-          else p.followedBy(sub)
+          g.elems match {
+            // a group around one alternation of the same contiguity
+            // (MATCH_RECOGNIZE `(A|B)+`, `PERMUTE(A, B)+`) quantifies the
+            // alternation's own group in place, as the DSL's
+            // `begin(alts).oneOrMore` does — no second, max-1 group level
+            case Seq(a: GAltSpec[P]) if a.strict == g.strict && a.any == g.any =>
+              addAlt(a)
+            case _ =>
+              val sub = build(g.elems)
+              p = if (p == null) GPattern.begin(sub)
+              else if (g.strict) p.next(sub)
+              else if (g.any) p.followedByAny(sub)
+              else p.followedBy(sub)
+          }
           if (g.min != 1 || g.max != 1)
             p = if (g.min == g.max) p.times(g.min) else p.times(g.min, g.max)
           if (g.optional) p = p.optional
@@ -173,12 +189,7 @@ object GroupCepPlan {
                 Vector(GroupCep.GNot(name, f, nextOnly)), None)
               else if (nextOnly) p.notNext(name)(f)
               else p.notFollowedBy(name)(f)
-        case a: GAltSpec[P] =>
-          val alts = a.branches.map(build)
-          p = if (p == null) GPattern.begin(alts)
-          else if (a.strict) p.next(alts)
-          else if (a.any) p.followedByAny(alts)
-          else p.followedBy(alts)
+        case a: GAltSpec[P] => addAlt(a)
       }
       p
     }

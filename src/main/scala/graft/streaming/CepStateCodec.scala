@@ -54,8 +54,11 @@ object CepStateCodec {
     * (GStreamState's fields inlined), the match ordinal persisted only
     * for numbered streams; 8 — streaming MATCH_RECOGNIZE compiles the
     * batch spec tree, so a quantified PERMUTE gains the group level its
-    * batch twin has and the group ids `Conf.reps` keys name shift. */
-  val GroupVersion = 8    // GroupCep.GArrivalState
+    * batch twin has and the group ids `Conf.reps` keys name shift;
+    * 9 — a quantified alternation (`(A|B)+`, a quantified PERMUTE)
+    * compiles to one group, not a group around a max-1 group, so the
+    * inner group's `Conf.reps` entry is gone and the ids shift. */
+  val GroupVersion = 9    // GroupCep.GArrivalState
 
   /** The envelope's product encoder — a stable (int, binary) row, never
     * the kryo-opaque single column. */

@@ -64,4 +64,22 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(j.contains("\"queries_min\":{\"q1\":0.9}"))
     assert(j.contains("\"value\":1.0"))
   }
+
+  test("Bench.headline is perfbench's RELATIONAL + PIPELINE, 18 names, no duplicates") {
+    // the headline list is written twice (Bench.headline and the
+    // benchmark's perfbench/spec.py, read only here); this pins the two
+    // copies to one set so they cannot drift
+    val spec = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("perfbench/spec.py")), "UTF-8")
+    def list(name: String): Seq[String] = {
+      val body = (s"(?s)\\n$name = \\[(.*?)\\]").r.findFirstMatchIn(spec)
+        .getOrElse(fail(s"$name = [...] not found in perfbench/spec.py"))
+        .group(1)
+      "\"(\\w+)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
+    }
+    val bench = list("RELATIONAL") ++ list("PIPELINE")
+    assert(bench.size == 18 && bench.distinct.size == 18, bench)
+    assert(Bench.headline.size == 18 && Bench.headline.distinct.size == 18)
+    assert(bench.toSet == Bench.headline.toSet)
+  }
 }

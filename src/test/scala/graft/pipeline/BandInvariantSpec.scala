@@ -87,6 +87,31 @@ class BandInvariantSpec extends AnyFunSuite {
         explodes.map { case (_, i) => s"line ${i + 1}" }.mkString(", "))
   }
 
+  test("ordered-pair bucket self-joins are written ONLY in DedupQueries.bucketPairs") {
+    // the pair-join twin of the band-row rule: the share-a-bucket rule
+    // (equal band columns, `id <` for one ordered pair) lives in the ONE
+    // bucketPairs definition, whose aliases are interpolated. A literal
+    // `col("x.band") === col("y.band")`, or an ordered `doc_id <` pair
+    // join that ends in `.distinct()`, anywhere under src/main is an
+    // inline copy. The counting self-joins (qp23's iv, qp34) aggregate
+    // instead of `.distinct()` and are a different operator.
+    val bandEq = """col\("\w+\.band"\)\s*===\s*col\("\w+\.band"\)""".r
+    val orderedDistinct =
+      """col\("\w+\.(doc_id|vec_id)"\)\s*<\s*col\("\w+\.(doc_id|vec_id)"\)\)\s*\.select\([^()]*(\([^()]*\)[^()]*)*\)\s*\.distinct\(\)""".r
+    val offenders = for {
+      f <- scalaFiles(sourceRoot)
+      src = read(f)
+      m <- bandEq.findAllMatchIn(src) ++ orderedDistinct.findAllMatchIn(src)
+    } yield s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}"
+    assert(offenders.isEmpty,
+      s"inline ordered-pair bucket self-join: ${offenders.mkString(", ")} — " +
+        "build candidate pairs via DedupQueries.bucketPairs")
+    // the one definition itself must still exist — if it is renamed,
+    // rewrite this spec alongside it rather than assert over nothing
+    assert(read(new File(sourceRoot, "pipeline/DedupQueries.scala"))
+      .contains("def bucketPairs("))
+  }
+
   test("every DuckDB band-CASE oracle construction carries a bv <> '' guard nearby") {
     // the oracle side of the same weld: each inline band CTE (the
     // `CASE b.band WHEN 0 THEN h0 || h1 ...` construction) must filter

@@ -153,6 +153,86 @@ class DedupSpec extends SparkSuite {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** Spark-split tokens (split(text, " ", -1) keeps empty tokens, as
+    * Spark's split does) → word trigram shingles, none under 3 tokens. */
+  private def driverShingles(text: String): Seq[String] = {
+    val tk = text.split(" ", -1)
+    if (tk.length < 3) Seq.empty
+    else (0 to tk.length - 3).map(i => s"${tk(i)} ${tk(i + 1)} ${tk(i + 2)}")
+  }
+
+  /** The 4 band values of a doc's shingles (8 minhash components, two
+    * 64-bit halves per md5, two per band); none for a shingle-less doc. */
+  private def driverBands(grams: Seq[String]): Seq[String] =
+    if (grams.isEmpty) Seq.empty
+    else {
+      val hs = (0 until 4).flatMap { j =>
+        val ds = grams.map(g => md5hex(s"s$j|$g"))
+        Seq(ds.map(_.substring(0, 16)).min, ds.map(_.substring(16)).min)
+      }
+      (0 until 4).map(b => hs(2 * b) + hs(2 * b + 1))
+    }
+
+  // the 4-doc fixture plus two shingle-less docs (< 3 tokens): without
+  // bandsOf's guard their empty band values would weld them together
+  private def pairDocs = docs.union(
+    Seq((5L, "two words"), (6L, "short doc")).toDF("doc_id", "text"))
+
+  private def fixtureTexts: Map[Long, String] =
+    pairDocs.as[(Long, String)].collect().toMap
+
+  test("bucketPairs: a pair sharing several buckets comes once, ordered; short docs pair with nobody") {
+    graft.functions.GraftFunctions.register(spark)
+    val bands = fixtureTexts.map { case (id, t) => id -> driverBands(driverShingles(t)) }
+    val expected = (for {
+      a <- bands.keys; b <- bands.keys
+      if a < b && bands(a).zip(bands(b)).exists { case (x, y) => x == y }
+    } yield (a, b)).toSeq.sorted
+    val got = DedupQueries.bucketPairs(
+        DedupQueries.bandsOf(DedupQueries.withShingles(pairDocs)),
+        "doc_id", Seq("band", "bv"), ("a", "b"))
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(got == expected)
+    // the exact duplicates share all four buckets and still pair once
+    assert(bands(1L) == bands(2L) && got.count(_ == ((1L, 2L))) == 1)
+    assert(got.forall { case (a, b) => a < b })
+    assert(!got.exists { case (a, b) => Set(a, b).intersect(Set(5L, 6L)).nonEmpty })
+  }
+
+  test("bucketPairs: a same column must match too and leads the output") {
+    graft.functions.GraftFunctions.register(spark)
+    val lang = (id: Long) => if (id == 2L) "de" else "en"
+    val rows = DedupQueries.bandsOf(DedupQueries.withShingles(
+        pairDocs.withColumn("lang",
+          when($"doc_id" === 2L, "de").otherwise("en"))),
+      Seq($"lang"))
+    val all = DedupQueries.bucketPairs(rows, "doc_id", Seq("band", "bv"),
+      ("a", "b")).as[(Long, Long)].collect().toSet
+    val same = DedupQueries.bucketPairs(rows, "doc_id", Seq("band", "bv"),
+      ("a", "b"), same = Seq("lang"))
+    assert(same.columns.toSeq == Seq("lang", "a", "b"))
+    val got = same.as[(String, Long, Long)].collect().toSet
+    assert(all.contains((1L, 2L)))
+    assert(got == all.collect { case (a, b) if lang(a) == lang(b) =>
+      (lang(a), a, b) })
+    assert(!got.exists(p => p._2 == 2L || p._3 == 2L))
+  }
+
+  test("verifyPairs: ni, na, nb equal a driver-side set intersection") {
+    val sets = fixtureTexts.map { case (id, t) => id -> driverShingles(t).toSet }
+    val cand = (for (a <- sets.keys; b <- sets.keys if a < b) yield (a, b))
+      .toSeq.toDF("a", "b")
+    val got = DedupQueries.verifyPairs(cand,
+        DedupQueries.withShingles(pairDocs), "a", "b")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    val expected = cand.as[(Long, Long)].collect().map { case (a, b) =>
+      (a, b, (sets(a) & sets(b)).size.toLong, sets(a).size.toLong,
+        sets(b).size.toLong)
+    }.toSet
+    assert(got == expected)
+    assert(got.exists(_._3 > 0)) // the fixture has overlapping pairs
+  }
+
   /** Driver-side replica of the qp5/qp32 LSH pair-stats chain over the
     * real corpus: Spark-split tokens (split(text, " ", -1) keeps empty
     * tokens, matching Spark's split), trigram shingles, 8 minhash
@@ -165,21 +245,10 @@ class DedupSpec extends SparkSuite {
       .select($"doc_id", $"lang", $"text")
       .as[(Long, String, String)].collect().toSeq
     val sh = texts.map { case (id, lang, text) =>
-      val tk = text.split(" ", -1)
-      val grams = if (tk.length < 3) Seq.empty[String]
-        else (0 to tk.length - 3).map(i =>
-          s"${tk(i)} ${tk(i + 1)} ${tk(i + 2)}")
-      (id, lang, grams)
+      (id, lang, driverShingles(text))
     }
     val bands = sh.flatMap { case (id, lang, grams) =>
-      if (grams.isEmpty) Seq.empty
-      else {
-        val hs = (0 until 4).flatMap { j =>
-          val ds = grams.map(g => md5hex(s"s$j|$g"))
-          Seq(ds.map(_.substring(0, 16)).min, ds.map(_.substring(16)).min)
-        }
-        (0 until 4).map(b => ((lang, b, hs(2 * b) + hs(2 * b + 1)), id))
-      }
+      driverBands(grams).zipWithIndex.map { case (bv, b) => ((lang, b, bv), id) }
     }
     val cands = bands.groupBy(_._1).values.flatMap { g =>
       val ids = g.map(_._2).distinct.sorted

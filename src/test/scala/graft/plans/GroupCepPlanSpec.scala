@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.SparkSuite
 import graft.streaming.GroupCep
-import graft.plans.GroupCepPlan.{GGroupSpec, GLeafSpec, GNotSpec}
+import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GNotSpec}
 import org.apache.spark.sql.functions._
 
 /** The planned group-pattern operator must agree with the library
@@ -30,6 +30,27 @@ class GroupCepPlanSpec extends SparkSuite {
         GLeafSpec("a", col("name") === "a"),
         GLeafSpec("b", col("name") === "b")), min = 1, max = 2),
       GLeafSpec("e", col("name") === "d")))
+
+  test("a quantified alternation (A|B)+ compiles to one group") {
+    // MATCH_RECOGNIZE's spec for `(A|B)+`: a strict consecutive group
+    // around one strict alternation. It quantifies the alternation's own
+    // group, as `GPattern.begin(alts).oneOrMore` does, with no max-1
+    // group level in between
+    val spec = Seq(GGroupSpec(Seq(GAltSpec(Seq(
+        Seq(GLeafSpec("A", "A", strict = true)),
+        Seq(GLeafSpec("B", "B", strict = true))), strict = true)),
+      min = 1, max = Int.MaxValue, consecutive = true, strict = true))
+    val pat = GroupCepPlan.buildPattern[String, String](spec,
+      v => (e: String) => e == v, within = None, reluctant = false,
+      sqlGreedy = false, deferSelection = false)
+    pat.elems match {
+      case Vector(g: GroupCep.GGroup[_]) =>
+        assert(g.max == Int.MaxValue)
+        assert(g.elems.size == 1 && g.elems.head.isInstanceOf[GroupCep.GAlt[_]],
+          s"expected the alternation directly inside its group: ${g.elems}")
+      case other => fail(s"expected one group element, got $other")
+    }
+  }
 
   test("planned group operator matches the library epsilon-NFA result") {
     val got = planned

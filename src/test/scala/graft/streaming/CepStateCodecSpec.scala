@@ -102,29 +102,32 @@ class CepStateCodecSpec extends SparkSuite {
     assert(ex.getMessage.contains("GroupCep.GArrivalState"))
   }
 
-  test("a version-7 checkpoint fails by name in the group driver") {
-    // version 7 wrote the same flat row, but a streaming MATCH_RECOGNIZE
-    // `PERMUTE(...)` under a quantifier compiled one group level
-    // shallower than its batch twin, so its branches' group counters
-    // (Conf.reps) name other groups now; resuming such a row must raise
-    // the named error, not run on renumbered counters
-    val v7 = CepStateCodec.enc(7, GroupCep.GArrivalState[Ev](3L,
-      Vector.empty))
-    val fn = CepStateCodec.versionedFn("GroupCep.GArrivalState",
-      CepStateCodec.GroupVersion,
-      GroupCep.matchStreamArrivalFn[Long, Ev, Long](
-        GroupCep.GPattern.begin[Ev]("e")(_.kind == "error"),
-        _.ts, _ => 0L, Cep.NoSkip, (k, _) => k))
-    val resumed = TestGroupState.create[CepStateEnvelope](
-      Optional.of(v7), GroupStateTimeout.NoTimeout(), 0L,
-      Optional.empty[Long](), hasTimedOut = false)
-    val ex = intercept[CepStateVersionException] {
-      fn(1L, Iterator(Ev(1L, "error", 20L)), resumed).toList
+  // version 7 wrote the same flat row, but a streaming MATCH_RECOGNIZE
+  // `PERMUTE(...)` under a quantifier compiled one group level shallower
+  // than its batch twin; version 8 compiled every quantified alternation
+  // (`(A|B)+`, a quantified PERMUTE) to a group around a max-1 group.
+  // Either way the group counters (Conf.reps) name other groups now;
+  // resuming such a row must raise the named error, not run on
+  // renumbered counters
+  for (v <- Seq(7, 8))
+    test(s"a version-$v checkpoint fails by name in the group driver") {
+      val old = CepStateCodec.enc(v, GroupCep.GArrivalState[Ev](3L,
+        Vector.empty))
+      val fn = CepStateCodec.versionedFn("GroupCep.GArrivalState",
+        CepStateCodec.GroupVersion,
+        GroupCep.matchStreamArrivalFn[Long, Ev, Long](
+          GroupCep.GPattern.begin[Ev]("e")(_.kind == "error"),
+          _.ts, _ => 0L, Cep.NoSkip, (k, _) => k))
+      val resumed = TestGroupState.create[CepStateEnvelope](
+        Optional.of(old), GroupStateTimeout.NoTimeout(), 0L,
+        Optional.empty[Long](), hasTimedOut = false)
+      val ex = intercept[CepStateVersionException] {
+        fn(1L, Iterator(Ev(1L, "error", 20L)), resumed).toList
+      }
+      assert(ex.found == v)
+      assert(ex.expected == CepStateCodec.GroupVersion)
+      assert(ex.getMessage.contains("GroupCep.GArrivalState"))
     }
-    assert(ex.found == 7)
-    assert(ex.expected == CepStateCodec.GroupVersion)
-    assert(ex.getMessage.contains("GroupCep.GArrivalState"))
-  }
 
   test("a wrong-version blob raises the named error before kryo decodes") {
     val env = CepStateCodec.enc(CepStateCodec.GroupVersion,
