@@ -1,8 +1,15 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+
+/** Named failure of a convergence loop: `algorithm` still changed its
+  * result in round `maxIter`, so what it holds is not the fixpoint. */
+final class GraphNotConvergedException(val algorithm: String,
+    val maxIter: Int) extends RuntimeException(
+  s"$algorithm did not converge within $maxIter rounds; its result is " +
+    "not the fixpoint — raise maxIter")
 
 /** Graph algorithms as iterative DataFrame joins — the capability slice of
   * the reference's Gelly library (SURVEY.md §2.12): PageRank
@@ -37,6 +44,23 @@ object GraphOps {
   private[graph] def materialize(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
+  /** [[materialize]] `df` and return the aggregates `metrics`, computed
+    * over its rows by the same job chain, as one row in argument order
+    * (via `Dataset.observe`): a loop's convergence scalar costs no
+    * second job over the checkpoint. The row is read from the
+    * checkpoint's own query execution, not through an `Observation`:
+    * that registers an `ObservationManager` in a non-transient field of
+    * the session, after which any closure that captures the session (an
+    * MLlib model's training summary does) fails to serialize. */
+  private[graph] def materializeObserved(df: DataFrame,
+      metrics: Column*): (DataFrame, Row) = {
+    val name = "graft.graph.round"
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    val observed = df.observe(name, named.head, named.tail: _*)
+    val next = materialize(observed)
+    (next, observed.queryExecution.observedMetrics(name))
+  }
+
   /** Undirected view of an edge list (plus self-loops removed).
     * `dedup = false` skips the `.distinct()` — ONLY for callers that (a)
     * prove the input is already deduplicated with at most one orientation
@@ -55,13 +79,17 @@ object GraphOps {
   /** Min-label propagation with pointer jumping until fixpoint: every
     * vertex ends with the smallest vertex id reachable from it (component
     * id). Each round does one neighbor-min step (labels flow along edges)
-    * followed by one pointer jump (`comp ← comp(comp)`, label indirection
-    * squares the propagation reach) — the hash-min + path-halving scheme,
-    * converging in O(log diameter) rounds instead of O(diameter). On a
-    * 1000-executor cluster against a high-diameter graph (web chains, long
-    * user journeys) that difference is the whole game: each round is two
-    * key-partitioned shuffles, so total work is O(E log d), not O(E d). */
-  /** @param edgesDistinct caller-asserted: the input edge list is already
+    * followed by one pointer jump on the previous round's stored labels
+    * (`comp ← cur(comp)`) — the hash-min + pointer-jumping scheme. Where
+    * ids rise or fall along a chain, the jump doubles the propagation
+    * reach, so the chain converges in O(log length) rounds instead of
+    * O(length); in arbitrary id order the jump mostly lands on other
+    * local minima, and a chain can still need O(length) rounds (one
+    * 200-vertex path in random id order took 46). Each round scans the
+    * edge cache once and shuffles only by vertex id, so a round costs
+    * O(E).
+    *
+    * @param edgesDistinct caller-asserted: the input edge list is already
     *   deduplicated and carries at most one orientation per undirected
     *   edge, so `undirect` may skip its full-data `.distinct()` pass
     *   (optimization r18). Min-label propagation is duplicate-INSENSITIVE,
@@ -69,11 +97,59 @@ object GraphOps {
     *   Both in-repo callers qualify provably: qg1's tradeEdges is a
     *   groupBy output over a bipartite even/odd id split (reversal flips
     *   parity — orientations cannot collide) and dupClusters' pairs are
-    *   DISTINCT with src < dst strict. */
+    *   DISTINCT with src < dst strict.
+    * @throws GraphNotConvergedException if the labels still change in
+    *   round `maxIter` */
   def connectedComponents(edges: DataFrame,
       maxIter: Int = 50, edgesDistinct: Boolean = false): DataFrame = {
+    val selfed = ccEdges(edges, edgesDistinct)
+    var labels: DataFrame = null
+    var prevSum: java.math.BigDecimal = null
+    var done = false
+    var i = 0
+    // Labels move only downward, so the DECIMAL label sum strictly
+    // decreases iff any vertex changed — convergence is one scalar
+    // observed while the round materializes instead of a per-vertex
+    // change flag (decimal: a long sum overflows at ~10^10 vertices of
+    // ~10^10 ids).
+    // try/finally: a mid-loop job failure must still release the input
+    // cache, or the blocks pin for the session lifetime (review r18 —
+    // Verify runs every query in ONE session, so a single failed graph
+    // query would degrade every later query's memory)
+    try {
+      while (!done && i < maxIter) {
+        i += 1
+        // one round per materialization (two rounds per checkpoint
+        // measured 2× slower at sf0.1, optimization r18). Labels start as
+        // the vertex ids, so round 1's join onto the labels and its
+        // pointer jump are identities: it is one min-aggregate over the
+        // cache
+        val step =
+          if (labels == null)
+            selfed.groupBy(col("dst").as("id")).agg(min(col("src")).as("comp"))
+          else ccRound(selfed, labels)
+        val (next, obs) = materializeObserved(step,
+          sum(col("comp").cast(DecimalType(38, 0))))
+        val sum0 = obs.getDecimal(0)
+        done = sum0 == null || // empty graph
+          (prevSum != null && prevSum.compareTo(sum0) == 0)
+        prevSum = sum0
+        labels = next
+      }
+      if (!done) throw new GraphNotConvergedException(
+        "connectedComponents", maxIter)
+      // the final labels plan is a LogicalRDD with no reference to selfed,
+      // so releasing the input cache cannot invalidate the result
+      labels
+    } finally selfed.unpersist()
+  }
+
+  /** [[connectedComponents]]' cached round input: the undirected edges
+    * plus one self-edge per vertex, partitioned by `src`. */
+  private[graph] def ccEdges(edges: DataFrame,
+      edgesDistinct: Boolean): DataFrame = {
     // Materialize the caller's edge PIPELINE once before fanning out: the
-    // selfed construction below reads the edge input four times (two
+    // construction below reads the edge input four times (two
     // orientation branches + the vertex distinct), and with edgesDistinct
     // there is no exchange at the undirect level for ReuseExchange to
     // share — a caller passing a join/aggregate pipeline (qg1's 4-table
@@ -93,58 +169,29 @@ object GraphOps {
     // E+V rows replaces one per-round shuffle of the same rows, a net
     // win for every graph (rounds >= 2 always — convergence needs one
     // unchanged round).
-    val selfed = und.unionAll(
+    und.unionAll(
         und.select(col("src")).distinct()
           .select(col("src"), col("src").as("dst")))
       .repartition(col("src"))
       .cache()
-    // initial labels = the self-edge rows (exactly one per vertex, by the
-    // distinct above) — a FILTER over the cache instead of the former
-    // full distinct exchange over it (optimization r18)
-    var labels = selfed.where(col("src") === col("dst"))
-      .select(col("src").as("id"), col("src").as("comp"))
-    var prevSum: java.math.BigDecimal = null
-    var done = false
-    var i = 0
-    // neighbor-min (self-inclusive) then pointer-jump (comp ← comp(comp)):
-    // two key-partitioned shuffles per round. Labels move only downward,
-    // so the DECIMAL label sum strictly decreases iff any vertex changed —
-    // convergence is one cheap scalar aggregate instead of a per-vertex
-    // change flag (decimal: a long sum overflows at ~10^10 vertices of
-    // ~10^10 ids).
-    def round(cur: DataFrame): DataFrame = {
-      val nbr = selfed.join(cur, selfed("src") === cur("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("comp")).as("comp"))
-      val ptr = nbr.select(col("id").as("pid"), col("comp").as("pcomp"))
-      nbr.join(ptr, nbr("comp") === col("pid"), "left")
-        .select(nbr("id"),
-          least(nbr("comp"), coalesce(col("pcomp"), nbr("comp"))).as("comp"))
-    }
-    // try/finally: a mid-loop job failure must still release the input
-    // cache, or the blocks pin for the session lifetime (review r18 —
-    // Verify runs every query in ONE session, so a single failed graph
-    // query would degrade every later query's memory)
-    try {
-      while (!done && i < maxIter) {
-        i += 1
-        // one propagation round per materialization: batching two rounds
-        // per checkpoint was measured 2× SLOWER at sf0.1 (the deeper lazy
-        // plan defeats exchange reuse on the pointer-jump self-join, which
-        // then recomputes the aggregate)
-        val next = materialize(round(labels))
-        val sum0 = next
-          .agg(sum(col("comp").cast(DecimalType(38, 0)))).first()
-          .getDecimal(0)
-        done = sum0 == null || // empty graph
-          (prevSum != null && prevSum.compareTo(sum0) == 0)
-        prevSum = sum0
-        labels = next
-      }
-      // the final labels plan is a LogicalRDD with no reference to selfed,
-      // so releasing the input cache cannot invalidate the result
-      labels
-    } finally selfed.unpersist()
+  }
+
+  /** One [[connectedComponents]] round over the stored labels `cur`
+    * (id, comp): the self-inclusive neighbor-min `nbr(v)`, then the
+    * pointer jump `least(nbr(v), cur(nbr(v)))`. The jump reads the
+    * checkpoint `cur` again, not a second copy of `nbr`, so the edge
+    * cache is scanned, joined and aggregated once per round. Labels are
+    * vertex ids of the same component and never rise, so the fixpoint
+    * is the component minimum. */
+  private[graph] def ccRound(selfed: DataFrame, cur: DataFrame): DataFrame = {
+    val nbr = selfed.join(cur, selfed("src") === cur("id"))
+      .groupBy(col("dst").as("id"))
+      .agg(min(col("comp")).as("comp"))
+    // `cur` unrenamed (an alias, no projection): both joins read one
+    // exchange of it, which the plan builds once and reuses
+    nbr.join(cur.as("p"), nbr("comp") === col("p.id"), "left")
+      .select(nbr("id"),
+        least(nbr("comp"), coalesce(col("p.comp"), nbr("comp"))).as("comp"))
   }
 
   /** Single-source shortest HOP-COUNT paths via iterative relaxation
@@ -158,7 +205,10 @@ object GraphOps {
     * implementation undirects because the qg2 fixture graph is
     * symmetric. A caller needing directed reachability gets SHORTER
     * distances than the directed truth here — no directed variant is
-    * shipped (none of the reference's own test graphs exercise one). */
+    * shipped (none of the reference's own test graphs exercise one).
+    *
+    * @throws GraphNotConvergedException if a distance still changes in
+    *   round `maxIter` */
   def sssp(edges: DataFrame, source: Long,
       maxIter: Int = 50, edgesDistinct: Boolean = false): DataFrame = {
     // same r18 optimizations as connectedComponents: caller-asserted
@@ -173,10 +223,10 @@ object GraphOps {
       .repartition(col("src")).cache()
     var dist = und.sparkSession.range(1)
       .select(lit(source).as("id"), lit(0.0).as("dist"))
-    // Convergence in ONE scalar action per round (the CC pattern): the
-    // frontier only grows vertices and only lowers distances, so the
-    // (count, exact-decimal dist sum) pair changes iff any vertex was
-    // added or improved — no second join-and-count action needed. (The
+    // Convergence from ONE observed scalar pair per round (the CC
+    // pattern, no job beyond the checkpoint's): the frontier only grows
+    // vertices and only lowers distances, so the (count, exact-decimal
+    // dist sum) pair changes iff any vertex was added or improved. (The
     // source row is always present, so count >= 1 every round; an
     // edgeless graph converges by the unchanged-pair test in round 2.)
     var prevCount = -1L
@@ -188,16 +238,16 @@ object GraphOps {
         i += 1
         val relaxed = und.join(dist, und("src") === dist("id"))
           .select(col("dst").as("id"), (col("dist") + 1.0).as("dist"))
-        val next = materialize(dist.union(relaxed)
-          .groupBy(col("id")).agg(min(col("dist")).as("dist")))
-        val row = next.agg(count(lit(1)),
-          sum(col("dist").cast(DecimalType(38, 8)))).first()
+        val (next, row) = materializeObserved(dist.union(relaxed)
+            .groupBy(col("id")).agg(min(col("dist")).as("dist")),
+          count(lit(1)), sum(col("dist").cast(DecimalType(38, 8))))
         val (n, s) = (row.getLong(0), row.getDecimal(1))
         done =
           n == prevCount && prevSum != null && prevSum.compareTo(s) == 0
         prevCount = n; prevSum = s
         dist = next
       }
+      if (!done) throw new GraphNotConvergedException("sssp", maxIter)
       dist
     } finally und.unpersist()
   }
@@ -284,9 +334,7 @@ object GraphOps {
     * Each superstep = one key-partitioned join + one aggregate, O(E)
     * shuffled bytes; rounds materialize via localCheckpoint like every
     * iteration here. Fixed `supersteps` (the reference's
-    * setMaximumNumberOfIterations contract; algorithms needing
-    * convergence detection fold it into the state like
-    * [[connectedComponents]]'s label sum).
+    * setMaximumNumberOfIterations contract): no convergence test.
     *
     * @param edges    directed (src, dst) — undirect upstream for
     *                 symmetric propagation
@@ -782,17 +830,18 @@ object GraphOps {
     * fixture. */
   def kCoreWithRounds(edges: DataFrame,
       k: Int): (DataFrame, Int) = {
-    var e = materialize(undirect(edges))
-    var n = e.count()
+    val edgeCount = count(lit(1))
+    var (e, obs) = materializeObserved(undirect(edges), edgeCount)
+    var n = obs.getLong(0)
     var converged = false
     var rounds = 0
     while (!converged && n > 0) {
       val keep = e.groupBy("src").agg(count(lit(1)).as("dg"))
         .where(col("dg") >= k).select(col("src").as("node"))
-      val next = materialize(
+      val (next, row) = materializeObserved(
         e.join(keep, e("src") === keep("node"), "left_semi")
-          .join(keep, e("dst") === keep("node"), "left_semi"))
-      val m = next.count()
+          .join(keep, e("dst") === keep("node"), "left_semi"), edgeCount)
+      val m = row.getLong(0)
       converged = m == n
       e = next
       n = m

@@ -44,6 +44,100 @@ class GraphSpec extends SparkSuite {
     assert(d1 === d0 && d2 === d0)
   }
 
+  /** Driver-side union-find: vertex → smallest id of its component over
+    * the non-self edges (self-loops name no vertex, as in `undirect`). */
+  private def unionFind(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    @annotation.tailrec
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else find(p)
+    }
+    for ((a, b) <- es if a != b) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  test("connectedComponents equals a driver-side union-find on seeded graphs") {
+    val rnd = new scala.util.Random(11)
+    def ids(n: Int, base: Long) = rnd.shuffle((0 until n).map(base + _))
+    def path(vs: Seq[Long]) = vs.zip(vs.tail)
+    def cycle(vs: Seq[Long]) = path(vs) :+ (vs.last -> vs.head)
+    // ascending ids converge in O(log length) rounds; a path in random
+    // id order can need O(length) rounds, so it stays short
+    val ascending = path((0L until 120L).map(1000L + _))
+    val descending = path((0L until 120L).map(2000L - _))
+    val shuffledPath = path(ids(16, 3000L))
+    val cycles = cycle(ids(9, 4000L)) ++ cycle(ids(13, 4100L))
+    val pair = Seq(5000L -> 5001L)
+    // sparse random graphs: several components, duplicates, self-loops
+    // and both orientations of some edges
+    val random = (0 until 3).flatMap { g =>
+      val base = 6000L + 1000L * g
+      Seq.fill(60)((base + rnd.nextInt(80), base + rnd.nextInt(80)))
+    }
+    val all = ascending ++ descending ++ shuffledPath ++ cycles ++ pair ++
+      random
+    val got = GraphOps.connectedComponents(all.toDF("src", "dst"))
+      .as[(Long, Long)].collect()
+    assert(got.length === got.map(_._1).distinct.length)
+    assert(got.toMap === unionFind(all))
+    // the empty edge list converges at once on a NULL observed sum
+    val none = GraphOps.connectedComponents(
+      Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(none.isEmpty)
+  }
+
+  test("a connectedComponents round scans the edge cache and builds the " +
+      "labels' exchange once") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // a reused exchange is a leaf, so a shared read counts once
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+      case q: QueryStageExec => leaves(q.plan)
+      case o if o.children.isEmpty => Seq(o)
+      case o => o.children.flatMap(leaves)
+    }
+    val selfed = GraphOps.ccEdges(edges, edgesDistinct = false)
+    try {
+      val labels = GraphOps.materialize(selfed.where($"src" === $"dst")
+        .select($"src".as("id"), $"src".as("comp")))
+      val round = GraphOps.ccRound(selfed, labels)
+      val planned = leaves(round.queryExecution.executedPlan)
+      assert(planned.count(_.isInstanceOf[InMemoryTableScanExec]) === 1,
+        round.queryExecution.executedPlan.toString)
+      round.collect()
+      val ran = leaves(round.queryExecution.executedPlan)
+      assert(ran.count(_.isInstanceOf[RDDScanExec]) === 1,
+        round.queryExecution.executedPlan.toString)
+    } finally selfed.unpersist()
+  }
+
+  test("the observed graph loops leave the session serializable") {
+    // closures that capture the session (an MLlib model's training
+    // summary) must still serialize after a loop read its round scalar
+    GraphOps.connectedComponents(edges).collect()
+    GraphOps.kCore(edges, 2).collect()
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
+      .writeObject(spark)
+  }
+
+  test("connectedComponents and sssp raise by name when maxIter is too low") {
+    val path6 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("src", "dst")
+    val cc = intercept[GraphNotConvergedException](
+      GraphOps.connectedComponents(path6, maxIter = 1))
+    assert(cc.algorithm === "connectedComponents" && cc.maxIter === 1)
+    val sp = intercept[GraphNotConvergedException](
+      GraphOps.sssp(path6, 1L, maxIter = 1))
+    assert(sp.algorithm === "sssp")
+  }
+
   test("sssp computes hop distances and omits unreachable vertices") {
     val dist = GraphOps.sssp(edges, 1L)
       .as[(Long, Double)].collect().toMap
