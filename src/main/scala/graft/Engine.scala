@@ -18,6 +18,28 @@ object Engine {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Entries of Catalyst's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100), sized to
+    * the engine's working set so a steady pass compiles no code again.
+    *
+    * The cache is one LRU per JVM, sized once from the conf of the session
+    * that first uses `CodeGenerator`; in-repo code builds every session
+    * through [[session]], so this value always takes effect. A cyclic mix
+    * larger than the cap evicts each class before its next use and
+    * recompiles all of its code every pass, and the cap is split over four
+    * hash segments, so it needs headroom over the working set.
+    *
+    * A key is (context class loader, source), and local mode compiles a
+    * whole-stage stage twice: once on the driver, which checks that the
+    * code compiles, under the application loader, and once in its tasks
+    * under the executor's loader, so such a stage holds two entries (70
+    * of the headline mix's 139 distinct sources did).
+    *
+    * Entries one pass needs, counted with an unbounded cache in one
+    * session at sf0.01: the 18-query headline mix 209; a full Verify pass
+    * over all 219 queries 1,402. 4096 keeps more than twice the larger. */
+  val CodegenCacheEntries: Int = 4096
+
   /** `rocksdbState = true` backs every stateful streaming operator
     * (CEP/MATCH_RECOGNIZE keyed state, OVER windows, running aggs with
     * TTL, dedup) with Spark's RocksDB state store instead of the default
@@ -40,6 +62,13 @@ object Engine {
       // default; read the raw int64 and convert in table() below.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
+      // a stage id in the class name makes equal code differ wherever
+      // stage numbering does (a query's first and later runs number some
+      // stages apart), so the cache would compile it again under a new
+      // name; without it, equal stages of any query share one class
+      .config("spark.sql.codegen.useIdInClassName", "false")
     val s = (if (rocksdbState)
       b.config("spark.sql.streaming.stateStore.providerClass",
         RocksDbProvider)

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -129,12 +129,16 @@ object GraphOps {
             selfed.groupBy(col("dst").as("id")).agg(min(col("src")).as("comp"))
           else ccRound(selfed, labels)
         val (next, obs) = materializeObserved(step,
-          sum(col("comp").cast(DecimalType(38, 0))))
+          sum(col("comp").cast(DecimalType(38, 0))), count(lit(1)))
         val sum0 = obs.getDecimal(0)
         done = sum0 == null || // empty graph
           (prevSum != null && prevSum.compareTo(sum0) == 0)
         prevSum = sum0
-        labels = next
+        // the planner sizes the labels by their observed row count: the
+        // estimate the checkpoint keeps from its own plan is a product
+        // over both reads of the previous labels, so it squares per round
+        // and its digits alone cost minutes past about 20 rounds
+        labels = GraftSqlShim.withRowCount(next, obs.getLong(1))
       }
       if (!done) throw new GraphNotConvergedException(
         "connectedComponents", maxIter)

@@ -1,11 +1,13 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Minimal bridge into `private[sql]` surface, the standard technique for
   * libraries that add planned operators (a logical plan can only become a
   * DataFrame through `Dataset.ofRows`, which Spark keeps package-private).
-  * Kept to two one-liners so the dependency surface is explicit.
+  * Kept small so the dependency surface is explicit.
   */
 object GraftSqlShim {
   /** Wrap a logical plan as a DataFrame on the given session. */
@@ -25,4 +27,17 @@ object GraftSqlShim {
   /** The inverse: wrap a Catalyst expression as a Column. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** A checkpoint `df` (its plan one `LogicalRDD`) whose planner estimate
+    * is `rows` rows of its output, not the statistics `localCheckpoint`
+    * copies from the plan that computed it. */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = analyzed(df) match {
+    case r: LogicalRDD =>
+      val size = EstimationUtils.getSizePerRow(r.output) * rows
+      ofRows(df.sparkSession, LogicalRDD(r.output, r.rdd, r.outputPartitioning,
+        r.outputOrdering, r.isStreaming, r.stream)(
+        df.sparkSession.asInstanceOf[classic.SparkSession],
+        Some(Statistics(size, Some(BigInt(rows)))), Some(r.constraints)))
+    case p => throw new IllegalArgumentException(s"not a checkpoint: $p")
+  }
 }

@@ -138,6 +138,26 @@ class GraphSpec extends SparkSuite {
     assert(sp.algorithm === "sssp")
   }
 
+  test("connectedComponents converges on a 25+ round path in seconds, its " +
+      "labels' size estimate near their real size") {
+    // a path in random id order needs O(length) rounds; where each
+    // round's estimate squared the last, the driver sat for minutes in
+    // the estimate's arithmetic past about 20 rounds
+    val vs = new scala.util.Random(5).shuffle((0L until 150L).map(7000L + _))
+    val path = vs.zip(vs.tail).toDF("src", "dst")
+    intercept[GraphNotConvergedException](
+      GraphOps.connectedComponents(path, maxIter = 24))
+    val t0 = System.nanoTime()
+    val labels = GraphOps.connectedComponents(path, maxIter = 100)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(labels.as[(Long, Long)].collect().toSet ===
+      vs.map(_ -> 7000L).toSet)
+    assert(secs < 120, s"$secs s")
+    // real size: 150 rows of two longs; the estimate may add row overhead
+    val est = labels.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est <= 4 * 150 * 16, s"estimate $est bytes")
+  }
+
   test("sssp computes hop distances and omits unreachable vertices") {
     val dist = GraphOps.sssp(edges, 1L)
       .as[(Long, Double)].collect().toMap
