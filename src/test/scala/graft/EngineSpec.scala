@@ -33,7 +33,7 @@ class EngineSpec extends SparkSuite {
       n -> EngineSpec.compiles {
         run(n).count()
         spark.catalog.clearCache()
-      }._2
+      }
     }.toMap
     val warm = pass()
     val steady = pass().filter(_._2 > 0)
@@ -47,13 +47,13 @@ class EngineSpec extends SparkSuite {
 }
 
 object EngineSpec {
-  /** `f`'s result and the number of Janino compiles the JVM ran meanwhile
-    * (every session of the JVM counts; generated classes the cache still
-    * holds are not compiled again). */
-  def compiles[T](f: => T): (T, Long) = {
+  /** The number of Janino compiles the JVM runs while `f` runs (every
+    * session of the JVM counts; generated classes the cache still holds
+    * are not compiled again). */
+  def compiles(f: => Unit): Long = {
     val n = CodegenMetrics.METRIC_COMPILATION_TIME
     val before = n.getCount
-    val r = f
-    (r, n.getCount - before)
+    f
+    n.getCount - before
   }
 }
