@@ -69,6 +69,9 @@ object Engine {
       // stages apart), so the cache would compile it again under a new
       // name; without it, equal stages of any query share one class
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // streaming checkpoint files are written without forking a process
+      .config(streaming.NoForkCheckpointFileManager.ConfKey,
+        classOf[streaming.NoForkCheckpointFileManager].getName)
     val s = (if (rocksdbState)
       b.config("spark.sql.streaming.stateStore.providerClass",
         RocksDbProvider)

@@ -1,17 +1,27 @@
 package graft
 
+import java.net.URI
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileContextBasedCheckpointFileManager,
+  FileSystemBasedCheckpointFileManager}
+
+import graft.streaming.{NoForkCheckpointFileManager, NoForkLocalFileSystem}
 
 /** The session `Engine.session` builds, and what its settings buy. */
 class EngineSpec extends SparkSuite {
 
-  test("every Engine.session branch sizes the generated-class cache") {
-    val key = "spark.sql.codegen.cache.maxEntries"
-    val want = Engine.CodegenCacheEntries.toString
+  /** Both `Engine.session` branches: `session(4)` and, as a new session on
+    * the running context (which carries its builder's options),
+    * `session(rocksdbState = true)`. */
+  private lazy val branches: Seq[SparkSession] = {
     val base = spark // Engine.session(4)
-    assert(base.conf.get(key) === want)
-    // a new session on the running context carries its builder's options
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val rocks =
@@ -23,7 +33,43 @@ class EngineSpec extends SparkSuite {
     assert(rocks ne base)
     assert(rocks.conf.get("spark.sql.streaming.stateStore.providerClass") ===
       Engine.RocksDbProvider)
-    assert(rocks.conf.get(key) === want)
+    Seq(base, rocks)
+  }
+
+  test("every Engine.session branch sizes the generated-class cache") {
+    branches.foreach { s =>
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ===
+        Engine.CodegenCacheEntries.toString)
+    }
+  }
+
+  test("every Engine.session branch writes local checkpoints through the " +
+      "no-fork file system and keeps Spark's manager elsewhere") {
+    val dir = Files.createTempDirectory("graft_engine_ckpt")
+    try branches.foreach { s =>
+      val conf = s.sessionState.newHadoopConf()
+      CheckpointFileManager.create(new Path(dir.toUri), conf) match {
+        case m: NoForkCheckpointFileManager => m.underlying match {
+          case u: FileSystemBasedCheckpointFileManager =>
+            // `fs` is protected in Scala and public in bytecode
+            val fs = classOf[FileSystemBasedCheckpointFileManager]
+              .getMethod("fs").invoke(u)
+            assert(fs.isInstanceOf[NoForkLocalFileSystem])
+          case u => fail(s"local checkpoint through $u")
+        }
+        case m => fail(s"Engine.session's checkpoint manager is $m")
+      }
+      // the no-fork file system stays out of the JVM's FileSystem cache
+      assert(!new Path(dir.toUri).getFileSystem(conf)
+        .isInstanceOf[NoForkLocalFileSystem])
+      conf.set("fs.AbstractFileSystem.otherfs.impl",
+        classOf[EngineSpec.OtherSchemeFs].getName)
+      CheckpointFileManager.create(new Path("otherfs:/ckpt"), conf) match {
+        case m: NoForkCheckpointFileManager =>
+          assert(m.underlying.isInstanceOf[FileContextBasedCheckpointFileManager])
+        case m => fail(s"Engine.session's checkpoint manager is $m")
+      }
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("a second pass over the headline mix compiles no generated class " +
@@ -47,6 +93,12 @@ class EngineSpec extends SparkSuite {
 }
 
 object EngineSpec {
+  /** A Hadoop file system under a scheme of its own (`otherfs`), standing
+    * for any checkpoint store that is not the local disk. */
+  final class OtherSchemeFs(uri: URI, conf: Configuration)
+      extends DelegateToFileSystem(uri, new RawLocalFileSystem, conf,
+        uri.getScheme, false)
+
   /** The number of Janino compiles the JVM runs while `f` runs (every
     * session of the JVM counts; generated classes the cache still holds
     * are not compiled again). */
