@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.{array, coalesce, col, expr, lit, unix_micros, when}
-import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.functions.{aggregate, array, array_max,
+  array_min, coalesce, col, expr, filter, get, lit, posexplode, size, slice,
+  transform, unix_micros, when}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType,
+  IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 
 import graft.plans.GroupCepPlan
 import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
@@ -141,8 +144,9 @@ import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
   * onto the one planned operator ([[graft.plans.GroupCepPlan]]): one hash
   * exchange and one sort on (key, ord, tie), both elidable by upstream
   * partitioning. Measures the operator's per-match block carries lower
-  * to plain columns; every other clause reads the operator's captured
-  * rows through the same row-level measure evaluator streaming uses.
+  * to plain columns; every other clause asks the operator for each
+  * match's captured rows, and each measure becomes one Catalyst
+  * expression over that array — the projection streaming runs too.
   *
   * STREAMING inputs compile the same pattern spec tree, through the
   * same [[graft.plans.GroupCepPlan.buildPattern]], onto
@@ -157,101 +161,25 @@ import graft.plans.GroupCepPlan.{GAltSpec, GGroupSpec, GLeafSpec, GSpec}
   */
 object MatchRecognize {
 
-  private sealed trait Measure {
-    def alias: String
-    def field(schema: StructType): StructField
-    /** `classifier` = step name of the current row (ALL ROWS) or of the
-      * match's last row (ONE ROW); `matchNum` = 1-based per-partition
-      * match ordinal (0 when MATCH_NUMBER is unused). */
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any
-    /** FINAL keyword: under ALL ROWS the measure evaluates over the WHOLE
-      * match (and the final classifier), not the running prefix. */
-    def isFinal: Boolean = false
-  }
+  /** A parsed MEASURES entry; `apply` lowers each to one Catalyst column
+    * (a column of the operator's per-match block where the block carries
+    * it, else an expression over the match's captured rows). */
+  private sealed trait Measure { def alias: String }
   private final case class PosMeasure(v: String, c: String, alias: String,
-      last: Boolean, offset: Int = 0) extends Measure {
-    def field(schema: StructType): StructField =
-      StructField(alias, schema(c).dataType, nullable = true)
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any = {
-      val g = groups.getOrElse(v, Seq.empty)
-      val i = if (last) g.size - 1 - offset else offset
-      if (i < 0 || i >= g.size) null else g(i).getAs[Any](c)
-    }
-  }
+      last: Boolean, offset: Int = 0) extends Measure
   private final case class CountMeasure(v: String, alias: String)
-      extends Measure {
-    def field(schema: StructType): StructField =
-      StructField(alias, LongType, nullable = false)
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any =
-      groups.getOrElse(v, Seq.empty).size.toLong
-  }
-  private final case class ClassifierMeasure(alias: String) extends Measure {
-    def field(schema: StructType): StructField =
-      StructField(alias, org.apache.spark.sql.types.StringType,
-        nullable = true)
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any = classifier
-  }
-  private final case class MatchNumMeasure(alias: String) extends Measure {
-    def field(schema: StructType): StructField =
-      StructField(alias, LongType, nullable = false)
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any = matchNum
-  }
+      extends Measure
+  /** The pattern variable: per-row under ALL ROWS (RUNNING), the match's
+    * last row's otherwise. */
+  private final case class ClassifierMeasure(alias: String) extends Measure
+  /** 1-based per-partition match ordinal. */
+  private final case class MatchNumMeasure(alias: String) extends Measure
   /** SUM/AVG/MIN/MAX over a variable's captured rows (Flink grew these
-    * in its 1.7 MATCH_RECOGNIZE; RUNNING/FINAL semantics compose via the
-    * prefix-vs-whole-match groups the caller passes). SUM keeps integral
-    * types integral; AVG is always DOUBLE; MIN/MAX work on any
-    * Comparable column (numbers, strings, timestamps). */
+    * in its 1.7 MATCH_RECOGNIZE); NULL when every captured value is
+    * NULL. SUM is BIGINT over integral columns and DOUBLE otherwise; AVG
+    * is always DOUBLE; MIN/MAX work on any orderable column. */
   private final case class AggMeasure(fn: String, v: String, c: String,
-      alias: String) extends Measure {
-    def field(schema: StructType): StructField = {
-      val dt = schema(c).dataType
-      import org.apache.spark.sql.types.{DoubleType, IntegerType}
-      val out = fn match {
-        case "AVG" => DoubleType
-        case "SUM" => dt match {
-          case LongType | IntegerType => LongType
-          case _ => DoubleType
-        }
-        case _ => dt
-      }
-      StructField(alias, out, nullable = true)
-    }
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any = {
-      val vs = groups.getOrElse(v, Seq.empty)
-        .map(_.getAs[Any](c)).filter(_ != null)
-      if (vs.isEmpty) return null
-      def nums = vs.map(_.asInstanceOf[java.lang.Number].doubleValue())
-      fn match {
-        case "SUM" =>
-          import org.apache.spark.sql.types.IntegerType
-          schema(c).dataType match {
-            case LongType | IntegerType =>
-              vs.map(_.asInstanceOf[java.lang.Number].longValue()).sum
-            case _ => nums.sum
-          }
-        case "AVG" => nums.sum / vs.size
-        case "MIN" => vs.reduce((a, b) =>
-          if (a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0) a else b)
-        case "MAX" => vs.reduce((a, b) =>
-          if (a.asInstanceOf[Comparable[Any]].compareTo(b) >= 0) a else b)
-      }
-    }
-  }
-  /** FINAL-keyword decorator (SQL:2016 RUNNING|FINAL semantics prefix). */
-  private final case class FinalMeasure(inner: Measure) extends Measure {
-    def alias: String = inner.alias
-    def field(schema: StructType): StructField = inner.field(schema)
-    def eval(groups: scala.collection.Map[String, Seq[Row]], schema: StructType,
-        classifier: String, matchNum: Long): Any =
-      inner.eval(groups, schema, classifier, matchNum)
-    override def isFinal: Boolean = true
-  }
+      alias: String) extends Measure
 
   private val PartitionRe = """(?is)PARTITION\s+BY\s+(\w+)""".r
   private val OrderRe = """(?is)ORDER\s+BY\s+(\w+)(?:\s*,\s*(\w+))?""".r
@@ -619,7 +547,8 @@ object MatchRecognize {
           d.substring(0, i.start).trim -> d.substring(i.end).trim
         }.toMap
       }
-    val measures: Seq[Measure] =
+    // each measure with its FINAL keyword
+    val measures: Seq[(Measure, Boolean)] =
       MeasuresRe.findFirstMatchIn(clause).map(_.group(1)) match {
         case None => Seq.empty
         case Some(body) => splitTop(body).map { m =>
@@ -647,7 +576,7 @@ object MatchRecognize {
             case other => throw new IllegalArgumentException(
               s"unsupported measure expression: $other")
           }
-          if (isFinal) FinalMeasure(base) else base
+          (base, isFinal)
         }
       }
     val skip: Cep.AfterMatchSkip =
@@ -706,13 +635,11 @@ object MatchRecognize {
     val withUnmatched = UnmatchedRe.findFirstMatchIn(clause).isDefined
     // sqlGreedy × ALL ROWS PER MATCH composes (round 13): greedy
     // selection defers each start's candidates to the resolver and
-    // emits ONE maximal match per start with its FULL capture groups —
-    // exactly what the ALL ROWS mkRow consumes; the array+explode
-    // post-processing is selection-mode-agnostic. {- -} exclusions
-    // compose too: exclusion is OUTPUT-only (SQL:2016) — the greedy
-    // winner is selected first, then its excluded rows are withheld
-    // while still advancing the RUNNING prefix (same mkRow path as the
-    // default mode).
+    // emits ONE maximal match per start with its FULL capture groups,
+    // and the ALL ROWS lowering is selection-mode-agnostic. {- -}
+    // exclusions compose too: exclusion is OUTPUT-only (SQL:2016) — the
+    // greedy winner is selected first, then its excluded rows are
+    // withheld while still advancing the RUNNING prefix.
     if (withUnmatched) {
       require(!df.isStreaming, "WITH UNMATCHED ROWS requires batch " +
         "input (unmatchedness is undecidable while partials remain open)")
@@ -867,10 +794,6 @@ object MatchRecognize {
     // project to: measure-referenced columns + partition key + internals;
     // under streaming ALSO the raw ORDER BY column — its watermark
     // metadata must reach flatMapGroupsWithState for event-time timeouts
-    def baseOf(m: Measure): Measure = m match {
-      case FinalMeasure(inner) => inner
-      case other => other
-    }
     // streaming PREV defines evaluate over raw columns inside the keyed
     // driver — project every df column their text mentions (word-token
     // scan; false positives only widen the projection)
@@ -880,7 +803,7 @@ object MatchRecognize {
           .flatMap(v => "\\w+".r.findAllIn(defines(v)).toSeq).toSet
         df.columns.toSeq.filter(words)
       } else Nil
-    val needed = ((measures.map(baseOf)
+    val needed = ((measures.map(_._1)
       .collect {
         case PosMeasure(_, c, _, _, _) => c
         case AggMeasure(_, _, c, _) => c
@@ -948,122 +871,101 @@ object MatchRecognize {
     val ordIdx = schema.fieldIndex("__mr_ord")
     val tieIdx = schema.fieldIndex("__mr_tie")
 
-    // flatten a match to (variable, event) in match order — sort by the
-    // precomputed (ord, tie) longs, stable across engines
-    def flatten(groups: Map[String, Seq[Row]]): Seq[(String, Row)] =
-      groups.toSeq.flatMap { case (n, evs) => evs.map(n -> _) }
-        .sortBy { case (_, e) => (e.getLong(ordIdx), e.getLong(tieIdx)) }
-
-    // extend a capture map with each SUBSET's union rows (match order) so
-    // measures can reference the subset name like any variable
-    def withSubsets(g: Map[String, Seq[Row]]): Map[String, Seq[Row]] =
-      if (subsets.isEmpty) g
-      else g ++ subsets.map { case (u, ms) =>
-        u -> ms.flatMap(g.getOrElse(_, Seq.empty))
-          .sortBy(e => (e.getLong(ordIdx), e.getLong(tieIdx)))
-      }
-
-    val outSchema = StructType(
-      schema(keyIdx).copy(name = partCol) +: measures.map(_.field(schema)))
-    // WITH UNMATCHED ROWS: each matched output row additionally carries
-    // the raw ORDER BY value (the row's identity for the user) and the
-    // internal (ord, tie) longs (the row's identity for the anti-join)
-    val rawOrdIdx = if (withUnmatched) schema.fieldIndex(ordCol) else -1
-    val entryStruct = StructType(
-      (if (withUnmatched)
-        Seq(StructField(ordCol, schema(rawOrdIdx).dataType, nullable = true))
-      else Nil) ++
-      measures.map(_.field(schema)) ++
-      (if (withUnmatched)
-        Seq(StructField("__mr_uord", LongType, nullable = false),
-          StructField("__mr_utie", LongType, nullable = false))
-      else Nil))
-    val arrSchema = StructType(Seq(schema(keyIdx).copy(name = partCol),
-      StructField("__mr_rows",
-        org.apache.spark.sql.types.ArrayType(entryStruct))))
-    val outEnc = Encoders.row(if (allRows) arrSchema else outSchema)
-
-    // mkRow — the one row-level measure evaluator — shapes one match
-    // (key, 1-based per-partition MATCH_NUMBER, step → captured rows):
-    // batch passes the planned operator's ordinal, streaming the
-    // state-persisted one
-    val mkRow: (Row, Long, Map[String, Seq[Row]]) => Row =
-      if (!allRows) { (k, mn, groups) =>
-        val cls = flatten(groups).lastOption.map(_._1).orNull
-        Row.fromSeq(k.get(0) +:
-          measures.map(_.eval(withSubsets(groups), schema, cls, mn)))
-      } else { (k, mn, groups) =>
-        // FINAL measures see the whole match and its final classifier;
-        // RUNNING (default) measures see the prefix up to the row
-        val fl = flatten(groups)
-        val finalCls = fl.lastOption.map(_._1).orNull
-        val gAll = withSubsets(groups)
-        // FINAL values are row-independent — evaluate ONCE per match,
-        // not once per output row (a FINAL positional measure walks
-        // the capture map on every eval)
-        val finalVals: Array[Any] = measures.iterator.map(m =>
-          if (m.isFinal) m.eval(gAll, schema, finalCls, mn)
-          else null).toArray
-        val anyRunning = measures.exists(!_.isFinal)
-        val prefix = scala.collection.mutable.Map.empty[String, Seq[Row]]
-        // excluded rows still advance the RUNNING prefix (they matched;
-        // SQL:2016 exclusion removes them from OUTPUT only)
-        val rows = fl.flatMap { case (n, e) =>
-          prefix(n) = prefix.getOrElse(n, Vector.empty) :+ e
-          if (excluded(n)) None
-          else {
-            // running measures read the prefix map directly — a
-            // per-row immutable copy only when SUBSET unions must be
-            // spliced in
-            val pfx: scala.collection.Map[String, Seq[Row]] =
-              if (!anyRunning) null
-              else if (subsets.isEmpty) prefix
-              else withSubsets(prefix.toMap)
-            Some(Row.fromSeq(
-              (if (withUnmatched) Seq(e.get(rawOrdIdx)) else Nil) ++
-              measures.iterator.zipWithIndex.map { case (m, i) =>
-                if (m.isFinal) finalVals(i)
-                else m.eval(pfx, schema, n, mn)
-              }.toSeq ++
-              (if (withUnmatched)
-                Seq(e.getLong(ordIdx), e.getLong(tieIdx)) else Nil)))
-          }
+    // The capture lowering: a match is (`key`, `match_number`,
+    // `captures`), its captured rows in match order as (`step`, `row`)
+    // structs, `step` indexing `vars` — the batch operator's Captures
+    // shape, and what the streaming closures build. Each measure is one
+    // Catalyst expression over that array, the same on both routes.
+    val stepNames = array(vars.map(lit): _*)
+    // a pattern variable is its own step, a SUBSET its members' steps;
+    // any other name (a variable the interior-anchor rewrite dropped) has
+    // none, so it reads COUNT 0 and NULL values
+    def rowsOf(caps: Column, v: String): Column = {
+      val steps = subsets.getOrElse(v, Vector(v)).map(vars.indexOf)
+        .filter(_ >= 0)
+      if (steps.size == vars.size) caps
+      else filter(caps, x => x("step").isin(steps: _*))
+    }
+    def measureCol(m: Measure, caps: Column, cls: Column): Column = m match {
+      case PosMeasure(v, c, _, last, off) =>
+        val rs = rowsOf(caps, v)
+        get(rs, if (last) size(rs) - (off + 1) else lit(off))("row")(c)
+      case CountMeasure(v, _) => size(rowsOf(caps, v)).cast(LongType)
+      case ClassifierMeasure(_) => cls
+      case MatchNumMeasure(_) => col("match_number")
+      case AggMeasure(fn, v, c, _) =>
+        val xs = transform(rowsOf(caps, v), x => x("row")(c))
+        fn match {
+          case "MIN" => array_min(xs)
+          case "MAX" => array_max(xs)
+          case _ =>
+            val vs = filter(xs, _.isNotNull)
+            val t = schema(c).dataType match {
+              case ByteType | ShortType | IntegerType | LongType
+                  if fn == "SUM" => LongType
+              case _ => DoubleType
+            }
+            // folded in match order, like the captured rows arrive
+            val sum = aggregate(vs, lit(0).cast(t),
+              (acc, x) => acc + x.cast(t))
+            when(size(vs) > 0, if (fn == "AVG") sum / size(vs) else sum)
         }
-        Row(k.get(0), rows)
-      }
-    // ALL ROWS: mkRow yields one array-typed row per match; the
-    // stateless explode below flattens it (works identically on the
-    // streaming output)
-    val post: DataFrame => DataFrame =
-      if (!allRows) identity
-      else d => {
-        val fields =
-          (if (withUnmatched) Seq(col(s"__mr_r.`$ordCol`").as(ordCol))
-          else Nil) ++
-          measures.map(m => col(s"__mr_r.${m.alias}").as(m.alias)) ++
-          (if (withUnmatched) Seq(col("__mr_r.__mr_uord").as("__mr_uord"),
-            col("__mr_r.__mr_utie").as("__mr_utie"))
-          else Nil)
-        val exploded = d.select(col(partCol),
-            org.apache.spark.sql.functions.explode(col("__mr_rows"))
-              .as("__mr_r"))
-          .select(col(partCol) +: fields: _*)
-        if (!withUnmatched) exploded
+    }
+    val caps = col("captures")
+    val finalCls = get(stepNames, get(caps, size(caps) - 1)("step"))
+    def lowerCaptures(d: DataFrame): DataFrame =
+      if (!allRows)
+        d.select(col("key").as(partCol) +: measures.map { case (m, _) =>
+          measureCol(m, caps, finalCls).as(m.alias)
+        }: _*)
+      else {
+        // ALL ROWS: one row per captured row; RUNNING measures read the
+        // prefix up to it, FINAL ones the whole match. Excluded rows leave
+        // the output but stay in every prefix (SQL:2016 exclusion is
+        // output-only)
+        val r = col("__mr_r")
+        // FINAL values are row-independent: evaluated once per match,
+        // before the explode
+        val fins = measures.zipWithIndex.collect { case ((m, true), i) =>
+          measureCol(m, caps, finalCls).as(s"__mr_f$i")
+        }
+        val exploded = d.select(col("*") +: fins: _*)
+          .select(col("*"), posexplode(caps).as(Seq("__mr_pos", "__mr_r")))
+        val kept =
+          if (excluded.isEmpty) exploded
+          else exploded.where(
+            !r("step").isin(excluded.toSeq.map(vars.indexOf): _*))
+        val prefix = slice(caps, lit(1), col("__mr_pos") + 1)
+        // WITH UNMATCHED ROWS: each matched row also carries the raw
+        // ORDER BY value (the row's identity for the user) and the
+        // internal (ord, tie) longs (its identity for the anti-join)
+        val out = kept.select(col("key").as(partCol) +:
+          ((if (withUnmatched) Seq(r("row")(ordCol).as(ordCol)) else Nil) ++
+            measures.zipWithIndex.map { case ((m, fin), i) =>
+              (if (fin) col(s"__mr_f$i")
+              else measureCol(m, prefix, get(stepNames, r("step"))))
+                .as(m.alias)
+            } ++
+            (if (withUnmatched) Seq(r("row")("__mr_ord").as("__mr_uord"),
+              r("row")("__mr_tie").as("__mr_utie"))
+            else Nil)): _*)
+        if (!withUnmatched) out
         else {
           // unmatched rows: everything the matched (ord, tie) key set
           // does not cover, with NULL measures — one distinct + one
           // left_anti join, both on the narrow key triple
-          val keys = exploded.select(col(partCol).as("__mr_k"),
+          val keys = out.select(col(partCol).as("__mr_k"),
             col("__mr_uord"), col("__mr_utie")).distinct()
           val un = basePrepared.join(keys,
               basePrepared(partCol) === keys("__mr_k") &&
                 basePrepared("__mr_ord") === keys("__mr_uord") &&
                 basePrepared("__mr_tie") === keys("__mr_utie"),
               "left_anti")
-            .select(col(partCol) +: (col(ordCol) +:
-              measures.map(m => lit(null).cast(m.field(schema).dataType)
-                .as(m.alias))): _*)
-          exploded.drop("__mr_uord", "__mr_utie").unionByName(un)
+            .select(col(partCol) +: col(ordCol) +: measures.map {
+              case (m, _) =>
+                lit(null).cast(out.schema(m.alias).dataType).as(m.alias)
+            }: _*)
+          out.drop("__mr_uord", "__mr_utie").unionByName(un)
         }
       }
     // an unsatisfiable interior-anchor pattern evaluates to ZERO rows:
@@ -1085,20 +987,20 @@ object MatchRecognize {
       // step index (`cls_idx`) and ordinal within its step, which lowers
       // RUNNING measures and CLASSIFIER() to CASEs. Everything else —
       // LAST/aggregates over a repeated variable, SUBSET, a variable the
-      // interior-anchor rewrite dropped, WITH UNMATCHED — reads the
-      // captured rows through mkRow.
+      // interior-anchor rewrite dropped, WITH UNMATCHED — takes the
+      // capture lowering.
       val stepOrder = elems.collect { case PVar(v, _) => v }
       val rowBlockable = !withUnmatched &&
         stepOrder.distinct.size == elems.size
-      val blockCarries = (!allRows || rowBlockable) && measures.forall { m =>
-        baseOf(m) match {
+      val blockCarries = (!allRows || rowBlockable) && measures.forall {
+        case (m, fin) => m match {
           case PosMeasure(v, _, _, last, 0) =>
             patternVars(v) && (!last || !qVars(v))
           case CountMeasure(v, _) => patternVars(v)
           case MatchNumMeasure(_) => true
           // FINAL CLASSIFIER (the match's last variable) is not in the
           // block; the RUNNING default is the row's own variable
-          case ClassifierMeasure(_) => allRows && !m.isFinal
+          case ClassifierMeasure(_) => allRows && !fin
           case _ => false
         }
       }
@@ -1115,8 +1017,8 @@ object MatchRecognize {
       val key = col("key").as(partCol)
       return result(shape match {
         case GroupCepPlan.MatchBlock =>
-          planned.select(key +: measures.map { m =>
-            baseOf(m) match {
+          planned.select(key +: measures.map { case (m, _) =>
+            m match {
               case PosMeasure(v, c, alias, _, _) => col(s"${v}_${c}").as(alias)
               case CountMeasure(v, alias) => col(s"${v}_count").as(alias)
               case MatchNumMeasure(alias) => col("match_number").as(alias)
@@ -1134,9 +1036,8 @@ object MatchRecognize {
             if (excluded.isEmpty) planned
             else planned.where(!clsIdx.isin(
               excluded.toSeq.map(stepIdxOf): _*))
-          filtered.select(key +: measures.map { m =>
-            val fin = m.isFinal
-            baseOf(m) match {
+          filtered.select(key +: measures.map { case (m, fin) =>
+            m match {
               case PosMeasure(v, c, alias, _, _) =>
                 if (fin) col(s"${v}_${c}").as(alias)
                 else when(clsIdx >= stepIdxOf(v), col(s"${v}_${c}"))
@@ -1151,21 +1052,7 @@ object MatchRecognize {
               case other => throw new IllegalStateException(s"unroutable $other")
             }
           }: _*)
-        case GroupCepPlan.Captures =>
-          // the operator's step indexes name the distinct leaves in
-          // declaration order (`vars`); rebuild the step → rows map in
-          // that order
-          post(planned.map { r =>
-            val g = scala.collection.mutable.LinkedHashMap
-              .empty[String, Vector[Row]]
-            vars.foreach(n => g(n) = Vector.empty)
-            r.getSeq[Row](2).foreach { c =>
-              val n = vars(c.getInt(0))
-              g(n) = g(n) :+ c.getStruct(1)
-            }
-            mkRow(Row(r.get(0)), r.getLong(1),
-              scala.collection.immutable.ListMap(g.toSeq: _*))
-          }(outEnc).toDF())
+        case GroupCepPlan.Captures => lowerCaptures(planned)
       })
     }
 
@@ -1176,7 +1063,8 @@ object MatchRecognize {
     // pruned by event-time timers. State crosses batches as a
     // version-tagged envelope (CepStateCodec). MATCH_NUMBER() takes the
     // state-persisted ordinal (`numbered`); PREV() carries the key's last
-    // rows (`pre`)
+    // rows (`pre`). Each match leaves the driver as a capture row, and
+    // the capture lowering runs after it, stateless in append mode
     val varIdx = vars.map(v => v -> schema.fieldIndex(s"__mr_$v")).toMap
     def pred(v: String): Row => Boolean = {
       val i = varIdx(v)
@@ -1241,15 +1129,28 @@ object MatchRecognize {
 
     val gp = GroupCepPlan.buildPattern[String, Row](spec, pred, withinOrd,
       hasReluctant, sqlGreedy, deferSelection = false)
-    val needsMatchNum = measures.map(baseOf)
-      .exists(_.isInstanceOf[MatchNumMeasure])
+    val needsMatchNum = measures.exists(_._1.isInstanceOf[MatchNumMeasure])
     val keyEnc = Encoders.row(StructType(Seq(schema(keyIdx))))
-    result(post(GroupCep.streamDriver[Row, Row, Row](basePrepared,
+    val capEnc = Encoders.row(StructType(Seq(
+      schema(keyIdx).copy(name = "key"),
+      StructField("match_number", LongType, nullable = false),
+      StructField("captures", ArrayType(StructType(Seq(
+        StructField("step", IntegerType, nullable = false),
+        StructField("row", schema, nullable = false))), containsNull = false),
+        nullable = false))))
+    // the driver hands a match over as step name → rows; shape it as the
+    // batch operator's capture row, in match order
+    val capRow: (Row, Long, Map[String, Seq[Row]]) => Row = (k, mn, groups) =>
+      Row(k.get(0), mn, vars.indices
+        .flatMap(i => groups.getOrElse(vars(i), Nil).map(i -> _))
+        .sortBy { case (_, e) => (e.getLong(ordIdx), e.getLong(tieIdx)) }
+        .map { case (i, e) => Row(i, e) })
+    result(lowerCaptures(GroupCep.streamDriver[Row, Row, Row](basePrepared,
       (r: Row) => Row(r.get(keyIdx)), gp.withinMs,
       GroupCep.matchStreamArrivalFn[Row, Row, Row](gp,
         (r: Row) => r.getLong(ordIdx), (r: Row) => r.getLong(tieIdx), skip,
-        (k, groups) => mkRow(k, 0L, groups), anchorHead = anchorStart,
-        pre = preFn, numbered = if (needsMatchNum) mkRow else null))(
-      outEnc, keyEnc).toDF()))
+        (k, groups) => capRow(k, 0L, groups), anchorHead = anchorStart,
+        pre = preFn, numbered = if (needsMatchNum) capRow else null))(
+      capEnc, keyEnc).toDF()))
   }
 }

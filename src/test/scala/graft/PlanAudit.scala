@@ -527,9 +527,9 @@ object PlanAudit {
         !qj4.contains("BroadcastNestedLoopJoin") &&
         qj4.linesIterator.count(_.contains("Exchange hashpartitioning")) <= 2)
     // the capture lowering (SUBSET, LAST over a quantified variable,
-    // aggregates, PREV, WITH UNMATCHED): the operator's captured rows
-    // feed the row-level measure evaluator — the same one exchange into
-    // the planned operator, never a groupByKey
+    // aggregates, PREV, WITH UNMATCHED): each measure is a Catalyst
+    // expression over the operator's captured rows — the same one
+    // exchange into the planned operator, never a groupByKey
     for (n <- Seq("qc27_mr_alt_subset_agg", "qc18_match_recognize_permute",
         "qc14_match_recognize_all_rows")) {
       val pl = plan(n)
@@ -539,6 +539,20 @@ object PlanAudit {
       check(s"$n exactly one shuffle below GroupCepExec",
         below.count(_.contains("Exchange hashpartitioning")) == 1)
       check(s"$n no MapGroups", !pl.contains("MapGroups"))
+    }
+    // ... and no object round trip above the operator: no typed map
+    // deserializes the captured rows into Rows and back
+    for (n <- Seq("qc11_match_recognize_times",
+        "qc14_match_recognize_all_rows", "qc15_match_recognize_agg_measures",
+        "qc16_match_recognize_prev", "qc18_match_recognize_permute",
+        "qc20_match_recognize_subset", "qc26_mr_unmatched_rows",
+        "qc27_mr_alt_subset_agg")) {
+      val pl = plan(n)
+      val above = pl.linesIterator.takeWhile(!_.contains("- GroupCep ")).toVector
+      check(s"$n lowers its captures with no object round trip above GroupCepExec",
+        pl.contains("- GroupCep ") && pl.contains("Captures") &&
+          !above.exists(l => Seq("DeserializeToObject", "MapElements",
+            "SerializeFromObject").exists(l.contains)))
     }
     // PREV's lag window and the operator cluster on the same raw key, so
     // EnsureRequirements reuses the window's exchange

@@ -758,9 +758,11 @@ class PropertySpec extends SparkSuite {
     // to one answer. Random clauses (the SQL-vs-DSL differential's
     // quantified variables plus grouped `(X Y)` and alternation `(X | Y)`
     // elements under every group quantifier, `?` included, reluctant
-    // markers on every quantifier, all four AFTER MATCH strategies) run
-    // once on the batch route and once through a MemoryStream fed in 2-3
-    // random micro-batches. Each key closes with a row no DEFINE
+    // markers on every quantifier, all four AFTER MATCH strategies; in
+    // three cases of four the aggregate, offset, CLASSIFIER() and SUBSET
+    // measures, in one of four ALL ROWS PER MATCH with a FINAL measure)
+    // run once on the batch route and once through a MemoryStream fed in
+    // 2-3 random micro-batches. Each key closes with a row no DEFINE
     // accepts: under strict adjacency it ends every open branch, so the
     // stream has resolved every start the batch run resolves at end of
     // input, and the streamed multiset must equal the batch answer,
@@ -772,7 +774,8 @@ class PropertySpec extends SparkSuite {
     val groupQuants = Vector("", "?", "*", "+", "{2}")
     // an element: 0 = variable, 1 = (X Y) group, 2 = (X | Y) alternation
     final case class Clause(elems: Vector[(Int, String)], reluctant: Boolean,
-        defs: Vector[Set[String]], skip: Int, target: Int)
+        defs: Vector[Set[String]], skip: Int, target: Int, wide: Boolean,
+        allRows: Boolean)
     val clauseGen = for {
       n <- Gen.choose(1, 3)
       es <- Gen.listOfN(n, Gen.oneOf(
@@ -784,7 +787,9 @@ class PropertySpec extends SparkSuite {
       defs <- Gen.listOfN(nVars, Gen.atLeastOne(mrAlphabet).map(_.toSet))
       si <- Gen.choose(0, mrSkips.size - 1)
       target <- Gen.choose(0, nVars - 1)
-    } yield Clause(es.toVector, rel, defs.toVector, si, target)
+      wide <- Gen.frequency(3 -> true, 1 -> false)
+      allRows <- Gen.frequency(3 -> false, 1 -> true)
+    } yield Clause(es.toVector, rel, defs.toVector, si, target, wide, allRows)
     val eventsGen = Gen.listOfN(12,
       Gen.zip(Gen.oneOf(mrAlphabet), Gen.choose(1L, 2L)))
     // one or two cuts strictly inside the 14 rows (12 events and the two
@@ -809,16 +814,30 @@ class PropertySpec extends SparkSuite {
           case ((t, u), i) => (i.toLong, i.toLong * 10, t, u)
         }
       val skipSql = mrSkipSql(cl.skip, names(cl.target))
-      val measures = ("MATCH_NUMBER() AS mn" +: names.flatMap(v =>
+      // the SUBSET U spans the first two variables
+      val subset = cl.wide && nv >= 2
+      val measureVars = if (subset) names :+ "U" else names
+      val perVar = measureVars.flatMap(v =>
         Seq(s"COUNT($v.*) AS ${v}_c", s"FIRST($v.event_id) AS ${v}_f",
-          s"LAST($v.event_id) AS ${v}_l"))).mkString(", ")
+          s"LAST($v.event_id) AS ${v}_l") ++
+        (if (!cl.wide) Nil
+        else Seq(s"FIRST($v.event_id, 1) AS ${v}_f1",
+          s"LAST($v.event_id, 1) AS ${v}_l1", s"SUM($v.event_id) AS ${v}_s",
+          s"AVG($v.event_id) AS ${v}_a", s"MIN($v.event_id) AS ${v}_mi",
+          s"MAX($v.event_id) AS ${v}_ma")))
+      val measures = (Seq("MATCH_NUMBER() AS mn") ++ perVar ++
+        (if (cl.wide) Seq("CLASSIFIER() AS cls") else Nil) ++
+        (if (cl.allRows) Seq(s"FINAL LAST(${names(cl.target)}.event_id) AS fin")
+        else Nil)).mkString(", ")
       val defines = mrDefines(names, cl.defs)
       val clause =
         s"""PARTITION BY user_id
            |ORDER BY ts, event_id
            |MEASURES $measures
+           |${if (cl.allRows) "ALL ROWS PER MATCH" else ""}
            |AFTER MATCH SKIP $skipSql
            |PATTERN ($pattern)
+           |${if (subset) "SUBSET U = (P0, P1)" else ""}
            |DEFINE $defines""".stripMargin
       def collected(rs: Array[org.apache.spark.sql.Row]): Seq[String] =
         rs.map(r => (0 until r.length).map(i => fmt(r.get(i))).mkString("|"))

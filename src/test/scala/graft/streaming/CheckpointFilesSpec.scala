@@ -76,7 +76,9 @@ class CheckpointFilesSpec extends SparkSuite with BeforeAndAfterAll {
     Seq(ev(-1, 60 * 24, -1, true)), Seq(ev(-2, 60 * 48, -1, true)))
 
   /** The three stateful operators the stream benchmark runs: a watermarked
-    * tumbling count, dedup within the watermark and a DSL CEP pattern. */
+    * tumbling count, dedup within the watermark and a DSL CEP pattern; then
+    * a MATCH_RECOGNIZE clause whose match ordinal and PREV rows ride keyed
+    * state across micro-batches. */
   private val queries: Seq[(String, DataFrame => DataFrame)] = Seq(
     "window" -> (_.groupBy(col("user_id"),
         StreamOps.tumble(col("ts"), "1 minute").as("w"))
@@ -91,7 +93,15 @@ class CheckpointFilesSpec extends SparkSuite with BeforeAndAfterAll {
         (u: Long, m: Map[String, CkEv]) =>
           (u, m("view").event_id, m("error").event_id))
         .toDF("user_id", "view_id", "error_id")
-    })
+    },
+    "match_recognize" -> (MatchRecognize(_,
+      """PARTITION BY user_id
+        |ORDER BY ts, event_id
+        |MEASURES MATCH_NUMBER() AS mn, V.event_id AS v_id,
+        |  LAST(E.event_id) AS e_id
+        |PATTERN (V E+)
+        |DEFINE V AS is_view,
+        |       E AS NOT is_view AND event_id > PREV(event_id)""".stripMargin)))
 
   /** Runs `plan` over `batches`, one micro-batch each, into a collecting
     * sink. With `restartAfter = Some(n)` the query stops after its n-th

@@ -20,7 +20,7 @@ class MatchRecognizeSpec extends SparkSuite {
   // Every batch clause plans onto GroupCepExec; the lowering differs.
   // Block: the measures are columns of the operator's per-match (or
   // per-row) block. Capture: the operator emits each match's captured
-  // rows and the row-level measure evaluator reads them.
+  // rows and each measure is a Catalyst expression over them.
   private def planOf(d: org.apache.spark.sql.DataFrame): String =
     d.queryExecution.executedPlan.toString
   private def blockLowered(d: org.apache.spark.sql.DataFrame): Boolean = {
@@ -1295,7 +1295,7 @@ class MatchRecognizeSpec extends SparkSuite {
     // capture-lowered greedy ALL ROWS: RUNNING LAST over a quantified
     // variable is not in the block (it carries counts + FIRST rows
     // only), so this shape reads the captured rows through the
-    // mkRow/explode path, which must keep producing greedy winners
+    // posexplode lowering, which must keep producing greedy winners
     val gLast = MatchRecognize(df,
       clause("V B+ E", "CLASSIFIER() AS cls, LAST(B.event_id) AS b_last",
         "ALL ROWS PER MATCH"), sqlGreedy = true)
@@ -1398,6 +1398,35 @@ class MatchRecognizeSpec extends SparkSuite {
       .select("run_sum", "run_max", "fin_sum")
       .as[(Long, Double, Long)].collect().toSeq
     assert(all === Seq((1L, 4.0, 6L), (3L, 4.0, 6L), (6L, 7.0, 6L)))
+  }
+
+  test("aggregate measures type as Spark does: SUM over SMALLINT is " +
+      "BIGINT, MIN/MAX order BINARY, an all-NULL group is NULL") {
+    import org.apache.spark.sql.types._
+    val df = Seq(
+      (1L, 10L, 1L, 3.toShort, Array[Byte](2, 1), Option(5)),
+      (2L, 20L, 1L, 4.toShort, Array[Byte](1, 9), Option(7)),
+      (3L, 30L, 2L, 5.toShort, Array[Byte](0, 0), Option.empty[Int]),
+      (4L, 40L, 2L, 6.toShort, Array[Byte](0), Option.empty[Int])
+    ).toDF("event_id", "ts", "user_id", "s", "b", "n")
+    val got = MatchRecognize(df,
+      """PARTITION BY user_id
+        |ORDER BY ts
+        |MEASURES SUM(E.s) AS s_sum, MIN(E.b) AS b_min, MAX(E.b) AS b_max,
+        |  SUM(E.n) AS n_sum, MIN(E.n) AS n_min, AVG(E.n) AS n_avg
+        |PATTERN (E{2})""".stripMargin)
+    assert(got.schema.map(f => f.name -> f.dataType) === Seq(
+      "user_id" -> LongType, "s_sum" -> LongType, "b_min" -> BinaryType,
+      "b_max" -> BinaryType, "n_sum" -> LongType, "n_min" -> IntegerType,
+      "n_avg" -> DoubleType))
+    val rows = got.orderBy("user_id").collect().map { r =>
+      (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq,
+        r.getAs[Array[Byte]](3).toSeq, r.get(4), r.get(5), r.get(6))
+    }.toSeq
+    // BINARY orders bytewise, a prefix first
+    assert(rows === Seq(
+      (1L, 7L, Seq[Byte](1, 9), Seq[Byte](2, 1), 12L, 5, 6.0),
+      (2L, 11L, Seq[Byte](0), Seq[Byte](0, 0), null, null, null)))
   }
 
   test("PREV() in DEFINE enables V-shape patterns (physical row navigation)") {
@@ -2130,7 +2159,7 @@ class MatchRecognizeSpec extends SparkSuite {
       "(quantifier x selection mode x exclusion matrix, round 13)") {
     // FINAL CLASSIFIER() is deliberately outside the block (the match's
     // last variable is not in the final block), so appending it forces
-    // the capture lowering's mkRow/explode path while leaving every
+    // the capture lowering's posexplode path while leaving every
     // other measure's value untouched — an independent evaluator for
     // the operator's per-row (cls_idx, within_ord) derivation.
     val types = Vector("view", "click", "error", "other")
